@@ -5,9 +5,15 @@ Reference three-call protocol -> Spark mapping (SURVEY.md section 3):
 
 - ``build_job()``   : constructed the Dask delayed graph eagerly on the driver
                       (main.py:87-99).  Here it assembles one lazy DataFrame
-                      plan — tile generator -> feature scan -> label agg ->
-                      image scan -> 1:1 pairing — and returns it.  ``explain()``
-                      replaces ``dask.visualize``.
+                      plan — tile generator -> labels -> image scan -> 1:1
+                      pairing — and returns it.  ``explain()`` replaces
+                      ``dask.visualize``.  Classification and detection
+                      labels are JVM aggregates over the feature scan
+                      (one shuffle on the tile key, left-joined back onto
+                      the tiles); segmentation labels are one
+                      ``mapInPandas`` over the tiles that fetches and burns
+                      each tile in one task (``MapInPandas`` over
+                      ``Range``, no exchange, no join).
 - ``n_tiles()``     : len of the driver-side tile list (main.py:101-107).
                       Here: exact arithmetic, no scan, no driver list.
 - ``execute_job()`` : ``dask.compute`` gathering all results into client RAM
@@ -17,10 +23,9 @@ Reference three-call protocol -> Spark mapping (SURVEY.md section 3):
                       kept for reference parity).
 
 The label⋈image pairing (reference main.py:50-63) is an equi-join on the
-tile key.  Both sides derive from the same generated ``tiles`` frame, and
-labels aggregate *to* the tile key, so the join stays narrow/co-partitioned;
-at cluster scale AQE picks the strategy and either side can be broadcast
-when small.
+tile key.  Both sides derive from the same generated ``tiles`` frame and
+carry one row per tile; at cluster scale AQE picks the strategy and either
+side can be broadcast when small.
 """
 
 from __future__ import annotations
@@ -32,7 +37,10 @@ from pyspark.sql import DataFrame, SparkSession
 from label_maker_dask_spark import labels as L
 from label_maker_dask_spark import tiles as T
 from label_maker_dask_spark.sources.imagery import fetch_images
-from label_maker_dask_spark.sources.vector_tiles import fetch_features
+from label_maker_dask_spark.sources.vector_tiles import (
+    fetch_features,
+    tile_fetcher_factory,
+)
 
 ML_TYPES = ("classification", "object-detection", "segmentation")
 
@@ -54,8 +62,7 @@ class LabelMakerJob:
     ):
         if ml_type not in ML_TYPES:
             raise ValueError(f"ml_type must be one of {ML_TYPES}, got {ml_type!r}")
-        if label_source is None and tile_fetcher is None:
-            raise ValueError("provide label_source or tile_fetcher")
+        tile_fetcher_factory(label_source, tile_fetcher)  # fail fast
         self.spark = spark
         self.zoom = zoom
         self.bounds = list(bounds)
@@ -82,12 +89,18 @@ class LabelMakerJob:
         )
 
     def labels(self) -> DataFrame:
+        if self.ml_type == "segmentation":
+            # fetch and burn in one narrow pass over the tiles
+            return L.segmentation_tile_labels(
+                self.tiles(),
+                self.classes,
+                label_source=self.label_source,
+                tile_fetcher=self.tile_fetcher,
+            )
         tiles, feats = self.tiles(), self.features()
         if self.ml_type == "classification":
             return L.classification_labels(feats, self.classes, tiles=tiles)
-        if self.ml_type == "object-detection":
-            return L.detection_labels(feats, self.classes, tiles=tiles)
-        return L.segmentation_labels(feats, self.classes, tiles=tiles)
+        return L.detection_labels(feats, self.classes, tiles=tiles)
 
     def images(self) -> DataFrame:
         return fetch_images(

@@ -10,12 +10,18 @@ Three ml_types (reference main.py:56-62):
   pixel boxes (label.py:24-35).  Here: pure column math (bounds extraction,
   scale, y-flip, pad, clamp) + ``collect_list`` — no Python in the hot path.
 - segmentation: per tile, a 256x256 uint8 class-id raster (label.py:36-54).
-  Here: grouped-map ``applyInPandas`` over the tile key calling the numpy
-  rasterizer (Arrow-batched; the one genuinely imperative operator).
+  Here: one numpy-rasterizer kernel per tile (``burn_tile``, the one
+  genuinely imperative operator) behind two entry points.  The job path,
+  ``segmentation_tile_labels``, fetches and burns each tile inside one
+  ``mapInPandas`` over the tile frame — the reference's one-task-per-tile
+  shape (main.py:20-63), with no feature shuffle and no join.  The frame
+  path, ``segmentation_labels``, burns an existing feature frame with a
+  grouped-map ``applyInPandas`` over the tile key.
 
 Error tolerance (reference main.py:42-44, label.py:55-57): a tile with no
 features must still produce its empty label.  Pass the ``tiles`` frame and
-each operator left-joins it, filling the per-ml_type empty label.
+each feature-frame operator left-joins it, filling the per-ml_type empty
+label; the segmentation tile scan emits one row per tile by construction.
 
 Known reference bug deliberately NOT replicated: label.py:42-44 mutates
 ``feat["geometry"]["coordinates"]`` in place, double-converting features that
@@ -25,7 +31,7 @@ match two classes.  We convert each feature's coordinates exactly once.
 from __future__ import annotations
 
 import json
-from typing import Optional, Sequence
+from typing import Callable, Iterable, Iterator, Optional, Sequence
 
 import numpy as np
 import pandas as pd
@@ -40,6 +46,10 @@ from label_maker_dask_spark.functions.pixel import (
     pixel_bbox_cols,
 )
 from label_maker_dask_spark.raster import rasterize
+from label_maker_dask_spark.sources.vector_tiles import (
+    TileFetcher,
+    tile_fetcher_factory,
+)
 
 TILE_COLS = ("z", "x", "y")
 
@@ -210,23 +220,14 @@ def segmentation_labels(
     order_col: str = "id",
 ) -> DataFrame:
     """Per-tile 256x256 uint8 class-id raster as a binary column
-    (reference label.py:36-54).
+    (reference label.py:36-54), from a frame of feature rows.
 
-    Grouped-map ``applyInPandas`` over the tile key: convert coordinates to
-    pixel space once per feature (fixing the double-convert bug at
-    label.py:42-44), then burn each matching (feature, class) pair in
-    deterministic (feature order, class index) order — later burns
-    overwrite, the reference's rasterize REPLACE semantics.
-
-    ``buffer`` on a class (reference ``geo.buffer(d, 4)`` between clip and
-    burn, label.py:49-52) is applied WITHOUT a geometry library via
-    burn-then-morph: the shape is burned to a scratch mask and a
-    ``|d|``-px Euclidean disk dilation (negative d: erosion) runs on the
-    256-px grid before the REPLACE write — see raster.morph_disk.
+    Grouped-map ``applyInPandas`` over the tile key; each group is sorted
+    by ``order_col`` (stable, so equal ids keep their row order) and burned
+    by :func:`burn_tile`.  :func:`segmentation_tile_labels` computes the
+    same rasters straight from a tile frame without materializing features.
     """
-    classes = _norm_classes(classes)
-    filters = [c.get("filter") for c in classes]
-    buffers = [float(c.get("buffer") or 0.0) for c in classes]
+    filters, buffers = _burn_spec(classes)
     cols = list(tile_cols)
 
     schema = (
@@ -234,37 +235,17 @@ def segmentation_labels(
     )
 
     def burn(pdf: pd.DataFrame) -> pd.DataFrame:
-        from label_maker_dask_spark.filters_local import feature_passes
-
-        pdf = pdf.sort_values(order_col)
-        shapes = []
+        pdf = pdf.sort_values(order_col, kind="stable")
         # column-array zip, not iterrows: pandas row views cost ~100us each,
         # which dominated the whole rasterize stage at bench scale
-        for geometry, properties, gtype, fid in zip(
+        features = zip(
             pdf["geometry"].to_numpy(),
             pdf["properties"].to_numpy(),
             pdf["geometry_type"].to_numpy(),
             pdf[order_col].to_numpy(),
-        ):
-            try:
-                geom = json.loads(geometry)
-            except (TypeError, ValueError):
-                continue
-            feature = {
-                "properties": dict(properties) if properties is not None else {},
-                "geometry": {"type": gtype},
-                "id": fid,
-            }
-            converted = None
-            for i, filt in enumerate(filters):
-                if not feature_passes(filt, feature):
-                    continue
-                if converted is None:
-                    converted = _convert_geom(geom)
-                shapes.append((converted, i + 1, buffers[i]))
-        arr = rasterize(shapes)
+        )
         head = {c: [pdf.iloc[0][c]] for c in cols}
-        head["label"] = [arr.tobytes()]
+        head["label"] = [burn_tile(features, filters, buffers)]
         return pd.DataFrame(head)
 
     # pin the grouped-map stage's parallelism: per-tile rasterize cost is
@@ -284,6 +265,120 @@ def segmentation_labels(
             .select(*cols, F.coalesce("label", empty).alias("label"))
         )
     return out
+
+
+SEGMENTATION_SCHEMA = "z int, x long, y long, label binary"
+# tiles per output frame of the tile scan: 64 rasters are 4 MB, where one
+# frame per 10k-row input Arrow batch would be about 655 MB
+SCAN_CHUNK_TILES = 64
+
+
+def segmentation_tile_labels(
+    tiles: DataFrame,
+    classes: Sequence[dict],
+    label_source: Optional[str] = None,
+    tile_fetcher: Optional[TileFetcher] = None,
+) -> DataFrame:
+    """Segmentation rasters computed inside the tile scan: one
+    ``mapInPandas`` over ``tiles (z, x, y)`` fetches each tile's features
+    (label source resolved by ``tile_fetcher_factory``) and burns them in
+    the same task — no feature rows, no shuffle, no join.  Every tile,
+    empty ones included, yields one ``SEGMENTATION_SCHEMA`` row, equal
+    byte for byte to :func:`segmentation_labels` over ``fetch_features``
+    of the same tiles."""
+    fetcher_factory = tile_fetcher_factory(label_source, tile_fetcher)
+    return tiles.select(*TILE_COLS).mapInPandas(
+        segmentation_tile_scan(fetcher_factory, classes),
+        schema=SEGMENTATION_SCHEMA,
+    )
+
+
+def segmentation_tile_scan(
+    fetcher_factory: Callable[[], TileFetcher],
+    classes: Sequence[dict],
+) -> Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]:
+    """The ``mapInPandas`` function of :func:`segmentation_tile_labels`.
+    Output frames hold at most ``SCAN_CHUNK_TILES`` tiles, whatever the
+    size of the input Arrow batch."""
+    filters, buffers = _burn_spec(classes)
+
+    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        fetch = fetcher_factory()
+        for pdf in batches:
+            for start in range(0, len(pdf), SCAN_CHUNK_TILES):
+                chunk = pdf.iloc[start:start + SCAN_CHUNK_TILES]
+                labels = []
+                for z, x, y in zip(chunk["z"], chunk["x"], chunk["y"]):
+                    # sorted() is stable: equal ids burn in fetch order,
+                    # as in the frame path; null ids last, as pandas does
+                    feats = sorted(
+                        fetch(int(z), int(x), int(y)),
+                        key=lambda f: (f.get("id") is None, f.get("id") or 0),
+                    )
+                    features = (
+                        (f.get("geometry"), f.get("properties"),
+                         f.get("geometry_type"), f.get("id"))
+                        for f in feats
+                    )
+                    labels.append(burn_tile(features, filters, buffers))
+                yield pd.DataFrame({
+                    "z": chunk["z"].to_numpy(),
+                    "x": chunk["x"].to_numpy(),
+                    "y": chunk["y"].to_numpy(),
+                    "label": labels,
+                })
+
+    return scan
+
+
+def _burn_spec(classes: Sequence[dict]) -> tuple[list, list[float]]:
+    """Per-class (filters, buffers) in class order, for :func:`burn_tile`."""
+    classes = _norm_classes(classes)
+    return (
+        [c.get("filter") for c in classes],
+        [float(c.get("buffer") or 0.0) for c in classes],
+    )
+
+
+def burn_tile(
+    features: Iterable[tuple], filters: Sequence, buffers: Sequence[float]
+) -> bytes:
+    """One tile's raster bytes from its ``(geometry, properties,
+    geometry_type, id)`` features, given in burn order; ``geometry`` is a
+    GeoJSON string and a feature whose geometry does not parse is skipped.
+
+    Coordinates are converted to pixel space once per feature (fixing the
+    double-convert bug at label.py:42-44), then each matching (feature,
+    class) pair burns in (feature order, class index) order — later burns
+    overwrite, the reference's rasterize REPLACE semantics.
+
+    ``buffer`` on a class (reference ``geo.buffer(d, 4)`` between clip and
+    burn, label.py:49-52) is applied WITHOUT a geometry library via
+    burn-then-morph: the shape is burned to a scratch mask and a
+    ``|d|``-px Euclidean disk dilation (negative d: erosion) runs on the
+    256-px grid before the REPLACE write — see raster.morph_disk.
+    """
+    from label_maker_dask_spark.filters_local import feature_passes
+
+    shapes = []
+    for geometry, properties, gtype, fid in features:
+        try:
+            geom = json.loads(geometry)
+        except (TypeError, ValueError):
+            continue
+        feature = {
+            "properties": dict(properties) if properties is not None else {},
+            "geometry": {"type": gtype},
+            "id": fid,
+        }
+        converted = None
+        for i, filt in enumerate(filters):
+            if not feature_passes(filt, feature):
+                continue
+            if converted is None:
+                converted = _convert_geom(geom)
+            shapes.append((converted, i + 1, buffers[i]))
+    return rasterize(shapes).tobytes()
 
 
 def _convert_geom(geom: dict) -> dict:

@@ -9,6 +9,8 @@ keys fans out to feature rows ``(z, x, y, id, geometry_type, geometry,
 properties)``.  Per-partition, the HTTP session is reused (the reference
 opens a fresh connection per tile).  At 1000 executors this is an
 embarrassingly parallel narrow stage; no shuffle, no driver involvement.
+The segmentation tile scan (``labels.segmentation_tile_labels``) calls the
+same fetchers and burns each tile in place instead of emitting its rows.
 
 Decode requires ``mapbox_vector_tile`` and fetch requires ``requests`` —
 both optional here; tests inject a ``tile_fetcher`` (see ``fake.py``).
@@ -87,6 +89,21 @@ def http_tile_fetcher(label_source: str, layer: str = "osm") -> TileFetcher:
     return decoding_tile_fetcher(get_bytes, layer)
 
 
+def tile_fetcher_factory(
+    label_source: Optional[str] = None,
+    tile_fetcher: Optional[TileFetcher] = None,
+) -> Callable[[], TileFetcher]:
+    """Resolve a job's label source to a fetcher constructor, called once
+    per partition on the executor: the injected ``tile_fetcher`` (hermetic)
+    when given, else :func:`http_tile_fetcher` over ``label_source``.  One
+    of the two must be provided."""
+    if tile_fetcher is not None:
+        return lambda: tile_fetcher
+    if label_source is None:
+        raise ValueError("provide label_source or tile_fetcher")
+    return lambda: http_tile_fetcher(label_source)
+
+
 def fetch_features(
     tiles: DataFrame,
     label_source: Optional[str] = None,
@@ -95,15 +112,9 @@ def fetch_features(
 ) -> DataFrame:
     """Tiles ``(z, x, y)`` -> exploded feature rows via ``mapInPandas``.
 
-    Exactly one of ``label_source`` (live HTTP) or ``tile_fetcher``
-    (injected, hermetic) must be provided.
+    The label source is resolved by :func:`tile_fetcher_factory`.
     """
-    if tile_fetcher is None:
-        if label_source is None:
-            raise ValueError("provide label_source or tile_fetcher")
-        fetcher_factory = lambda: http_tile_fetcher(label_source)  # noqa: E731
-    else:
-        fetcher_factory = lambda: tile_fetcher  # noqa: E731
+    fetcher_factory = tile_fetcher_factory(label_source, tile_fetcher)
 
     def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         fetch = fetcher_factory()

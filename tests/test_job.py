@@ -123,3 +123,89 @@ def test_json_string_filters(spark):
                         tile_fetcher=fake_features)
     rows = job.execute_job()
     assert rows and all(len(r.label) == 2 for r in rows)
+
+
+SEG_CLASSES = [
+    {"name": "Roads", "filter": ["has", "highway"]},
+    {"name": "Buildings", "filter": ["has", "building"], "buffer": 2.0},
+    {"name": "Water", "filter": ["==", "natural", "water"]},
+]
+
+
+def _edge_case_fetcher():
+    """fake_features plus the cases the burn must agree on: a feature
+    matching two classes, a geometry that is not JSON, and a forced empty
+    tile."""
+    import json
+
+    def fetch(z, x, y):
+        if (x + y) % 7 == 0:
+            return []
+        feats = fake_features(z, x, y)
+        square = {"type": "Polygon", "coordinates": [[
+            [1500, 1500], [2500, 1500], [2500, 2500], [1500, 2500], [1500, 1500]
+        ]]}
+        feats.append({
+            "id": 1,
+            "geometry_type": "Polygon",
+            "geometry": json.dumps(square),
+            "properties": {"highway": "primary", "building": "yes"},
+        })
+        feats.append({
+            "id": 2,
+            "geometry_type": "Polygon",
+            "geometry": '{"type": "Polygon", "coordinates": [[',
+            "properties": {"natural": "water"},
+        })
+        return feats
+
+    return fetch
+
+
+def test_segmentation_tile_scan_matches_frame_operator(spark):
+    """The job's fused tile scan burns every tile byte-for-byte like the
+    frame operator over the job's own feature scan, and plans as one
+    narrow Python pass: no exchange, no grouped map."""
+    from label_maker_dask_spark.labels import segmentation_labels
+    from tests.test_plans import plan_of
+
+    job = LabelMakerJob(spark, zoom=15, bounds=LISBON, classes=SEG_CLASSES,
+                        ml_type="segmentation",
+                        tile_fetcher=_edge_case_fetcher())
+    fused = job.labels()
+    assert fused.schema.simpleString() == (
+        "struct<z:int,x:bigint,y:bigint,label:binary>"
+    )
+    plan = plan_of(fused)
+    assert "Exchange" not in plan
+    assert "FlatMapGroupsInPandas" not in plan
+    assert "MapInPandas" in plan
+
+    ref = segmentation_labels(job.features(), SEG_CLASSES, tiles=job.tiles())
+    got = {(r.z, r.x, r.y): bytes(r.label) for r in fused.collect()}
+    want = {(r.z, r.x, r.y): bytes(r.label) for r in ref.collect()}
+    assert len(got) == job.n_tiles()
+    assert got == want
+    rasters = [np.frombuffer(v, dtype=np.uint8) for v in got.values()]
+    assert any(not r.any() for r in rasters)           # empty tiles
+    assert set(np.unique(np.concatenate(rasters))) == {0, 1, 2, 3}
+
+
+def test_segmentation_tile_scan_yields_bounded_chunks():
+    """One large input Arrow batch comes out as frames of at most 64
+    tiles (about 4 MB of rasters), one row per tile."""
+    import pandas as pd
+
+    from label_maker_dask_spark.labels import segmentation_tile_scan
+
+    tiles = pd.DataFrame({
+        "z": np.full(200, 15, dtype=np.int32),
+        "x": np.arange(15000, 15200, dtype=np.int64),
+        "y": np.full(200, 12000, dtype=np.int64),
+    })
+    scan = segmentation_tile_scan(lambda: fake_features, SEG_CLASSES)
+    frames = list(scan(iter([tiles])))
+    assert all(len(f) <= 64 for f in frames)
+    out = pd.concat(frames)
+    assert out["x"].tolist() == tiles["x"].tolist()
+    assert all(len(b) == 256 * 256 for b in out["label"])

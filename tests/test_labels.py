@@ -173,3 +173,32 @@ def test_detection_emits_empty_label_for_unmatched_tiles(spark):
     rows = detection_labels(feats, classes).collect()
     assert len(rows) == 1
     assert rows[0]["label"] == []
+
+
+def test_segmentation_equal_ids_burn_in_row_order(spark):
+    """Features sharing an id burn in row (fetch) order.  With more than
+    16 rows in a tile, an unstable sort on the id reorders ties, and the
+    class left on an overlapped pixel would be arbitrary."""
+    classes = [
+        {"name": "A", "filter": ["==", "c", "1"]},
+        {"name": "B", "filter": ["==", "c", "2"]},
+        {"name": "C", "filter": ["==", "c", "3"]},
+    ]
+    rows = [
+        Row(z=15, x=0, y=0, id=[2, 1, 0][k % 3], geometry_type="Polygon",
+            geometry=_poly(1000 + 10 * k, 1000, 3000, 3000),
+            properties={"c": str(1 + k // 3 % 3)})
+        for k in range(18)
+    ]
+    feats = spark.createDataFrame(
+        rows,
+        schema="z int, x long, y long, id long, geometry_type string, "
+               "geometry string, properties map<string,string>",
+    ).coalesce(1)
+    arr = np.frombuffer(
+        segmentation_labels(feats, classes).collect()[0].label, dtype=np.uint8
+    ).reshape(256, 256)
+    # stable order by id: ids 0 (k=2,5,..,17), 1 (k=1,4,..,16), then
+    # 2 (k=0,3,..,15); every polygon covers pixel (128, 150), so the last
+    # row with id 2, k=15, decides it
+    assert arr[128, 150] == 1 + 15 // 3 % 3
