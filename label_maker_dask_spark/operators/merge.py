@@ -306,4 +306,73 @@ def merge_upsert(
     return matched.unionByName(ins.select(*ins_cols))
 
 
-__all__ = ["merge_upsert"]
+def merge_upsert_delta(
+    base: Optional[DataFrame],
+    delta: DataFrame,
+    keys: Sequence[str],
+    update_cols: Optional[Sequence[str]] = None,
+    delete_col: Optional[str] = None,
+    evolve_schema: bool = False,
+) -> DataFrame:
+    """The upsert sinks' merge step.  ``delta`` is key-unique (after
+    ``streaming.upsert.compact_last_per_key``), so the merge broadcasts
+    it and skips the duplicate-key scan.  ``base=None`` is the first
+    batch: the table is the delta minus its deletes and ``delete_col``."""
+    if base is None:
+        if delete_col:
+            delta = delta.where(
+                ~F.coalesce(F.col(delete_col), F.lit(False))
+            ).drop(delete_col)
+        return delta
+    return merge_upsert(
+        base,
+        delta,
+        keys=keys,
+        update_cols=update_cols,
+        delete_col=delete_col,
+        broadcast_source=True,
+        assume_unique_source=True,
+        evolve_schema=evolve_schema,
+    )
+
+
+def sum_per_key(
+    batch: DataFrame, keys: Sequence[str], sum_cols: Sequence[str]
+) -> DataFrame:
+    """Pre-aggregate a batch of additive deltas to one row per key."""
+    return batch.groupBy(*keys).agg(*[F.sum(c).alias(c) for c in sum_cols])
+
+
+def merge_additive(
+    base: Optional[DataFrame],
+    agg: DataFrame,
+    keys: Sequence[str],
+    sum_cols: Sequence[str],
+) -> DataFrame:
+    """The accumulate sinks' merge step: stored row = running sum per key.
+    ``agg`` is one row per key (:func:`sum_per_key`).  Matched keys add
+    through a broadcast left join (the base never shuffles), unmatched
+    delta keys insert through a keys-only anti join; ``base=None`` is the
+    first batch."""
+    if base is None:
+        return agg
+    d = F.broadcast(agg).alias("d")
+    t = base.alias("t")
+    cond = [F.col(f"t.{k}").eqNullSafe(F.col(f"d.{k}")) for k in keys]
+    matched = t.join(d, on=cond, how="left").select(
+        *[F.col(f"t.{k}").alias(k) for k in keys],
+        *[
+            (F.col(f"t.{c}") + F.coalesce(F.col(f"d.{c}"), F.lit(0))).alias(c)
+            for c in sum_cols
+        ],
+    )
+    tk = base.select(*keys).alias("tk")
+    ins = agg.alias("i").join(
+        tk,
+        on=[F.col(f"i.{k}").eqNullSafe(F.col(f"tk.{k}")) for k in keys],
+        how="left_anti",
+    )
+    return matched.unionByName(ins.select(*keys, *sum_cols))
+
+
+__all__ = ["merge_upsert", "merge_upsert_delta", "merge_additive", "sum_per_key"]

@@ -139,6 +139,18 @@ def pit_join(
     )
 
 
+def _scd2_merge(keys: Sequence[str], ts_col: str, tie_break: str):
+    """The SCD-2 sinks' merge step: ``(history or None, batch)`` → the
+    new history."""
+
+    def merge(history: Optional[DataFrame], batch: DataFrame) -> DataFrame:
+        if history is None:
+            return historize_changes(batch, keys, ts_col, tie_break)
+        return scd2_apply(history, batch, keys, ts_col, tie_break)
+
+    return merge
+
+
 def stream_scd2_to_parquet(
     changes: DataFrame,
     base_path: str,
@@ -151,61 +163,27 @@ def stream_scd2_to_parquet(
     """Maintain an SCD-2 history table from a change stream: each
     micro-batch runs :func:`scd2_apply` and swaps the updated history in
     with the crash-recoverable rename-aside dance the other maintenance
-    sinks use.  History growth is append-only plus closing updates, and
-    ``scd2_apply`` REJECTS replays of already-applied changes (they sit
-    at or before the affected keys' current ``valid_from``), so
-    exactly-once needs the in-table marker: an applied-but-uncommitted
-    batch is skipped by batch id on replay, and a fresh checkpoint
-    against an existing history raises via the run id
-    (``streaming.upsert`` contract)."""
+    sinks use.  ``scd2_apply`` REJECTS replays of already-applied changes
+    (they sit at or before the affected keys' current ``valid_from``), so
+    exactly-once needs the in-table marker
+    (:func:`streaming.upsert.rewrite_exactly_once`)."""
+    from label_maker_dask_spark.streaming.commit import start_sink
     from label_maker_dask_spark.streaming.upsert import (
-        _applied_state,
         _recover,
-        _swap_in,
-        _write_marker,
-        ensure_run_id,
+        rewrite_exactly_once,
     )
 
-    run_id = ensure_run_id(checkpoint)
+    merge_fn = _scd2_merge(keys, ts_col, tie_break)
 
-    def apply(batch: DataFrame, batch_id: int) -> None:
-        import os
-
-        if batch.isEmpty():
-            return
+    def apply(batch: DataFrame, batch_id: int, run_id: str) -> None:
         _recover(base_path)
-        spark = batch.sparkSession
-        stored_run, applied = _applied_state(base_path)
-        if (
-            stored_run is not None
-            and run_id is not None
-            and stored_run != run_id
-        ):
-            raise ValueError(
-                f"stream_scd2_to_parquet: history {base_path!r} was built "
-                f"by a different stream run ({stored_run!r}, this run "
-                f"{run_id!r}); recreate history and checkpoint together."
-            )
-        if applied >= batch_id:
-            return  # replay of an applied-but-uncommitted batch
-        if os.path.exists(base_path):
-            history = spark.read.parquet(base_path)
-            merged = scd2_apply(history, batch, keys, ts_col, tie_break)
-        else:
-            merged = historize_changes(batch, keys, ts_col, tie_break)
-        tmp = base_path + "._applying"
-        merged.write.mode("overwrite").parquet(tmp)
-        _write_marker(tmp, run_id, batch_id)
-        _swap_in(tmp, base_path)
+        rewrite_exactly_once(
+            batch.sparkSession, base_path, batch_id, run_id,
+            lambda history: merge_fn(history, batch),
+            "stream_scd2_to_parquet: history",
+        )
 
-    writer = (
-        changes.writeStream.foreachBatch(apply)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_sink(changes, checkpoint, apply, "append", available_now)
 
 
 def stream_scd2_to_parquet_bucketed(
@@ -230,37 +208,20 @@ def stream_scd2_to_parquet_bucketed(
     O(delta + touched-bucket history), not O(total history).
 
     Exactly-once rides on the per-bucket markers (partial replays
-    re-merge only unapplied buckets), and the table-level writer lock
-    protects against concurrent maintainers — the
-    :mod:`streaming.bucketed` contract."""
+    re-merge only unapplied buckets) — the :mod:`streaming.bucketed`
+    contract."""
     from label_maker_dask_spark.streaming.bucketed import (
         _apply_bucketed,
         _recover_bucketed,
     )
-    from label_maker_dask_spark.streaming.upsert import ensure_run_id
+    from label_maker_dask_spark.streaming.commit import start_sink
 
-    run_id = ensure_run_id(checkpoint)
+    merge_fn = _scd2_merge(keys, ts_col, tie_break)
 
-    def merge_fn(
-        base_part: Optional[DataFrame], delta: DataFrame
-    ) -> DataFrame:
-        if base_part is None:
-            return historize_changes(delta, keys, ts_col, tie_break)
-        return scd2_apply(base_part, delta, keys, ts_col, tie_break)
-
-    def apply(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
+    def apply(batch: DataFrame, batch_id: int, run_id: str) -> None:
         _recover_bucketed(base_path)
         _apply_bucketed(
             batch, base_path, keys, n_buckets, batch_id, run_id, merge_fn
         )
 
-    writer = (
-        changes.writeStream.foreachBatch(apply)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_sink(changes, checkpoint, apply, "append", available_now)

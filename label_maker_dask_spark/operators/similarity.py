@@ -21,6 +21,12 @@ from pyspark.sql import functions as F
 
 from label_maker_dask_spark.functions.vectors import dot, dot_fixed, norm
 from label_maker_dask_spark.operators.guards import parallelism_floor
+from label_maker_dask_spark.streaming.commit import (
+    append_exactly_once,
+    read_state,
+    start_sink,
+    write_state,
+)
 
 #: Brute-force / IVF operators ship the query set with the task closure, so
 #: it must stay driver- and executor-memory small.  At 64-dim float64 the
@@ -1114,7 +1120,7 @@ def _rebalance_ivf_round(
     # rows into new files the replay bracket's inventory rollback can't
     # identify, so the replayed re-append would duplicate them.  Refuse
     # and let the stream replay/recover first.
-    if _ivf_state_read(path, "_lmds_appending") is not None:
+    if read_state(path, "_lmds_appending") is not None:
         raise RuntimeError(
             f"rebalance_ivf_index: index {path!r} has a pending append "
             "intent (_lmds_appending) — a crashed streaming append may "
@@ -1202,27 +1208,6 @@ def _rebalance_ivf_round(
     return oversized
 
 
-def _ivf_state_read(path: str, name: str):
-    import json as _json
-    import os
-
-    p = os.path.join(path, name)
-    if not os.path.exists(p):
-        return None
-    with open(p) as fh:
-        return _json.load(fh)
-
-
-def _ivf_state_write(path: str, name: str, state: dict) -> None:
-    import json as _json
-    import os
-
-    tmp = os.path.join(path, name + ".tmp")
-    with open(tmp, "w") as fh:
-        _json.dump(state, fh)
-    os.replace(tmp, os.path.join(path, name))
-
-
 def _partition_inventory(path: str, prefix: str) -> dict:
     import os
 
@@ -1239,68 +1224,6 @@ def _ivf_cell_inventory(path: str) -> dict:
     return _partition_inventory(path, "cell=")
 
 
-def _append_index_exactly_once(
-    path: str,
-    batch_id: int,
-    run_id,
-    inventory,
-    do_append,
-    what: str,
-) -> bool:
-    """Shared replay-safety bracket for partitioned index appends (IVF
-    cells, PQ buckets).  A bare append is NOT idempotent: replaying a
-    crashed micro-batch would append its vectors twice, silently
-    corrupting every subsequent query.  The append is bracketed with an
-    intent record holding the PRE-append file inventory of every
-    partition: a replay that finds the intent deletes any file the
-    inventory doesn't list (the torn append's partials), then
-    re-appends; a replay of a fully-applied batch is skipped by the
-    applied marker; a foreign run id raises (batch ids reset with the
-    checkpoint).  Returns True when the batch was applied, False on an
-    already-applied replay."""
-    import os
-    import shutil
-
-    applied = _ivf_state_read(path, "_lmds_applied") or {}
-    if (
-        run_id is not None
-        and applied.get("run") is not None
-        and applied.get("run") != run_id
-    ):
-        raise ValueError(
-            f"{what} append: index {path!r} was maintained by a different "
-            f"stream run ({applied.get('run')!r}, this run {run_id!r}); "
-            "recreate index and checkpoint together."
-        )
-    if int(applied.get("batch", -1)) >= batch_id:
-        return False
-    intent = _ivf_state_read(path, "_lmds_appending")
-    if intent is not None:
-        if int(intent.get("batch", -1)) == batch_id:
-            # torn append of THIS batch: remove its partial files
-            for part, files in inventory().items():
-                keep = set(intent.get("existing", {}).get(part, []))
-                cdir = os.path.join(path, "data", part)
-                for f in files:
-                    if f not in keep:
-                        fp = os.path.join(cdir, f)
-                        (shutil.rmtree if os.path.isdir(fp) else os.remove)(fp)
-                if not keep and not os.listdir(cdir):
-                    os.rmdir(cdir)
-        # a stale intent from an APPLIED batch (crash between the applied
-        # marker and the intent removal) carries no partial files
-        os.remove(os.path.join(path, "_lmds_appending"))
-    _ivf_state_write(
-        path,
-        "_lmds_appending",
-        {"run": run_id, "batch": batch_id, "existing": inventory()},
-    )
-    do_append()
-    _ivf_state_write(path, "_lmds_applied", {"run": run_id, "batch": batch_id})
-    os.remove(os.path.join(path, "_lmds_appending"))
-    return True
-
-
 def append_ivf_index_exactly_once(
     new_embeddings: DataFrame,
     path: str,
@@ -1310,9 +1233,9 @@ def append_ivf_index_exactly_once(
     vec_col: str = "embedding",
 ) -> bool:
     """:func:`append_ivf_index` under the shared replay-safety bracket
-    (:func:`_append_index_exactly_once`) — the building block of the
-    streaming index sink."""
-    return _append_index_exactly_once(
+    (:func:`streaming.commit.append_exactly_once`) — the building block
+    of the streaming index sink."""
+    return append_exactly_once(
         path,
         batch_id,
         run_id,
@@ -1338,13 +1261,8 @@ def stream_embeddings_to_ivf_index(
     ``ivf_cell_stats``'s max/mean occupancy above it triggers
     :func:`rebalance_ivf_index` — the full index-maintenance loop
     (ingest → drift watch → split) as one streaming sink."""
-    from label_maker_dask_spark.streaming.upsert import ensure_run_id
 
-    run_id = ensure_run_id(checkpoint)
-
-    def apply(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
+    def apply(batch: DataFrame, batch_id: int, run_id: str) -> None:
         spark = batch.sparkSession
         if append_ivf_index_exactly_once(
             batch, path, batch_id, run_id, id_col, vec_col
@@ -1355,14 +1273,9 @@ def stream_embeddings_to_ivf_index(
                     spark, path, id_col=id_col, vec_col=vec_col
                 )
 
-    writer = (
-        new_embeddings.writeStream.foreachBatch(apply)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
+    return start_sink(
+        new_embeddings, checkpoint, apply, "append", available_now
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def ivf_topk_stored(
@@ -2508,7 +2421,7 @@ def recover_pq_compaction(path: str) -> None:
     # finished, so a still-present intent must NOT roll anything back
     # (the fold's output is the legitimate base now) — it is simply
     # retired and the delta deletion finishes idempotently.
-    applied = _ivf_state_read(path, "_lmds_compacted")
+    applied = read_state(path, "_lmds_compacted")
     if applied is not None:
         intent_p = os.path.join(path, "_lmds_compacting")
         if os.path.exists(intent_p):
@@ -2520,7 +2433,7 @@ def recover_pq_compaction(path: str) -> None:
                 os.remove(fp)
         os.remove(os.path.join(path, "_lmds_compacted"))
         return
-    intent = _ivf_state_read(path, "_lmds_compacting")
+    intent = read_state(path, "_lmds_compacting")
     if intent is not None:
         for part, files in _partition_inventory(path, "bucket=").items():
             keep = set(intent.get("existing", {}).get(part, []))
@@ -2551,11 +2464,11 @@ def compact_pq_index(spark, path: str) -> int:
     # A pending APPEND intent means the delta zone may hold a torn
     # batch's partial files.  Folding them into the base partitions
     # would put them beyond the replay bracket's reach
-    # (:func:`_append_index_exactly_once` rolls back only delta files
-    # absent from its pre-append inventory), so the replayed re-append
+    # (:func:`streaming.commit.append_exactly_once` rolls back only delta
+    # files absent from its pre-append inventory), so the replayed re-append
     # would then duplicate the partially-applied vectors in query
     # results.  Refuse and let the stream replay/recover first.
-    if _ivf_state_read(path, "_lmds_appending") is not None:
+    if read_state(path, "_lmds_appending") is not None:
         raise RuntimeError(
             f"compact_pq_index: index {path!r} has a pending append "
             "intent (_lmds_appending) — a crashed streaming append may "
@@ -2567,7 +2480,7 @@ def compact_pq_index(spark, path: str) -> int:
     data_files = [f for f in deltas if not f.startswith(("_", "."))]
     if not data_files:
         return 0
-    _ivf_state_write(
+    write_state(
         path,
         "_lmds_compacting",
         {"existing": _partition_inventory(path, "bucket=")},
@@ -2583,7 +2496,7 @@ def compact_pq_index(spark, path: str) -> int:
     # window is now covered (intent alone -> roll back and rerun, delta
     # intact; completion present -> fold final, recovery only finishes
     # the idempotent delta deletion — never rolls back)
-    _ivf_state_write(path, "_lmds_compacted", {"deltas": deltas})
+    write_state(path, "_lmds_compacted", {"deltas": deltas})
     os.remove(os.path.join(path, "_lmds_compacting"))
     for f in deltas:
         fp = os.path.join(ddir, f)
@@ -2602,8 +2515,8 @@ def append_pq_index_exactly_once(
     vec_col: str = "embedding",
 ) -> bool:
     """:func:`append_pq_index` under the shared replay-safety bracket
-    (:func:`_append_index_exactly_once`, bucket partitions)."""
-    return _append_index_exactly_once(
+    (:func:`streaming.commit.append_exactly_once`, the delta zone)."""
+    return append_exactly_once(
         path,
         batch_id,
         run_id,
@@ -2628,22 +2541,12 @@ def stream_embeddings_to_pq_index(
     exactly-once (:func:`append_pq_index_exactly_once`) — the PQ half of
     the index-maintenance loop (the IVF twin adds drift-triggered
     rebalance; PQ drift policy is rebuild, see :func:`append_pq_index`)."""
-    from label_maker_dask_spark.streaming.upsert import ensure_run_id
 
-    run_id = ensure_run_id(checkpoint)
-
-    def apply(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
+    def apply(batch: DataFrame, batch_id: int, run_id: str) -> None:
         append_pq_index_exactly_once(
             batch, path, batch_id, run_id, id_col, vec_col
         )
 
-    writer = (
-        new_embeddings.writeStream.foreachBatch(apply)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
+    return start_sink(
+        new_embeddings, checkpoint, apply, "append", available_now
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -1404,7 +1404,7 @@ def _drive_tile_stream(spark, name: str, mode: str = None) -> DataFrame:
             # re-delivery window (commit() docstring, tile_source.py)
             # while a fresh checkpoint's new run id makes any stale
             # floor for the same grid inert instead of data-losing
-            from label_maker_dask_spark.streaming.upsert import (
+            from label_maker_dask_spark.streaming.commit import (
                 ensure_run_id,
             )
 

@@ -329,7 +329,13 @@ def q21_suppliers_who_shipped_last(spark, sf_dir):
         & (
             d.isNull()
             | (multi & (d == F.col("_m1")))
-            | (~multi & (s == F.col("_uhi")) & (F.col("_mo") <= d))
+            | (
+                ~multi
+                & (s == F.col("_uhi"))
+                # NULL _mo: the other suppliers have only NULL ship
+                # dates, none ships later — the anti-join keeps the row
+                & F.coalesce(F.col("_mo") <= d, F.lit(True))
+            )
         )
     ).select("l_orderkey", "l_suppkey")
     orders = _t(spark, sf_dir, "orders").where(F.col("o_orderstatus") == "F")

@@ -294,7 +294,7 @@ class SlippyTilePartitionedStreamReader(DataSourceStreamReader):
             self._floor_file = os.path.join(fdir, "_slippy_floor.json")
             # Bind the floor to the query's checkpoint run id when the
             # caller provides one (option floorrunid, from
-            # streaming.upsert.ensure_run_id(checkpoint)): a FRESH query
+            # streaming.commit.ensure_run_id(checkpoint)): a FRESH query
             # (new/cleared checkpoint -> new run id) must NOT inherit a
             # stale floor for the same grid — it would silently never
             # deliver the old run's range.  A stale same-grid floor with

@@ -31,14 +31,12 @@ is complete; :func:`_recover_bucketed` finishes any torn swap and
 discards leftover scratch.  A bucket's marker is written into its
 scratch directory before the swap, so marker and data change atomically.
 
-Exactly-once under partial application: a crash mid-batch leaves some
-buckets swapped (marker == batch id) and some not.  The engine replays
-the batch; the delta and its key→bucket hash are deterministic, so
-already-applied buckets are skipped by their marker and the rest apply —
-additive accumulation never double-counts.  Markers also carry the run
-id minted per checkpoint (:func:`streaming.upsert.ensure_run_id`):
-pointing a FRESH stream (batch ids restarted at 0) at an existing base
-raises instead of silently dropping deltas.
+Exactly-once under partial application (run ids, markers, the writer
+lock: :mod:`streaming.commit`): a crash mid-batch leaves some buckets
+swapped (marker == batch id) and some not.  The engine replays the batch;
+the delta and its key→bucket hash are deterministic, so already-applied
+buckets are skipped by their marker and the rest apply — additive
+accumulation never double-counts.
 
 A plain ``spark.read.parquet(base)`` still works — the bucket directories
 are partition-discovery style, surfacing ``lmdsb`` as an int partition
@@ -52,19 +50,27 @@ from __future__ import annotations
 import json
 import os
 import shutil
-from typing import Callable, List, Optional, Sequence, Tuple
+from typing import Callable, List, Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StructType
 
-from label_maker_dask_spark.operators.merge import merge_upsert
-from label_maker_dask_spark.streaming.upsert import (
-    _BATCH_MARKER,
-    _write_marker,
-    compact_last_per_key,
-    ensure_run_id,
+from label_maker_dask_spark.operators.merge import (
+    merge_additive,
+    merge_upsert_delta,
+    sum_per_key,
 )
+from label_maker_dask_spark.streaming.commit import (
+    already_applied,
+    applied_state,
+    read_state,
+    start_sink,
+    write_applied,
+    write_state,
+    writer_lock,
+)
+from label_maker_dask_spark.streaming.upsert import compact_last_per_key
 
 #: The partition-column name for the key-hash bucket.  NOT
 #: underscore-prefixed — parquet readers skip underscore-prefixed paths,
@@ -83,32 +89,8 @@ def _bucket_expr(keys: Sequence[str], n_buckets: int):
     )
 
 
-def _read_table_meta(base_path: str) -> Optional[dict]:
-    path = os.path.join(base_path, _TABLE_META)
-    if not os.path.exists(path):
-        return None
-    with open(path) as fh:
-        return json.load(fh)
-
-
-def _write_table_meta(base_path: str, meta: dict) -> None:
-    tmp = os.path.join(base_path, _TABLE_META + ".tmp")
-    with open(tmp, "w") as fh:
-        json.dump(meta, fh)
-    os.replace(tmp, os.path.join(base_path, _TABLE_META))
-
-
 def _bucket_dir(base_path: str, i: int) -> str:
     return os.path.join(base_path, f"{BUCKET_COL}={i}")
-
-
-def _bucket_state(base_path: str, i: int) -> Tuple[Optional[str], int]:
-    marker = os.path.join(_bucket_dir(base_path, i), _BATCH_MARKER)
-    if os.path.exists(marker):
-        with open(marker) as fh:
-            state = json.load(fh)
-        return state.get("run"), int(state.get("batch", -1))
-    return None, -1
 
 
 def _recover_bucketed(base_path: str) -> None:
@@ -149,7 +131,7 @@ def read_maintained_table(
     """Read a maintained table, bucketed or plain.  For bucketed tables
     the cached metadata schema skips footer inference and the bucket
     partition column is hidden unless asked for."""
-    meta = _read_table_meta(base_path)
+    meta = read_state(base_path, _TABLE_META)
     if meta is None:
         return spark.read.parquet(base_path)
     df = (
@@ -169,7 +151,7 @@ def key_lookup(spark: SparkSession, base_path: str, **key_values) -> DataFrame:
     and read, no matter how many buckets the table has (asserted in
     tests/test_plans.py).  A plain ``where(k = v)`` would still scan
     every bucket: Spark cannot derive ``lmdsb = hash(k)`` on its own."""
-    meta = _read_table_meta(base_path)
+    meta = read_state(base_path, _TABLE_META)
     if meta is None:
         raise ValueError(f"{base_path!r} is not a bucketed maintained table")
     keys = list(meta["keys"])
@@ -207,13 +189,11 @@ def _apply_bucketed(
 ) -> None:
     """Merge one (key-unique or key-aggregated) delta into the bucketed
     base, rewriting only touched buckets, under the single-writer lock
-    (see :func:`streaming.upsert.writer_lock`: a second concurrent
-    writer raises instead of interleaving bucket swaps).
+    (:func:`streaming.commit.writer_lock`: a second concurrent writer
+    raises instead of interleaving bucket swaps).
     ``merge_fn(base_part, delta)`` returns the replacement rows for the
     touched buckets; ``base_part`` is None when none of them exist
     yet."""
-    from label_maker_dask_spark.streaming.upsert import writer_lock
-
     with writer_lock(base_path, run_id):
         _apply_bucketed_locked(
             delta, base_path, keys, n_buckets, batch_id, run_id, merge_fn
@@ -234,7 +214,7 @@ def _apply_bucketed_locked(
             f"bucketed maintenance reserves column name {BUCKET_COL!r}"
         )
     spark = delta.sparkSession
-    meta = _read_table_meta(base_path)
+    meta = read_state(base_path, _TABLE_META)
     if meta is not None:
         n_buckets = int(meta["n_buckets"])  # creation-time value wins
         if list(meta["keys"]) != list(keys):
@@ -248,22 +228,14 @@ def _apply_bucketed_locked(
         touched = sorted(
             r[0] for r in delta.select(BUCKET_COL).distinct().collect()
         )
-        work: List[int] = []
-        for i in touched:
-            stored_run, applied = _bucket_state(base_path, i)
-            if (
-                run_id is not None
-                and stored_run is not None
-                and stored_run != run_id
-            ):
-                raise ValueError(
-                    f"bucketed maintenance: base table {base_path!r} was "
-                    f"built by a different stream run ({stored_run!r}, this "
-                    f"run {run_id!r}); recreate base table and checkpoint "
-                    "together."
-                )
-            if applied < batch_id:
-                work.append(i)
+        what = f"bucketed maintenance: base table {base_path!r}"
+        work: List[int] = [
+            i
+            for i in touched
+            if not already_applied(
+                applied_state(_bucket_dir(base_path, i)), run_id, batch_id, what
+            )
+        ]
         if not work:
             return  # full replay of an applied batch
         existing = [i for i in work if os.path.isdir(_bucket_dir(base_path, i))]
@@ -286,14 +258,14 @@ def _apply_bucketed_locked(
         scratch = base_path + "._scratch"
         out.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(scratch)
 
-        os.makedirs(base_path, exist_ok=True)
         # (re)write the metadata whenever the stored schema changes, not
         # just at creation — a later batch that evolves the schema (new
         # update column) would otherwise leave the cached read schema
         # stale and silently drop the new column from every read
         if meta is None or meta.get("schema") != merged.schema.json():
-            _write_table_meta(
+            write_state(
                 base_path,
+                _TABLE_META,
                 {
                     "n_buckets": n_buckets,
                     "keys": list(keys),
@@ -307,7 +279,7 @@ def _apply_bucketed_locked(
             sdir = os.path.join(scratch, f"{BUCKET_COL}={i}")
             if not os.path.isdir(sdir):
                 os.makedirs(sdir)  # bucket emptied by deletes: keep marker
-            _write_marker(sdir, run_id, batch_id)
+            write_applied(sdir, run_id, batch_id)
             tgt = _bucket_dir(base_path, i)
             kept = os.path.join(oldd, f"{BUCKET_COL}={i}")
             if os.path.exists(tgt):
@@ -337,71 +309,18 @@ def stream_upsert_to_parquet_bucketed(
     are re-merged and swapped.  ``n_buckets`` matters only at creation;
     size it so base_size/n_buckets fits one comfortable write task (a few
     hundred MB) at the target scale."""
-    run_id = ensure_run_id(checkpoint)
 
     def merge_fn(base_part: Optional[DataFrame], delta: DataFrame) -> DataFrame:
-        if base_part is None:
-            first = delta
-            if delete_col:
-                first = first.where(
-                    ~F.coalesce(F.col(delete_col), F.lit(False))
-                ).drop(delete_col)
-            return first
-        return merge_upsert(
-            base_part,
-            delta,
-            keys=keys,
-            update_cols=update_cols,
-            delete_col=delete_col,
-            broadcast_source=True,
-            assume_unique_source=True,  # compact_last_per_key guarantees it
-        )
+        return merge_upsert_delta(base_part, delta, keys, update_cols, delete_col)
 
-    def apply(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
+    def apply(batch: DataFrame, batch_id: int, run_id: str) -> None:
         _recover_bucketed(base_path)
         compacted = compact_last_per_key(batch, keys, seq_col).drop(seq_col)
         _apply_bucketed(
             compacted, base_path, keys, n_buckets, batch_id, run_id, merge_fn
         )
 
-    writer = (
-        changes.writeStream.foreachBatch(apply)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def _additive_merge(
-    base: DataFrame,
-    agg: DataFrame,
-    keys: Sequence[str],
-    sum_cols: Sequence[str],
-) -> DataFrame:
-    """Broadcast-left-join additive apply (the
-    :func:`streaming.upsert.accumulate_batch` plan shape): matched keys
-    add, unmatched delta keys insert, the base never shuffles."""
-    d = F.broadcast(agg).alias("d")
-    t = base.alias("t")
-    cond = [F.col(f"t.{k}").eqNullSafe(F.col(f"d.{k}")) for k in keys]
-    matched = t.join(d, on=cond, how="left").select(
-        *[F.col(f"t.{k}").alias(k) for k in keys],
-        *[
-            (F.col(f"t.{c}") + F.coalesce(F.col(f"d.{c}"), F.lit(0))).alias(c)
-            for c in sum_cols
-        ],
-    )
-    tk = base.select(*keys).alias("tk")
-    ins = agg.alias("i").join(
-        tk,
-        on=[F.col(f"i.{k}").eqNullSafe(F.col(f"tk.{k}")) for k in keys],
-        how="left_anti",
-    )
-    return matched.unionByName(ins.select(*keys, *sum_cols))
+    return start_sink(changes, checkpoint, apply, "update", available_now)
 
 
 def stream_accumulate_to_parquet_bucketed(
@@ -417,32 +336,18 @@ def stream_accumulate_to_parquet_bucketed(
     (per-key running sums, exactly-once via in-table markers) over a
     bucketed base; per-bucket markers keep partial-crash replays
     exactly-once — see module docstring."""
-    run_id = ensure_run_id(checkpoint)
 
     def merge_fn(base_part: Optional[DataFrame], delta: DataFrame) -> DataFrame:
-        if base_part is None:
-            return delta
-        return _additive_merge(base_part, delta, keys, sum_cols)
+        return merge_additive(base_part, delta, keys, sum_cols)
 
-    def apply(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
+    def apply(batch: DataFrame, batch_id: int, run_id: str) -> None:
         _recover_bucketed(base_path)
-        agg = batch.groupBy(*keys).agg(
-            *[F.sum(c).alias(c) for c in sum_cols]
-        )
         _apply_bucketed(
-            agg, base_path, keys, n_buckets, batch_id, run_id, merge_fn
+            sum_per_key(batch, keys, sum_cols), base_path, keys, n_buckets,
+            batch_id, run_id, merge_fn,
         )
 
-    writer = (
-        deltas.writeStream.foreachBatch(apply)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_sink(deltas, checkpoint, apply, "append", available_now)
 
 
 __all__ = [

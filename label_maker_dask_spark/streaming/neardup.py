@@ -23,12 +23,11 @@ compact-key shuffles as the batch operator, except the band join's left
 side is BATCH-sized, so per-ingest cost scales with the delta, not the
 corpus.
 
-Exactly-once: every write lands in its own ``batch=<id>`` directory
-with dynamic-partition OVERWRITE, so a replayed batch rewrites its own
-output byte-identically and touches nothing else; the per-checkpoint
-run id (``upsert.ensure_run_id``) turns a fresh checkpoint pointed at
-an existing index — batch ids restarting at 0 — into a loud error
-instead of silent overwrites.
+Exactly-once (run ids, the replay guard, the writer lock:
+:mod:`streaming.commit`): every write lands in its own ``batch=<id>``
+directory with dynamic-partition OVERWRITE, so a batch replayed after a
+crash before its marker rewrites its own output byte-identically and
+touches nothing else; a batch whose marker landed is skipped.
 
 Union-of-outputs == batch operator: pairs whose later member arrived in
 batch b are emitted exactly at batch b, so the union over batches is
@@ -42,7 +41,6 @@ exactly-once discipline.
 
 from __future__ import annotations
 
-import json
 import os
 from typing import Optional
 
@@ -57,29 +55,15 @@ from label_maker_dask_spark.operators.dedup import (
     minhash_band_rows,
     minhash_doc_profiles,
 )
-from label_maker_dask_spark.streaming.upsert import ensure_run_id, writer_lock
+from label_maker_dask_spark.streaming.commit import (
+    already_applied,
+    read_state,
+    start_sink,
+    write_state,
+    writer_lock,
+)
 
 _MARKER = "_lmds_neardup_batch"
-
-
-def _batch_marker(index_path: str) -> str:
-    return os.path.join(index_path, _MARKER)
-
-
-def _last_applied(index_path: str) -> Optional[dict]:
-    path = _batch_marker(index_path)
-    if not os.path.exists(path):
-        return None
-    with open(path) as fh:
-        return json.loads(fh.read() or "{}")
-
-
-def _record_applied(index_path: str, run_id: str, batch_id: int) -> None:
-    path = _batch_marker(index_path)
-    tmp = path + ".tmp"
-    with open(tmp, "w") as fh:
-        fh.write(json.dumps({"run": run_id, "batch": batch_id}))
-    os.replace(tmp, path)
 
 
 def apply_neardup_batch(
@@ -99,10 +83,11 @@ def apply_neardup_batch(
     whole index, then append its band rows + profiles.  Idempotent per
     (run_id, batch_id): every write overwrites only this batch's own
     partition directories.  The maintained base is guarded by the same
-    single-writer lock as every other sink (``upsert.writer_lock``):
-    a zombie driver resumed by a second driver on the same checkpoint
-    carries the same run id, so without the lock both would pass the
-    marker guard and interleave partition overwrites."""
+    single-writer lock as every other sink
+    (:func:`streaming.commit.writer_lock`): a zombie driver resumed by a
+    second driver on the same checkpoint carries the same run id, so
+    without the lock both would pass the marker guard and interleave
+    partition overwrites."""
     with writer_lock(index_path, run_id):
         _apply_neardup_batch_locked(
             batch, batch_id, index_path, pairs_path, run_id,
@@ -123,21 +108,11 @@ def _apply_neardup_batch_locked(
     bands: int,
     threshold: float,
 ) -> None:
-    last = _last_applied(index_path)
-    if last is not None and run_id is not None:
-        if last.get("run") != run_id:
-            raise ValueError(
-                f"neardup index {index_path!r} was built by stream run "
-                f"{last.get('run')!r}; this checkpoint is run "
-                f"{run_id!r}.  A fresh checkpoint restarts batch ids at "
-                "0, which would silently overwrite existing batch "
-                "partitions — resume the original checkpoint or point "
-                "at a fresh index directory."
-            )
-        if batch_id < last.get("batch", -1):
-            # a strictly-older batch under the SAME run is a replay of
-            # work already superseded; its partitions are already final
-            return
+    last = read_state(index_path, _MARKER)
+    if run_id is not None and already_applied(
+        last, run_id, batch_id, f"neardup index {index_path!r}"
+    ):
+        return  # the marker lands after every write: partitions are final
     if run_id is not None and last is None:
         # Claim the index for this run BEFORE the first data write
         # (batch=-1 = "claimed, nothing durable yet").  Without this, a
@@ -154,8 +129,7 @@ def _apply_neardup_batch_locked(
                 "carries no provenance.  Point at a fresh index "
                 "directory (or delete the stale one explicitly)."
             )
-        os.makedirs(index_path, exist_ok=True)
-        _record_applied(index_path, run_id, -1)
+        write_state(index_path, _MARKER, {"run": run_id, "batch": -1})
     spark = batch.sparkSession
     # floor=False: the profile pass runs once PER MICRO-BATCH here, and
     # the parallelism floor's repartition of a batch-sized input adds an
@@ -230,7 +204,7 @@ def _apply_neardup_batch_locked(
     write_batch(new_bands, bands_dir)
     write_batch(prof.select("doc_id", "shs"), profiles_dir)
     if run_id is not None:
-        _record_applied(index_path, run_id, batch_id)
+        write_state(index_path, _MARKER, {"run": run_id, "batch": batch_id})
 
 
 def stream_neardup_index(
@@ -248,21 +222,11 @@ def stream_neardup_index(
 ):
     """Start the maintenance stream; returns the StreamingQuery.  Read
     all pairs found so far with ``spark.read.parquet(pairs_path)``."""
-    run_id = ensure_run_id(checkpoint)
 
-    def apply(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
+    def apply(batch: DataFrame, batch_id: int, run_id: str) -> None:
         apply_neardup_batch(
             batch, batch_id, index_path, pairs_path, run_id,
             text_col, id_col, n, k, bands, threshold,
         )
 
-    writer = (
-        docs.writeStream.foreachBatch(apply)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_sink(docs, checkpoint, apply, "append", available_now)

@@ -10,9 +10,9 @@ through :func:`sources.snapshots.write_snapshot` instead:
   maintenance keeps publishing;
 - **O(1) rollback**: ``sources.snapshots.rollback`` repoints ``_latest``
   at any retained version — no data rewritten;
-- **exactly-once, folded into the snapshot**: the batch marker
-  (run id + batch id) is written INTO the version directory before its
-  atomic rename, so marker and data publish together.  On replay the
+- **exactly-once, folded into the snapshot**: the version's metadata
+  carries the batch marker (run id + batch id, :mod:`streaming.commit`)
+  and publishes with the data in one atomic rename.  On replay the
   highest version's marker decides: an already-published batch is
   skipped (and ``_latest`` re-pointed at it, healing a crash between the
   version rename and the pointer move).
@@ -33,12 +33,15 @@ knob the user picks per table.
 
 from __future__ import annotations
 
-from typing import Optional, Sequence, Tuple
+from typing import Callable, Optional, Sequence
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from label_maker_dask_spark.operators.merge import merge_upsert
+from label_maker_dask_spark.operators.merge import (
+    merge_additive,
+    merge_upsert_delta,
+    sum_per_key,
+)
 from label_maker_dask_spark.sources.snapshots import (
     _point_latest,
     _versions,
@@ -47,45 +50,40 @@ from label_maker_dask_spark.sources.snapshots import (
     snapshot_metadata,
     write_snapshot,
 )
-from label_maker_dask_spark.streaming.bucketed import _additive_merge
-from label_maker_dask_spark.streaming.upsert import (
-    compact_last_per_key,
-    ensure_run_id,
-)
+from label_maker_dask_spark.streaming.commit import already_applied, start_sink
+from label_maker_dask_spark.streaming.upsert import compact_last_per_key
 
 
-def _lineage_state(table_path: str) -> Tuple[Optional[int], Optional[str], int]:
-    """(highest version, its run id, its batch id) — the maintenance
-    lineage tip, independent of where ``_latest`` points."""
+def _apply_snapshot(
+    batch: DataFrame,
+    table_path: str,
+    batch_id: int,
+    run_id: Optional[str],
+    keep: Optional[int],
+    merge_fn: Callable[[Optional[DataFrame]], DataFrame],
+) -> Optional[int]:
+    """Publish ``merge_fn(lineage tip or None)`` as the next version;
+    None on an already-applied replay.  The lineage tip is the HIGHEST
+    version, independent of where ``_latest`` points.  A replay re-points
+    ``_latest`` at the published batch, healing a crash between version
+    rename and pointer move."""
     vs = _versions(table_path)
-    if not vs:
-        return None, None, -1
-    meta = snapshot_metadata(table_path, vs[-1]) or {}
-    return vs[-1], meta.get("run"), int(meta.get("batch", -1))
-
-
-def _check_replay(
-    table_path: str, run_id: Optional[str], batch_id: int
-) -> Tuple[Optional[int], bool]:
-    """→ (lineage-tip version, already_applied).  Raises on a foreign run
-    id; heals a crash between version rename and pointer move by
-    re-pointing ``_latest`` at an already-published batch."""
-    tip, stored_run, applied = _lineage_state(table_path)
-    if (
-        run_id is not None
-        and stored_run is not None
-        and stored_run != run_id
+    tip = vs[-1] if vs else None
+    meta = snapshot_metadata(table_path, tip) if tip is not None else None
+    if already_applied(
+        meta, run_id, batch_id, f"snapshot sink: table {table_path!r}"
     ):
-        raise ValueError(
-            f"snapshot sink: table {table_path!r} was maintained by a "
-            f"different stream run ({stored_run!r}, this run {run_id!r}); "
-            "batch ids are only comparable within one checkpoint lifetime. "
-            "Recreate table and checkpoint together."
-        )
-    if tip is not None and applied >= batch_id:
         _point_latest(table_path, tip)
-        return tip, True
-    return tip, False
+        return None
+    base = None
+    if tip is not None:
+        base = read_snapshot(batch.sparkSession, table_path, version=tip)
+    v = write_snapshot(
+        merge_fn(base), table_path, metadata={"run": run_id, "batch": batch_id}
+    )
+    if keep is not None:
+        expire_snapshots(table_path, keep=keep)
+    return v
 
 
 def upsert_snapshot_batch(
@@ -102,34 +100,13 @@ def upsert_snapshot_batch(
     """Apply one CDC micro-batch, publishing the merged table as the next
     snapshot version; returns the published version (None if the batch
     was an already-applied replay)."""
-    spark = batch.sparkSession
-    tip, applied = _check_replay(table_path, run_id, batch_id)
-    if applied:
-        return None
     compacted = compact_last_per_key(batch, keys, seq_col).drop(seq_col)
-    if tip is not None:
-        base = read_snapshot(spark, table_path, version=tip)
-        merged = merge_upsert(
-            base,
-            compacted,
-            keys=keys,
-            update_cols=update_cols,
-            delete_col=delete_col,
-            broadcast_source=True,
-            assume_unique_source=True,  # compact_last_per_key guarantees it
-        )
-    else:
-        merged = compacted
-        if delete_col:
-            merged = merged.where(
-                ~F.coalesce(F.col(delete_col), F.lit(False))
-            ).drop(delete_col)
-    v = write_snapshot(
-        merged, table_path, metadata={"run": run_id, "batch": batch_id}
+    return _apply_snapshot(
+        batch, table_path, batch_id, run_id, keep,
+        lambda base: merge_upsert_delta(
+            base, compacted, keys, update_cols, delete_col
+        ),
     )
-    if keep is not None:
-        expire_snapshots(table_path, keep=keep)
-    return v
 
 
 def accumulate_snapshot_batch(
@@ -144,22 +121,11 @@ def accumulate_snapshot_batch(
     """Additive twin of :func:`upsert_snapshot_batch`: per-key running
     sums, one snapshot version per batch.  The in-snapshot marker is what
     makes the non-idempotent addition exactly-once under replay."""
-    spark = batch.sparkSession
-    tip, applied = _check_replay(table_path, run_id, batch_id)
-    if applied:
-        return None
-    agg = batch.groupBy(*keys).agg(*[F.sum(c).alias(c) for c in sum_cols])
-    if tip is not None:
-        base = read_snapshot(spark, table_path, version=tip)
-        merged = _additive_merge(base, agg, keys, sum_cols)
-    else:
-        merged = agg
-    v = write_snapshot(
-        merged, table_path, metadata={"run": run_id, "batch": batch_id}
+    agg = sum_per_key(batch, keys, sum_cols)
+    return _apply_snapshot(
+        batch, table_path, batch_id, run_id, keep,
+        lambda base: merge_additive(base, agg, keys, sum_cols),
     )
-    if keep is not None:
-        expire_snapshots(table_path, keep=keep)
-    return v
 
 
 def stream_upsert_to_snapshots(
@@ -177,25 +143,15 @@ def stream_upsert_to_snapshots(
     every batch publishes a snapshot version (pinned reads + O(1)
     rollback) instead of overwriting the base in place.  ``keep`` bounds
     retained versions (None = keep all)."""
-    run_id = ensure_run_id(checkpoint)
 
-    def apply(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
+    def apply(batch: DataFrame, batch_id: int, run_id: str) -> None:
         upsert_snapshot_batch(
             batch, table_path, keys, seq_col, batch_id,
             update_cols=update_cols, delete_col=delete_col,
             run_id=run_id, keep=keep,
         )
 
-    writer = (
-        changes.writeStream.foreachBatch(apply)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_sink(changes, checkpoint, apply, "update", available_now)
 
 
 def stream_accumulate_to_snapshots(
@@ -209,24 +165,14 @@ def stream_accumulate_to_snapshots(
 ):
     """:func:`streaming.upsert.stream_accumulate_to_parquet` semantics
     with snapshot-versioned publishes."""
-    run_id = ensure_run_id(checkpoint)
 
-    def apply(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
+    def apply(batch: DataFrame, batch_id: int, run_id: str) -> None:
         accumulate_snapshot_batch(
             batch, table_path, keys, sum_cols, batch_id,
             run_id=run_id, keep=keep,
         )
 
-    writer = (
-        deltas.writeStream.foreachBatch(apply)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_sink(deltas, checkpoint, apply, "append", available_now)
 
 
 __all__ = [

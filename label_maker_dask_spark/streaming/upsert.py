@@ -5,9 +5,9 @@ that plain append sinks can't express.
 Each micro-batch is (1) compacted to its LAST change per key (a CDC batch
 legitimately carries several changes for one key; ``seq_col`` orders them),
 then (2) merged onto the base table with
-:func:`operators.merge.merge_upsert` (the batch is already key-unique, so
-the merge skips its duplicate-key scan), and (3) the merged table swaps in
-via write-to-temp + rename-aside — reading and overwriting the same path
+:func:`operators.merge.merge_upsert_delta` (the batch is already key-unique,
+so the merge skips its duplicate-key scan), and (3) the merged table swaps
+in via write-to-temp + rename-aside — reading and overwriting the same path
 in one job would corrupt the base mid-scan.
 
 Crash safety: the swap is ``rename(base, base._old); rename(tmp, base);
@@ -20,9 +20,12 @@ incomplete write and is discarded.  Without this, a crash between delete
 and rename would make the next batch see "no base table" and silently
 rebuild it from that one batch.
 
-Exactly-once: the sink is idempotent by construction — re-applying a batch
-after a failure merges the same keys to the same values — and the
-checkpointed foreachBatch epoch log skips batches that fully committed.
+Exactly-once (run ids, markers, the foreachBatch driver:
+:mod:`streaming.commit`): the upsert is idempotent by construction —
+re-applying a batch merges the same keys to the same values — so it needs
+no marker.  The accumulate sink is not idempotent; its applied-batch
+marker rides inside the swapped directory (:func:`rewrite_exactly_once`),
+so table and marker change together with the rename.
 
 Scale posture: per batch, the merge is the broadcast-left-join +
 keys-only-anti shape (base table never shuffles); the rewrite cost is the
@@ -33,136 +36,24 @@ file-level deltas instead of a full rewrite (the plan shape is identical).
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
-import socket
-import uuid
-import contextlib
-from typing import Iterator, Optional, Sequence
+from typing import Callable, Optional, Sequence
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from label_maker_dask_spark.operators.merge import merge_upsert
-
-_LOCK_NAME = "_lmds_writer_lock"
-
-
-def break_writer_lock(base_path: str) -> bool:
-    """Manually remove a maintained table's writer lock.  ONLY for
-    operator intervention after verifying the writer named in the lock
-    file is dead — breaking a live writer's lock reintroduces exactly
-    the concurrent-publish corruption the lock exists to prevent.
-    Returns True if a lock was removed."""
-    path = os.path.join(base_path, _LOCK_NAME)
-    if os.path.exists(path):
-        os.remove(path)
-        return True
-    return False
-
-
-def _holder_is_dead(holder: dict) -> bool:
-    """Whether a lock file's recorded holder is verifiably dead.  Same
-    pid on the same host is THIS process (its own crash leftover from an
-    earlier batch).  A different pid on the same host is probed with
-    ``os.kill(pid, 0)`` — only ``ProcessLookupError`` proves death
-    (``PermissionError`` means alive-but-other-user).  A holder on
-    another host, or one with no usable pid/host, is unverifiable and
-    treated as alive — the caller must fail rather than guess."""
-    pid, host = holder.get("pid"), holder.get("host")
-    if not isinstance(pid, int) or host != socket.gethostname():
-        return False
-    if pid == os.getpid():
-        return True
-    try:
-        os.kill(pid, 0)
-    except ProcessLookupError:
-        return True
-    except OSError:
-        pass
-    return False
-
-
-@contextlib.contextmanager
-def writer_lock(base_path: str, run_id: Optional[str]) -> Iterator[None]:
-    """Single-writer guard for maintained tables (bucketed / versioned
-    maintenance): a create-exclusive lock file under the table root so a
-    SECOND CONCURRENT WRITER fails fast instead of corrupting a publish
-    (two interleaved apply calls could rename bucket directories over
-    each other and publish manifests that reference half of each).
-
-    The run-id markers catch checkpoint resets *between* batches; they
-    cannot catch two writers racing *within* one — hence the lock.
-
-    Semantics:
-
-    - acquisition is ``open(path, 'x')`` — atomic on a local/POSIX
-      filesystem (on object stores, a table format's optimistic commit
-      protocol replaces this file);
-    - a lock left behind by OUR OWN run (same non-None ``run_id``) is
-      reclaimed ONLY when the recorded holder is verifiably dead: same
-      process (a crash leftover from an earlier batch of this writer),
-      or same host with ``os.kill(pid, 0)`` reporting no such process.
-      "One writer per run" holds within one driver (``foreachBatch``
-      executes batches serially) but NOT across drivers — a second
-      driver started from the same checkpoint carries the same run id,
-      and reclaiming its live lock would let both interleave bucket
-      swaps, the exact corruption the lock prevents;
-    - a matching-run lock whose holder is alive, or on another host
-      (liveness unverifiable), raises like any foreign lock;
-    - any other lock raises, naming the holder and the
-      :func:`break_writer_lock` escape hatch for a verified-dead
-      holder.  With ``run_id=None`` (direct batch calls) every leftover
-      lock is treated as foreign — fail-loud beats guessing."""
-    os.makedirs(base_path, exist_ok=True)
-    path = os.path.join(base_path, _LOCK_NAME)
-    token = {
-        "run": run_id,
-        "pid": os.getpid(),
-        "host": socket.gethostname(),
-        "nonce": uuid.uuid4().hex,
-    }
-    payload = json.dumps(token)
-    try:
-        with open(path, "x") as fh:
-            fh.write(payload)
-    except FileExistsError:
-        try:
-            with open(path) as fh:
-                holder = json.loads(fh.read() or "{}")
-        except (OSError, ValueError):
-            holder = {}
-        if (
-            run_id is not None
-            and holder.get("run") == run_id
-            and _holder_is_dead(holder)
-        ):
-            # our own run's verified-dead crash leftover — reclaim
-            tmp = path + ".tmp"
-            with open(tmp, "w") as fh:
-                fh.write(payload)
-            os.replace(tmp, path)
-        else:
-            raise ValueError(
-                f"writer_lock: table {base_path!r} is locked by another "
-                f"writer (holder {holder!r}). Concurrent maintenance of "
-                "one base table is not supported — stop the other "
-                "writer, or if it is verified dead, remove the lock "
-                "with streaming.upsert.break_writer_lock()."
-            )
-    try:
-        yield
-    finally:
-        # release only if we still hold it (a broken+re-acquired lock
-        # belongs to someone else now)
-        try:
-            with open(path) as fh:
-                holder = json.loads(fh.read() or "{}")
-            if holder.get("nonce") == token["nonce"]:
-                os.remove(path)
-        except (OSError, ValueError):
-            pass
+from label_maker_dask_spark.operators.merge import (
+    merge_additive,
+    merge_upsert_delta,
+    sum_per_key,
+)
+from label_maker_dask_spark.streaming.commit import (
+    already_applied,
+    applied_state,
+    start_sink,
+    write_applied,
+)
 
 
 def compact_last_per_key(
@@ -225,51 +116,25 @@ def stream_upsert_to_parquet(
     # batches skip the footer-inference job a bare read pays every time
     base_schema = [None]
 
-    def apply_batch(batch: DataFrame, _batch_id: int) -> None:
-        if batch.isEmpty():
-            return
+    def apply(batch: DataFrame, _batch_id: int, _run_id: str) -> None:
         _recover(base_path)
         spark = batch.sparkSession
         compacted = compact_last_per_key(batch, keys, seq_col).drop(seq_col)
-        meta = [c for c in ([delete_col] if delete_col else [])]
-        tmp = base_path + "._applying"
+        base = None
         if os.path.exists(base_path):
             reader = spark.read
             if base_schema[0] is not None:
                 reader = reader.schema(base_schema[0])
             base = reader.parquet(base_path)
-            merged = merge_upsert(
-                base,
-                compacted,
-                keys=keys,
-                update_cols=update_cols,
-                delete_col=delete_col,
-                broadcast_source=True,
-                assume_unique_source=True,  # compact_last_per_key guarantees it
-                evolve_schema=evolve_schema,
-            )
-        else:
-            first = compacted
-            if delete_col:
-                first = first.where(
-                    ~F.coalesce(F.col(delete_col), F.lit(False))
-                )
-            merged = first.drop(*meta)
+        merged = merge_upsert_delta(
+            base, compacted, keys, update_cols, delete_col, evolve_schema
+        )
+        tmp = base_path + "._applying"
         merged.write.mode("overwrite").parquet(tmp)
         base_schema[0] = merged.schema
         _swap_in(tmp, base_path)
 
-    writer = (
-        changes.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-_BATCH_MARKER = "_lmds_applied_batch"
+    return start_sink(changes, checkpoint, apply, "update", available_now)
 
 
 def _swap_in(tmp: str, base_path: str) -> None:
@@ -284,48 +149,28 @@ def _swap_in(tmp: str, base_path: str) -> None:
         shutil.rmtree(old)
 
 
-def _applied_state(base_path: str) -> tuple:
-    """Read the in-table marker → ``(run_id, batch_id)``.  The marker is
-    JSON ``{"run": ..., "batch": N}``; a legacy plain-int marker parses as
-    ``(None, N)``."""
-    marker = os.path.join(base_path, _BATCH_MARKER)
-    if os.path.exists(marker):
-        with open(marker) as fh:
-            raw = fh.read().strip()
-        try:
-            state = json.loads(raw)
-            if isinstance(state, dict):
-                return state.get("run"), int(state.get("batch", -1))
-        except ValueError:
-            pass
-        return None, int(raw)
-    return None, -1
-
-
-def _write_marker(dir_path: str, run_id: Optional[str], batch_id: int) -> None:
-    with open(os.path.join(dir_path, _BATCH_MARKER), "w") as fh:
-        fh.write(json.dumps({"run": run_id, "batch": batch_id}))
-
-
-def ensure_run_id(checkpoint: str) -> str:
-    """The sink's run identity, stored inside the checkpoint directory so
-    base table and checkpoint age together.  Batch ids restart from 0
-    whenever a checkpoint is recreated — so a bare batch-id marker would
-    silently skip every delta of a fresh stream pointed at an existing
-    base table (or of two streams sharing one base).  A run id minted once
-    per checkpoint turns that silent data loss into a loud error at the
-    first batch."""
-    os.makedirs(checkpoint, exist_ok=True)
-    path = os.path.join(checkpoint, "_lmds_run_id")
-    if os.path.exists(path):
-        with open(path) as fh:
-            return fh.read().strip()
-    run_id = uuid.uuid4().hex
-    tmp = path + ".tmp"
-    with open(tmp, "w") as fh:
-        fh.write(run_id)
-    os.replace(tmp, path)
-    return run_id
+def rewrite_exactly_once(
+    spark,
+    base_path: str,
+    batch_id: int,
+    run_id: Optional[str],
+    merge_fn: Callable[[Optional[DataFrame]], DataFrame],
+    what: str,
+) -> None:
+    """Marker-guarded full rewrite of a plain maintained table: an
+    applied replay is skipped (:func:`streaming.commit.already_applied`);
+    otherwise ``merge_fn(base or None)`` is written to the tmp dir with
+    the applied marker inside it and swapped in, so table and marker
+    change atomically.  The marker is an underscore-prefixed data file —
+    Spark's parquet listing ignores it, like _SUCCESS."""
+    state = applied_state(base_path)
+    if already_applied(state, run_id, batch_id, f"{what} {base_path!r}"):
+        return
+    base = spark.read.parquet(base_path) if os.path.exists(base_path) else None
+    tmp = base_path + "._applying"
+    merge_fn(base).write.mode("overwrite").parquet(tmp)
+    write_applied(tmp, run_id or (state or {}).get("run"), batch_id)
+    _swap_in(tmp, base_path)
 
 
 def accumulate_batch(
@@ -340,68 +185,25 @@ def accumulate_batch(
     ``base_path``: stored row = running sum of every delta seen per key.
 
     Unlike last-write upsert, accumulation is NOT idempotent on replay —
-    re-adding a batch double-counts — so exactly-once needs more than the
-    checkpoint log (which only skips batches whose COMMIT completed): the
-    applied batch id rides inside the swapped table directory itself
-    (``_lmds_applied_batch``, written into the tmp dir before the swap).
-    A batch that applied but crashed before the checkpoint commit is
-    replayed by the engine and skipped here by the marker — the
-    table-and-marker pair changes atomically with the rename-aside swap.
+    re-adding a batch double-counts — so the applied batch id rides inside
+    the swapped table directory (:func:`rewrite_exactly_once`): a batch
+    that applied but crashed before the checkpoint commit is replayed by
+    the engine and skipped here by the marker.
 
     Plan shape per batch: deltas pre-aggregate map-side to one row per
-    key, the matched path is a broadcast left join (base never shuffles),
-    inserts anti-join against the base's key columns only — the
-    merge_upsert posture, with addition instead of replacement.
+    key, then :func:`operators.merge.merge_additive` (broadcast left join,
+    keys-only anti join — the base never shuffles).
     """
-    spark = batch.sparkSession
-    stored_run, applied = _applied_state(base_path)
-    if run_id is not None and stored_run is not None and stored_run != run_id:
-        raise ValueError(
-            f"accumulate_batch: base table {base_path!r} was built by a "
-            f"different stream run ({stored_run!r}, this run {run_id!r}). "
-            "Batch ids are only comparable within one checkpoint lifetime; "
-            "applying this stream would silently drop or double-count "
-            "deltas. Recreate base table and checkpoint together, or point "
-            "this stream at a fresh base path."
-        )
-    if applied >= batch_id:
-        return  # replay of an applied-but-uncommitted batch
-    agg = batch.groupBy(*keys).agg(
-        *[F.sum(c).alias(c) for c in sum_cols]
+    rewrite_exactly_once(
+        batch.sparkSession,
+        base_path,
+        batch_id,
+        run_id,
+        lambda base: merge_additive(
+            base, sum_per_key(batch, keys, sum_cols), keys, sum_cols
+        ),
+        "accumulate_batch: base table",
     )
-    if os.path.exists(base_path):
-        # the marker is an underscore-prefixed data file — Spark's parquet
-        # listing ignores it, like _SUCCESS
-        base = spark.read.parquet(base_path)
-        d = F.broadcast(agg).alias("d")
-        t = base.alias("t")
-        cond = [F.col(f"t.{k}").eqNullSafe(F.col(f"d.{k}")) for k in keys]
-        matched = t.join(d, on=cond, how="left").select(
-            *[F.col(f"t.{k}").alias(k) for k in keys],
-            *[
-                (
-                    F.col(f"t.{c}")
-                    + F.coalesce(F.col(f"d.{c}"), F.lit(0))
-                ).alias(c)
-                for c in sum_cols
-            ],
-        )
-        tk = base.select(*keys).alias("tk")
-        ins = (
-            agg.alias("i")
-            .join(
-                tk,
-                on=[F.col(f"i.{k}").eqNullSafe(F.col(f"tk.{k}")) for k in keys],
-                how="left_anti",
-            )
-        )
-        merged = matched.unionByName(ins.select(*keys, *sum_cols))
-    else:
-        merged = agg
-    tmp = base_path + "._applying"
-    merged.write.mode("overwrite").parquet(tmp)
-    _write_marker(tmp, run_id if run_id is not None else stored_run, batch_id)
-    _swap_in(tmp, base_path)
 
 
 def stream_accumulate_to_parquet(
@@ -421,28 +223,17 @@ def stream_accumulate_to_parquet(
 
     Exactly-once via the in-table batch marker (see
     :func:`accumulate_batch`); same crash-recoverable swap as the upsert
-    sink."""
+    sink.  Append mode: every delta row is emitted exactly once and then
+    added into the base — matching the stateful edge-builder's output
+    mode."""
 
-    run_id = ensure_run_id(checkpoint)
-
-    def apply(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
+    def apply(batch: DataFrame, batch_id: int, run_id: str) -> None:
         _recover(base_path)
         accumulate_batch(
             batch, base_path, keys, sum_cols, batch_id, run_id=run_id
         )
 
-    # append mode: every delta row is emitted exactly once and then added
-    # into the base — matching the stateful edge-builder's output mode
-    writer = (
-        deltas.writeStream.foreachBatch(apply)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_sink(deltas, checkpoint, apply, "append", available_now)
 
 
 __all__ = [
@@ -450,6 +241,6 @@ __all__ = [
     "stream_upsert_to_parquet",
     "stream_accumulate_to_parquet",
     "accumulate_batch",
-    "ensure_run_id",
+    "rewrite_exactly_once",
     "_recover",
 ]

@@ -29,10 +29,10 @@ Crash safety falls out of immutability: data directories are never
 mutated after their rename, the manifest write is atomic, and a crash
 anywhere leaves at worst orphan bucket-version directories no manifest
 references (garbage-collected by :func:`expire_table_versions`).  There
-is no recovery dance — replays are decided by the newest manifest's
-batch marker (run id + batch id, same contract as the other sinks), and
-a crash between manifest publish and pointer move is healed by the
-replay re-pointing ``_latest``.
+is no recovery dance — replays are decided by the ``run``/``batch`` of
+the newest manifest (:mod:`streaming.commit`), and a crash between
+manifest publish and pointer move is healed by the replay re-pointing
+``_latest``.
 
 Reads: :func:`read_table_version` assembles the manifest's directory
 list with an explicit schema (no footer inference, no listing of
@@ -43,23 +43,28 @@ from __future__ import annotations
 
 import json
 import os
-from typing import Dict, List, Optional, Sequence, Tuple
+import shutil
+from typing import Dict, List, Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StructType
 
-from label_maker_dask_spark.operators.merge import merge_upsert
-from label_maker_dask_spark.streaming.bucketed import (
-    BUCKET_COL,
-    _additive_merge,
-    _bucket_expr,
+from label_maker_dask_spark.operators.merge import (
+    merge_additive,
+    merge_upsert_delta,
+    sum_per_key,
 )
-from label_maker_dask_spark.streaming.upsert import (
-    compact_last_per_key,
-    ensure_run_id,
+from label_maker_dask_spark.streaming.bucketed import BUCKET_COL, _bucket_expr
+from label_maker_dask_spark.streaming.commit import (
+    already_applied,
+    read_state,
+    start_sink,
+    write_state,
+    write_text,
     writer_lock,
 )
+from label_maker_dask_spark.streaming.upsert import compact_last_per_key
 
 _VERSION_COL = "lmdsv"
 
@@ -80,24 +85,18 @@ def _versions(table: str) -> List[int]:
 
 
 def _read_manifest(table: str, version: int) -> dict:
-    with open(os.path.join(_manifest_dir(table), f"{version}.json")) as fh:
-        return json.load(fh)
+    m = read_state(_manifest_dir(table), f"{version}.json")
+    if m is None:
+        raise FileNotFoundError(f"no version {version} published at {table!r}")
+    return m
 
 
 def _write_manifest(table: str, version: int, manifest: dict) -> None:
-    d = _manifest_dir(table)
-    os.makedirs(d, exist_ok=True)
-    tmp = os.path.join(d, f"{version}.json.tmp")
-    with open(tmp, "w") as fh:
-        json.dump(manifest, fh)
-    os.replace(tmp, os.path.join(d, f"{version}.json"))
+    write_state(_manifest_dir(table), f"{version}.json", manifest)
 
 
 def _point_latest(table: str, version: int) -> None:
-    tmp = os.path.join(table, "_latest.tmp")
-    with open(tmp, "w") as fh:
-        fh.write(str(version))
-    os.replace(tmp, os.path.join(table, "_latest"))
+    write_text(os.path.join(table, "_latest"), str(version))
 
 
 def latest_table_version(table: str) -> Optional[int]:
@@ -149,14 +148,6 @@ def read_table_version(
     return df if with_bucket else df.drop(BUCKET_COL)
 
 
-def _tip_state(table: str) -> Tuple[Optional[int], Optional[str], int]:
-    vs = _versions(table)
-    if not vs:
-        return None, None, -1
-    m = _read_manifest(table, vs[-1])
-    return vs[-1], m.get("run"), int(m.get("batch", -1))
-
-
 def _apply_versioned(
     delta: DataFrame,
     table: str,
@@ -167,7 +158,7 @@ def _apply_versioned(
     merge_fn,
 ) -> Optional[int]:
     """Publish one delta as the table's next version under the
-    single-writer lock (see :func:`streaming.upsert.writer_lock`: a
+    single-writer lock (see :func:`streaming.commit.writer_lock`: a
     second concurrent writer raises instead of corrupting a publish);
     returns the new version (None on an applied replay)."""
     with writer_lock(table, run_id):
@@ -190,23 +181,16 @@ def _apply_versioned_locked(
             f"versioned maintenance reserves column name {BUCKET_COL!r}"
         )
     spark = delta.sparkSession
-    tip, stored_run, applied = _tip_state(table)
-    if (
-        run_id is not None
-        and stored_run is not None
-        and stored_run != run_id
+    vs = _versions(table)
+    tip = vs[-1] if vs else None
+    m = _read_manifest(table, tip) if tip is not None else None
+    if already_applied(
+        m, run_id, batch_id, f"versioned maintenance: table {table!r}"
     ):
-        raise ValueError(
-            f"versioned maintenance: table {table!r} was maintained by a "
-            f"different stream run ({stored_run!r}, this run {run_id!r}); "
-            "recreate table and checkpoint together."
-        )
-    if tip is not None and applied >= batch_id:
         _point_latest(table, tip)  # heal a torn publish on replay
         return None
     prev: Dict[str, int] = {}
-    if tip is not None:
-        m = _read_manifest(table, tip)
+    if m is not None:
         prev = dict(m["buckets"])
         n_buckets = int(m["n_buckets"])
         if list(m["keys"]) != list(keys):
@@ -224,7 +208,6 @@ def _apply_versioned_locked(
         existing = [b for b in touched if str(b) in prev]
         base_part = None
         if existing:
-            m = _read_manifest(table, tip)
             schema = (
                 StructType.fromJson(json.loads(m["schema"]))
                 .add(BUCKET_COL, IntegerType())
@@ -262,13 +245,9 @@ def _apply_versioned_locked(
                 # orphan from a crash between renames and the manifest
                 # write (no manifest references it — a published version
                 # would have made this replay a no-op above)
-                import shutil
-
                 shutil.rmtree(dst)
             os.rename(src, dst)
             buckets[str(b)] = new_version
-        import shutil
-
         shutil.rmtree(scratch, ignore_errors=True)
         _write_manifest(
             table,
@@ -293,8 +272,6 @@ def expire_table_versions(table: str, keep: int = 2) -> List[int]:
     ``_latest``), then garbage-collect bucket-version directories no
     retained manifest references; returns the removed manifest
     versions."""
-    import shutil
-
     vs = _versions(table)
     pinned = latest_table_version(table)
     removable = [v for v in (vs[:-keep] if keep > 0 else vs) if v != pinned]
@@ -334,25 +311,11 @@ def stream_upsert_to_versioned_table(
     O(delta) cost: only delta-touched buckets get new files, the manifest
     carries everything else forward by reference.  ``keep`` bounds
     retained versions."""
-    run_id = ensure_run_id(checkpoint)
 
     def merge_fn(base_part, delta):
-        if base_part is None:
-            first = delta
-            if delete_col:
-                first = first.where(
-                    ~F.coalesce(F.col(delete_col), F.lit(False))
-                ).drop(delete_col)
-            return first
-        return merge_upsert(
-            base_part, delta, keys=keys, update_cols=update_cols,
-            delete_col=delete_col, broadcast_source=True,
-            assume_unique_source=True,
-        )
+        return merge_upsert_delta(base_part, delta, keys, update_cols, delete_col)
 
-    def apply(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
+    def apply(batch: DataFrame, batch_id: int, run_id: str) -> None:
         compacted = compact_last_per_key(batch, keys, seq_col).drop(seq_col)
         v = _apply_versioned(
             compacted, table, keys, n_buckets, batch_id, run_id, merge_fn
@@ -360,14 +323,7 @@ def stream_upsert_to_versioned_table(
         if v is not None and keep is not None:
             expire_table_versions(table, keep=keep)
 
-    writer = (
-        changes.writeStream.foreachBatch(apply)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_sink(changes, checkpoint, apply, "update", available_now)
 
 
 def stream_accumulate_to_versioned_table(
@@ -383,33 +339,19 @@ def stream_accumulate_to_versioned_table(
     """Additive running sums with versioned O(delta) publishes; the
     manifest's batch marker keeps the non-idempotent addition
     exactly-once under replay."""
-    run_id = ensure_run_id(checkpoint)
 
     def merge_fn(base_part, delta):
-        if base_part is None:
-            return delta
-        return _additive_merge(base_part, delta, keys, sum_cols)
+        return merge_additive(base_part, delta, keys, sum_cols)
 
-    def apply(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        agg = batch.groupBy(*keys).agg(
-            *[F.sum(c).alias(c) for c in sum_cols]
-        )
+    def apply(batch: DataFrame, batch_id: int, run_id: str) -> None:
         v = _apply_versioned(
-            agg, table, keys, n_buckets, batch_id, run_id, merge_fn
+            sum_per_key(batch, keys, sum_cols), table, keys, n_buckets,
+            batch_id, run_id, merge_fn,
         )
         if v is not None and keep is not None:
             expire_table_versions(table, keep=keep)
 
-    writer = (
-        deltas.writeStream.foreachBatch(apply)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_sink(deltas, checkpoint, apply, "append", available_now)
 
 
 def table_version_diff(

@@ -153,7 +153,9 @@ def test_bucketed_accumulate_partial_crash_replay_exactly_once(
     additive state is not idempotent, so this is the test that the
     per-bucket marker actually carries exactly-once."""
     from label_maker_dask_spark.streaming.bucketed import _apply_bucketed
-    from label_maker_dask_spark.streaming.bucketed import _additive_merge
+    from label_maker_dask_spark.operators.merge import (
+        merge_additive as _additive_merge,
+    )
 
     base = str(tmp_path / "counts")
 
@@ -246,11 +248,11 @@ def test_plain_accumulate_fresh_checkpoint_raises(spark, tmp_path):
 
 
 def test_bucketed_concurrent_writer_raises(spark, tmp_path):
-    from label_maker_dask_spark.streaming.bucketed import (
-        _additive_merge,
-        _apply_bucketed,
+    from label_maker_dask_spark.operators.merge import (
+        merge_additive as _additive_merge,
     )
-    from label_maker_dask_spark.streaming.upsert import writer_lock
+    from label_maker_dask_spark.streaming.bucketed import _apply_bucketed
+    from label_maker_dask_spark.streaming.commit import writer_lock
 
     base = str(tmp_path / "base")
 

@@ -89,6 +89,40 @@ def test_replay_is_idempotent(spark, tmp_path):
     assert _pairs_list(spark.read.parquet(pairs)) == before
 
 
+def test_replay_after_crash_before_marker_is_row_identical(
+    spark, tmp_path, monkeypatch
+):
+    """A crash after batch 1's writes but before its marker leaves the
+    marker at batch 0, so the replay of batch 1 re-applies.  Its own
+    bands and profiles are already on disk and must not join against
+    themselves: the rewritten pairs equal a clean run's, row for row."""
+    import label_maker_dask_spark.streaming.neardup as nd
+
+    docs = _docs(spark)
+    b1 = docs.where(F.col("doc_id") < 100)
+    b2 = docs.where(F.col("doc_id") >= 100)
+    clean_idx, clean_pairs = str(tmp_path / "ci"), str(tmp_path / "cp")
+    apply_neardup_batch(b1, 0, clean_idx, clean_pairs, "run-a", threshold=THRESH)
+    apply_neardup_batch(b2, 1, clean_idx, clean_pairs, "run-a", threshold=THRESH)
+    want = _pairs_list(spark.read.parquet(clean_pairs))
+
+    index, pairs = str(tmp_path / "index"), str(tmp_path / "pairs")
+    apply_neardup_batch(b1, 0, index, pairs, "run-a", threshold=THRESH)
+    write_state = nd.write_state
+
+    def crash_on_batch_1(dir_path, name, state):
+        if state["batch"] == 1:
+            raise RuntimeError("injected crash before the marker")
+        write_state(dir_path, name, state)
+
+    monkeypatch.setattr(nd, "write_state", crash_on_batch_1)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        apply_neardup_batch(b2, 1, index, pairs, "run-a", threshold=THRESH)
+    monkeypatch.undo()
+    apply_neardup_batch(b2, 1, index, pairs, "run-a", threshold=THRESH)
+    assert _pairs_list(spark.read.parquet(pairs)) == want
+
+
 def test_fresh_run_against_existing_index_raises(spark, tmp_path):
     docs = _docs(spark)
     index = str(tmp_path / "index")

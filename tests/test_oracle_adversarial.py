@@ -1,0 +1,58 @@
+"""Catalog cells against their DuckDB oracles on small hand-built inputs
+that the TPC-H-shaped testdata never contains (NULL dates and the like).
+Each test writes its tables as parquet into a temp ``sf_dir`` and compares
+``QUERIES[name]`` with ``ORACLES[name]`` row for row."""
+
+import datetime
+
+import duckdb
+import pyarrow as pa
+import pyarrow.parquet as pq
+
+from label_maker_dask_spark.queries import ORACLES, QUERIES
+
+
+def _write_tables(sf_dir, tables):
+    for name, cols in tables.items():
+        pq.write_table(pa.table(cols), f"{sf_dir}/{name}.parquet")
+
+
+def _both(spark, sf_dir, name, tables):
+    con = duckdb.connect()
+    for t in tables:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    want = sorted(con.execute(ORACLES[name]).fetchall())
+    got = sorted(tuple(r) for r in QUERIES[name](spark, sf_dir).collect())
+    return got, want
+
+
+def test_q21_last_supplier_kept_when_others_have_only_null_ship_dates(
+    spark, tmp_path
+):
+    """Order 1's only other supplier (10) has nothing but NULL ship dates,
+    so no line ships strictly after supplier 20's: the oracle's
+    ``NOT EXISTS (... l3.l_shipdate > l1.l_shipdate)`` keeps supplier 20.
+    Order 2 is the ordinary case (30 ships last)."""
+    ts = lambda day: datetime.datetime(1995, 1, day)
+    tables = {
+        "lineitem": {
+            "l_orderkey": pa.array([1, 1, 1, 2, 2], pa.int64()),
+            "l_suppkey": pa.array([10, 10, 20, 10, 30], pa.int64()),
+            "l_shipdate": pa.array(
+                [None, None, ts(5), ts(1), ts(3)], pa.timestamp("us")
+            ),
+        },
+        "orders": {
+            "o_orderkey": pa.array([1, 2], pa.int64()),
+            "o_orderstatus": pa.array(["F", "F"]),
+        },
+        "supplier": {
+            "s_suppkey": pa.array([10, 20, 30], pa.int64()),
+            "s_name": pa.array(["s10", "s20", "s30"]),
+        },
+    }
+    sf_dir = str(tmp_path)
+    _write_tables(sf_dir, tables)
+    got, want = _both(spark, sf_dir, "q21_suppliers_who_shipped_last", tables)
+    assert want == [("s10", 2), ("s20", 1), ("s30", 1)]
+    assert got == want

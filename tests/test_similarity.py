@@ -809,12 +809,14 @@ def test_pq_append_composes_and_replays_exactly_once(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from label_maker_dask_spark.operators.similarity import (
-        _ivf_state_read,
-        _ivf_state_write,
         append_pq_index,
         append_pq_index_exactly_once,
         pq_adc_topk_stored,
         write_pq_index,
+    )
+    from label_maker_dask_spark.streaming.commit import (
+        read_state as _ivf_state_read,
+        write_state as _ivf_state_write,
     )
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -917,8 +919,6 @@ def test_pq_compaction_folds_delta_and_recovers(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from label_maker_dask_spark.operators.similarity import (
-        _ivf_state_read,
-        _ivf_state_write,
         _partition_inventory,
         _pq_delta_inventory,
         append_pq_index,
@@ -926,6 +926,10 @@ def test_pq_compaction_folds_delta_and_recovers(spark, tmp_path):
         pq_adc_topk_stored,
         recover_pq_compaction,
         write_pq_index,
+    )
+    from label_maker_dask_spark.streaming.commit import (
+        read_state as _ivf_state_read,
+        write_state as _ivf_state_write,
     )
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -980,12 +984,14 @@ def test_pq_compaction_refuses_pending_append_intent(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from label_maker_dask_spark.operators.similarity import (
-        _ivf_state_write,
         _pq_delta_inventory,
         append_pq_index,
         append_pq_index_exactly_once,
         compact_pq_index,
         write_pq_index,
+    )
+    from label_maker_dask_spark.streaming.commit import (
+        write_state as _ivf_state_write,
     )
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -1052,11 +1058,13 @@ def test_ivf_rebalance_refuses_pending_append_intent(spark, tmp_path):
 
     from label_maker_dask_spark.operators.similarity import (
         _ivf_cell_inventory,
-        _ivf_state_write,
         append_ivf_index,
         append_ivf_index_exactly_once,
         rebalance_ivf_index,
         write_ivf_index,
+    )
+    from label_maker_dask_spark.streaming.commit import (
+        write_state as _ivf_state_write,
     )
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -1093,13 +1101,15 @@ def test_pq_compaction_completion_precedes_intent(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from label_maker_dask_spark.operators.similarity import (
-        _ivf_state_write,
         _partition_inventory,
         _pq_delta_inventory,
         append_pq_index,
         pq_adc_topk_stored,
         recover_pq_compaction,
         write_pq_index,
+    )
+    from label_maker_dask_spark.streaming.commit import (
+        write_state as _ivf_state_write,
     )
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")

@@ -145,7 +145,9 @@ def test_versioned_rollback_then_replay_heals_exactly_once(spark, tmp_path):
     checkpoint commit doesn't; the operator rolls back one version; the
     engine replays the batch — the manifest's batch marker makes the
     replay a pointer heal, not a double count."""
-    from label_maker_dask_spark.streaming.bucketed import _additive_merge
+    from label_maker_dask_spark.operators.merge import (
+        merge_additive as _additive_merge,
+    )
     from label_maker_dask_spark.streaming.versioned import _apply_versioned
 
     table = str(tmp_path / "counts")
@@ -177,9 +179,11 @@ def test_versioned_rollback_then_replay_heals_exactly_once(spark, tmp_path):
 def test_versioned_concurrent_writer_raises(spark, tmp_path):
     """Two interleaved apply calls on one base: the second fails fast
     under the writer lock instead of corrupting the publish."""
-    from label_maker_dask_spark.streaming.bucketed import _additive_merge
+    from label_maker_dask_spark.operators.merge import (
+        merge_additive as _additive_merge,
+    )
     from label_maker_dask_spark.streaming.versioned import _apply_versioned
-    from label_maker_dask_spark.streaming.upsert import writer_lock
+    from label_maker_dask_spark.streaming.commit import writer_lock
 
     table = str(tmp_path / "counts")
 
@@ -204,7 +208,9 @@ def test_versioned_concurrent_writer_raises(spark, tmp_path):
 
 
 def _apply_once(spark, table, run_id):
-    from label_maker_dask_spark.streaming.bucketed import _additive_merge
+    from label_maker_dask_spark.operators.merge import (
+        merge_additive as _additive_merge,
+    )
     from label_maker_dask_spark.streaming.versioned import _apply_versioned
 
     agg = spark.createDataFrame([(1, 1)], "k long, w long")
@@ -219,7 +225,7 @@ def _apply_once(spark, table, run_id):
 def _write_lock(table, **fields):
     import json
 
-    from label_maker_dask_spark.streaming.upsert import _LOCK_NAME
+    from label_maker_dask_spark.streaming.commit import _LOCK_NAME
 
     os.makedirs(table, exist_ok=True)
     with open(os.path.join(table, _LOCK_NAME), "w") as fh:
@@ -240,7 +246,7 @@ def test_versioned_same_run_dead_holder_lock_is_reclaimed(
 ):
     import socket
 
-    from label_maker_dask_spark.streaming.upsert import _LOCK_NAME
+    from label_maker_dask_spark.streaming.commit import _LOCK_NAME
 
     table = str(tmp_path / "counts")
     # a crash left our own run's lock behind; holder pid verifiably dead
@@ -362,7 +368,9 @@ def test_table_version_diff_rows_and_bucket_pruning(spark, tmp_path):
     correctly, unchanged rows dropped, and — the point of the manifest —
     ONLY changed-bucket directories are ever read (untouched buckets'
     immutable dirs are provably identical between the manifests)."""
-    from label_maker_dask_spark.streaming.bucketed import _additive_merge
+    from label_maker_dask_spark.operators.merge import (
+        merge_additive as _additive_merge,
+    )
     from label_maker_dask_spark.streaming.versioned import (
         _apply_versioned,
         table_version_diff,
