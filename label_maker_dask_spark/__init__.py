@@ -20,7 +20,9 @@ surface — as lazy Spark DataFrame plans:
 - functions/    : scalar expression library (pixel math, text, vectors)
 
 Everything that can be a built-in Catalyst expression is; pandas UDFs are
-reserved for genuinely imperative per-group work (rasterization, image decode).
+reserved for genuinely imperative per-tile or per-group work (the job's one
+tile scan, which fetches, labels and reads imagery per tile;
+rasterization; image decode).
 """
 
 from label_maker_dask_spark.filters import compile_filter

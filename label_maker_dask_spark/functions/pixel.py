@@ -1,4 +1,5 @@
-"""Pixel-space conversion math from the reference, as Column expressions.
+"""Pixel-space conversion math from the reference, as Column expressions
+(plus one scalar twin, :func:`pixel_bbox`, for Python workers).
 
 Reference semantics (label.py:60-96):
 
@@ -13,7 +14,8 @@ Reference semantics (label.py:60-96):
 - ``_buffer_bbox``: pad ±4 px then clamp (label.py:176-180).
 - ``_clamp``: restrict to [0, 255] (label.py:183-185).
 
-All pure column arithmetic — these run inside whole-stage codegen.
+The Column forms are pure column arithmetic and run inside whole-stage
+codegen.
 """
 
 from __future__ import annotations
@@ -54,4 +56,30 @@ def pixel_bbox_cols(
         clamp(y0 - pad),
         clamp(x1 + pad),
         clamp(y1 + pad),
+    ]
+
+
+def pixel_bbox(xmin, ymin, xmax, ymax, pad: int = 4) -> list[int]:
+    """Scalar twin of :func:`pixel_bbox_cols` for Python workers: the same
+    HALF_EVEN conversion (Python's ``round``), y-flip, ±pad and clamp.
+
+    A ``None`` bound (a geometry with no coordinate pairs) gives
+    ``TILE_PX``, as the Column form does: Spark's ``least`` and
+    ``greatest`` skip nulls, so the clamp of a null is ``TILE_PX``.
+    """
+
+    def px(v, flip=False):
+        if v is None:
+            return None
+        p = round(v * TILE_PX / EXTENT)
+        return TILE_PX - p if flip else p
+
+    def padded(v, d):
+        return TILE_PX if v is None else max(0, min(TILE_PX, v + d))
+
+    return [
+        padded(px(xmin), -pad),
+        padded(px(ymax, flip=True), -pad),
+        padded(px(xmax), pad),
+        padded(px(ymin, flip=True), pad),
     ]

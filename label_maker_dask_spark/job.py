@@ -5,15 +5,15 @@ Reference three-call protocol -> Spark mapping (SURVEY.md section 3):
 
 - ``build_job()``   : constructed the Dask delayed graph eagerly on the driver
                       (main.py:87-99).  Here it assembles one lazy DataFrame
-                      plan — tile generator -> labels -> image scan -> 1:1
-                      pairing — and returns it.  ``explain()`` replaces
-                      ``dask.visualize``.  Classification and detection
-                      labels are JVM aggregates over the feature scan
-                      (one shuffle on the tile key, left-joined back onto
-                      the tiles); segmentation labels are one
-                      ``mapInPandas`` over the tiles that fetches and burns
-                      each tile in one task (``MapInPandas`` over
-                      ``Range``, no exchange, no join).
+                      plan and returns it: one ``mapInPandas`` over the
+                      generated tiles (``labels.tile_labels``) that, per
+                      tile and in one task, fetches the features, computes
+                      the label and, when the job has imagery, fetches the
+                      image — the reference's one task pair per tile
+                      (main.py:20-63).  For every ml_type the plan is
+                      ``MapInPandas`` over ``Range``: no exchange, no join,
+                      no broadcast.  ``explain()`` replaces
+                      ``dask.visualize``.
 - ``n_tiles()``     : len of the driver-side tile list (main.py:101-107).
                       Here: exact arithmetic, no scan, no driver list.
 - ``execute_job()`` : ``dask.compute`` gathering all results into client RAM
@@ -22,10 +22,10 @@ Reference three-call protocol -> Spark mapping (SURVEY.md section 3):
                       ``execute()`` with no path collects (small jobs only,
                       kept for reference parity).
 
-The label⋈image pairing (reference main.py:50-63) is an equi-join on the
-tile key.  Both sides derive from the same generated ``tiles`` frame and
-carry one row per tile; at cluster scale AQE picks the strategy and either
-side can be broadcast when small.
+The label⋈image pairing (reference main.py:50-63) needs no join: the
+label and the image of a tile are computed in the same task and leave it
+as one row.  ``labels()`` is the same scan without images; ``features()``
+and ``images()`` expose the feature and image scans on their own.
 """
 
 from __future__ import annotations
@@ -36,13 +36,16 @@ from pyspark.sql import DataFrame, SparkSession
 
 from label_maker_dask_spark import labels as L
 from label_maker_dask_spark import tiles as T
-from label_maker_dask_spark.sources.imagery import fetch_images
+from label_maker_dask_spark.sources.imagery import (
+    fetch_images,
+    image_fetcher_factory,
+)
 from label_maker_dask_spark.sources.vector_tiles import (
     fetch_features,
     tile_fetcher_factory,
 )
 
-ML_TYPES = ("classification", "object-detection", "segmentation")
+ML_TYPES = tuple(L.LABEL_TYPES)
 
 
 class LabelMakerJob:
@@ -62,7 +65,6 @@ class LabelMakerJob:
     ):
         if ml_type not in ML_TYPES:
             raise ValueError(f"ml_type must be one of {ML_TYPES}, got {ml_type!r}")
-        tile_fetcher_factory(label_source, tile_fetcher)  # fail fast
         self.spark = spark
         self.zoom = zoom
         self.bounds = list(bounds)
@@ -75,6 +77,10 @@ class LabelMakerJob:
         self.plan: Optional[DataFrame] = None
         self.results = None
         self.metrics: Optional[Dict[str, Any]] = None
+        # fail fast: a missing label source or an unsupported WMS CRS
+        # raises here, not in a task
+        tile_fetcher_factory(label_source, tile_fetcher)
+        self._image_factory()
 
     # -- plan construction ----------------------------------------------------
 
@@ -89,18 +95,8 @@ class LabelMakerJob:
         )
 
     def labels(self) -> DataFrame:
-        if self.ml_type == "segmentation":
-            # fetch and burn in one narrow pass over the tiles
-            return L.segmentation_tile_labels(
-                self.tiles(),
-                self.classes,
-                label_source=self.label_source,
-                tile_fetcher=self.tile_fetcher,
-            )
-        tiles, feats = self.tiles(), self.features()
-        if self.ml_type == "classification":
-            return L.classification_labels(feats, self.classes, tiles=tiles)
-        return L.detection_labels(feats, self.classes, tiles=tiles)
+        """``(z, x, y, label)``: the job's tile scan without images."""
+        return self._tile_scan(with_images=False)
 
     def images(self) -> DataFrame:
         return fetch_images(
@@ -108,12 +104,27 @@ class LabelMakerJob:
         )
 
     def build_job(self) -> DataFrame:
-        """Assemble the full lazy plan: labels ⋈ images on the tile key."""
-        plan = self.labels()
-        if self.imagery is not None or self.image_fetcher is not None:
-            plan = plan.join(self.images(), ["z", "x", "y"])
-        self.plan = plan
-        return plan
+        """Assemble the full lazy plan: one tile scan yielding
+        ``(z, x, y, label[, image])``, with the image column when the job
+        has imagery."""
+        self.plan = self._tile_scan(with_images=True)
+        return self.plan
+
+    def _image_factory(self) -> Optional[Callable]:
+        """The image fetcher constructor, or None for a job without
+        imagery."""
+        if self.imagery is None and self.image_fetcher is None:
+            return None
+        return image_fetcher_factory(self.imagery, self.image_fetcher)
+
+    def _tile_scan(self, with_images: bool) -> DataFrame:
+        return L.tile_labels(
+            self.tiles(),
+            self.ml_type,
+            self.classes,
+            tile_fetcher_factory(self.label_source, self.tile_fetcher),
+            self._image_factory() if with_images else None,
+        )
 
     def explain(self, mode: str = "formatted") -> None:
         """Plan display — the analogue of ``dask.visualize`` (main.py:98-99)."""

@@ -4,24 +4,34 @@
 Three ml_types (reference main.py:56-62):
 
 - classification: per tile, a ``len(classes)+1`` int vector of class-presence
-  flags, slot 0 = background (label.py:15-23).  Here: a hash aggregate of
-  boolean-exists per class — one shuffle, map-side partial agg, codegen'd.
+  flags, slot 0 = background (label.py:15-23).
 - object-detection: per tile, an array of ``(xmin, ymin, xmax, ymax, class)``
-  pixel boxes (label.py:24-35).  Here: pure column math (bounds extraction,
-  scale, y-flip, pad, clamp) + ``collect_list`` — no Python in the hot path.
+  pixel boxes (label.py:24-35).
 - segmentation: per tile, a 256x256 uint8 class-id raster (label.py:36-54).
-  Here: one numpy-rasterizer kernel per tile (``burn_tile``, the one
-  genuinely imperative operator) behind two entry points.  The job path,
-  ``segmentation_tile_labels``, fetches and burns each tile inside one
-  ``mapInPandas`` over the tile frame — the reference's one-task-per-tile
-  shape (main.py:20-63), with no feature shuffle and no join.  The frame
-  path, ``segmentation_labels``, burns an existing feature frame with a
-  grouped-map ``applyInPandas`` over the tile key.
+
+Each has two entry points that agree row for row:
+
+- The job path, :func:`tile_labels`: one ``mapInPandas`` over the tile
+  frame fetches each tile's features, computes its label with a per-tile
+  kernel (:func:`classification_tile`, :func:`detection_tile`,
+  :func:`segmentation_tile`) and, when the job has imagery, fetches its
+  image, all in one task — the reference's one-task-per-tile shape
+  (main.py:20-63), with no feature rows, no shuffle and no join.  Filters
+  run through ``filters_local.feature_passes``, the interpreter twin of
+  ``compile_filter``.
+- The frame operators over an existing feature frame, used by the catalog
+  cells and as the reference the job is tested against.
+  :func:`classification_labels` is a hash aggregate of boolean-exists per
+  class (one shuffle, map-side partial agg, codegen'd);
+  :func:`detection_labels` is pure column math (bounds extraction, scale,
+  y-flip, pad, clamp) plus ``collect_list``; :func:`segmentation_labels`
+  burns each tile's features with :func:`burn_tile` in a grouped-map
+  ``applyInPandas``.
 
 Error tolerance (reference main.py:42-44, label.py:55-57): a tile with no
-features must still produce its empty label.  Pass the ``tiles`` frame and
-each feature-frame operator left-joins it, filling the per-ml_type empty
-label; the segmentation tile scan emits one row per tile by construction.
+features must still produce its empty label.  The tile scan emits one row
+per tile by construction; pass the ``tiles`` frame to a frame operator and
+it left-joins it, filling the per-ml_type empty label.
 
 Known reference bug deliberately NOT replicated: label.py:42-44 mutates
 ``feat["geometry"]["coordinates"]`` in place, double-converting features that
@@ -31,7 +41,8 @@ match two classes.  We convert each feature's coordinates exactly once.
 from __future__ import annotations
 
 import json
-from typing import Callable, Iterable, Iterator, Optional, Sequence
+import re
+from typing import Any, Callable, Iterable, Iterator, Optional, Sequence
 
 import numpy as np
 import pandas as pd
@@ -39,25 +50,37 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from label_maker_dask_spark.filters import compile_filter
+from label_maker_dask_spark.filters_local import feature_passes
 from label_maker_dask_spark.functions.pixel import (
     EXTENT,
     TILE_PX,
-    clamp,
+    pixel_bbox,
     pixel_bbox_cols,
 )
 from label_maker_dask_spark.raster import rasterize
-from label_maker_dask_spark.sources.vector_tiles import (
-    TileFetcher,
-    tile_fetcher_factory,
-)
+from label_maker_dask_spark.sources.imagery import ImageFetcher
+from label_maker_dask_spark.sources.vector_tiles import TileFetcher
+from label_maker_dask_spark.tiles import tile_chunks
 
 TILE_COLS = ("z", "x", "y")
+# the label column's type per ml_type; the tile scan yields
+# ``z int, x long, y long, label <type>[, image binary]``
+LABEL_TYPES = {
+    "classification": "array<int>",
+    "object-detection": (
+        "array<struct<xmin:int,ymin:int,xmax:int,ymax:int,class:int>>"
+    ),
+    "segmentation": "binary",
+}
 
 # innermost GeoJSON coordinate pairs "[x, y]" — lets us take geometry bounds
 # with a vectorized regexp instead of parsing ragged nested arrays (the
 # coordinate nesting is recursively ragged, reference label.py:158-163)
 _NUM = r"(-?[0-9]+(?:\.[0-9]+)?(?:[eE][+-]?[0-9]+)?)"
 _PAIR_RE = r"\[\s*" + _NUM + r"\s*,\s*" + _NUM + r"\s*[\],]"
+# the same pattern for Python workers; ASCII so ``\s`` matches what Java's
+# does
+_PAIR = re.compile(_PAIR_RE, re.ASCII)
 
 
 def class_predicates(classes: Sequence[dict]) -> list[Column]:
@@ -96,6 +119,19 @@ def geometry_bounds(geometry: Column) -> Column:
         F.array_max(xs).alias("xmax"),
         F.array_max(ys).alias("ymax"),
     )
+
+
+def geometry_bounds_local(geometry: Optional[str]) -> tuple:
+    """Python twin of :func:`geometry_bounds` for one geometry string:
+    ``(xmin, ymin, xmax, ymax)`` over the same regexp's coordinate pairs,
+    all four ``None`` when there are none (a null, empty or truncated
+    geometry), as ``array_min`` of an empty array is null."""
+    pairs = _PAIR.findall(geometry) if geometry is not None else []
+    if not pairs:
+        return (None, None, None, None)
+    xs = [float(x) for x, _ in pairs]
+    ys = [float(y) for _, y in pairs]
+    return (min(xs), min(ys), max(xs), max(ys))
 
 
 def classification_labels(
@@ -159,9 +195,7 @@ def detection_labels(
     bounds — same result, no geometry library.
     """
     classes = _norm_classes(classes)
-    empty = F.array().cast(
-        "array<struct<xmin:int,ymin:int,xmax:int,ymax:int,class:int>>"
-    )
+    empty = F.array().cast(LABEL_TYPES["object-detection"])
     if not classes:
         base = tiles if tiles is not None else features
         return base.select(*tile_cols).distinct().select(
@@ -201,9 +235,6 @@ def detection_labels(
     label = F.flatten(F.transform(F.col("_fb"), lambda s: s["_boxes"]))
     out = agg.select(*tile_cols, label.alias("label"))
     if tiles is not None:
-        empty = F.array().cast(
-            "array<struct<xmin:int,ymin:int,xmax:int,ymax:int,class:int>>"
-        )
         out = (
             tiles.select(*tile_cols)
             .join(out, list(tile_cols), "left")
@@ -224,10 +255,10 @@ def segmentation_labels(
 
     Grouped-map ``applyInPandas`` over the tile key; each group is sorted
     by ``order_col`` (stable, so equal ids keep their row order) and burned
-    by :func:`burn_tile`.  :func:`segmentation_tile_labels` computes the
-    same rasters straight from a tile frame without materializing features.
+    by :func:`burn_tile`.  :func:`tile_labels` computes the same rasters
+    straight from a tile frame without materializing features.
     """
-    filters, buffers = _burn_spec(classes)
+    filters, buffers = _class_spec(classes)
     cols = list(tile_cols)
 
     schema = (
@@ -267,76 +298,154 @@ def segmentation_labels(
     return out
 
 
-SEGMENTATION_SCHEMA = "z int, x long, y long, label binary"
-# tiles per output frame of the tile scan: 64 rasters are 4 MB, where one
-# frame per 10k-row input Arrow batch would be about 655 MB
-SCAN_CHUNK_TILES = 64
-
-
-def segmentation_tile_labels(
+def tile_labels(
     tiles: DataFrame,
+    ml_type: str,
     classes: Sequence[dict],
-    label_source: Optional[str] = None,
-    tile_fetcher: Optional[TileFetcher] = None,
+    fetcher_factory: Callable[[], TileFetcher],
+    image_factory: Optional[Callable[[], ImageFetcher]] = None,
 ) -> DataFrame:
-    """Segmentation rasters computed inside the tile scan: one
-    ``mapInPandas`` over ``tiles (z, x, y)`` fetches each tile's features
-    (label source resolved by ``tile_fetcher_factory``) and burns them in
-    the same task — no feature rows, no shuffle, no join.  Every tile,
-    empty ones included, yields one ``SEGMENTATION_SCHEMA`` row, equal
-    byte for byte to :func:`segmentation_labels` over ``fetch_features``
-    of the same tiles."""
-    fetcher_factory = tile_fetcher_factory(label_source, tile_fetcher)
+    """Labels computed inside the tile scan: one ``mapInPandas`` over
+    ``tiles (z, x, y)`` fetches each tile's features (fetcher built by
+    ``fetcher_factory``, see ``sources.vector_tiles.tile_fetcher_factory``),
+    computes its ``ml_type`` label and, given ``image_factory`` (see
+    ``sources.imagery.image_fetcher_factory``), fetches its image in the
+    same task — no feature rows, no shuffle, no join.
+
+    Every tile, empty ones included, yields one
+    ``z int, x long, y long, label <LABEL_TYPES[ml_type]>[, image binary]``
+    row, equal to the frame operator over ``fetch_features`` of the same
+    tiles (joined to ``fetch_images`` when there is imagery)."""
+    schema = f"z int, x long, y long, label {LABEL_TYPES[ml_type]}"
+    if image_factory is not None:
+        schema += ", image binary"
     return tiles.select(*TILE_COLS).mapInPandas(
-        segmentation_tile_scan(fetcher_factory, classes),
-        schema=SEGMENTATION_SCHEMA,
+        tile_scan(ml_type, classes, fetcher_factory, image_factory),
+        schema=schema,
     )
 
 
-def segmentation_tile_scan(
-    fetcher_factory: Callable[[], TileFetcher],
+def tile_scan(
+    ml_type: str,
     classes: Sequence[dict],
+    fetcher_factory: Callable[[], TileFetcher],
+    image_factory: Optional[Callable[[], ImageFetcher]] = None,
 ) -> Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]:
-    """The ``mapInPandas`` function of :func:`segmentation_tile_labels`.
-    Output frames hold at most ``SCAN_CHUNK_TILES`` tiles, whatever the
+    """The ``mapInPandas`` function of :func:`tile_labels`.  Output
+    frames hold at most ``tiles.SCAN_CHUNK_TILES`` tiles, whatever the
     size of the input Arrow batch."""
-    filters, buffers = _burn_spec(classes)
+    filters, buffers = _class_spec(classes)
+    kernel = {
+        "classification": lambda feats: classification_tile(feats, filters),
+        "object-detection": lambda feats: detection_tile(feats, filters, buffers),
+        "segmentation": lambda feats: segmentation_tile(feats, filters, buffers),
+    }[ml_type]
 
     def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         fetch = fetcher_factory()
-        for pdf in batches:
-            for start in range(0, len(pdf), SCAN_CHUNK_TILES):
-                chunk = pdf.iloc[start:start + SCAN_CHUNK_TILES]
-                labels = []
-                for z, x, y in zip(chunk["z"], chunk["x"], chunk["y"]):
-                    # sorted() is stable: equal ids burn in fetch order,
-                    # as in the frame path; null ids last, as pandas does
-                    feats = sorted(
-                        fetch(int(z), int(x), int(y)),
-                        key=lambda f: (f.get("id") is None, f.get("id") or 0),
-                    )
-                    features = (
-                        (f.get("geometry"), f.get("properties"),
-                         f.get("geometry_type"), f.get("id"))
-                        for f in feats
-                    )
-                    labels.append(burn_tile(features, filters, buffers))
-                yield pd.DataFrame({
-                    "z": chunk["z"].to_numpy(),
-                    "x": chunk["x"].to_numpy(),
-                    "y": chunk["y"].to_numpy(),
-                    "label": labels,
-                })
+        fetch_image = image_factory() if image_factory is not None else None
+        for chunk in tile_chunks(batches):
+            keys = list(zip(
+                chunk["z"].tolist(), chunk["x"].tolist(), chunk["y"].tolist()
+            ))
+            out = {c: chunk[c].to_numpy() for c in TILE_COLS}
+            out["label"] = [kernel(fetch(z, x, y)) for z, x, y in keys]
+            if fetch_image is not None:
+                out["image"] = [fetch_image(z, x, y) for z, x, y in keys]
+            yield pd.DataFrame(out)
 
     return scan
 
 
-def _burn_spec(classes: Sequence[dict]) -> tuple[list, list[float]]:
-    """Per-class (filters, buffers) in class order, for :func:`burn_tile`."""
+def _class_spec(classes: Sequence[dict]) -> tuple[list, list[float]]:
+    """Per-class (filters, buffers) in class order, for the per-tile
+    kernels."""
     classes = _norm_classes(classes)
     return (
         [c.get("filter") for c in classes],
         [float(c.get("buffer") or 0.0) for c in classes],
+    )
+
+
+def _filter_view(properties: Any, gtype: Optional[str], fid: Any) -> dict:
+    """The feature dict ``filters_local.feature_passes`` evaluates."""
+    return {
+        "properties": dict(properties) if properties is not None else {},
+        "geometry": {"type": gtype},
+        "id": fid,
+    }
+
+
+def classification_tile(features: Iterable[dict], filters: Sequence) -> list[int]:
+    """One tile's class-presence vector from its fetched feature dicts:
+    slot ``i+1`` is 1 iff any feature passes class i's filter, slot 0 is 1
+    iff no slot is (what :func:`classification_labels` aggregates)."""
+    flags = [0] * len(filters)
+    for f in features:
+        view = _filter_view(
+            f.get("properties"), f.get("geometry_type"), f.get("id")
+        )
+        for i, filt in enumerate(filters):
+            if not flags[i] and feature_passes(filt, view):
+                flags[i] = 1
+    return [int(not any(flags))] + flags
+
+
+def detection_tile(
+    features: Iterable[dict], filters: Sequence, buffers: Sequence[float]
+) -> list[dict]:
+    """One tile's pixel boxes from its fetched feature dicts, equal to
+    :func:`detection_labels`: per feature, one box per matching class in
+    class order, from the regexp bounds of its geometry string (so a
+    geometry that is not JSON still gets boxes) expanded by the class's
+    buffer and mapped by ``pixel_bbox``.  Features are ordered as
+    ``array_sort(collect_list(struct(id, boxes)))`` orders them: by id
+    with null ids first, equal ids by their boxes — not in fetch order."""
+    per_feature = []
+    for f in features:
+        view = _filter_view(
+            f.get("properties"), f.get("geometry_type"), f.get("id")
+        )
+        bounds = None
+        boxes = []
+        for i, filt in enumerate(filters):
+            if not feature_passes(filt, view):
+                continue
+            if bounds is None:
+                bounds = geometry_bounds_local(f.get("geometry"))
+            xmin, ymin, xmax, ymax = bounds
+            if xmin is not None:
+                d = buffers[i]
+                xmin, ymin, xmax, ymax = xmin - d, ymin - d, xmax + d, ymax + d
+            boxes.append((*pixel_bbox(xmin, ymin, xmax, ymax), i + 1))
+        if boxes:
+            fid = f.get("id")
+            per_feature.append(((fid is not None, fid or 0), boxes))
+    per_feature.sort()
+    return [
+        dict(zip(("xmin", "ymin", "xmax", "ymax", "class"), box))
+        for _, boxes in per_feature
+        for box in boxes
+    ]
+
+
+def segmentation_tile(
+    features: Iterable[dict], filters: Sequence, buffers: Sequence[float]
+) -> bytes:
+    """One tile's raster bytes from its fetched feature dicts, equal to
+    :func:`segmentation_labels`: features burn in id order, equal ids in
+    fetch order, null ids last (the frame path's stable pandas sort)."""
+    feats = sorted(
+        features, key=lambda f: (f.get("id") is None, f.get("id") or 0)
+    )
+    return burn_tile(
+        (
+            (f.get("geometry"), f.get("properties"),
+             f.get("geometry_type"), f.get("id"))
+            for f in feats
+        ),
+        filters,
+        buffers,
     )
 
 
@@ -358,19 +467,13 @@ def burn_tile(
     ``|d|``-px Euclidean disk dilation (negative d: erosion) runs on the
     256-px grid before the REPLACE write — see raster.morph_disk.
     """
-    from label_maker_dask_spark.filters_local import feature_passes
-
     shapes = []
     for geometry, properties, gtype, fid in features:
         try:
             geom = json.loads(geometry)
         except (TypeError, ValueError):
             continue
-        feature = {
-            "properties": dict(properties) if properties is not None else {},
-            "geometry": {"type": gtype},
-            "id": fid,
-        }
+        feature = _filter_view(properties, gtype, fid)
         converted = None
         for i, filt in enumerate(filters):
             if not feature_passes(filt, feature):

@@ -2,9 +2,13 @@
 
 The reference sniffs the imagery string *per task* (reference main.py:54 →
 utils.py:232-238, with ``is_tif`` doing a rasterio open probe each time,
-utils.py:209-224).  Here the sniff runs **once at plan time** on the driver
-and wires the matching reader into a single ``mapInPandas`` stage that
-returns ``(z, x, y, image binary)`` — raw bytes; decode is a separate,
+utils.py:209-224).  Here :func:`image_fetcher_factory` sniffs **once at
+plan time** on the driver (and checks a WMS source's CRS there) and hands
+back the matching reader's constructor, which each scan task calls once.
+Two scans use it: :func:`fetch_images`, one ``mapInPandas`` that returns
+``(z, x, y, image binary)``, and the job's tile scan
+(``labels.tile_labels``), which fetches each tile's image in the same task
+that computes its label.  Both return raw bytes; decode is a separate,
 optional multimodal step (multimodal/images.py).
 
 Readers require requests (TMS/WMS) or rio-tiler (COG); all optional — tests
@@ -19,6 +23,8 @@ from urllib.parse import parse_qs, urlparse
 
 import pandas as pd
 from pyspark.sql import DataFrame
+
+from label_maker_dask_spark.tiles import tile_chunks
 
 IMAGES_SCHEMA = "z int, x long, y long, image binary"
 
@@ -114,7 +120,8 @@ def wms_image_fetcher(
     the reference's rasterio ``transform_bounds(..., densify_pts=21)``,
     utils.py:81-84): EPSG:4326/CRS:84, Web/World Mercator and all UTM
     zones built-in, pyproj for the long tail.  An unsupported CRS raises
-    here, at plan time, not per task.
+    here; :func:`image_fetcher_factory` runs the same check on the driver,
+    so a scan fails at plan time, not per task.
 
     ``http_get`` injects the transport (url -> body bytes): custom auth,
     a retrying client, or a hermetic fixture server (the
@@ -134,15 +141,9 @@ def wms_image_fetcher(
             resp.raise_for_status()
             return resp.content
 
-    # parse only the query string: feeding the full URL to parse_qs would
-    # glue "https://host/path?" onto the first parameter's key, silently
-    # losing e.g. a leading version=1.3.0 (and with it the axis swap)
-    query = parse_qs(urlparse(imagery.lower()).query)
-    version = (query.get("version") or ["1.1.1"])[0]
-    srs = (query.get("crs" if version == "1.3.0" else "srs") or ["epsg:4326"])[0]
-    # plan-time capability check, and resolved ONCE: per-tile re-resolution
-    # would repeat the CRS lookup (a pyproj database hit for the long tail)
-    # on every fetch
+    version, srs = _wms_params(imagery)
+    # resolved ONCE: per-tile re-resolution would repeat the CRS lookup (a
+    # pyproj database hit for the long tail) on every fetch
     project = project_fn(srs)
 
     def fetch(z: int, x: int, y: int) -> bytes:
@@ -187,7 +188,42 @@ def cog_image_fetcher(imagery: str) -> ImageFetcher:
     return fetch
 
 
+def _wms_params(imagery: str) -> tuple[str, str]:
+    """``(version, srs)`` of a WMS GetMap template, lower-cased."""
+    # parse only the query string: feeding the full URL to parse_qs would
+    # glue "https://host/path?" onto the first parameter's key, silently
+    # losing e.g. a leading version=1.3.0 (and with it the axis swap)
+    query = parse_qs(urlparse(imagery.lower()).query)
+    version = (query.get("version") or ["1.1.1"])[0]
+    srs = (query.get("crs" if version == "1.3.0" else "srs") or ["epsg:4326"])[0]
+    return version, srs
+
+
 _FETCHERS = {"tif": cog_image_fetcher, "wms": wms_image_fetcher, "tms": tms_image_fetcher}
+
+
+def image_fetcher_factory(
+    imagery: Optional[str] = None,
+    image_fetcher: Optional[ImageFetcher] = None,
+) -> Callable[[], ImageFetcher]:
+    """Resolve a job's imagery to a fetcher constructor, called once per
+    partition on the executor: the injected ``image_fetcher`` (hermetic)
+    when given, else the connector :func:`sniff_imagery` picks for
+    ``imagery``.  One of the two must be provided.
+
+    The sniff and a WMS source's CRS check run here, on the driver, so an
+    unsupported CRS raises at plan time; no TIFF is opened here."""
+    if image_fetcher is not None:
+        return lambda: image_fetcher
+    if imagery is None:
+        raise ValueError("provide imagery or image_fetcher")
+    kind = sniff_imagery(imagery)
+    if kind == "wms":
+        from label_maker_dask_spark.sources.crs import project_fn
+
+        project_fn(_wms_params(imagery)[1])
+    connector = _FETCHERS[kind]
+    return lambda: connector(imagery)
 
 
 def fetch_images(
@@ -196,24 +232,22 @@ def fetch_images(
     image_fetcher: Optional[ImageFetcher] = None,
 ) -> DataFrame:
     """Tiles ``(z, x, y)`` -> ``(z, x, y, image binary)`` via one
-    ``mapInPandas`` scan; connector chosen at plan time."""
-    if image_fetcher is None:
-        if imagery is None:
-            raise ValueError("provide imagery or image_fetcher")
-        kind = sniff_imagery(imagery)
-        factory = lambda: _FETCHERS[kind](imagery)  # noqa: E731
-    else:
-        factory = lambda: image_fetcher  # noqa: E731
+    ``mapInPandas`` scan; connector chosen at plan time by
+    :func:`image_fetcher_factory`.  Output frames hold at most
+    ``SCAN_CHUNK_TILES`` tiles, whatever the size of the input Arrow
+    batch."""
+    factory = image_fetcher_factory(imagery, image_fetcher)
 
     def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         fetch = factory()
-        for pdf in batches:
-            images = [
-                fetch(int(z), int(x), int(y))
-                for z, x, y in zip(pdf["z"], pdf["x"], pdf["y"])
+        for chunk in tile_chunks(batches):
+            out = chunk[["z", "x", "y"]].copy()
+            out["image"] = [
+                fetch(z, x, y)
+                for z, x, y in zip(
+                    chunk["z"].tolist(), chunk["x"].tolist(), chunk["y"].tolist()
+                )
             ]
-            out = pdf[["z", "x", "y"]].copy()
-            out["image"] = images
             yield out
 
     return tiles.mapInPandas(scan, schema=IMAGES_SCHEMA)

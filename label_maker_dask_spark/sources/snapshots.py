@@ -33,6 +33,8 @@ from typing import List, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
+from label_maker_dask_spark.streaming.commit import read_state, write_text
+
 _META_FILE = "_lmds_meta.json"
 
 
@@ -71,18 +73,11 @@ def write_snapshot(
 
 def snapshot_metadata(table_path: str, version: int) -> Optional[dict]:
     """The metadata dict published with ``version``, or None."""
-    path = os.path.join(table_path, f"v={version}", _META_FILE)
-    if not os.path.exists(path):
-        return None
-    with open(path) as fh:
-        return json.load(fh)
+    return read_state(os.path.join(table_path, f"v={version}"), _META_FILE)
 
 
 def _point_latest(table_path: str, version: int) -> None:
-    ptr_tmp = os.path.join(table_path, "_latest.tmp")
-    with open(ptr_tmp, "w") as fh:
-        fh.write(str(version))
-    os.replace(ptr_tmp, os.path.join(table_path, "_latest"))
+    write_text(os.path.join(table_path, "_latest"), str(version))
 
 
 def latest_version(table_path: str) -> Optional[int]:

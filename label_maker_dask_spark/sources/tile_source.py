@@ -48,7 +48,11 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
+from label_maker_dask_spark.streaming.commit import read_state, write_state
 from label_maker_dask_spark.tiles import tile_range
+
+# the committed frontier a floordir holds, as JSON
+_FLOOR_FILE = "_slippy_floor.json"
 
 
 class _Band(InputPartition):
@@ -284,14 +288,11 @@ class SlippyTilePartitionedStreamReader(DataSourceStreamReader):
         # re-deliver committed stripes on a reader whose in-memory
         # floor reset to ymin.  Without the option, behavior is
         # unchanged (reader-local floor only).
-        self._floor_file = None
-        fdir = options.get("floordir")
-        if fdir:
-            import json
+        self._floor_dir = options.get("floordir")
+        if self._floor_dir:
             import os
 
-            os.makedirs(fdir, exist_ok=True)
-            self._floor_file = os.path.join(fdir, "_slippy_floor.json")
+            os.makedirs(self._floor_dir, exist_ok=True)
             # Bind the floor to the query's checkpoint run id when the
             # caller provides one (option floorrunid, from
             # streaming.commit.ensure_run_id(checkpoint)): a FRESH query
@@ -308,9 +309,8 @@ class SlippyTilePartitionedStreamReader(DataSourceStreamReader):
                 "bounds": bounds,
                 "run": self._floor_run,
             }
-            if os.path.exists(self._floor_file):
-                with open(self._floor_file) as fh:
-                    st = json.load(fh)
+            st = read_state(self._floor_dir, _FLOOR_FILE)
+            if st is not None:
                 if (
                     st.get("zoom") != self.zoom
                     or st.get("bounds") != bounds
@@ -425,7 +425,8 @@ class SlippyTilePartitionedStreamReader(DataSourceStreamReader):
         # Spark calls this once a batch up to `end` is durably committed
         # in the checkpoint — the one moment the COMMITTED frontier is
         # known exactly.  With floordir set, persist it atomically
-        # (tmp + rename) so a fresh post-restart reader starts with the
+        # (``commit.write_state``: tmp + rename) so a fresh post-restart
+        # reader starts with the
         # committed frontier as its floor: a replayed catch-up batch
         # whose start predates it gets its committed stripes clipped in
         # partitions().  The persisted value can never exceed the
@@ -436,14 +437,10 @@ class SlippyTilePartitionedStreamReader(DataSourceStreamReader):
         self._log(f"commit({end})")
         y = int(end["y"])
         self._floor = max(getattr(self, "_floor", self.ymin), y)
-        if self._floor_file is not None:
-            import json
-            import os
-
-            tmp = self._floor_file + ".tmp"
-            with open(tmp, "w") as fh:
-                json.dump({**self._floor_key, "y": self._floor}, fh)
-            os.replace(tmp, self._floor_file)
+        if self._floor_dir:
+            write_state(
+                self._floor_dir, _FLOOR_FILE, {**self._floor_key, "y": self._floor}
+            )
 
 
 def register_tile_source(spark) -> None:

@@ -4,13 +4,16 @@ The reference does one HTTP GET + protobuf decode per Dask task
 (reference main.py:37-44), swallowing *any* exception into an empty tile
 (``except: tile_data = {}`` — the error-tolerant scan we must preserve).
 
-Here the fetch is a ``mapInPandas`` source stage: each Arrow batch of tile
-keys fans out to feature rows ``(z, x, y, id, geometry_type, geometry,
-properties)``.  Per-partition, the HTTP session is reused (the reference
-opens a fresh connection per tile).  At 1000 executors this is an
-embarrassingly parallel narrow stage; no shuffle, no driver involvement.
-The segmentation tile scan (``labels.segmentation_tile_labels``) calls the
-same fetchers and burns each tile in place instead of emitting its rows.
+Here the fetcher is resolved once on the driver
+(:func:`tile_fetcher_factory`) and built once per partition, so the HTTP
+session is reused (the reference opens a fresh connection per tile).  Two
+narrow scans call it: the job's tile scan (``labels.tile_labels``), which
+computes each tile's label from its features in the same task and emits
+no feature rows, and :func:`fetch_features`, a ``mapInPandas`` source
+stage whose Arrow batches of tile keys fan out to feature rows ``(z, x,
+y, id, geometry_type, geometry, properties)`` for the frame operators.
+At 1000 executors either is embarrassingly parallel; no shuffle, no
+driver involvement.
 
 Decode requires ``mapbox_vector_tile`` and fetch requires ``requests`` —
 both optional here; tests inject a ``tile_fetcher`` (see ``fake.py``).

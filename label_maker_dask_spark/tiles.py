@@ -17,8 +17,9 @@ tile boundary does not include the next tile row/column.
 from __future__ import annotations
 
 import math
-from typing import Sequence, Tuple
+from typing import Iterable, Iterator, Sequence, Tuple
 
+import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -85,6 +86,23 @@ def tiles_df(spark: SparkSession, bounds: Sequence[float], zoom: int) -> DataFra
         (F.lit(xmin) + (F.col("id") % nx)).cast("long").alias("x"),
         (F.lit(ymin) + (F.col("id") / nx).cast("long")).cast("long").alias("y"),
     )
+
+
+# tiles per frame a tile scan yields: 64 rasters are 4 MB and 64 images of
+# 196 KB are 12.5 MB, where one frame per 10k-row input Arrow batch would be
+# about 655 MB of rasters or 1.96 GB of images, near the 2 GiB that one
+# Arrow ``binary`` column can hold
+SCAN_CHUNK_TILES = 64
+
+
+def tile_chunks(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """The tile-key frames a ``mapInPandas`` scan receives, cut into
+    frames of at most ``SCAN_CHUNK_TILES`` rows, in input order, so each
+    output frame the scan builds from one chunk stays bounded whatever
+    the size of the input Arrow batch."""
+    for pdf in batches:
+        for start in range(0, len(pdf), SCAN_CHUNK_TILES):
+            yield pdf.iloc[start:start + SCAN_CHUNK_TILES]
 
 
 def tile_ul_lng_scalar(x: float, z: int) -> float:

@@ -133,23 +133,33 @@ SEG_CLASSES = [
 
 
 def _edge_case_fetcher():
-    """fake_features plus the cases the burn must agree on: a feature
-    matching two classes, a geometry that is not JSON, and a forced empty
-    tile."""
+    """fake_features plus the cases the fused scan must agree on with the
+    frame operators: a forced empty tile, a feature matching two classes,
+    a geometry that is not JSON, two features with equal ids (the second
+    one's box sorts first), a null id and a geometry with no coordinate
+    pairs."""
     import json
+
+    def polygon(x0, y0, x1, y1):
+        return json.dumps({"type": "Polygon", "coordinates": [[
+            [x0, y0], [x1, y0], [x1, y1], [x0, y1], [x0, y0]
+        ]]})
 
     def fetch(z, x, y):
         if (x + y) % 7 == 0:
             return []
         feats = fake_features(z, x, y)
-        square = {"type": "Polygon", "coordinates": [[
-            [1500, 1500], [2500, 1500], [2500, 2500], [1500, 2500], [1500, 1500]
-        ]]}
         feats.append({
             "id": 1,
             "geometry_type": "Polygon",
-            "geometry": json.dumps(square),
+            "geometry": polygon(1500, 1500, 2500, 2500),
             "properties": {"highway": "primary", "building": "yes"},
+        })
+        feats.append({
+            "id": 1,
+            "geometry_type": "Polygon",
+            "geometry": polygon(200, 200, 600, 600),
+            "properties": {"natural": "water"},
         })
         feats.append({
             "id": 2,
@@ -157,55 +167,180 @@ def _edge_case_fetcher():
             "geometry": '{"type": "Polygon", "coordinates": [[',
             "properties": {"natural": "water"},
         })
+        feats.append({
+            "id": None,
+            "geometry_type": "LineString",
+            "geometry": json.dumps({"type": "LineString", "coordinates": [
+                [3000, 100], [3900, 900]
+            ]}),
+            "properties": {"highway": "residential"},
+        })
+        feats.append({
+            "id": 3,
+            "geometry_type": "Polygon",
+            "geometry": json.dumps({"type": "Polygon", "coordinates": []}),
+            "properties": {"building": "house"},
+        })
         return feats
 
     return fetch
 
 
-def test_segmentation_tile_scan_matches_frame_operator(spark):
-    """The job's fused tile scan burns every tile byte-for-byte like the
-    frame operator over the job's own feature scan, and plans as one
-    narrow Python pass: no exchange, no grouped map."""
-    from label_maker_dask_spark.labels import segmentation_labels
-    from tests.test_plans import plan_of
+def _executed_plan(df) -> str:
+    """The physical plan's tree, one node a line."""
+    return df._jdf.queryExecution().executedPlan().treeString()
 
-    job = LabelMakerJob(spark, zoom=15, bounds=LISBON, classes=SEG_CLASSES,
-                        ml_type="segmentation",
-                        tile_fetcher=_edge_case_fetcher())
-    fused = job.labels()
-    assert fused.schema.simpleString() == (
-        "struct<z:int,x:bigint,y:bigint,label:binary>"
+
+FRAME_OPERATORS = {
+    "classification": "classification_labels",
+    "object-detection": "detection_labels",
+    "segmentation": "segmentation_labels",
+}
+LABEL_TYPES = {
+    "classification": "array<int>",
+    "object-detection": (
+        "array<struct<xmin:int,ymin:int,xmax:int,ymax:int,class:int>>"
+    ),
+    "segmentation": "binary",
+}
+EMPTY_LABELS = {
+    "classification": [1],
+    "object-detection": [],
+    "segmentation": bytes(256 * 256),
+}
+
+
+def _cell(v):
+    """A collected label or image as a comparable value."""
+    if isinstance(v, (bytes, bytearray)):
+        return bytes(v)
+    return [tuple(b) if hasattr(b, "asDict") else b for b in v]
+
+
+@pytest.mark.parametrize(
+    "ml_type,imagery,classes",
+    [(m, i, SEG_CLASSES) for m in FRAME_OPERATORS for i in (False, True)]
+    + [(m, False, []) for m in FRAME_OPERATORS],
+    ids=lambda v: (
+        v if isinstance(v, str)
+        else ("imagery" if v else "no-imagery") if isinstance(v, bool)
+        else f"{len(v)}-classes"
+    ),
+)
+def test_tile_scan_matches_frame_operator(spark, ml_type, imagery, classes):
+    """The job's fused tile scan gives, for every ml_type with and without
+    imagery, the rows of the frame operator over the job's own feature
+    scan (joined to the image scan), and plans as one narrow Python pass:
+    no exchange, no join, no broadcast."""
+    from label_maker_dask_spark import labels
+    from label_maker_dask_spark.sources.imagery import fetch_images
+
+    job = LabelMakerJob(spark, zoom=15, bounds=LISBON, classes=classes,
+                        ml_type=ml_type, tile_fetcher=_edge_case_fetcher(),
+                        image_fetcher=fake_image_bytes if imagery else None)
+    fused = job.build_job()
+    cols = "struct<z:int,x:bigint,y:bigint,label:%s%s>" % (
+        LABEL_TYPES[ml_type], ",image:binary" if imagery else ""
     )
-    plan = plan_of(fused)
-    assert "Exchange" not in plan
-    assert "FlatMapGroupsInPandas" not in plan
-    assert "MapInPandas" in plan
+    assert fused.schema.simpleString() == cols
 
-    ref = segmentation_labels(job.features(), SEG_CLASSES, tiles=job.tiles())
-    got = {(r.z, r.x, r.y): bytes(r.label) for r in fused.collect()}
-    want = {(r.z, r.x, r.y): bytes(r.label) for r in ref.collect()}
+    frame_operator = getattr(labels, FRAME_OPERATORS[ml_type])
+    ref = frame_operator(job.features(), classes, tiles=job.tiles())
+    if imagery:
+        ref = ref.join(
+            fetch_images(job.tiles(), image_fetcher=fake_image_bytes),
+            ["z", "x", "y"],
+        )
+    got = {(r.z, r.x, r.y): tuple(map(_cell, r[3:])) for r in fused.collect()}
+    want = {(r.z, r.x, r.y): tuple(map(_cell, r[3:])) for r in ref.collect()}
     assert len(got) == job.n_tiles()
     assert got == want
-    rasters = [np.frombuffer(v, dtype=np.uint8) for v in got.values()]
-    assert any(not r.any() for r in rasters)           # empty tiles
-    assert set(np.unique(np.concatenate(rasters))) == {0, 1, 2, 3}
+
+    plan = _executed_plan(fused)
+    for node in ("Exchange", "Join", "BroadcastExchange"):
+        assert node not in plan
+    assert plan.count("MapInPandas") == 1
+
+    labels_seen = [v[0] for v in got.values()]
+    if not classes:
+        assert all(v == EMPTY_LABELS[ml_type] for v in labels_seen)
+    elif ml_type == "segmentation":
+        rasters = [np.frombuffer(v, dtype=np.uint8) for v in labels_seen]
+        assert any(not r.any() for r in rasters)           # empty tiles
+        assert set(np.unique(np.concatenate(rasters))) == {0, 1, 2, 3}
+    elif ml_type == "object-detection":
+        # the equal-id pair sorts by its boxes, against fetch order, and
+        # the geometry with no coordinate pairs boxes to the clamp's corner
+        water, square = (8, 214, 41, 247, 3), (89, 95, 160, 166, 1)
+        assert any(
+            water in v and v.index(water) < v.index(square)
+            and (255, 255, 255, 255, 2) in v
+            for v in labels_seen
+        )
+    if imagery:
+        assert all(len(v[1]) == 256 * 256 * 3 for v in got.values())
 
 
-def test_segmentation_tile_scan_yields_bounded_chunks():
+class _CaptureScan:
+    """Stands in for a tile frame: hands back the function a scan passes
+    to ``mapInPandas``, so it can run on pandas frames without Spark."""
+
+    def select(self, *cols):
+        return self
+
+    def mapInPandas(self, fn, schema):
+        return fn
+
+
+def _tile_scan():
+    from label_maker_dask_spark.labels import tile_scan
+
+    return tile_scan("segmentation", SEG_CLASSES, lambda: fake_features,
+                     lambda: fake_image_bytes)
+
+
+def _image_scan():
+    from label_maker_dask_spark.sources.imagery import fetch_images
+
+    return fetch_images(_CaptureScan(), image_fetcher=fake_image_bytes)
+
+
+@pytest.mark.parametrize("make_scan", [_tile_scan, _image_scan],
+                         ids=["tile_scan", "fetch_images"])
+def test_scan_yields_bounded_chunks(make_scan):
     """One large input Arrow batch comes out as frames of at most 64
-    tiles (about 4 MB of rasters), one row per tile."""
+    tiles (4 MB of rasters, 12.5 MB of images), one row per tile, in
+    input order."""
     import pandas as pd
-
-    from label_maker_dask_spark.labels import segmentation_tile_scan
 
     tiles = pd.DataFrame({
         "z": np.full(200, 15, dtype=np.int32),
         "x": np.arange(15000, 15200, dtype=np.int64),
         "y": np.full(200, 12000, dtype=np.int64),
     })
-    scan = segmentation_tile_scan(lambda: fake_features, SEG_CLASSES)
-    frames = list(scan(iter([tiles])))
+    frames = list(make_scan()(iter([tiles])))
     assert all(len(f) <= 64 for f in frames)
     out = pd.concat(frames)
     assert out["x"].tolist() == tiles["x"].tolist()
-    assert all(len(b) == 256 * 256 for b in out["label"])
+    assert all(len(b) == 256 * 256 * 3 for b in out["image"])
+
+
+def test_unsupported_wms_crs_fails_at_plan_time(spark):
+    """An unsupported WMS CRS raises ValueError while the plan is built,
+    from fetch_images and from the job constructor, with no Spark job
+    run."""
+    from label_maker_dask_spark.sources.imagery import fetch_images
+    from label_maker_dask_spark.tiles import tiles_df
+
+    wms = "http://h/wms?service=WMS&version=1.1.1&srs=EPSG:99999&bbox={bbox}"
+    sc = spark.sparkContext
+    sc.setJobGroup("wms-crs-plan-time", "wms-crs-plan-time")
+    try:
+        with pytest.raises(ValueError, match="unsupported WMS CRS"):
+            fetch_images(tiles_df(spark, LISBON, 15), imagery=wms)
+        with pytest.raises(ValueError, match="unsupported WMS CRS"):
+            LabelMakerJob(spark, 15, LISBON, CLASSES, imagery=wms,
+                          tile_fetcher=fake_features)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("wms-crs-plan-time") == []
