@@ -162,21 +162,17 @@ def stream_scd2_to_parquet(
 ):
     """Maintain an SCD-2 history table from a change stream: each
     micro-batch runs :func:`scd2_apply` and swaps the updated history in
-    with the crash-recoverable rename-aside dance the other maintenance
+    with the crash-recoverable rename-aside swap the other maintenance
     sinks use.  ``scd2_apply`` REJECTS replays of already-applied changes
     (they sit at or before the affected keys' current ``valid_from``), so
     exactly-once needs the in-table marker
     (:func:`streaming.upsert.rewrite_exactly_once`)."""
     from label_maker_dask_spark.streaming.commit import start_sink
-    from label_maker_dask_spark.streaming.upsert import (
-        _recover,
-        rewrite_exactly_once,
-    )
+    from label_maker_dask_spark.streaming.upsert import rewrite_exactly_once
 
     merge_fn = _scd2_merge(keys, ts_col, tie_break)
 
     def apply(batch: DataFrame, batch_id: int, run_id: str) -> None:
-        _recover(base_path)
         rewrite_exactly_once(
             batch.sparkSession, base_path, batch_id, run_id,
             lambda history: merge_fn(history, batch),
@@ -210,16 +206,12 @@ def stream_scd2_to_parquet_bucketed(
     Exactly-once rides on the per-bucket markers (partial replays
     re-merge only unapplied buckets) — the :mod:`streaming.bucketed`
     contract."""
-    from label_maker_dask_spark.streaming.bucketed import (
-        _apply_bucketed,
-        _recover_bucketed,
-    )
+    from label_maker_dask_spark.streaming.bucketed import _apply_bucketed
     from label_maker_dask_spark.streaming.commit import start_sink
 
     merge_fn = _scd2_merge(keys, ts_col, tie_break)
 
     def apply(batch: DataFrame, batch_id: int, run_id: str) -> None:
-        _recover_bucketed(base_path)
         _apply_bucketed(
             batch, base_path, keys, n_buckets, batch_id, run_id, merge_fn
         )

@@ -24,6 +24,7 @@ from label_maker_dask_spark.operators.guards import parallelism_floor
 from label_maker_dask_spark.streaming.commit import (
     append_exactly_once,
     read_state,
+    rollback_inventory,
     start_sink,
     write_state,
 )
@@ -2415,7 +2416,6 @@ def recover_pq_compaction(path: str) -> None:
     :func:`compact_pq_index`; call directly before serving reads after a
     crash mid-compaction."""
     import os
-    import shutil
 
     # COMPLETION takes precedence: if the record exists the fold already
     # finished, so a still-present intent must NOT roll anything back
@@ -2435,15 +2435,11 @@ def recover_pq_compaction(path: str) -> None:
         return
     intent = read_state(path, "_lmds_compacting")
     if intent is not None:
-        for part, files in _partition_inventory(path, "bucket=").items():
-            keep = set(intent.get("existing", {}).get(part, []))
-            cdir = os.path.join(path, "data", part)
-            for f in files:
-                if f not in keep:
-                    fp = os.path.join(cdir, f)
-                    (shutil.rmtree if os.path.isdir(fp) else os.remove)(fp)
-            if not keep and not os.listdir(cdir):
-                os.rmdir(cdir)
+        rollback_inventory(
+            path,
+            _partition_inventory(path, "bucket="),
+            intent.get("existing", {}),
+        )
         os.remove(os.path.join(path, "_lmds_compacting"))
 
 

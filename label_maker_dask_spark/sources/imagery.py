@@ -211,8 +211,10 @@ def image_fetcher_factory(
     when given, else the connector :func:`sniff_imagery` picks for
     ``imagery``.  One of the two must be provided.
 
-    The sniff and a WMS source's CRS check run here, on the driver, so an
-    unsupported CRS raises at plan time; no TIFF is opened here."""
+    The sniff, a WMS source's CRS check and a TMS source's
+    ``{ACCESS_TOKEN}`` substitution run here, on the driver: an
+    unsupported CRS raises at plan time, and the token reaches executors
+    that do not carry the driver's env.  No TIFF is opened here."""
     if image_fetcher is not None:
         return lambda: image_fetcher
     if imagery is None:
@@ -222,6 +224,8 @@ def image_fetcher_factory(
         from label_maker_dask_spark.sources.crs import project_fn
 
         project_fn(_wms_params(imagery)[1])
+    elif kind == "tms":
+        imagery = _resolve_token(imagery)
     connector = _FETCHERS[kind]
     return lambda: connector(imagery)
 

@@ -173,17 +173,16 @@ def compact_small_files(
     File count derives from the CURRENT on-disk byte size (cheap driver
     listing, no data scan); the rewrite itself is one narrow
     ``coalesce`` job (no shuffle — coalesce only unions input splits)
-    through a temp directory, then a rename-aside swap
-    (``rename(path, ._old); rename(tmp, path); rmtree(._old)``): the
-    table directory is never deleted before its replacement exists, so a
-    crash at any point is recoverable (a leftover ``._old`` proves the
-    tmp write completed — promote it; a tmp with no ``._old`` is an
-    incomplete write — discard it; ``_recover_compaction`` does both and
-    runs on entry).  NOT a concurrent-reader guarantee: a reader listing
-    the path between the two renames sees it briefly absent, and one
-    mid-scan across the swap sees old files vanish — compaction assumes a
-    single writer and quiesced readers, as plain-parquet OPTIMIZE must
-    (a snapshot/table format lifts that; see sources/snapshots.py).
+    through ``<path>._compacting``, then the rename-aside swap
+    :func:`streaming.commit.swap_in` through ``<path>._old``: the table
+    directory is never deleted before its replacement exists, and
+    :func:`streaming.commit.recover_swap` runs on entry and finishes a
+    swap a crash interrupted.  NOT a concurrent-reader guarantee: a
+    reader listing the path between the two renames sees it briefly
+    absent, and one mid-scan across the swap sees old files vanish —
+    compaction assumes a single writer and quiesced readers, as
+    plain-parquet OPTIMIZE must (a snapshot/table format lifts that; see
+    sources/snapshots.py).
     Returns the resulting file count.
 
     At real scale this is the OPTIMIZE/bin-packing job a table format
@@ -191,17 +190,18 @@ def compact_small_files(
     run it per partition directory, not per table, when partitions exist.
     """
     import os
-    import shutil
 
-    _recover_compaction(path)
+    from label_maker_dask_spark.streaming.commit import recover_swap, swap_in
+
+    tmp = path.rstrip("/") + "._compacting"
+    old = path.rstrip("/") + "._old"
+    recover_swap(tmp, path, old)
     total = 0
     for root, _dirs, files in os.walk(path):
         for f in files:
             if not f.startswith(("_", ".")):
                 total += os.path.getsize(os.path.join(root, f))
     n_files = max(1, -(-total // (target_file_mb * 1024 * 1024)))
-    tmp = path.rstrip("/") + "._compacting"
-    old = path.rstrip("/") + "._old"
     (
         spark.read.format(fmt)
         .load(path)
@@ -210,30 +210,5 @@ def compact_small_files(
         .mode("overwrite")
         .save(tmp)
     )
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
+    swap_in(tmp, path, old)
     return n_files
-
-
-def _recover_compaction(path: str) -> None:
-    """Finish an interrupted :func:`compact_small_files` swap (idempotent).
-    Mirrors ``streaming.upsert._recover``: ``._old`` present means the
-    ``._compacting`` write completed (the table is only set aside after the
-    write succeeds), so promote tmp if the table path is missing; then drop
-    leftovers."""
-    import os
-    import shutil
-
-    tmp = path.rstrip("/") + "._compacting"
-    old = path.rstrip("/") + "._old"
-    if os.path.exists(old):
-        if not os.path.exists(path):
-            if os.path.exists(tmp):
-                os.rename(tmp, path)
-            else:  # unreachable by the swap's ordering, but restore anyway
-                os.rename(old, path)
-        if os.path.exists(old):
-            shutil.rmtree(old)
-    if os.path.exists(tmp):
-        shutil.rmtree(tmp)

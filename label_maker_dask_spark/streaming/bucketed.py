@@ -18,18 +18,23 @@ appear in the delta: one Spark job reads exactly the touched directories
 (path-listed, explicit cached schema — no footer inference, no listing of
 untouched buckets), merges the delta, and writes the replacements
 partitioned by bucket to a scratch directory; each touched bucket then
-swaps in with the same rename-aside dance the plain sink uses, per
-bucket directory.  Expected touched buckets for a k-key delta over n
-buckets is ``n·(1-(1-1/n)^k) ≈ k`` when k ≪ n, so batch cost follows
-delta size while the base grows without bound (measured:
-``tools/scaling_probe.py`` bucketed-maintenance cell, SCALE.md).
+swaps in with :func:`streaming.commit.swap_in`, the rename-aside swap
+the plain sink uses, per bucket directory.  Expected touched buckets
+for a k-key delta over n buckets is ``n·(1-(1-1/n)^k) ≈ k`` when k ≪ n,
+so batch cost follows delta size while the base grows without bound
+(measured: ``tools/scaling_probe.py`` bucketed-maintenance cell,
+SCALE.md).
 
 Crash safety mirrors the plain sink, bucket-wise.  All scratch buckets
 are fully written BEFORE any rename starts, so a set-aside directory
 under ``<base>._old/`` proves its replacement under ``<base>._scratch/``
-is complete; :func:`_recover_bucketed` finishes any torn swap and
-discards leftover scratch.  A bucket's marker is written into its
-scratch directory before the swap, so marker and data change atomically.
+is complete; :func:`recover_buckets` runs
+:func:`streaming.commit.recover_swap` on each set-aside bucket and
+discards leftover scratch.  It is the first step of every batch, taken
+under the writer lock, so a second writer fails on the lock before it
+can touch the first writer's scratch.  A bucket's marker is written into
+its scratch directory before the swap, so marker and data change
+atomically.
 
 Exactly-once under partial application (run ids, markers, the writer
 lock: :mod:`streaming.commit`): a crash mid-batch leaves some buckets
@@ -65,7 +70,9 @@ from label_maker_dask_spark.streaming.commit import (
     already_applied,
     applied_state,
     read_state,
+    recover_swap,
     start_sink,
+    swap_in,
     write_applied,
     write_state,
     writer_lock,
@@ -93,28 +100,21 @@ def _bucket_dir(base_path: str, i: int) -> str:
     return os.path.join(base_path, f"{BUCKET_COL}={i}")
 
 
-def _recover_bucketed(base_path: str) -> None:
-    """Finish any torn per-bucket swap (idempotent; module docstring).
-    A directory under ``._old`` means the scratch write had completed, so
-    a missing base bucket is promoted from scratch; leftover scratch is
-    then discarded — the checkpoint replays the batch and the markers of
-    already-swapped buckets keep the replay exactly-once."""
-    scratch = base_path + "._scratch"
-    oldd = base_path + "._old"
+def recover_buckets(base_path: str) -> None:
+    """Finish any torn per-bucket swap (idempotent; module docstring):
+    :func:`streaming.commit.recover_swap` for each bucket set aside under
+    ``._old``, then discard leftover scratch — the checkpoint replays the
+    batch and the markers of already-swapped buckets keep the replay
+    exactly-once."""
+    scratch, oldd = base_path + "._scratch", base_path + "._old"
     if os.path.isdir(oldd):
         for name in sorted(os.listdir(oldd)):
-            if not name.startswith(BUCKET_COL + "="):
-                continue
-            tgt = os.path.join(base_path, name)
-            src = os.path.join(scratch, name)
-            kept = os.path.join(oldd, name)
-            if not os.path.exists(tgt):
-                if os.path.isdir(src):
-                    os.rename(src, tgt)
-                else:  # unreachable by the swap ordering; restore set-aside
-                    os.rename(kept, tgt)
-            if os.path.exists(kept):
-                shutil.rmtree(kept)
+            if name.startswith(BUCKET_COL + "="):
+                recover_swap(
+                    os.path.join(scratch, name),
+                    os.path.join(base_path, name),
+                    os.path.join(oldd, name),
+                )
         shutil.rmtree(oldd, ignore_errors=True)
     if os.path.isdir(scratch):
         shutil.rmtree(scratch)
@@ -213,6 +213,7 @@ def _apply_bucketed_locked(
         raise ValueError(
             f"bucketed maintenance reserves column name {BUCKET_COL!r}"
         )
+    recover_buckets(base_path)
     spark = delta.sparkSession
     meta = read_state(base_path, _TABLE_META)
     if meta is not None:
@@ -280,13 +281,11 @@ def _apply_bucketed_locked(
             if not os.path.isdir(sdir):
                 os.makedirs(sdir)  # bucket emptied by deletes: keep marker
             write_applied(sdir, run_id, batch_id)
-            tgt = _bucket_dir(base_path, i)
-            kept = os.path.join(oldd, f"{BUCKET_COL}={i}")
-            if os.path.exists(tgt):
-                os.rename(tgt, kept)
-            os.rename(sdir, tgt)
-            if os.path.exists(kept):
-                shutil.rmtree(kept)
+            swap_in(
+                sdir,
+                _bucket_dir(base_path, i),
+                os.path.join(oldd, f"{BUCKET_COL}={i}"),
+            )
         shutil.rmtree(oldd, ignore_errors=True)
         shutil.rmtree(scratch, ignore_errors=True)
     finally:
@@ -314,7 +313,6 @@ def stream_upsert_to_parquet_bucketed(
         return merge_upsert_delta(base_part, delta, keys, update_cols, delete_col)
 
     def apply(batch: DataFrame, batch_id: int, run_id: str) -> None:
-        _recover_bucketed(base_path)
         compacted = compact_last_per_key(batch, keys, seq_col).drop(seq_col)
         _apply_bucketed(
             compacted, base_path, keys, n_buckets, batch_id, run_id, merge_fn
@@ -341,7 +339,6 @@ def stream_accumulate_to_parquet_bucketed(
         return merge_additive(base_part, delta, keys, sum_cols)
 
     def apply(batch: DataFrame, batch_id: int, run_id: str) -> None:
-        _recover_bucketed(base_path)
         _apply_bucketed(
             sum_per_key(batch, keys, sum_cols), base_path, keys, n_buckets,
             batch_id, run_id, merge_fn,
@@ -356,5 +353,4 @@ __all__ = [
     "key_lookup",
     "stream_upsert_to_parquet_bucketed",
     "stream_accumulate_to_parquet_bucketed",
-    "_recover_bucketed",
 ]

@@ -25,10 +25,23 @@ their table layouts; this module is the protocol they share:
   checkpoint resets *between* batches, the lock catches two writers
   racing *within* one;
 - **append bracket** (:func:`append_exactly_once`) — intent record with
-  the pre-append file inventory, for appends that are not idempotent.
+  the pre-append file inventory, for appends that are not idempotent;
+  :func:`rollback_inventory` removes a torn write's partial files;
+- **rename-aside swap** (:func:`swap_in` / :func:`recover_swap`) — a
+  rewritten directory replaces its base only once it is complete, and
+  every crash point leaves a state the recovery finishes.  Each entry
+  point that writes a tmp dir recovers first, so no sink has to
+  remember to.
 
-Each sink keeps its own layout-specific crash recovery (rename-aside
-swaps, bucket swaps, immutable versions) next to its layout.
+The paths are explicit, so each layout keeps its own names: the plain
+maintained tables (``streaming/upsert.py``) swap ``<base>._applying``
+through ``<base>._old``, ``sources/layout.compact_small_files`` swaps
+``<path>._compacting``, and the bucketed tables swap each
+``<base>._scratch/lmdsb=i`` through ``<base>._old/lmdsb=i``.  Two
+layouts keep their own protocol: immutable versions
+(``streaming/versioned.py``) never swap, and the IVF rebalance
+(``operators/similarity.recover_ivf_rebalance``) swaps many directories
+all-or-nothing, decided by its journal.
 """
 
 from __future__ import annotations
@@ -280,15 +293,7 @@ def append_exactly_once(
     if intent is not None:
         if int(intent.get("batch", -1)) == batch_id:
             # torn append of THIS batch: remove its partial files
-            for part, files in inventory().items():
-                keep = set(intent.get("existing", {}).get(part, []))
-                cdir = os.path.join(path, "data", part)
-                for f in files:
-                    if f not in keep:
-                        fp = os.path.join(cdir, f)
-                        (shutil.rmtree if os.path.isdir(fp) else os.remove)(fp)
-                if not keep and not os.listdir(cdir):
-                    os.rmdir(cdir)
+            rollback_inventory(path, inventory(), intent.get("existing", {}))
         # a stale intent from an APPLIED batch (crash between the applied
         # marker and the intent removal) carries no partial files
         os.remove(os.path.join(path, "_lmds_appending"))
@@ -303,6 +308,53 @@ def append_exactly_once(
     return True
 
 
+def rollback_inventory(path: str, current: dict, existing: dict) -> None:
+    """Undo a torn write into the partitions under ``path/data``: delete
+    every entry of ``current`` (``{partition: [file, ...]}``, listed now)
+    that the pre-write inventory ``existing`` does not list, and remove a
+    partition directory the write created and the rollback emptied."""
+    for part, files in current.items():
+        keep = set(existing.get(part, []))
+        cdir = os.path.join(path, "data", part)
+        for f in files:
+            if f not in keep:
+                fp = os.path.join(cdir, f)
+                (shutil.rmtree if os.path.isdir(fp) else os.remove)(fp)
+        if not keep and not os.listdir(cdir):
+            os.rmdir(cdir)
+
+
+def swap_in(tmp: str, base: str, old: str) -> None:
+    """Replace the directory ``base`` by the complete directory ``tmp``:
+    ``rename(base, old); rename(tmp, base); rmtree(old)``.  The base is
+    never deleted before its replacement exists, and it is only set
+    aside once ``tmp`` is complete, so every crash point leaves a state
+    :func:`recover_swap` (with the same three paths) finishes."""
+    if os.path.exists(base):
+        os.rename(base, old)
+    os.rename(tmp, base)
+    if os.path.exists(old):
+        shutil.rmtree(old)
+
+
+def recover_swap(tmp: str, base: str, old: str) -> None:
+    """Finish a :func:`swap_in` a crash interrupted (idempotent; a no-op
+    when nothing is left over).  ``old`` present proves ``tmp`` was
+    complete, so a missing ``base`` is promoted from ``tmp``; the
+    set-aside copy is then dropped.  A ``tmp`` with no ``old`` is an
+    incomplete write and is discarded — the replayed batch rewrites it."""
+    if os.path.exists(old):
+        if not os.path.exists(base):
+            if os.path.exists(tmp):
+                os.rename(tmp, base)
+            else:  # unreachable by the swap's ordering, but restore anyway
+                os.rename(old, base)
+        if os.path.exists(old):
+            shutil.rmtree(old)
+    if os.path.exists(tmp):
+        shutil.rmtree(tmp)
+
+
 __all__ = [
     "already_applied",
     "append_exactly_once",
@@ -310,7 +362,10 @@ __all__ = [
     "break_writer_lock",
     "ensure_run_id",
     "read_state",
+    "recover_swap",
+    "rollback_inventory",
     "start_sink",
+    "swap_in",
     "write_applied",
     "write_state",
     "write_text",

@@ -10,15 +10,14 @@ so the merge skips its duplicate-key scan), and (3) the merged table swaps
 in via write-to-temp + rename-aside — reading and overwriting the same path
 in one job would corrupt the base mid-scan.
 
-Crash safety: the swap is ``rename(base, base._old); rename(tmp, base);
-rmtree(._old)`` — the base directory is never deleted before its
-replacement exists.  ``_recover`` runs before every batch and finishes any
-interrupted swap: a leftover ``._old`` means the ``._applying`` write had
-completed (the base is only set aside *after* the write succeeds), so the
-tmp dir is promoted; a leftover ``._applying`` with no ``._old`` is an
-incomplete write and is discarded.  Without this, a crash between delete
-and rename would make the next batch see "no base table" and silently
-rebuild it from that one batch.
+Crash safety: the merged table is written to ``<base>._applying`` and
+swapped in through ``<base>._old`` by :func:`streaming.commit.swap_in`;
+the base directory is never deleted before its replacement exists.
+Every rewrite (the upsert sink's batch, :func:`rewrite_exactly_once`)
+first runs :func:`streaming.commit.recover_swap` on the same paths, which
+finishes an interrupted swap before the base or its marker is read.
+Without it, a crash between the two renames would make the next batch
+see "no base table" and silently rebuild it from that one batch.
 
 Exactly-once (run ids, markers, the foreachBatch driver:
 :mod:`streaming.commit`): the upsert is idempotent by construction —
@@ -37,7 +36,6 @@ file-level deltas instead of a full rewrite (the plan shape is identical).
 from __future__ import annotations
 
 import os
-import shutil
 from typing import Callable, Optional, Sequence
 
 from pyspark.sql import DataFrame, Window
@@ -51,7 +49,9 @@ from label_maker_dask_spark.operators.merge import (
 from label_maker_dask_spark.streaming.commit import (
     already_applied,
     applied_state,
+    recover_swap,
     start_sink,
+    swap_in,
     write_applied,
 )
 
@@ -67,25 +67,6 @@ def compact_last_per_key(
         .where(F.col("_rn") == 1)
         .drop("_rn")
     )
-
-
-def _recover(base_path: str) -> None:
-    """Finish an interrupted base-table swap (idempotent; see module
-    docstring).  ``._old`` present means the tmp write had completed:
-    promote tmp if the swap died between the two renames, then drop the
-    set-aside copy.  A tmp dir with no ``._old`` is an incomplete write."""
-    tmp = base_path + "._applying"
-    old = base_path + "._old"
-    if os.path.exists(old):
-        if not os.path.exists(base_path):
-            if os.path.exists(tmp):
-                os.rename(tmp, base_path)
-            else:  # unreachable by the swap's ordering, but restore anyway
-                os.rename(old, base_path)
-        if os.path.exists(old):
-            shutil.rmtree(old)
-    if os.path.exists(tmp):
-        shutil.rmtree(tmp)
 
 
 def stream_upsert_to_parquet(
@@ -115,9 +96,10 @@ def stream_upsert_to_parquet(
     # the stored table's schema, cached after the first read/write so later
     # batches skip the footer-inference job a bare read pays every time
     base_schema = [None]
+    tmp, old = base_path + "._applying", base_path + "._old"
 
     def apply(batch: DataFrame, _batch_id: int, _run_id: str) -> None:
-        _recover(base_path)
+        recover_swap(tmp, base_path, old)
         spark = batch.sparkSession
         compacted = compact_last_per_key(batch, keys, seq_col).drop(seq_col)
         base = None
@@ -129,24 +111,11 @@ def stream_upsert_to_parquet(
         merged = merge_upsert_delta(
             base, compacted, keys, update_cols, delete_col, evolve_schema
         )
-        tmp = base_path + "._applying"
         merged.write.mode("overwrite").parquet(tmp)
         base_schema[0] = merged.schema
-        _swap_in(tmp, base_path)
+        swap_in(tmp, base_path, old)
 
     return start_sink(changes, checkpoint, apply, "update", available_now)
-
-
-def _swap_in(tmp: str, base_path: str) -> None:
-    """Rename-aside swap (see module docstring): the base is only set
-    aside once ``tmp`` is complete, so every crash point leaves a state
-    :func:`_recover` can finish."""
-    old = base_path + "._old"
-    if os.path.exists(base_path):
-        os.rename(base_path, old)
-    os.rename(tmp, base_path)
-    if os.path.exists(old):
-        shutil.rmtree(old)
 
 
 def rewrite_exactly_once(
@@ -157,20 +126,23 @@ def rewrite_exactly_once(
     merge_fn: Callable[[Optional[DataFrame]], DataFrame],
     what: str,
 ) -> None:
-    """Marker-guarded full rewrite of a plain maintained table: an
-    applied replay is skipped (:func:`streaming.commit.already_applied`);
-    otherwise ``merge_fn(base or None)`` is written to the tmp dir with
-    the applied marker inside it and swapped in, so table and marker
-    change atomically.  The marker is an underscore-prefixed data file —
+    """Marker-guarded full rewrite of a plain maintained table.  A swap
+    a crash interrupted is finished first, so the marker and the base
+    read next are the ones the last batch left.  An applied replay is
+    then skipped (:func:`streaming.commit.already_applied`); otherwise
+    ``merge_fn(base or None)`` is written to the tmp dir with the applied
+    marker inside it and swapped in, so table and marker change
+    atomically.  The marker is an underscore-prefixed data file —
     Spark's parquet listing ignores it, like _SUCCESS."""
+    tmp, old = base_path + "._applying", base_path + "._old"
+    recover_swap(tmp, base_path, old)
     state = applied_state(base_path)
     if already_applied(state, run_id, batch_id, f"{what} {base_path!r}"):
         return
     base = spark.read.parquet(base_path) if os.path.exists(base_path) else None
-    tmp = base_path + "._applying"
     merge_fn(base).write.mode("overwrite").parquet(tmp)
     write_applied(tmp, run_id or (state or {}).get("run"), batch_id)
-    _swap_in(tmp, base_path)
+    swap_in(tmp, base_path, old)
 
 
 def accumulate_batch(
@@ -228,7 +200,6 @@ def stream_accumulate_to_parquet(
     mode."""
 
     def apply(batch: DataFrame, batch_id: int, run_id: str) -> None:
-        _recover(base_path)
         accumulate_batch(
             batch, base_path, keys, sum_cols, batch_id, run_id=run_id
         )
@@ -242,5 +213,4 @@ __all__ = [
     "stream_accumulate_to_parquet",
     "accumulate_batch",
     "rewrite_exactly_once",
-    "_recover",
 ]

@@ -11,8 +11,8 @@ from pyspark.sql import functions as F
 
 from label_maker_dask_spark.streaming.bucketed import (
     BUCKET_COL,
-    _recover_bucketed,
     read_maintained_table,
+    recover_buckets as _recover_bucketed,
     stream_accumulate_to_parquet_bucketed,
     stream_upsert_to_parquet_bucketed,
 )
@@ -295,3 +295,49 @@ def test_recover_bucketed_promotes_and_discards(spark, tmp_path):
     assert not os.path.exists(base + "._old")
     assert not os.path.exists(base + "._scratch")
     assert not os.path.exists(os.path.join(base, f"{BUCKET_COL}=5"))
+
+
+def test_second_writer_cannot_touch_first_writers_scratch(
+    spark, tmp_path, monkeypatch
+):
+    """Writer B enters the bucketed sink while writer A sits between its
+    finished scratch write and its bucket swaps.  B must fail on A's
+    writer lock before it touches anything: recovering first would
+    delete A's scratch, and A would then swap every touched bucket in as
+    emptied by deletes."""
+    from pyspark.errors import StreamingQueryException
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from label_maker_dask_spark.operators.merge import merge_upsert_delta
+    from label_maker_dask_spark.streaming.bucketed import _apply_bucketed
+
+    base = str(tmp_path / "base")
+
+    def apply_a(rows, batch_id):
+        _apply_bucketed(
+            spark.createDataFrame(rows, "k long, v string, is_del boolean"),
+            base, ["k"], 4, batch_id, "run-a",
+            lambda b, d: merge_upsert_delta(b, d, ["k"], None, "is_del"),
+        )
+
+    apply_a([(k, "a", False) for k in range(40)], 0)
+    changes = str(tmp_path / "changes")
+    _write_changes(spark, changes, [(7, "b", 1, False)])
+    write_parquet, entered = DataFrameWriter.parquet, []
+
+    def parquet(self, path, *args, **kwargs):
+        write_parquet(self, path, *args, **kwargs)
+        if path == base + "._scratch" and not entered:
+            entered.append(path)
+            with pytest.raises(
+                StreamingQueryException, match="locked by another writer"
+            ):
+                _drain_upsert(
+                    spark, changes, base, str(tmp_path / "ck-b"), n_buckets=4
+                )
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    apply_a([(1, "a2", False), (2, "a2", False)], 1)
+    assert entered
+    got = {r.k: r.v for r in read_maintained_table(spark, base).collect()}
+    assert got == {k: "a2" if k in (1, 2) else "a" for k in range(40)}

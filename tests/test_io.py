@@ -145,6 +145,31 @@ def test_tms_fetcher_resolves_token_at_plan_time(monkeypatch):
     assert f(4, 11, 2) == b"png-bytes"
     assert seen == ["https://t.example/4/11/2.png?access_token=tk.secret"]
 
+    # the scans build their fetcher on the executor from the factory the
+    # driver made, so the factory must carry the resolved token
+    import requests
+
+    from label_maker_dask_spark.sources.imagery import image_fetcher_factory
+
+    class _Response:
+        content = b"png-bytes"
+
+        def raise_for_status(self):
+            pass
+
+    monkeypatch.setenv("ACCESS_TOKEN", "tk.secret")
+    factory = image_fetcher_factory(
+        "https://t.example/{z}/{x}/{y}.png?access_token={ACCESS_TOKEN}"
+    )
+    monkeypatch.delenv("ACCESS_TOKEN")
+    monkeypatch.setattr(
+        requests.Session, "get",
+        lambda self, url, **kw: (seen.append(url), _Response())[1],
+    )
+    seen.clear()
+    assert factory()(4, 11, 2) == b"png-bytes"
+    assert seen == ["https://t.example/4/11/2.png?access_token=tk.secret"]
+
 
 def test_tms_fetcher_leaves_unknown_placeholders_without_env():
     """Without ACCESS_TOKEN in the env the placeholder survives verbatim

@@ -155,10 +155,11 @@ def test_compaction_recovery_states(spark, tmp_path):
     import os
     import shutil
 
-    from label_maker_dask_spark.sources.layout import (
-        _recover_compaction,
-        compact_small_files,
-    )
+    from label_maker_dask_spark.sources.layout import compact_small_files
+    from label_maker_dask_spark.streaming.commit import recover_swap
+
+    def _recover_compaction(path):
+        recover_swap(path + "._compacting", path, path + "._old")
 
     path = str(tmp_path / "tbl")
     spark.range(100).coalesce(1).write.parquet(path)

@@ -4,10 +4,12 @@ checkpoint pointed at an existing table is refused, and an empty
 micro-batch never reaches the sink."""
 
 import os
+import shutil
 
 import pytest
 from pyspark.errors import StreamingQueryException
 
+from label_maker_dask_spark.operators.merge import merge_upsert_delta
 from label_maker_dask_spark.operators.scd import (
     stream_scd2_to_parquet,
     stream_scd2_to_parquet_bucketed,
@@ -18,7 +20,11 @@ from label_maker_dask_spark.operators.similarity import (
     write_ivf_index,
     write_pq_index,
 )
+from label_maker_dask_spark.sources.layout import compact_small_files
 from label_maker_dask_spark.streaming.bucketed import (
+    _apply_bucketed,
+    _bucket_expr,
+    read_maintained_table,
     stream_accumulate_to_parquet_bucketed,
     stream_upsert_to_parquet_bucketed,
 )
@@ -29,6 +35,7 @@ from label_maker_dask_spark.streaming.snapshot_sink import (
     stream_upsert_to_snapshots,
 )
 from label_maker_dask_spark.streaming.upsert import (
+    accumulate_batch,
     stream_accumulate_to_parquet,
     stream_upsert_to_parquet,
 )
@@ -184,3 +191,126 @@ def test_empty_batch_never_reaches_apply(spark, tmp_path):
     q.awaitTermination(120)
     with open(os.path.join(ckpt, "_lmds_run_id")) as fh:
         assert calls == [(1, fh.read())]
+
+
+# --- crash matrix over the rename-aside swap's entry points ----------------
+# Each entry point that writes a tmp dir and swaps it in is crashed at every
+# filesystem call it makes, then replayed as the engine would replay the
+# batch: the replay must give the uncrashed rows and leave no swap debris.
+
+
+class _Crash(Exception):
+    """A simulated process death at a filesystem call."""
+
+
+_FS_CALLS = [
+    (os, "rename"), (os, "replace"), (os, "remove"), (shutil, "rmtree")
+]
+
+
+def _fs_calls(monkeypatch, root, crash_at=None):
+    """Count the rename/replace/remove/rmtree calls on paths under
+    ``root``; from call index ``crash_at`` on, raise instead of making
+    the call (a dead process makes no further calls).  → the call log."""
+    calls = []
+
+    def wrap(fn):
+        def call(path, *args, **kwargs):
+            if str(path).startswith(root):
+                calls.append((fn.__name__, str(path)))
+                if crash_at is not None and len(calls) > crash_at:
+                    raise _Crash(calls[-1])
+            return fn(path, *args, **kwargs)
+
+        return call
+
+    for mod, name in _FS_CALLS:
+        monkeypatch.setattr(mod, name, wrap(getattr(mod, name)))
+    return calls
+
+
+def _accumulate(spark, table, batch_id):
+    rows = [[(1, 10)], [(1, 1), (2, 22)]][batch_id]
+    accumulate_batch(
+        spark.createDataFrame(rows, "k long, w long"), table, ["k"], ["w"],
+        batch_id, run_id="run-a",
+    )
+
+
+def _bucketed_upsert(spark, table, batch_id):
+    """Upsert over 4 buckets: the seed fills buckets 1-3; batch 1 inserts
+    into the empty bucket 0, deletes all of bucket 1 and updates one key
+    of bucket 2, leaving bucket 3 untouched."""
+    probe = spark.range(64).select(
+        "id", _bucket_expr(["id"], 4).alias("b")
+    ).collect()
+    by_bucket = {b: sorted(r.id for r in probe if r.b == b) for b in range(4)}
+    if batch_id == 0:
+        rows = [
+            (k, "seed", False) for b in (1, 2, 3) for k in by_bucket[b][:2]
+        ]
+    else:
+        rows = [
+            (by_bucket[0][0], "new", False), (by_bucket[2][0], "upd", False)
+        ]
+        rows += [(k, None, True) for k in by_bucket[1][:2]]
+    _apply_bucketed(
+        spark.createDataFrame(rows, "k long, v string, is_del boolean"),
+        table, ["k"], 4, batch_id, "run-a",
+        lambda base, d: merge_upsert_delta(base, d, ["k"], None, "is_del"),
+    )
+
+
+def _compact(spark, table, batch_id):
+    if batch_id == 0:
+        spark.range(40).repartition(4).write.parquet(table)
+    else:
+        compact_small_files(spark, table)
+
+
+SWAP_OPS = [
+    pytest.param((_accumulate, lambda spark, t: spark.read.parquet(t)),
+                 id="accumulate_batch"),
+    pytest.param((_bucketed_upsert, read_maintained_table),
+                 id="apply_bucketed_upsert"),
+    pytest.param((_compact, lambda spark, t: spark.read.parquet(t)),
+                 id="compact_small_files"),
+]
+
+
+@pytest.mark.parametrize("op", SWAP_OPS)
+def test_crash_at_every_fs_call_then_replay(spark, tmp_path, monkeypatch, op):
+    """Batch 0 seeds the table; batch 1 is the op under test.  For every
+    filesystem call k of an uncrashed batch 1: a fresh copy of the seeded
+    table, batch 1 crashed at call k, batch 1 replayed — the rows equal
+    the uncrashed run's and no ._applying/._old/._scratch/._compacting
+    directory is left beside the table."""
+    run, read = op
+    root = str(tmp_path)
+    seed = os.path.join(root, "seed", "t")
+    run(spark, seed, 0)
+
+    def fresh(name):
+        table = os.path.join(root, name, "t")
+        shutil.copytree(seed, table)
+        return table
+
+    def rows(table):
+        return sorted(tuple(r) for r in read(spark, table).collect())
+
+    clean = fresh("clean")
+    with monkeypatch.context() as m:
+        calls = _fs_calls(m, root)
+        run(spark, clean, 1)
+    want = rows(clean)
+    assert calls
+
+    for k in range(len(calls)):
+        table = fresh(f"k{k}")
+        with monkeypatch.context() as m:
+            _fs_calls(m, root, crash_at=k)
+            with pytest.raises(_Crash):
+                run(spark, table, 1)
+        run(spark, table, 1)  # the replay
+        assert rows(table) == want, (k, calls[k])
+        assert os.listdir(os.path.dirname(table)) == ["t"], (k, calls[k])

@@ -3,6 +3,7 @@
 
 from pyspark.sql import functions as F
 
+from label_maker_dask_spark.streaming.commit import recover_swap
 from label_maker_dask_spark.streaming.upsert import (
     compact_last_per_key,
     stream_upsert_to_parquet,
@@ -151,12 +152,16 @@ def _write_tbl(spark, path, rows):
     spark.createDataFrame(rows, "k long, v string").coalesce(1).write.parquet(path)
 
 
+def _recover(base):
+    """The plain tables' swap recovery on their on-disk names, the one
+    every plain-table rewrite runs first."""
+    recover_swap(base + "._applying", base, base + "._old")
+
+
 def test_recover_promotes_completed_tmp(spark, tmp_path):
     """Crash between rename(base, ._old) and rename(tmp, base): the base
     path is missing — without recovery the next batch would silently
     rebuild the table from itself alone."""
-    from label_maker_dask_spark.streaming.upsert import _recover
-
     base = str(tmp_path / "base")
     _write_tbl(spark, base + "._old", [(1, "stale")])
     _write_tbl(spark, base + "._applying", [(1, "merged")])
@@ -171,8 +176,6 @@ def test_recover_promotes_completed_tmp(spark, tmp_path):
 def test_recover_discards_incomplete_tmp(spark, tmp_path):
     """Crash mid-write of ._applying (no ._old yet): the base is intact and
     the half-written tmp must be dropped, not promoted."""
-    from label_maker_dask_spark.streaming.upsert import _recover
-
     base = str(tmp_path / "base")
     _write_tbl(spark, base, [(1, "good")])
     _write_tbl(spark, base + "._applying", [(1, "partial")])
@@ -186,8 +189,6 @@ def test_recover_discards_incomplete_tmp(spark, tmp_path):
 def test_recover_cleans_set_aside_after_swap(spark, tmp_path):
     """Crash between rename(tmp, base) and rmtree(._old): both directories
     exist; the NEW base must survive and the set-aside copy go."""
-    from label_maker_dask_spark.streaming.upsert import _recover
-
     base = str(tmp_path / "base")
     _write_tbl(spark, base, [(1, "new")])
     _write_tbl(spark, base + "._old", [(1, "stale")])
