@@ -82,7 +82,7 @@ def main() -> None:
     print(f"quality-gated split: {[(r.is_train, r['count']) for r in split_counts]}")
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    clusters = spherical_kmeans(emb, k=4, iters=1, use_arrow=True)
+    clusters = spherical_kmeans(emb, k=4, iters=1)
     sizes = sorted(
         (r.cluster, r["count"])
         for r in clusters.groupBy("cluster").count().collect()

@@ -4,9 +4,10 @@ Part B) — all built-in Catalyst expressions, no Python in the row path.
 Cross-engine verifiability: several ops need a *hash* that the DuckDB oracle
 can reproduce bit-for-bit.  Standard digests (md5/sha2) match across engines;
 for arithmetic hashing (minhash/simhash) we use a polynomial character fold
-``h = (h*31 + codepoint) mod P`` expressed with ``aggregate`` in Spark and
-``list_reduce`` in DuckDB — identical integer arithmetic, fully parallel, no
-global sort.  At production scale the same operators run unchanged with
+``h = (h*31 + codepoint) mod P`` expressed with ``aggregate`` in Spark
+(:func:`char_poly_hash`), with vectorized numpy in the Arrow passes of
+``operators/dedup.py``, and with ``list_reduce`` in DuckDB (the ``*_sql``
+twins here) — identical integer arithmetic, fully parallel, no global sort.  At production scale the same operators run unchanged with
 ``xxhash64`` substituted for the fold (cheaper, JVM-intrinsic); the fold is
 the cross-checkable flavor.
 """
@@ -100,34 +101,11 @@ def word_shingles_sql(tokens_expr: str, n: int = 3) -> str:
 SHINGLE_B = 1_000_003  # combination base for token-hash -> shingle-hash
 
 
-def token_hashes(toks: Column) -> Column:
-    """Char-fold each token once.  IMPORTANT: materialize this as a real
-    column (``withColumn``) before combining into shingles — referencing the
-    transform expression repeatedly inside another lambda re-evaluates the
-    whole fold per reference (no CSE inside interpreted higher-order
-    functions), which is quadratic."""
-    return F.transform(toks, lambda t: _char_fold_inline(t))
-
-
-def shingle_hashes_from(th: Column, n: int = 3) -> Column:
-    """Shingle hashes from a *materialized* token-hash array column:
-    ``((h_i*B + h_{i+1}) % P * B + h_{i+2}) % P`` — pure array arithmetic,
-    no explode, no shuffle.  Fewer than n tokens -> empty array."""
-
-    def combine(i: Column) -> Column:
-        h = F.element_at(th, i)
-        for j in range(1, n):
-            h = (h * SHINGLE_B + F.element_at(th, i + j)) % HASH_P
-        return h
-
-    return F.when(
-        F.size(th) >= n,
-        F.transform(F.sequence(F.lit(1), F.size(th) - (n - 1)), combine),
-    ).otherwise(F.array().cast("array<long>"))
-
-
 def shingle_hashes_sql(toks_expr: str, n: int = 3) -> str:
-    """DuckDB twin of :func:`shingle_hashes` (before any distinct)."""
+    """The DuckDB rendering of the shingle hashes
+    :func:`operators.dedup.doc_shingles` computes per document (before
+    its per-doc distinct): ``((h_i*B + h_{i+1}) % P * B + h_{i+2}) % P``
+    over the token char folds; fewer than n tokens -> empty list."""
     fold = char_poly_hash_sql("t")
     comb = "__h[i]"
     for j in range(1, n):
@@ -138,16 +116,6 @@ def shingle_hashes_sql(toks_expr: str, n: int = 3) -> str:
         f"i -> {comb}) FROM "
         f"(SELECT list_transform({toks_expr}, t -> {fold}) AS __h)) "
         f"ELSE [] END"
-    )
-
-
-def _char_fold_inline(s: Column) -> Column:
-    """char_poly_hash applicable to a lambda variable."""
-    chars = F.filter(F.split(s, ""), lambda c: c != "")
-    return F.aggregate(
-        chars,
-        F.lit(0).cast("long"),
-        lambda acc, c: (acc * HASH_MULT + F.ascii(c)) % HASH_P,
     )
 
 

@@ -1,6 +1,6 @@
 """Perceptual image hashing (pHash family): a 63-bit DCT sign hash over
-8x8 grayscale pixels, as pure Catalyst expressions with a DuckDB SQL twin
-generated in lockstep.
+8x8 grayscale pixels, computed in one vectorized Arrow pass, with a
+DuckDB SQL twin generated from the same coefficient table.
 
 The classic pHash recipe (public: Zauner, "Implementation and
 benchmarking of perceptual image hash functions"): transform the image
@@ -13,8 +13,8 @@ recall.
 
 This implementation hashes an 8x8 grayscale image directly (64 pixels →
 8x8 DCT-II → the 63 AC coefficients, each compared to their mean): small
-enough that BOTH engines evaluate the identical arithmetic — the DCT is
-two separable passes of literal-coefficient multiply-adds written in a
+enough that numpy and DuckDB evaluate the identical arithmetic — the DCT
+is two separable passes of literal-coefficient multiply-adds written in a
 fixed order, so every float operation is IEEE-identical cross-engine and
 the catalog oracle hash-matches the signatures bit for bit.  For real
 imagery, decode + resize to 8x8 gray first (``multimodal.images``
@@ -32,10 +32,11 @@ from typing import List
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
 #: Orthonormal 8-point DCT-II coefficients as plain Python floats — the
-#: SINGLE source for both the Column expressions and the SQL twin, so the
-#: two engines multiply by bit-identical literals.
+#: SINGLE source for both the numpy pass and the SQL twin, so the two
+#: engines multiply by bit-identical literals.
 DCT8: List[List[float]] = [
     [
         (1.0 / math.sqrt(2.0) if k == 0 else 1.0)
@@ -73,81 +74,34 @@ def gray8_pixels_sql(vec_sql: str) -> str:
 
 
 def phash63_columns(
-    df: DataFrame, px_col: str, out_col: str = "phash",
-    use_arrow: bool = True,
+    df: DataFrame, px_col: str, out_col: str = "phash"
 ) -> DataFrame:
     """Append ``out_col``: the 63-bit pHash of the 8x8 row-major pixel
-    array in ``px_col``.
+    array in ``px_col``; a NULL array hashes to 0, as in the SQL twin.
 
-    Two identical-value implementations (the engine's twin pattern):
-
-    - ``use_arrow=True`` (default, the throughput path): one
-      ``mapInPandas`` pass whose numpy accumulations repeat the
-      expression form's left-fold order element-wise, so the hashes are
-      bit-identical (tested) — the ~9k-node expression tree of the pure
-      form exceeds whole-stage codegen and falls back to interpreted
-      evaluation, ~15x slower per row;
-    - ``use_arrow=False``: pure Catalyst expressions — two separable DCT
-      passes materialized as intermediate projections (row pass → column
-      pass → mean + sign bits), every sum a fixed left-to-right literal
-      chain.  This is the form the SQL oracle mirrors term for term."""
-    if use_arrow:
-        return _phash63_arrow(df, px_col, out_col)
-    pix = [
-        F.element_at(F.col(px_col), i + 1).cast("double") for i in range(64)
-    ]
-    # pass 1: r[x][v] = sum_y M[v][y] * p[x*8 + y]
-    r_cols = []
-    for x in range(8):
-        for v in range(8):
-            e = F.lit(DCT8[v][0]) * pix[x * 8]
-            for y in range(1, 8):
-                e = e + F.lit(DCT8[v][y]) * pix[x * 8 + y]
-            r_cols.append(e.alias(f"_r_{x}_{v}"))
-    step1 = df.select("*", *r_cols)
-    # pass 2: c[u][v] = sum_x M[u][x] * r[x][v]
-    c_cols = []
-    for u, v in AC_ORDER:
-        e = F.lit(DCT8[u][0]) * F.col(f"_r_0_{v}")
-        for x in range(1, 8):
-            e = e + F.lit(DCT8[u][x]) * F.col(f"_r_{x}_{v}")
-        c_cols.append(e.alias(f"_c_{u}_{v}"))
-    step2 = step1.select("*", *c_cols)
-    mean = F.col(f"_c_{AC_ORDER[0][0]}_{AC_ORDER[0][1]}")
-    for u, v in AC_ORDER[1:]:
-        mean = mean + F.col(f"_c_{u}_{v}")
-    mean = mean / F.lit(63.0)
-    step3 = step2.withColumn("_mu", mean)
-    sig = F.lit(0).cast("long")
-    for j, (u, v) in enumerate(AC_ORDER):
-        sig = sig + F.when(
-            F.col(f"_c_{u}_{v}") > F.col("_mu"), F.lit(1 << j)
-        ).otherwise(F.lit(0))
-    drop = (
-        [f"_r_{x}_{v}" for x in range(8) for v in range(8)]
-        + [f"_c_{u}_{v}" for (u, v) in AC_ORDER]
-        + ["_mu"]
-    )
-    return step3.withColumn(out_col, sig).drop(*drop)
-
-
-def _phash63_arrow(df: DataFrame, px_col: str, out_col: str) -> DataFrame:
-    """Arrow twin of the expression pHash — identical accumulation order,
-    vectorized across the batch (see :func:`phash63_columns`)."""
+    One ``mapInPandas`` pass, vectorized across each Arrow batch: a row
+    DCT pass, a column DCT pass, then the mean and the sign bits, every
+    sum a fixed left-to-right chain of literal multiply-adds — the order
+    :func:`phash63_sql` writes term for term, so the hashes are
+    bit-identical (tested, and gated by the catalog oracles)."""
     import numpy as np
-    import pandas as pd
 
-    fields = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
-    )
+    schema = StructType(df.schema.fields + [StructField(out_col, LongType())])
 
     def gen(batches):
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            P = np.stack(pdf[px_col].to_numpy()).astype(np.float64)
-            # pass 1: r[:, x, v] left-folded over y, exactly as the
-            # expression chain (((m0*p0) + m1*p1) + ...)
+            # a NULL array reads as all-zero pixels: every AC coefficient
+            # is 0, none exceeds the mean, so it hashes to 0 (as in SQL)
+            live = pdf[px_col].notna().to_numpy()
+            P = np.zeros((len(pdf), 64))
+            if live.any():
+                P[live] = np.stack(pdf[px_col][live].to_numpy()).astype(
+                    np.float64
+                )
+            # pass 1: r[:, x, v] = sum_y M[v][y] * p[x*8 + y], left-folded
+            # over y exactly as the SQL chain (((m0*p0) + m1*p1) + ...)
             r = np.empty((len(P), 8, 8))
             for x in range(8):
                 for v in range(8):
@@ -155,6 +109,7 @@ def _phash63_arrow(df: DataFrame, px_col: str, out_col: str) -> DataFrame:
                     for y in range(1, 8):
                         acc = acc + DCT8[v][y] * P[:, x * 8 + y]
                     r[:, x, v] = acc
+            # pass 2: c[u][v] = sum_x M[u][x] * r[x][v]
             c = {}
             for u, v in AC_ORDER:
                 acc = DCT8[u][0] * r[:, 0, v]
@@ -172,19 +127,20 @@ def _phash63_arrow(df: DataFrame, px_col: str, out_col: str) -> DataFrame:
             out[out_col] = sig
             yield out
 
-    return df.mapInPandas(gen, f"{fields}, {out_col} long")
+    return df.mapInPandas(gen, schema)
 
 
 def phash63_sql(id_sql: str, px_sql: str, table: str) -> str:
     """The SQL twin: same literals, same summation order, same bit
-    layout — one CTE per DCT pass mirroring :func:`phash63_columns`."""
+    layout — one CTE per DCT pass, in the order :func:`phash63_columns`
+    folds."""
     r_terms = []
     for x in range(8):
         for v in range(8):
             e = " + ".join(
                 f"{DCT8[v][y]!r} * p[{x * 8 + y + 1}]" for y in range(8)
             )
-            # left-assoc chain matches the Column build exactly
+            # left-assoc chain matches the numpy fold exactly
             r_terms.append(f"({e}) AS r_{x}_{v}")
     c_terms = []
     for u, v in AC_ORDER:

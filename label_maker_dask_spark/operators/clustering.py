@@ -3,16 +3,16 @@
 SemDeDup-style curation (prune near-duplicate *meaning*, not just near-
 duplicate text) needs embeddings clustered so that pruning/sampling can act
 per cluster.  This operator is Lloyd's algorithm on the unit sphere
-(cosine k-means), built entirely from Catalyst expressions — no Python row
-path — and engineered so a DuckDB oracle can replay it bit-for-bit:
+(cosine k-means), engineered so a DuckDB oracle can replay it
+bit-for-bit:
 
 - **Deterministic init**: centroids seed from the ``k`` lowest-id vectors
   (the same convention as the IVF coarse quantizer,
   ``similarity.py:372``), not from random sampling.
 - **Sequential float folds**: every dot product and norm is a
-  left-to-right ``F.aggregate`` fold, the exact order DuckDB's
-  ``list_reduce`` uses — never a BLAS/pairwise summation whose grouping
-  differs by backend.
+  left-to-right fold (``F.aggregate`` for norms, ``_dots_exact`` in the
+  assignment pass), the exact order DuckDB's ``list_reduce`` uses —
+  never a BLAS/pairwise summation whose grouping differs by backend.
 - **Exact mean accumulation**: the only place partial-aggregation merge
   order could leak float noise is the per-cluster mean.  Components are
   quantized to integers (``round(x * quant)`` as BIGINT) and summed
@@ -20,22 +20,30 @@ path — and engineered so a DuckDB oracle can replay it bit-for-bit:
   Quantization error only nudges centroids (every engine/partitioning
   nudges them identically); assignments stay exact replicas.
 
-Scale shape per iteration: one broadcast cross-join against k centroid
-rows folded to an argmax by map-side partial ``max(struct)`` (the shuffle
-carries one row per vector), then a (cluster, dim) integer-sum shuffle of
-k*d rows post-combine.  Nothing is collected to the driver; iterations
-deepen one lazy plan over the normalized working set, which is persisted
-once (``persist=True`` default) so the seed scan and every Lloyd pass read
-the cache instead of re-deriving unit vectors from the source — the
-standard iterative-algorithm working-set cache.  Pass ``persist=False``
-for a fully-lazy one-shot plan (e.g. when the caller already cached
-upstream or will never materialize twice).
+Scale shape per iteration: the k centroid rows (k*d doubles, the
+classic distributed-k-means driver state) collect to the driver, and
+assignment is one narrow ``mapInPandas`` pass over the working set —
+numpy dots per Arrow batch, no shuffle, no join; then a (cluster, dim)
+integer-sum shuffle of k*d rows post-combine recomputes the means.  The
+normalized working set is persisted once (``persist=True`` default) so
+the seed scan and every Lloyd pass read the cache instead of
+re-deriving unit vectors from the source — the standard
+iterative-algorithm working-set cache.  Pass ``persist=False`` to skip
+the materialization (e.g. when the caller already cached upstream or
+will never materialize twice).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    DoubleType,
+    IntegerType,
+    StructField,
+    StructType,
+)
 
 from label_maker_dask_spark.operators.materialize import materialize
 
@@ -52,34 +60,6 @@ def _unit(df: DataFrame, vec_col: str, out_col: str) -> DataFrame:
     return df.withColumn(
         out_col, F.transform(v, lambda x: x / F.col("_nrm"))
     ).drop("_nrm")
-
-
-def _assign(unitv: DataFrame, cents: DataFrame, id_col: str) -> DataFrame:
-    """Nearest-centroid (max cosine) assignment; ties break to the lowest
-    cell id.  Argmax rides ``max(struct(dot, -cell, u))`` so the shuffle
-    after the broadcast cross-join carries one partially-aggregated row
-    per vector."""
-    dot = F.aggregate(
-        F.zip_with(F.col("u"), F.col("cu"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda a, x: a + x,
-    )
-    j = unitv.crossJoin(F.broadcast(cents)).withColumn("dot", dot)
-    best = j.groupBy(id_col).agg(
-        F.max(
-            F.struct(
-                F.col("dot").alias("d"),
-                (-F.col("cell")).alias("nc"),
-                F.col("u").alias("u"),
-            )
-        ).alias("b")
-    )
-    return best.select(
-        id_col,
-        (-F.col("b.nc")).cast("int").alias("cluster"),
-        F.col("b.d").alias("dot"),
-        F.col("b.u").alias("u"),
-    )
 
 
 def _recompute(assigned: DataFrame, quant: int) -> DataFrame:
@@ -101,16 +81,28 @@ def _recompute(assigned: DataFrame, quant: int) -> DataFrame:
     return _unit(vecs, "cv", "cu").select("cell", "cu")
 
 
-def _assign_arrow(unitv: DataFrame, cents: DataFrame, id_col: str) -> DataFrame:
-    """Arrow-vectorized twin of :func:`_assign` — bit-identical output.
+def _rows(col, width: int):
+    """``(matrix, live)``: an array column as float64 rows of ``width``
+    (a NULL array is a zero row) and the mask of its non-NULL rows."""
+    import numpy as np
+
+    live = col.notna().to_numpy()
+    m = np.zeros((len(col), width))
+    if width and live.any():
+        m[live] = np.stack(col[live].to_numpy())
+    return m, live
+
+
+def _assign(unitv: DataFrame, cents: DataFrame, id_col: str) -> DataFrame:
+    """Nearest-centroid (max cosine) assignment; ties break to the lowest
+    cell id.
 
     Centroids (k rows) collect to the driver and ride the closure; per
     Arrow batch, dots accumulate with the same left-to-right dim fold the
-    expression path and the SQL oracle use (``_dots_exact``, never BLAS),
-    and ``np.argmax``'s first-max rule reproduces the lowest-cell
-    tie-break because centroids are ordered by cell.  This is the 100 TB
-    hot path: the expression fold evaluates an interpreted lambda per
-    element, the Arrow path ~one numpy op per dimension per batch."""
+    SQL oracle uses (``_dots_exact``, never BLAS), and ``np.argmax``'s
+    first-max rule reproduces the lowest-cell tie-break because
+    centroids are ordered by cell.  No centroids (empty input) assign no
+    rows."""
     import numpy as np
     import pandas as pd
 
@@ -118,15 +110,20 @@ def _assign_arrow(unitv: DataFrame, cents: DataFrame, id_col: str) -> DataFrame:
 
     cpd = cents.orderBy("cell").toPandas()
     cell_ids = cpd["cell"].to_numpy()
-    cm = np.stack(cpd["cu"].to_numpy()).astype(np.float64)
+    width = max((len(c) for c in cpd["cu"] if c is not None), default=0)
+    cm, c_live = _rows(cpd["cu"], width)
 
     def assign(batches):
         for pdf in batches:
-            if len(pdf) == 0:
+            if len(pdf) == 0 or len(cell_ids) == 0:
                 continue
-            um = np.stack(pdf["u"].to_numpy()).astype(np.float64)
+            um, u_live = _rows(pdf["u"], width)
             dots = _dots_exact(um, cm)
-            best = np.argmax(dots, axis=1)
+            # a NULL vector or centroid has a NULL dot, which never wins
+            # (the oracle orders NULL dots last); a row with no other dot
+            # goes to the lowest cell with a NULL dot
+            dots[~(u_live[:, None] & c_live[None, :])] = np.nan
+            best = np.argmax(np.where(np.isnan(dots), -np.inf, dots), axis=1)
             yield pd.DataFrame(
                 {
                     id_col: pdf[id_col].to_numpy(),
@@ -136,10 +133,15 @@ def _assign_arrow(unitv: DataFrame, cents: DataFrame, id_col: str) -> DataFrame:
                 }
             )
 
-    id_type = unitv.schema[id_col].dataType.simpleString()
-    return unitv.mapInPandas(
-        assign, f"{id_col} {id_type}, cluster int, dot double, u array<double>"
+    schema = StructType(
+        [
+            unitv.schema[id_col],
+            StructField("cluster", IntegerType()),
+            StructField("dot", DoubleType()),
+            StructField("u", ArrayType(DoubleType())),
+        ]
     )
+    return unitv.mapInPandas(assign, schema)
 
 
 def spherical_kmeans(
@@ -149,7 +151,6 @@ def spherical_kmeans(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     quant: int = 1_000_000,
-    use_arrow: bool = False,
     persist: bool = True,
 ) -> DataFrame:
     """Cluster embeddings on the unit sphere; returns one row per vector:
@@ -161,12 +162,13 @@ def spherical_kmeans(
     recompute-means -> reassign.  Deterministic under any partitioning —
     see the module docstring for the replay contract.
 
-    ``use_arrow`` switches assignment to the vectorized twin
-    (:func:`_assign_arrow`, bit-identical by construction and by test):
-    the expression path is the oracle mirror and stays fully lazy; the
-    Arrow path is the throughput path, at the cost of one driver-side
-    k-row centroid collect per iteration (the classic distributed-k-means
-    driver state, k*d doubles).
+    Each assignment collects its k centroid rows (k*d doubles) to the
+    driver while the plan is built, so this call runs ``iters + 1`` small
+    Spark jobs (the seeds, then each refinement's means); the returned
+    frame is one narrow Arrow pass over the working set.  ``k < 1``
+    raises ``ValueError`` before any job runs; empty input gives no rows;
+    a NULL vector joins the lowest cell with a NULL ``sim``, as in the
+    oracle.
 
     ``persist`` materializes the normalized working set via a lazy
     ``localCheckpoint`` (module docstring) — values are identical either
@@ -175,6 +177,8 @@ def spherical_kmeans(
     still reads the blocks, and checkpoint blocks are released when the
     frame is garbage-collected, while a bare persist pins them in the
     cache manager for the session's lifetime."""
+    if k < 1:
+        raise ValueError(f"spherical_kmeans needs k >= 1 centroids (got k={k})")
     unitv = _unit(embeddings.select(id_col, vec_col), vec_col, "u").select(
         id_col, "u"
     )
@@ -189,11 +193,10 @@ def spherical_kmeans(
         .limit(k)
         .select((F.row_number().over(w) - 1).alias("cell"), F.col("u").alias("cu"))
     )
-    assign = _assign_arrow if use_arrow else _assign
-    assigned = assign(unitv, cents, id_col)
+    assigned = _assign(unitv, cents, id_col)
     for _ in range(iters):
         cents = _recompute(assigned, quant)
-        assigned = assign(unitv, cents, id_col)
+        assigned = _assign(unitv, cents, id_col)
     return assigned.select(
         id_col,
         "cluster",

@@ -13,15 +13,17 @@ Scale design notes (100 TB posture):
 - **n-gram Jaccard (exact)**: the shingle self-join explodes with corpus
   size; it is the *oracle/verification* path and the small-corpus tool, not
   the 100 TB path — that's what MinHash is for.  Documented accordingly.
-- Hashing uses the cross-engine polynomial fold (functions/text.py) so every
-  step is DuckDB-verifiable; swap ``xxhash64`` in for production cheapness
-  (same topology, not cross-checkable).
+- Hashing uses the cross-engine polynomial fold so every step is
+  DuckDB-verifiable: shingling and SimHash fold tokens with vectorized
+  numpy inside one Arrow pass, and ``functions/text.py`` holds the SQL
+  renderings the oracles replay.  Swap ``xxhash64`` in for production
+  cheapness (same topology, not cross-checkable).
 """
 
 from __future__ import annotations
 
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from label_maker_dask_spark.operators.materialize import materialize
@@ -30,9 +32,6 @@ from label_maker_dask_spark.functions.text import (
     HASH_MULT,
     HASH_P,
     SHINGLE_B,
-    shingle_hashes_from,
-    token_hashes,
-    tokens,
 )
 
 # fixed (a, b) coefficient pairs for the k minhash "permutations"
@@ -65,37 +64,17 @@ def doc_shingles(
     text_col: str = "text",
     id_col: str = "doc_id",
     n: int = 3,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """Distinct (doc_id, shingle_hash) pairs — the set representation used by
     both Jaccard verification and MinHash.
 
-    Entirely narrow (no shuffle, no join): one row in, its distinct shingle
-    hashes out.  Two identical-value implementations:
-
-    - ``use_arrow=True`` (default): Arrow-batched ``mapInPandas`` computing
-      the polynomial char fold with vectorized int64 numpy (Horner over a
-      zero-padded byte matrix, ~max_token_len iterations per doc).  Spark's
-      higher-order functions are interpreted per element with no CSE, so the
-      expression form pays ~|chars| expression-tree walks per document; the
-      numpy form is an order of magnitude cheaper and bit-identical (all
-      arithmetic stays below 2^63: h < P ~1e9, h*B + h' < 1e15 + 1e9).
-    - ``use_arrow=False``: pure Catalyst expressions (functions/text.py) —
-      the form mirrored by the DuckDB oracle SQL.
-
-    Tests assert both paths produce identical row sets."""
-    if not use_arrow:
-        with_th = docs.select(
-            F.col(id_col).alias("doc_id"),
-            token_hashes(tokens(F.col(text_col))).alias("th"),
-        )
-        return with_th.select(
-            "doc_id",
-            F.explode(
-                F.array_distinct(shingle_hashes_from(F.col("th"), n))
-            ).alias("sh"),
-        )
-
+    Entirely narrow (no shuffle, no join): one Arrow-batched
+    ``mapInPandas`` pass, one row in, its distinct shingle hashes out.
+    The polynomial char fold runs as vectorized int64 numpy (Horner over
+    a zero-padded byte matrix, ~max_token_len iterations per batch); all
+    arithmetic stays below 2^63 (h < P ~1e9, h*B + h' < 1e15 + 1e9), so
+    the hashes equal the DuckDB oracle's ``shingle_hashes_sql`` bit for
+    bit (tested, and gated by the catalog oracles)."""
     import pandas as pd
 
     def gen(batches):
@@ -116,7 +95,8 @@ def doc_shingles(
 
 import re
 
-# Java's \s (the expression path's split pattern) is ASCII-only
+# ASCII \s is exactly functions/text.WS_CLASS ([ \t\n\x0B\f\r]), the
+# whitespace class the DuckDB oracles split on
 _WS_RE = re.compile(r"\s+", re.ASCII)
 
 
@@ -146,18 +126,17 @@ def _token_fold(toks: list):
 
 
 def _batch_token_arrays(pdf, text_col: str, id_col: str):
-    """Per-batch tokenize + hash, shared by the shingle and SimHash Arrow
-    paths: returns ``(doc_ids, n_docs, token_hash, tok_doc)`` where
+    """Per-batch tokenize + hash, shared by the shingle and SimHash
+    passes: returns ``(doc_ids, n_docs, token_hash, tok_doc)`` where
     ``token_hash`` is the char-poly hash of every token in batch order and
     ``tok_doc`` maps each token to its doc index.  Kept in ONE place so a
-    future tokenization-parity fix cannot silently diverge between paths."""
+    future tokenization-parity fix cannot silently diverge between them."""
     import numpy as np
 
     doc_ids = pdf[id_col].to_numpy()
     # ASCII-\s split, NOT str.split(): Python's split treats all Unicode
-    # whitespace (e.g. NBSP) as separators while the expression path's
-    # Java split("\\s+") and the RE2 oracle do not — the two paths must
-    # produce identical token (and therefore shingle) sets
+    # whitespace (e.g. NBSP) as separators while the oracles' WS_CLASS
+    # split does not — the token (and therefore shingle) sets must match
     toks_per_doc = [
         [t for t in _WS_RE.split(s) if t] for s in pdf[text_col].fillna("")
     ]
@@ -599,76 +578,23 @@ def _simhash_coeffs(bits: int) -> list:
 SIMHASH_COEFFS: list[tuple[int, int]] = _simhash_coeffs(SIMHASH_BITS)
 
 
-def simhash_from_hashes(hashes: Column, bits: int = SIMHASH_BITS) -> Column:
-    """``bits``-wide SimHash from an already-computed token-hash array: per
-    token, pseudo-random bit j is ``((h*A_j + B_j) mod P) mod 2``;
-    signature bit j is the sign of the (+1/-1) sum over tokens.  Widths
-    up to 62 stay clear of the sign bit."""
-
-    def bit_sum(A: int, B: int):
-        # closure factory keeps the merge lambda at arity 2 (acc, h); extra
-        # default args would make Spark bind an element-index param instead
-        return F.aggregate(
-            hashes,
-            F.lit(0).cast("long"),
-            lambda acc, h: acc + (((h * A + B) % HASH_P) % 2) * 2 - 1,
-        )
-
-    bit_sums = [bit_sum(A, B) for (A, B) in _simhash_coeffs(bits)]
-    sig = sum(
-        (F.when(s > 0, F.lit(1 << j)).otherwise(F.lit(0)) for j, s in enumerate(bit_sums)),
-        F.lit(0),
-    )
-    return sig.cast("long")
-
-
-def simhash(text: Column) -> Column:
-    """``SIMHASH_BITS``-wide SimHash of a text column — single-Column
-    convenience form.
-
-    NOTE the interpreted char fold is referenced by every per-bit
-    aggregate and higher-order expressions get no CSE, so this form pays
-    bits× the fold cost.  The hot path is :func:`simhash_signatures_df`,
-    which materializes the token hashes once in a separate projection."""
-    return simhash_from_hashes(
-        F.transform(tokens(text), lambda t: char_poly_hash_col(t))
-    )
-
-
 def simhash_signatures_df(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    use_arrow: bool = True,
     bits: int = SIMHASH_BITS,
 ) -> DataFrame:
-    """Per-doc SimHash signatures.  Two identical-value implementations
-    (same twin pattern as :func:`doc_shingles`):
+    """Per-doc ``bits``-wide SimHash signatures: per token, pseudo-random
+    bit j is ``((h*A_j + B_j) mod P) mod 2``; signature bit j is the sign
+    of the (+1/-1) sum over tokens (an empty or NULL text signs to 0).
+    Widths up to 62 stay clear of the sign bit.
 
-    - ``use_arrow=True`` (default, the 100 TB path): one Arrow-batched
-      ``mapInPandas`` pass — tokens char-folded once with the vectorized
-      ``_token_fold`` (Horner over a padded byte matrix), then every bit
-      sum comes from one ``np.bincount`` per plane over the flat token-hash
-      array.  Entirely narrow: one row in, one (doc_id, simhash) row out.
-    - ``use_arrow=False``: Catalyst expressions with the token-hash array
-      materialized ONCE in its own projection (the per-bit aggregates
-      then reference the stored array — Catalyst's CollapseProject keeps
-      multiply-referenced expensive expressions materialized, the same
-      trick as similarity.normalized).  This form mirrors the DuckDB
-      oracle SQL; higher-order folds are interpreted per element, so it is
-      the slow path at scale.
-
-    Tests assert both paths are value-identical row for row."""
-    if not use_arrow:
-        hashes = F.transform(
-            tokens(F.col(text_col)), lambda t: char_poly_hash_col(t)
-        )
-        with_h = docs.select(F.col(id_col).alias("doc_id"), hashes.alias("_th"))
-        return with_h.select(
-            "doc_id",
-            simhash_from_hashes(F.col("_th"), bits).alias("simhash"),
-        )
-
+    One Arrow-batched ``mapInPandas`` pass — tokens char-folded once with
+    the vectorized ``_token_fold`` (Horner over a padded byte matrix),
+    then every bit sum comes from one ``np.bincount`` per plane over the
+    flat token-hash array.  Entirely narrow: one row in, one (doc_id,
+    simhash) row out.  The DuckDB oracle (``queries._simhash_oracle``)
+    replays the same integer arithmetic per bit."""
     import numpy as np
     import pandas as pd
 
@@ -706,7 +632,6 @@ def simhash_neardup_pairs(
     id_col: str = "doc_id",
     max_hamming: int = 3,
     bands: int = 4,
-    use_arrow: bool = True,
     bits: int = SIMHASH_BITS,
 ) -> DataFrame:
     """All document pairs whose SimHash signatures differ in at most
@@ -734,7 +659,7 @@ def simhash_neardup_pairs(
     ``ensure_small_input`` (``dedup_simhash16_neardup_pairs``).  The
     plan shape and the exactness guarantee are width-independent, and
     both widths are oracle-replayed."""
-    sigs = simhash_signatures_df(docs, text_col, id_col, use_arrow, bits)
+    sigs = simhash_signatures_df(docs, text_col, id_col, bits)
     return banded_hamming_pairs(
         sigs, "doc_id", "simhash", bits, bands, max_hamming
     )
@@ -814,16 +739,6 @@ def banded_hamming_pairs(
         .where(F.col("hamming") <= max_hamming)
         .select("id_a", "id_b", "hamming")
         .distinct()
-    )
-
-
-def char_poly_hash_col(s: Column) -> Column:
-    """char_poly_hash usable inside a lambda (no F.col references)."""
-    chars = F.filter(F.split(s, ""), lambda c: c != "")
-    return F.aggregate(
-        chars,
-        F.lit(0).cast("long"),
-        lambda acc, c: (acc * 31 + F.ascii(c)) % HASH_P,
     )
 
 

@@ -1798,45 +1798,15 @@ def _pq_sqdist(a: Column, b: Column) -> Column:
 
 
 def _pq_assign(subv: DataFrame, codebooks: DataFrame) -> DataFrame:
-    """Nearest codebook entry per (vector, subspace): broadcast the
-    (n_sub * k)-row codebook, argmin squared-L2 with lowest-code ties.
-
-    The argmin rides ``min(struct(d, code, sub))`` — struct comparison is
-    lexicographic, so this IS "order by d asc, code asc, take first", but
-    as a hash aggregate whose map-side partials collapse the k-way fanout
-    before the shuffle (measured: the window row_number form shuffled
-    corpus*n_sub*k rows and cost the stored-index write ~2x)."""
-    j = subv.join(F.broadcast(codebooks), "m").withColumn(
-        "d", _pq_sqdist(F.col("sub"), F.col("cu"))
-    )
-    best = j.groupBy("vec_id", "m").agg(
-        F.min(
-            F.struct(
-                F.col("d").alias("d"),
-                F.col("code").alias("code"),
-                F.col("sub").alias("sub"),
-            )
-        ).alias("b")
-    )
-    return best.select(
-        "vec_id", "m", F.col("b.code").alias("code"), F.col("b.sub").alias("sub")
-    )
-
-
-def _pq_assign_arrow(subv: DataFrame, codebooks: DataFrame) -> DataFrame:
-    """Arrow-vectorized twin of :func:`_pq_assign` — bit-identical output
-    (equality tested in tests/test_similarity.py; the shared SQL oracle
-    gates it again at the catalog level).
+    """Nearest codebook entry per (vector, subspace): argmin squared-L2
+    with lowest-code ties, in one narrow ``mapInPandas`` pass.
 
     The (n_sub * k)-row codebook collects to the driver and rides the
     closure; per Arrow batch, squared distances accumulate with the same
-    left-to-right dim fold the expression path and the SQL oracle use
-    (never BLAS/pairwise), and ``np.argmin``'s first-min rule reproduces
-    the lowest-code tie-break because each subspace's entries are ordered
-    by code.  This is the hot path: the expression fold pays an
-    interpreted lambda per (row, code, dim) — corpus * k * dim lambda
-    evaluations per assignment pass — while this pays ~k * dim numpy ops
-    per BATCH."""
+    left-to-right dim fold the SQL oracle uses (never BLAS/pairwise),
+    and ``np.argmin``'s first-min rule reproduces the lowest-code
+    tie-break because each subspace's entries are ordered by code.  The
+    cost is ~k * dim numpy ops per batch, with no join and no shuffle."""
     import numpy as np
     import pandas as pd
 
@@ -1887,7 +1857,6 @@ def pq_train_codebooks(
     subv: DataFrame,
     k: int = 16,
     refine_iters: int = 1,
-    arrow: bool = True,
 ) -> DataFrame:
     """Train per-subspace codebooks: seed each subspace's k entries from
     the k lowest-id vectors' subvectors (the IVF/k-means convention),
@@ -1901,9 +1870,8 @@ def pq_train_codebooks(
         .where(F.col("rn") <= k)
         .select("m", (F.col("rn") - 1).alias("code"), F.col("sub").alias("cu"))
     )
-    assign = _pq_assign_arrow if arrow else _pq_assign
     for _ in range(refine_iters):
-        assigned = assign(subv, cb).select("m", "code", "sub")
+        assigned = _pq_assign(subv, cb).select("m", "code", "sub")
         qsum = assigned.select(
             "m", "code", F.posexplode("sub").alias("pos0", "x")
         ).groupBy("m", "code", "pos0").agg(
@@ -1919,13 +1887,10 @@ def pq_train_codebooks(
     return cb
 
 
-def pq_encode(
-    subv: DataFrame, codebooks: DataFrame, arrow: bool = True
-) -> DataFrame:
+def pq_encode(subv: DataFrame, codebooks: DataFrame) -> DataFrame:
     """Encode every vector as (vec_id, m, code) rows — at rest this is
     n_sub bytes per vector (vs 4*dim for float32)."""
-    assign = _pq_assign_arrow if arrow else _pq_assign
-    return assign(subv, codebooks).select("vec_id", "m", "code")
+    return _pq_assign(subv, codebooks).select("vec_id", "m", "code")
 
 
 def _pq_geometry(codebooks: DataFrame) -> tuple:

@@ -19,9 +19,9 @@ against a DuckDB oracle:
   (corr/covar/stddev/var) with rounding margins sized to the engines'
   partial-merge float noise (corr is O(1) -> 6 dp; large-magnitude
   moments -> 2-4 dp).
-- ``embedding_kmeans_clusters`` / ``..._arrow`` — oracle-replayable
-  spherical k-means (:mod:`operators.clustering`), expression mirror and
-  bit-identical Arrow twin against the same unrolled SQL oracle.
+- ``embedding_kmeans_clusters`` — oracle-replayable spherical k-means
+  (:mod:`operators.clustering`) against an unrolled SQL oracle;
+  ``..._arrow`` is a retained name for the same call.
 - ``curation_semdedup_cluster_profiles`` — the SemDeDup pruning-decision
   view composed on top of the clustering.
 
@@ -221,58 +221,58 @@ def window_percent_rank_cume_dist(spark, sf_dir):
     )
 
 
-_KMEANS_ORACLE = """
-WITH unitv AS (
+def kmeans_oracle_sql(k: int = 8, iters: int = 1, dim: int = 64) -> str:
+    """DuckDB replay of :func:`operators.clustering.spherical_kmeans` over
+    ``embeddings(vec_id, embedding)``: the ``k`` lowest-id seeds, then
+    ``iters`` rounds of integer-quantized exact means (1e-6 grid) and
+    reassignment, every dot and norm a left-to-right ``list_reduce``,
+    ties to the lowest cell.  Unrolled: one assignment CTE per pass."""
+    norm = "sqrt(list_reduce(list_transform({v}, x -> x * x), (a,b) -> a + b))"
+    dot = (
+        f"list_reduce(list_transform(generate_series(1, {dim}), "
+        "i -> u[i] * cu[i]), (a,b) -> a + b)"
+    )
+    ctes = [
+        f"""unitv AS (
   SELECT vec_id, list_transform(v, x -> x / nrm) AS u
-  FROM (
-    SELECT vec_id, v,
-           sqrt(list_reduce(list_transform(v, x -> x * x), (a,b) -> a + b))
-             AS nrm
-    FROM (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings))),
-init AS (
+  FROM (SELECT vec_id, v, {norm.format(v="v")} AS nrm
+        FROM (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
+              FROM embeddings)))""",
+        f"""cent0 AS (
   SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cell, u AS cu
-  FROM (SELECT vec_id, u FROM unitv ORDER BY vec_id LIMIT 8)),
-a0 AS (
-  SELECT vec_id, u, cell,
+  FROM (SELECT vec_id, u FROM unitv ORDER BY vec_id LIMIT {k}))""",
+    ]
+    for it in range(iters + 1):
+        ctes.append(f"""a{it} AS (
+  SELECT vec_id, u, cell, dot,
          row_number() OVER (PARTITION BY vec_id
                             ORDER BY dot DESC, cell ASC) AS rn
-  FROM (
-    SELECT vec_id, u, cell,
-           list_reduce(list_transform(generate_series(1, 64),
-                                      i -> u[i] * cu[i]),
-                       (a,b) -> a + b) AS dot
-    FROM unitv CROSS JOIN init)),
-qrows AS (
-  SELECT cell, u, unnest(generate_series(1, 64)) AS pos
-  FROM a0 WHERE rn = 1),
-qsum AS (
+  FROM (SELECT vec_id, u, cell, {dot} AS dot
+        FROM unitv CROSS JOIN cent{it}))""")
+        if it == iters:
+            break
+        ctes.append(f"""qsum{it} AS (
   SELECT cell, pos,
          sum(CAST(round(u[pos] * 1000000) AS BIGINT)) AS s,
          count(*) AS n
-  FROM qrows GROUP BY cell, pos),
-cent1 AS (
+  FROM (SELECT cell, u, unnest(generate_series(1, {dim})) AS pos
+        FROM a{it} WHERE rn = 1)
+  GROUP BY cell, pos)""")
+        ctes.append(f"""cent{it + 1} AS (
   SELECT cell, list_transform(mv, x -> x / nrm) AS cu
-  FROM (
-    SELECT cell, mv,
-           sqrt(list_reduce(list_transform(mv, x -> x * x), (a,b) -> a + b))
-             AS nrm
-    FROM (
-      SELECT cell, list(CAST(s AS DOUBLE) / (n * 1000000.0) ORDER BY pos)
-               AS mv
-      FROM qsum GROUP BY cell))),
-a1 AS (
-  SELECT vec_id, cell, dot,
-         row_number() OVER (PARTITION BY vec_id
-                            ORDER BY dot DESC, cell ASC) AS rn
-  FROM (
-    SELECT vec_id, cell,
-           list_reduce(list_transform(generate_series(1, 64),
-                                      i -> u[i] * cu[i]),
-                       (a,b) -> a + b) AS dot
-    FROM unitv CROSS JOIN cent1))
-SELECT vec_id, cell AS cluster, round(dot, 6) AS sim
-FROM a1 WHERE rn = 1
-"""
+  FROM (SELECT cell, mv, {norm.format(v="mv")} AS nrm
+        FROM (SELECT cell,
+                     list(CAST(s AS DOUBLE) / (n * 1000000.0) ORDER BY pos)
+                       AS mv
+              FROM qsum{it} GROUP BY cell)))""")
+    return (
+        "WITH " + ",\n".join(ctes)
+        + f"\nSELECT vec_id, cell AS cluster, round(dot, 6) AS sim\n"
+        f"FROM a{iters} WHERE rn = 1\n"
+    )
+
+
+_KMEANS_ORACLE = kmeans_oracle_sql()
 
 
 @register("embedding_kmeans_clusters", _KMEANS_ORACLE)
@@ -285,24 +285,18 @@ def embedding_kmeans_clusters(spark, sf_dir):
     lowest-id seeds, same left-to-right dot/norm folds, same
     integer-quantized exact means — so the hash-match proves the
     *distributed* implementation is partition-order-independent.  Scale
-    shape per iteration: broadcast cross-join vs k centroids collapsed
-    map-side to an argmax row per vector, plus one (cluster, dim)
-    integer-sum shuffle of k*d rows."""
+    shape per iteration: a k-row centroid collect, one narrow Arrow
+    assignment pass (numpy left-fold dots per batch, no shuffle), plus
+    one (cluster, dim) integer-sum shuffle of k*d rows."""
     emb = _t(spark, sf_dir, "embeddings")
     return spherical_kmeans(emb, k=8, iters=1)
 
 
 @register("embedding_kmeans_clusters_arrow", _KMEANS_ORACLE)
 def embedding_kmeans_clusters_arrow(spark, sf_dir):
-    """The Arrow-vectorized twin of ``embedding_kmeans_clusters`` —
-    identical semantics and the SAME oracle, so the hash-match proves the
-    hot path (numpy left-fold dots per Arrow batch, ``use_arrow=True``)
-    bit-matches both the expression plan and the SQL replay.  This is the
-    pairing SimHash uses (`dedup.py` expression mirror + Arrow twin): the
-    interpreted-lambda path for oracle transparency, the vectorized path
-    for 100 TB throughput."""
-    emb = _t(spark, sf_dir, "embeddings")
-    return spherical_kmeans(emb, k=8, iters=1, use_arrow=True)
+    """A retained catalog name pointing at the one implementation: the
+    same call as ``embedding_kmeans_clusters``, against the same oracle."""
+    return embedding_kmeans_clusters(spark, sf_dir)
 
 
 _SEMDEDUP_ORACLE = f"""
@@ -327,15 +321,15 @@ def curation_semdedup_cluster_profiles(spark, sf_dir):
     lowest id), member count, and the centroid-similarity profile that
     drives keep/drop thresholds.
 
-    Composes :func:`operators.clustering.spherical_kmeans` (the Arrow
-    assignment path — bit-identical to the expression mirror, same
-    oracle) with a per-cluster argmax window — the window partitions on
-    cluster id (k groups), but its input is already one row per vector,
-    so the sort is k small sorts, not a fact-table sort.  avg/min
+    Composes :func:`operators.clustering.spherical_kmeans` (as
+    ``embedding_kmeans_clusters``) with a per-cluster argmax window — the
+    window partitions on cluster id (k groups), but its input is already
+    one row per vector, so the sort is k small sorts, not a fact-table
+    sort.  avg/min
     similarities round at 6 dp (values are O(1) cosines; partial-merge
     noise is ~1e-13)."""
     emb = _t(spark, sf_dir, "embeddings")
-    clusters = spherical_kmeans(emb, k=8, iters=1, use_arrow=True)
+    clusters = spherical_kmeans(emb, k=8, iters=1)
     w = Window.partitionBy("cluster").orderBy(
         F.desc("sim"), F.asc("vec_id")
     )

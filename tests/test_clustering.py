@@ -4,6 +4,7 @@ oracle hash-match certifies at catalog level)."""
 
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
 from label_maker_dask_spark.operators.clustering import spherical_kmeans
@@ -63,21 +64,55 @@ def test_kmeans_partition_order_independent(spark):
     assert a == b
 
 
+def _kmeans_oracle(df, k, iters, dim):
+    """``kmeans_oracle_sql`` in DuckDB over ``df``'s (vec_id, embedding)
+    rows; sorted (vec_id, cluster, sim) tuples."""
+    import duckdb
+    import pyarrow as pa
+
+    from label_maker_dask_spark.queries_relational_ext import kmeans_oracle_sql
+
+    rows = df.collect()
+    con = duckdb.connect()
+    con.register(
+        "embeddings",
+        pa.table(
+            {
+                "vec_id": pa.array([r.vec_id for r in rows], pa.int64()),
+                "embedding": pa.array(
+                    [list(r.embedding) for r in rows], pa.list_(pa.float64())
+                ),
+            }
+        ),
+    )
+    return sorted(con.execute(kmeans_oracle_sql(k, iters, dim)).fetchall())
+
+
 def test_kmeans_arrow_twin_bit_identical(spark):
-    df = _blobs(spark)
-    expr = sorted(
-        map(tuple, spherical_kmeans(df, k=3, iters=2).collect())
+    """Two Lloyd refinements equal the DuckDB replay
+    (``kmeans_oracle_sql``) row for row — same clusters, same rounded
+    similarities — on the separated blobs and on exactly tied dots: the
+    3 lowest ids seed e1, e2, e3; vectors 3 and 4 (e1 + e2) tie between
+    cells 0 and 1, vector 5 (e4) ties at dot 0 across all cells, and
+    vector 6 (3 * e3) repeats seed 2's direction.  Ties go to the lowest
+    cell in both engines."""
+    def vec(*axes, scale=1.0):
+        return [scale if d in axes else 0.0 for d in range(8)]
+
+    tied = spark.createDataFrame(
+        [(i, vec(i)) for i in range(3)]
+        + [(3, vec(0, 1)), (4, vec(0, 1)), (5, vec(3)), (6, vec(2, scale=3.0))],
+        "vec_id long, embedding array<double>",
     )
-    arrow = sorted(
-        map(
-            tuple,
-            spherical_kmeans(df, k=3, iters=2, use_arrow=True).collect(),
-        )
-    )
-    assert expr == arrow
+    for df, n in ((_blobs(spark), 90), (tied, 7)):
+        got = sorted(map(tuple, spherical_kmeans(df, k=3, iters=2).collect()))
+        assert got == _kmeans_oracle(df, k=3, iters=2, dim=8) and len(got) == n
 
 
-def test_kmeans_no_python_row_path(spark):
+def test_kmeans_assignment_is_one_narrow_arrow_pass(spark):
+    """Assignment is one ``mapInPandas`` over the working set: the
+    centroids are collected while the plan is built, so the returned
+    plan has one MapInPandas, no Exchange and no join."""
     df = _blobs(spark, n_per=4)
     plan = (
         spherical_kmeans(df, k=2, iters=1)
@@ -85,9 +120,48 @@ def test_kmeans_no_python_row_path(spark):
         .executedPlan()
         .toString()
     )
-    # pure Catalyst: no Arrow/pandas eval nodes anywhere in the plan
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
+    assert plan.count("MapInPandas") == 1
+    assert "Exchange" not in plan and "Join" not in plan
+
+
+@pytest.mark.parametrize("k", [0, -1])
+def test_kmeans_rejects_k_below_one_before_any_job(spark, k):
+    df = _blobs(spark, n_per=2)
+    sc = spark.sparkContext
+    sc.setJobGroup("kmeans-bad-k", "k < 1 must fail before any job")
+    try:
+        with pytest.raises(ValueError, match=f"k={k}"):
+            spherical_kmeans(df, k=k)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("kmeans-bad-k") == []
+
+
+@pytest.mark.parametrize("op", ["phash", "kmeans"])
+def test_id_columns_with_spaces_in_their_names(spark, op):
+    """The Arrow passes build their output schemas as StructType, so a
+    pass-through or id column named ``img id``/``vec id`` (which a DDL
+    string would fail to parse) keeps its name and its values."""
+    if op == "phash":
+        from label_maker_dask_spark.multimodal.phash import (
+            gray8_pixels,
+            phash63_columns,
+        )
+
+        emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+        px = emb.select(
+            "vec_id", gray8_pixels(F.col("embedding")).alias("px")
+        )
+        run = lambda d, c: phash63_columns(d, "px").select(c, "phash")  # noqa: E731
+        old, new = "vec_id", "img id"
+    else:
+        px = _blobs(spark, n_per=5)
+        run = lambda d, c: spherical_kmeans(d, k=3, iters=1, id_col=c)  # noqa: E731
+        old, new = "vec_id", "vec id"
+    want = sorted(map(tuple, run(px, old).collect()))
+    out = run(px.withColumnRenamed(old, new), new)
+    assert out.columns[0] == new
+    assert sorted(map(tuple, out.collect())) == want and len(want) > 0
 
 
 def test_kmeans_persist_caches_working_set(spark):

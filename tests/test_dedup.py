@@ -72,8 +72,8 @@ def test_minhash_signature_determinism(spark):
 
 
 def test_simhash_properties(spark):
-    df = _docs(spark).select("doc_id", D.simhash(F.col("text")).alias("sig"))
-    sigs = {r.doc_id: r.sig for r in df.collect()}
+    df = D.simhash_signatures_df(_docs(spark))
+    sigs = {r.doc_id: r.simhash for r in df.collect()}
     assert sigs[1] == sigs[2]                  # identical text, identical hash
     assert 0 <= sigs[1] < (1 << D.SIMHASH_BITS)
     # near-dup differs in few bits; different text differs in more
@@ -82,19 +82,45 @@ def test_simhash_properties(spark):
     assert hamming(sigs[1], sigs[3]) <= hamming(sigs[1], sigs[4]) + 2
 
 
-def test_doc_shingles_arrow_matches_expression_path(spark):
-    """The numpy fast path and the Catalyst-expression path (the one the
-    DuckDB oracle mirrors) must produce identical (doc_id, sh) row sets —
-    including on non-ASCII text, which exercises the ord() fallback."""
-    docs = _docs(spark).union(
-        spark.createDataFrame(
-            [Row(doc_id=6, text="naïve café déjà vu encore une fois")],
-            schema="doc_id long, text string",
-        )
+def _oracle(sql, docs):
+    """Run DuckDB oracle SQL over a ``documents`` relation holding
+    ``docs`` (``(doc_id, text)`` tuples); rows come back sorted."""
+    import duckdb
+    import pyarrow as pa
+
+    con = duckdb.connect()
+    con.register(
+        "documents",
+        pa.table(
+            {
+                "doc_id": pa.array([d for d, _ in docs], pa.int64()),
+                "text": pa.array([t for _, t in docs], pa.string()),
+            }
+        ),
     )
-    fast = sorted((r.doc_id, r.sh) for r in D.doc_shingles(docs, use_arrow=True).collect())
-    slow = sorted((r.doc_id, r.sh) for r in D.doc_shingles(docs, use_arrow=False).collect())
-    assert fast == slow and len(fast) > 0
+    return sorted(con.execute(sql).fetchall())
+
+
+def _shingles_vs_oracle(spark, docs):
+    """(doc_shingles rows, the catalog's DuckDB shingle CTE rows)."""
+    from label_maker_dask_spark.queries import _shingle_cte
+
+    df = spark.createDataFrame(docs, "doc_id long, text string")
+    got = sorted((r.doc_id, r.sh) for r in D.doc_shingles(df).collect())
+    return got, _oracle(f"WITH {_shingle_cte()} SELECT doc_id, sh FROM sh", docs)
+
+
+def test_doc_shingles_arrow_matches_expression_path(spark):
+    """doc_shingles must equal the DuckDB shingle twin the Jaccard and
+    containment oracles replay (``queries._shingle_cte``, built from
+    ``functions.text.shingle_hashes_sql``) row for row — including on
+    non-ASCII text, which exercises the ord() fallback of the fold."""
+    docs = [(r.doc_id, r.text) for r in DOCS] + [
+        (6, "naïve café déjà vu encore une fois")
+    ]
+    got, want = _shingles_vs_oracle(spark, docs)
+    assert got == want and len(got) > 0
+    assert {d for d, _ in got} == {1, 2, 3, 4, 6}  # doc 5 has < 3 tokens
 
 
 def test_minhash_profiles_match_exploded_pipeline(spark):
@@ -114,47 +140,48 @@ def test_minhash_profiles_match_exploded_pipeline(spark):
 
 
 def test_doc_shingles_arrow_path_uses_ascii_whitespace(spark):
-    """Python str.split() treats NBSP as a separator; Java's \\s+ (the
-    expression path) does not — the Arrow path must match the expression
-    path (and therefore the oracle) on such inputs."""
-    docs = spark.createDataFrame(
-        [(1, "foo\u00a0bar baz qux quux corge")],
-        "doc_id long, text string",
-    )
-    fast = sorted(
-        (r.doc_id, r.sh) for r in D.doc_shingles(docs, use_arrow=True).collect()
-    )
-    slow = sorted(
-        (r.doc_id, r.sh) for r in D.doc_shingles(docs, use_arrow=False).collect()
-    )
-    assert fast == slow and len(fast) > 0
+    """Python's str.split() treats NBSP as a separator; the oracles'
+    ``WS_CLASS`` split does not, and it does split on \\x0B (vertical
+    tab, which RE2's \\s would miss).  doc_shingles must tokenize exactly
+    as the DuckDB twin on both."""
+    docs = [
+        (1, "foo\u00a0bar baz qux quux corge"),
+        (2, "foo\x0bbar baz\x0b\x0bqux quux"),
+    ]
+    got, want = _shingles_vs_oracle(spark, docs)
+    assert got == want
+    # 5 tokens each ("foo\u00a0bar" is one token; \x0B separates): 3 shingles
+    assert [d for d, _ in got] == [1, 1, 1, 2, 2, 2]
 
 
 def test_simhash_arrow_matches_expression_path(spark):
-    """The Arrow SimHash path (default, the scale path) must equal the
-    Catalyst-expression path (the oracle mirror) signature-for-signature —
-    including non-ASCII (ord() fallback), NBSP (ASCII-\\s parity), an empty
-    doc, and a null doc (both engines sign an empty/null bit-sum as 0)."""
-    docs = _docs(spark).union(
-        spark.createDataFrame(
-            [
-                Row(doc_id=6, text="naïve café déjà vu encore une fois"),
-                Row(doc_id=7, text="foo bar baz"),
-                Row(doc_id=8, text=""),
-                Row(doc_id=9, text=None),
-            ],
-            schema="doc_id long, text string",
+    """SimHash signatures must equal the DuckDB oracle
+    (``queries._simhash_oracle``, the one the SimHash catalog cells
+    replay) signature for signature, at the 60-bit default and the
+    16-bit verification width — including non-ASCII (ord() fallback),
+    NBSP and \\x0B (``WS_CLASS`` parity), an empty doc and a NULL doc
+    (both sign an empty bit-sum as 0)."""
+    from label_maker_dask_spark.queries import _simhash_oracle
+
+    docs = [(r.doc_id, r.text) for r in DOCS] + [
+        (6, "naïve café déjà vu encore une fois"),
+        (7, "foo bar baz"),
+        (8, ""),
+        (9, None),
+        (10, "foo\u00a0bar baz"),
+        (11, "foo\x0bbar baz"),
+    ]
+    df = spark.createDataFrame(docs, "doc_id long, text string")
+    for bits in (D.SIMHASH_BITS, 16):
+        got = sorted(
+            (r.doc_id, r.simhash)
+            for r in D.simhash_signatures_df(df, bits=bits).collect()
         )
-    )
-    fast = sorted(
-        (r.doc_id, r.simhash)
-        for r in D.simhash_signatures_df(docs, use_arrow=True).collect()
-    )
-    slow = sorted(
-        (r.doc_id, r.simhash)
-        for r in D.simhash_signatures_df(docs, use_arrow=False).collect()
-    )
-    assert fast == slow and len(fast) == docs.count()
+        assert got == _oracle(_simhash_oracle(bits), docs), bits
+        assert len(got) == len(docs)
+        sig = dict(got)
+        assert sig[8] == sig[9] == 0
+        assert sig[11] == sig[7] != sig[10]
 
 
 def test_jaccard_pairs_refuses_large_input(spark):

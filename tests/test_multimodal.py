@@ -136,26 +136,17 @@ def test_phash_neardup_pairs_on_perturbed_images(spark):
 
 
 def test_phash_arrow_bit_identical_to_expression_form(spark):
-    """The Arrow pHash must reproduce the interpreted expression form
-    EXACTLY, or the SQL-oracle replay contract breaks."""
-    from pyspark.sql import functions as F
+    """The Arrow pHash must reproduce the DuckDB SQL form
+    (``phash63_sql``, the oracle of ``multimodal_phash_signatures``)
+    EXACTLY on the 500 real sf0.001 embeddings, or the replay contract
+    breaks."""
+    from tests.test_oracle_adversarial import _both
 
-    from label_maker_dask_spark.multimodal.phash import (
-        gray8_pixels,
-        phash63_columns,
+    got, want = _both(
+        spark, "/root/testdata/sf0.001", "multimodal_phash_signatures",
+        ["embeddings"],
     )
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    px = emb.select("vec_id", gray8_pixels(F.col("embedding")).alias("px"))
-    fast = {
-        r.vec_id: r.phash
-        for r in phash63_columns(px, "px", use_arrow=True).collect()
-    }
-    slow = {
-        r.vec_id: r.phash
-        for r in phash63_columns(px, "px", use_arrow=False).collect()
-    }
-    assert fast == slow and len(fast) == 500
+    assert got == want and len(got) == 500
 
 
 def test_jpeg_fixture_tiles_vs_jvm(spark):

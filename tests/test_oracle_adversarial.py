@@ -7,6 +7,7 @@ import datetime
 
 import duckdb
 import pyarrow as pa
+import pytest
 import pyarrow.parquet as pq
 
 from label_maker_dask_spark.queries import ORACLES, QUERIES
@@ -56,3 +57,60 @@ def test_q21_last_supplier_kept_when_others_have_only_null_ship_dates(
     got, want = _both(spark, sf_dir, "q21_suppliers_who_shipped_last", tables)
     assert want == [("s10", 2), ("s20", 1), ("s30", 1)]
     assert got == want
+
+
+def _embeddings(rows):
+    """An ``embeddings`` table of ``(vec_id, 64 floats or None)`` rows."""
+    return {
+        "embeddings": {
+            "vec_id": pa.array([i for i, _ in rows], pa.int64()),
+            "embedding": pa.array(
+                [v for _, v in rows], pa.list_(pa.float32())
+            ),
+        }
+    }
+
+
+def test_phash_of_null_pixel_array_is_zero(spark, tmp_path):
+    """A NULL embedding renders to a NULL pixel array; the SQL twin's
+    NULL arithmetic signs every coefficient false, so its pHash is 0,
+    and the Arrow pass must give the same instead of failing the task."""
+    rows = [(1, [((i * 7) % 11) / 5.5 - 1.0 for i in range(64)]), (2, None)]
+    tables = _embeddings(rows)
+    sf_dir = str(tmp_path)
+    _write_tables(sf_dir, tables)
+    got, want = _both(spark, sf_dir, "multimodal_phash_signatures", tables)
+    assert want[1] == (2, 0) and want[0][1] != 0
+    assert got == want
+
+
+_NULL_EMBEDDING = [
+    (i, [float((i * 7 + j * 3) % 11) - 5.0 for j in range(64)])
+    for i in range(12)
+] + [(99, None)]
+
+
+@pytest.mark.parametrize(
+    "rows", [[], _NULL_EMBEDDING], ids=["empty", "null-embedding"]
+)
+@pytest.mark.parametrize(
+    "name",
+    [
+        "embedding_kmeans_clusters",
+        "embedding_kmeans_clusters_arrow",
+        "curation_semdedup_cluster_profiles",
+    ],
+)
+def test_kmeans_cells_on_empty_or_null_embeddings(spark, tmp_path, name, rows):
+    """An empty table gives no rows; a NULL vector (not a seed) has NULL
+    dots, so it joins the lowest cell with a NULL similarity and adds
+    nothing to the means."""
+    tables = _embeddings(rows)
+    sf_dir = str(tmp_path)
+    _write_tables(sf_dir, tables)
+    got, want = _both(spark, sf_dir, name, tables)
+    assert got == want
+    if not rows:
+        assert want == []
+    elif name != "curation_semdedup_cluster_profiles":
+        assert (99, 0, None) in want and len(want) == 13

@@ -85,10 +85,9 @@ def _pq_assign_reference(vecs, codebook):
 @settings(max_examples=20, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(vecs=_VECS)
-def test_pq_assignment_both_paths_match_reference(spark, vecs):
+def test_pq_assignment_matches_reference(spark, vecs):
     from label_maker_dask_spark.operators.similarity import (
         _pq_assign,
-        _pq_assign_arrow,
         pq_subvectors,
         pq_train_codebooks,
     )
@@ -106,11 +105,8 @@ def test_pq_assignment_both_paths_match_reference(spark, vecs):
         codebook[r.m].append((r.code, list(r.cu)))
     want = _pq_assign_reference(fvecs, codebook)
 
-    for fn in (_pq_assign, _pq_assign_arrow):
-        got = {
-            (r.vec_id, r.m): r.code for r in fn(subv, cb).collect()
-        }
-        assert got == want, fn.__name__
+    got = {(r.vec_id, r.m): r.code for r in _pq_assign(subv, cb).collect()}
+    assert got == want
 
 
 _DAILY = st.lists(

@@ -763,27 +763,67 @@ def test_pq_stored_index_matches_onthefly_and_prunes(spark, tmp_path):
 
 
 def test_pq_arrow_assignment_bit_identical_to_expression(spark):
-    """The Arrow argmin path must equal the interpreted expression path
-    exactly — same folds, same lowest-code ties — on real embeddings
-    AND with a constructed exact tie."""
+    """PQ assignment must equal the DuckDB training/encoding CTEs every
+    PQ catalog oracle replays (``_pq_train_ctes_sql``): the seed
+    assignment (``a0``) and the encode under refined codebooks
+    (``codes``) on real embeddings, then a corpus whose lowest ids seed
+    two identical codebook entries (an exact tie, broken to the lowest
+    code in both engines), then a hand-built duplicate-entry codebook."""
+    import duckdb
+    import pyarrow as pa
+
     import label_maker_dask_spark.queries as Q
     from label_maker_dask_spark.operators.similarity import (
         _pq_assign,
-        _pq_assign_arrow,
+        _pq_train_ctes_sql,
+        pq_encode,
         pq_subvectors,
         pq_train_codebooks,
     )
 
+    def oracle(con, cte, *geometry):
+        ctes = _pq_train_ctes_sql(*geometry, "TRUE", "TRUE")
+        sql = f"WITH {ctes} SELECT vec_id, m, code FROM {cte}"
+        return sorted(con.execute(sql).fetchall())
+
+    def rows(df):
+        return sorted((r.vec_id, r.m, r.code) for r in df.collect())
+
     emb = Q._t(spark, "/root/testdata/sf0.001", "embeddings")
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW embeddings AS SELECT * FROM "
+        "'/root/testdata/sf0.001/embeddings.parquet'"
+    )
     subv = pq_subvectors(emb)
-    cb = pq_train_codebooks(subv, k=16, refine_iters=0)
-    expr = sorted(
-        (r.vec_id, r.m, r.code) for r in _pq_assign(subv, cb).collect()
+    seed = rows(_pq_assign(subv, pq_train_codebooks(subv, k=16, refine_iters=0)))
+    assert seed == oracle(con, "a0", 8, 8, 16, 64)
+    assert len(seed) == emb.count() * 8
+    enc = rows(pq_encode(subv, pq_train_codebooks(subv, k=16)))
+    assert enc == oracle(con, "codes", 8, 8, 16, 64)
+
+    # seeded tie: ids 1 and 2 seed identical entries (codes 0 and 1)
+    tied = [(1, [0.0] * 8), (2, [0.0] * 8), (3, [9.0] * 8), (7, [0.0] * 8)]
+    con = duckdb.connect()
+    con.register(
+        "embeddings",
+        pa.table(
+            {
+                "vec_id": pa.array([i for i, _ in tied], pa.int64()),
+                "embedding": pa.array(
+                    [v for _, v in tied], pa.list_(pa.float32())
+                ),
+            }
+        ),
     )
-    arrow = sorted(
-        (r.vec_id, r.m, r.code) for r in _pq_assign_arrow(subv, cb).collect()
+    tsub = pq_subvectors(
+        spark.createDataFrame(tied, "vec_id long, embedding array<float>"),
+        n_sub=1,
+        sub_dim=8,
     )
-    assert expr == arrow and len(expr) == emb.count() * 8
+    got = rows(_pq_assign(tsub, pq_train_codebooks(tsub, k=3, refine_iters=0)))
+    assert got == oracle(con, "a0", 1, 8, 3, 8)
+    assert (7, 1, 0) in got
 
     # constructed tie: two identical codebook entries -> lowest code wins
     dup = spark.createDataFrame(
@@ -793,9 +833,7 @@ def test_pq_arrow_assignment_bit_identical_to_expression(spark):
     one = spark.createDataFrame(
         [(7, 1, [0.0] * 8)], "vec_id long, m int, sub array<double>"
     )
-    for fn in (_pq_assign, _pq_assign_arrow):
-        got = fn(one, dup).collect()
-        assert [(r.vec_id, r.m, r.code) for r in got] == [(7, 1, 0)]
+    assert rows(_pq_assign(one, dup)) == [(7, 1, 0)]
 
 
 def test_pq_append_composes_and_replays_exactly_once(spark, tmp_path):
@@ -1184,7 +1222,7 @@ def test_pq_arrow_assignment_nonlong_id(spark):
     """The Arrow assigner derives the id column's type from the input
     schema (a string-keyed corpus must not be coerced to long)."""
     from label_maker_dask_spark.operators.similarity import (
-        _pq_assign_arrow,
+        _pq_assign,
         pq_subvectors,
         pq_train_codebooks,
     )
@@ -1194,7 +1232,7 @@ def test_pq_arrow_assignment_nonlong_id(spark):
     subv = pq_subvectors(emb, n_sub=2, sub_dim=4,
                          id_col="doc_key", vec_col="vec")
     cb = pq_train_codebooks(subv, k=4, refine_iters=0)
-    got = _pq_assign_arrow(subv, cb).collect()
+    got = _pq_assign(subv, cb).collect()
     assert len(got) == 40
     assert all(isinstance(r.vec_id, str) for r in got)
 

@@ -46,23 +46,26 @@ def test_char_poly_hash_matches_python_and_duckdb(spark):
 
 
 def test_shingle_hash_combination_matches_oracle(spark):
+    """doc_shingles' per-doc shingle set equals the DuckDB rendering
+    ``shingle_hashes_sql`` over the ``WS_CLASS`` tokens."""
+    from label_maker_dask_spark.operators.dedup import doc_shingles
+
     texts = ["a b c d e", "one two three", "too short"]
-    df = _df(spark, texts)
-    th = T.token_hashes(T.tokens(F.col("text")))
-    out = {
-        r.doc_id: r.s
-        for r in df.select("doc_id", th.alias("th"))
-        .select("doc_id", T.shingle_hashes_from(F.col("th")).alias("s"))
-        .collect()
-    }
+    out = {}
+    for r in doc_shingles(_df(spark, texts)).collect():
+        out.setdefault(r.doc_id, set()).add(r.sh)
     con = duckdb.connect()
-    toks_sql = "list_filter(string_split_regex(trim(t), '\\s+'), x -> x != '')"
+    toks_sql = (
+        f"list_filter(string_split_regex(trim(t), '{T.WS_CLASS}'), "
+        "x -> x != '')"
+    )
     for i, t in enumerate(texts):
         ddb = con.execute(
             f"SELECT {T.shingle_hashes_sql(toks_sql)} FROM (SELECT ? AS t)", [t]
         ).fetchone()[0]
-        assert list(out[i]) == list(ddb), t
-    assert out[2] == []  # 2 tokens -> no 3-shingles
+        assert out.get(i, set()) == set(ddb), t
+    assert len(out[0]) == 3 and len(out[1]) == 1
+    assert 2 not in out  # 2 tokens -> no 3-shingles
 
 
 def test_punct_and_stopword_ratios(spark):
