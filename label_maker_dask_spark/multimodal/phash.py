@@ -77,7 +77,8 @@ def phash63_columns(
     df: DataFrame, px_col: str, out_col: str = "phash"
 ) -> DataFrame:
     """Append ``out_col``: the 63-bit pHash of the 8x8 row-major pixel
-    array in ``px_col``; a NULL array hashes to 0, as in the SQL twin.
+    array in ``px_col``.  As in the SQL twin, a NULL array or one
+    shorter than 64 hashes to 0, and pixels past the 64th are unread.
 
     One ``mapInPandas`` pass, vectorized across each Arrow batch: a row
     DCT pass, a column DCT pass, then the mean and the sign bits, every
@@ -92,14 +93,14 @@ def phash63_columns(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            # a NULL array reads as all-zero pixels: every AC coefficient
-            # is 0, none exceeds the mean, so it hashes to 0 (as in SQL)
-            live = pdf[px_col].notna().to_numpy()
+            # a NULL or short array reads as all-zero pixels: every AC
+            # coefficient is 0, none exceeds the mean, so it hashes to 0.
+            # In SQL a missing pixel reads as NULL, which NULLs every
+            # coefficient and so every bit; both read only p[1..64].
             P = np.zeros((len(pdf), 64))
-            if live.any():
-                P[live] = np.stack(pdf[px_col][live].to_numpy()).astype(
-                    np.float64
-                )
+            for i, px in enumerate(pdf[px_col]):
+                if px is not None and len(px) >= 64:
+                    P[i] = px[:64]
             # pass 1: r[:, x, v] = sum_y M[v][y] * p[x*8 + y], left-folded
             # over y exactly as the SQL chain (((m0*p0) + m1*p1) + ...)
             r = np.empty((len(P), 8, 8))

@@ -575,9 +575,6 @@ def _simhash_coeffs(bits: int) -> list:
     return [(6 * j + 5, 15485863 * (j + 1) % HASH_P) for j in range(bits)]
 
 
-SIMHASH_COEFFS: list[tuple[int, int]] = _simhash_coeffs(SIMHASH_BITS)
-
-
 def simhash_signatures_df(
     docs: DataFrame,
     text_col: str = "text",

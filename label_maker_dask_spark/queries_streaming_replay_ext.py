@@ -1,21 +1,25 @@
-"""Batch-replay catalog twins for the streaming maintenance sinks.
+"""Batch-replay catalog twins for the streaming sinks and operators.
 
-The streaming operators (``streaming/upsert.py``, ``operators/scd.py``'s
-sinks) cannot appear in ``queries()`` directly — they need checkpoints
-and sinks, not a DataFrame return — so their correctness evidence lived
-only in pytest (equals-batch, crash drills, exactly-once).  These
-entries lift the equals-batch harness into the catalog: each one
+The streaming sinks (``streaming/upsert.py``, ``operators/scd.py``'s
+sinks) and stateful operators (``streaming/windows.py``,
+``streaming/stateful.py``) cannot appear in ``queries()`` directly — they
+need checkpoints and sinks, not a DataFrame return.  These entries lift
+the equals-batch harness into the catalog: each one
 
 1. derives a DETERMINISTIC multi-batch change log from the sf_dir
    tables (modulo / time-range splits — never sampling),
-2. writes the batches as ordered files and drives the REAL streaming
-   sink over them (``readStream`` + ``maxFilesPerTrigger=1`` +
-   ``Trigger.AvailableNow``, so the engine delivers them as separate
-   micro-batches through the sink's actual foreachBatch applier,
-   checkpoint, run-id guard, and atomic swap), and
-3. returns the final maintained table as a plain DataFrame, which the
-   driver hash-compares against a DuckDB oracle expressing the
-   END-STATE in one SQL statement.
+2. hands it to the one replay driver, :func:`_drive`, which writes the
+   batches as ordered files, opens them as a file stream delivering one
+   file per micro-batch (``maxFilesPerTrigger=1``), and drains the
+   cell's ``start(stream, out, ckpt)`` to termination — in one leg, or
+   in two legs on one checkpoint for the restart twins.  ``start`` is
+   the REAL foreachBatch sink call for the maintenance sinks (applier,
+   checkpoint, run-id guard, atomic swap), ``stream_to_parquet`` of the
+   built stream for append-mode operators (:func:`_appended`), and
+   :func:`_to_memory` for complete/update-mode aggregations; and
+3. returns the final result as a plain DataFrame, which the driver
+   hash-compares against a DuckDB oracle expressing the END-STATE in
+   one SQL statement.
 
 That puts the maintenance semantics themselves — last-writer-wins by
 change sequence, delete handling, SCD-2 interval closing across batch
@@ -81,8 +85,8 @@ def _write_ordered_batches(batches, changes_dir: str) -> None:
     """Write each batch frame as one parquet file into ``changes_dir``
     with strictly increasing mtimes (batch 0 oldest), so the file
     streaming source delivers them in batch order under
-    ``maxFilesPerTrigger=1``.  Files already present (the restart
-    harness appends the tail of a log whose head was delivered in a
+    ``maxFilesPerTrigger=1``.  Files already present (a restart drive's
+    second leg appends the tail of a log whose head was delivered in a
     previous query run) are left untouched — only newly written files
     are stamped.
 
@@ -182,99 +186,88 @@ def _write_ordered_batches(batches, changes_dir: str) -> None:
         shutil.rmtree(stage_root, ignore_errors=True)
 
 
-def _open_batch_stream(spark, batches, schema: str, name: str):
-    """Shared stream-setup prologue for both replay harnesses: write the
-    ordered batch files into a fresh workdir and open them as a file
-    stream delivering one file per micro-batch.  Returns
-    ``(stream, workdir)``."""
-    work = _replay_workdir(name)
-    changes_dir = os.path.join(work, "changes")
-    os.makedirs(changes_dir, exist_ok=True)
-    _write_ordered_batches(batches, changes_dir)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(changes_dir)
-    )
-    return stream, work
-
-
-def _drive_replay(spark, batches, schema: str, start_sink, name: str) -> str:
-    """The shared drive-the-sink harness: write ordered batch files,
-    open them as a file stream delivering one file per micro-batch, run
-    ``start_sink(stream, base_path, checkpoint)`` to completion, and
-    return the maintained base/table path for the caller to read.
-
-    Shuffle sizing: the foreachBatch merges inside the sinks shuffle at
-    ``spark.sql.shuffle.partitions``; the replay change logs are small,
-    so the drive right-sizes to ``_DRIVE_PARTITIONS`` and restores the
-    conf after (same rationale as ``_drive_stream_to_memory`` — results
-    are partition-count invariant)."""
-    stream, work = _open_batch_stream(spark, batches, schema, name)
-    base = os.path.join(work, "base")
-    ckpt = os.path.join(work, "ckpt")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _DRIVE_PARTITIONS)
-    try:
-        q = start_sink(stream, base, ckpt)
-        if not q.awaitTermination(600):
-            q.stop()
-            raise RuntimeError(f"{name}: drain timed out")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return base
-
-
-def _drive_replay_with_restart(
-    spark, batches, schema, start_sink, name: str, stop_after: int = 1
+def _drive(
+    spark, name: str, batches, schema, start, stop_after=None,
+    partitions: str = _DRIVE_PARTITIONS,
 ) -> str:
-    """The RESTART variant of :func:`_drive_replay`: the change log is
-    delivered across TWO query runs sharing one checkpoint.  Run 1 sees
-    only the first ``stop_after`` batch files on disk and drains to
-    termination (a clean batch-boundary stop — the planned-restart
-    shape: deploys, config changes, autoscaling).  The remaining batch
-    files are then written and a NEW query object starts on the SAME
-    checkpoint + sink — Spark resumes from the file-source's committed
-    log, the sink's per-checkpoint run id matches (a restarted driver
-    on the same checkpoint SHARES the run id — the continuation path
-    ``ensure_run_id`` exists to allow), and the batch-id marker keeps
-    the merge exactly-once.  Deterministic by construction: no timing
-    races, the stop point is which files exist, not when a poll fired.
+    """The one replay driver: write ``batches`` as ordered files into a
+    fresh workdir's ``changes/``, open them as a file stream delivering
+    one file per micro-batch, and drain ``start(stream, out, ckpt)`` —
+    the cell's started query — to termination.  Returns ``out``, the
+    path the sink or file sink wrote (a memory-sink cell reads its
+    query name instead).
 
-    ``schema`` is either one string (both legs) or a (leg1, leg2) pair —
-    the rolling-upgrade shape where the resumed query declares a WIDENED
-    source schema (leg-1 files re-listed under the wider schema are
-    skipped by the source's committed log, never re-read)."""
+    ``stop_after=None`` is one leg.  ``stop_after=k`` is a RESTART: leg
+    1 sees only the first ``k`` batch files and drains to a clean stop
+    at a batch boundary (the planned-restart shape: deploys, config
+    changes, autoscaling); the remaining files are then written and a
+    NEW query starts on the SAME checkpoint and output.  Everything leg
+    2 carries over — the file source's committed log (no batch
+    re-delivered, none skipped), a sink's run id (a restarted driver on
+    the same checkpoint SHARES it, the continuation ``ensure_run_id``
+    allows) and batch marker, an operator's state store — it reloaded
+    from the checkpoint.  Deterministic: the stop point is which files
+    exist, never a poll.  ``schema`` is one DDL string, or a (leg 1,
+    leg 2) pair for the rolling-upgrade twins whose resumed query
+    declares a WIDENED source schema (leg-1 files re-listed under it are
+    skipped by the committed log, never re-read).
+
+    ``spark.sql.shuffle.partitions`` is ``partitions`` for the whole
+    drive and is restored after it, also when ``start`` raises: a
+    stateful query's state partition count is frozen from it at
+    checkpoint creation, and the sinks' merges shuffle at it (see the
+    constants' measured rationale); results are partition-count
+    invariant, only the fixed per-batch task overhead changes."""
     work = _replay_workdir(name)
-    changes_dir = os.path.join(work, "changes")
-    os.makedirs(changes_dir, exist_ok=True)
-    base = os.path.join(work, "base")
-    ckpt = os.path.join(work, "ckpt")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _DRIVE_PARTITIONS)
-
-    schemas = (
-        (schema, schema) if isinstance(schema, str) else tuple(schema)
+    changes = os.path.join(work, "changes")
+    out, ckpt = os.path.join(work, "out"), os.path.join(work, "ckpt")
+    os.makedirs(changes)
+    legs = (
+        [batches] if stop_after is None
+        else [batches[:stop_after], batches[stop_after:]]
     )
-
-    def run(bs, leg_schema):
-        _write_ordered_batches(bs, changes_dir)
-        stream = (
-            spark.readStream.schema(leg_schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(changes_dir)
-        )
-        q = start_sink(stream, base, ckpt)
-        if not q.awaitTermination(600):
-            q.stop()
-            raise RuntimeError(f"{name}: drain timed out")
-
+    schemas = [schema] * 2 if isinstance(schema, str) else schema
+    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", partitions)
     try:
-        run(batches[:stop_after], schemas[0])
-        run(batches[stop_after:], schemas[1])
+        for leg, leg_schema in zip(legs, schemas):
+            _write_ordered_batches(leg, changes)
+            stream = (
+                spark.readStream.schema(leg_schema)
+                .option("maxFilesPerTrigger", 1)
+                .parquet(changes)
+            )
+            q = start(stream, out, ckpt)
+            if not q.awaitTermination(600):
+                q.stop()
+                raise RuntimeError(f"{name}: drain timed out")
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return base
+    return out
+
+
+def _read_table(spark, path: str, schema: str) -> DataFrame:
+    """The table a maintenance sink keeps at ``path``, plain or bucketed.
+    A sink skips an empty micro-batch, so a drain that committed nothing
+    (an empty change log) left no table: that reads as zero rows of
+    ``schema``, the table's schema, as the oracle's end state does.
+    Those rows are built JVM-side (``range(0)`` and typed NULL
+    literals): ``createDataFrame`` would fan out to Python partitions
+    on the replay hot path (``tests/test_plans.py``)."""
+    from pyspark.sql.types import DataType
+
+    from label_maker_dask_spark.streaming.bucketed import (
+        read_maintained_table,
+    )
+
+    if os.path.exists(path):
+        return read_maintained_table(spark, path)
+    return spark.range(0).select(
+        *(
+            F.lit(None).cast(f.dataType).alias(f.name)
+            for f in DataType.fromDDL(schema).fields
+        )
+    )
 
 
 _UPSERT_REPLAY_ORACLE = """
@@ -295,6 +288,11 @@ WHERE o_orderkey % 13 != 0
 _ORDERS_CDC_SCHEMA = (
     "o_orderkey long, o_custkey long, o_orderstatus string, "
     "totalprice_cents long, seq long, is_del boolean"
+)
+#: the maintained orders table: the change log minus ``seq``/``is_del``
+_ORDERS_TABLE_SCHEMA = (
+    "o_orderkey long, o_custkey long, o_orderstatus string, "
+    "totalprice_cents long"
 )
 
 
@@ -346,6 +344,18 @@ def _orders_cdc_batches(spark: SparkSession, sf_dir: str) -> list:
     return [b0, b1, b2]
 
 
+def _orders_upsert(stream, out, ckpt):
+    """The upsert sink call of the plain and restart orders twins."""
+    from label_maker_dask_spark.streaming.upsert import (
+        stream_upsert_to_parquet,
+    )
+
+    return stream_upsert_to_parquet(
+        stream, out, ckpt, keys=["o_orderkey"], seq_col="seq",
+        delete_col="is_del",
+    )
+
+
 @register("stream_upsert_orders_replay", _UPSERT_REPLAY_ORACLE)
 def stream_upsert_orders_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Three CDC micro-batches through the REAL ``stream_upsert_to_parquet``
@@ -355,20 +365,12 @@ def stream_upsert_orders_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     update increments, minus deleted keys), so a wrong merge, a dropped
     delete, a batch applied out of order, or seq-compaction picking the
     wrong row all hash-mismatch."""
-    from label_maker_dask_spark.streaming.upsert import (
-        stream_upsert_to_parquet,
+    out = _drive(
+        spark, "stream_upsert_orders_replay",
+        _orders_cdc_batches(spark, sf_dir), _ORDERS_CDC_SCHEMA,
+        _orders_upsert,
     )
-
-    base = _drive_replay(
-        spark,
-        _orders_cdc_batches(spark, sf_dir),
-        _ORDERS_CDC_SCHEMA,
-        lambda s, b, c: stream_upsert_to_parquet(
-            s, b, c, keys=["o_orderkey"], seq_col="seq", delete_col="is_del"
-        ),
-        "stream_upsert_orders_replay",
-    )
-    return spark.read.parquet(base)
+    return _read_table(spark, out, _ORDERS_TABLE_SCHEMA)
 
 
 @register("stream_upsert_restart_replay", _UPSERT_REPLAY_ORACLE)
@@ -377,7 +379,7 @@ def stream_upsert_restart_replay(
 ) -> DataFrame:
     """The SAME orders CDC log through the SAME upsert sink as
     ``stream_upsert_orders_replay`` — but delivered across a QUERY
-    RESTART (``_drive_replay_with_restart``): run 1 drains only the
+    RESTART (``_drive`` with ``stop_after=1``): run 1 drains only the
     snapshot batch and terminates cleanly; a NEW query object then
     resumes from the same checkpoint and delivers the update + delete
     batches.  The oracle is byte-identical to the plain twin's, which
@@ -390,20 +392,12 @@ def stream_upsert_restart_replay(
     exactly-once.  Restart evidence for the maintenance family had
     lived only in pytest (simulated-crash unit tests); this puts the
     end-to-end resume under the driver's value-hash gate."""
-    from label_maker_dask_spark.streaming.upsert import (
-        stream_upsert_to_parquet,
+    out = _drive(
+        spark, "stream_upsert_restart_replay",
+        _orders_cdc_batches(spark, sf_dir), _ORDERS_CDC_SCHEMA,
+        _orders_upsert, stop_after=1,
     )
-
-    base = _drive_replay_with_restart(
-        spark,
-        _orders_cdc_batches(spark, sf_dir),
-        _ORDERS_CDC_SCHEMA,
-        lambda s, b, c: stream_upsert_to_parquet(
-            s, b, c, keys=["o_orderkey"], seq_col="seq", delete_col="is_del"
-        ),
-        "stream_upsert_restart_replay",
-    )
-    return spark.read.parquet(base)
+    return _read_table(spark, out, _ORDERS_TABLE_SCHEMA)
 
 
 @register("stream_upsert_bucketed_orders_replay", _UPSERT_REPLAY_ORACLE)
@@ -419,21 +413,18 @@ def stream_upsert_bucketed_orders_replay(
     per-bucket marker fault all hash-mismatch, and the hash-gate pins
     plain/bucketed equivalence under the driver, not just in pytest."""
     from label_maker_dask_spark.streaming.bucketed import (
-        read_maintained_table,
         stream_upsert_to_parquet_bucketed,
     )
 
-    base = _drive_replay(
-        spark,
-        _orders_cdc_batches(spark, sf_dir),
-        _ORDERS_CDC_SCHEMA,
-        lambda s, b, c: stream_upsert_to_parquet_bucketed(
-            s, b, c, keys=["o_orderkey"], seq_col="seq", n_buckets=8,
+    out = _drive(
+        spark, "stream_upsert_bucketed_orders_replay",
+        _orders_cdc_batches(spark, sf_dir), _ORDERS_CDC_SCHEMA,
+        lambda s, o, c: stream_upsert_to_parquet_bucketed(
+            s, o, c, keys=["o_orderkey"], seq_col="seq", n_buckets=8,
             delete_col="is_del",
         ),
-        "stream_upsert_bucketed_orders_replay",
     )
-    return read_maintained_table(spark, base)
+    return _read_table(spark, out, _ORDERS_TABLE_SCHEMA)
 
 
 _SCD2_REPLAY_ORACLE = """
@@ -446,6 +437,11 @@ WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
 
 
 _SCD2_CHANGE_SCHEMA = "user_id long, event_id long, state string, ts timestamp"
+#: the maintained SCD-2 history: the change columns plus the interval
+_SCD2_HISTORY_SCHEMA = (
+    _SCD2_CHANGE_SCHEMA
+    + ", valid_from timestamp, valid_to timestamp, is_current boolean"
+)
 
 
 def _day_terciles(ev):
@@ -469,6 +465,8 @@ def _day_terciles(ev):
         .distinct()
         .collect()
     )
+    if not days:  # ``ev`` is empty, and so is each tercile
+        return [ev] * 3
     n = len(days)
     cut1, cut2 = days[max(0, n // 3)], days[max(0, 2 * n // 3)]
     day = F.date_trunc("day", "ts")
@@ -504,16 +502,14 @@ def stream_scd2_user_state_replay(
     :func:`_events_day_tercile_batches`."""
     from label_maker_dask_spark.operators.scd import stream_scd2_to_parquet
 
-    base = _drive_replay(
-        spark,
-        _events_day_tercile_batches(spark, sf_dir),
-        _SCD2_CHANGE_SCHEMA,
-        lambda s, b, c: stream_scd2_to_parquet(
-            s, b, c, keys=["user_id"], ts_col="ts", tie_break="event_id"
+    out = _drive(
+        spark, "stream_scd2_user_state_replay",
+        _events_day_tercile_batches(spark, sf_dir), _SCD2_CHANGE_SCHEMA,
+        lambda s, o, c: stream_scd2_to_parquet(
+            s, o, c, keys=["user_id"], ts_col="ts", tie_break="event_id"
         ),
-        "stream_scd2_user_state_replay",
     )
-    return spark.read.parquet(base).select(
+    return _read_table(spark, out, _SCD2_HISTORY_SCHEMA).select(
         "user_id", "event_id", "state", "valid_from", "valid_to", "is_current"
     )
 
@@ -559,18 +555,15 @@ def stream_accumulate_supplier_replay(
         ((F.col("l_orderkey") + F.col("l_linenumber")) % 3).alias("b"),
     )
     batches = [deltas.where(F.col("b") == i).drop("b") for i in range(3)]
-
-    base = _drive_replay(
-        spark,
-        batches,
-        "l_suppkey long, qty_sum long, revenue_cents long",
-        lambda s, b, c: stream_accumulate_to_parquet(
-            s, b, c, keys=["l_suppkey"],
+    schema = "l_suppkey long, qty_sum long, revenue_cents long"
+    out = _drive(
+        spark, "stream_accumulate_supplier_replay", batches, schema,
+        lambda s, o, c: stream_accumulate_to_parquet(
+            s, o, c, keys=["l_suppkey"],
             sum_cols=["qty_sum", "revenue_cents"],
         ),
-        "stream_accumulate_supplier_replay",
     )
-    return spark.read.parquet(base)
+    return _read_table(spark, out, schema)
 
 
 _VERSIONED_DIFF_REPLAY_ORACLE = """
@@ -623,14 +616,12 @@ def stream_versioned_diff_replay(
     )
     batches = [deltas.where(F.col("b") == i).drop("b") for i in range(3)]
 
-    table = _drive_replay(
-        spark,
-        batches,
+    table = _drive(
+        spark, "stream_versioned_diff_replay", batches,
         "o_custkey long, rev_cents long",
-        lambda s, b, c: stream_accumulate_to_versioned_table(
-            s, b, c, keys=["o_custkey"], sum_cols=["rev_cents"], n_buckets=8
+        lambda s, o, c: stream_accumulate_to_versioned_table(
+            s, o, c, keys=["o_custkey"], sum_cols=["rev_cents"], n_buckets=8
         ),
-        "stream_versioned_diff_replay",
     )
     diff = table_version_diff(spark, table, v_from=1, v_to=3)
     return diff.select(
@@ -639,6 +630,9 @@ def stream_versioned_diff_replay(
         F.col("old.rev_cents").alias("old_rev_cents"),
         F.col("new.rev_cents").alias("new_rev_cents"),
     )
+
+
+_NEARDUP_PAIRS_SCHEMA = "id_a long, id_b long, jaccard double, batch int"
 
 
 # the SAME oracle as the batch operator entry ``dedup_minhash_lsh_pairs``:
@@ -666,166 +660,18 @@ def stream_neardup_index_replay(
     ]
 
     # this sink maintains TWO outputs (index + pairs); both live under
-    # the harness's base dir and the twin returns the pairs table
-    base = _drive_replay(
-        spark,
-        batches,
+    # the driver's out dir and the twin returns the pairs table
+    out = _drive(
+        spark, "stream_neardup_index_replay", batches,
         "doc_id long, text string",
-        lambda s, b, c: stream_neardup_index(
-            s,
-            os.path.join(b, "index"),
-            os.path.join(b, "pairs"),
-            c,
+        lambda s, o, c: stream_neardup_index(
+            s, os.path.join(o, "index"), os.path.join(o, "pairs"), c,
             n=3, k=16, bands=4, threshold=0.12,
         ),
-        "stream_neardup_index_replay",
     )
-    return spark.read.parquet(os.path.join(base, "pairs")).select(
-        "id_a", "id_b", "jaccard"
-    )
-
-
-def _drive_stream_to_memory(
-    spark,
-    batches,
-    schema: str,
-    build,
-    name: str,
-    output_mode: str = "complete",
-    partitions: str = _DRIVE_PARTITIONS_JVM,
-):
-    """Drive-the-aggregation harness for STATEFUL STREAMING OPERATORS
-    (as opposed to ``_drive_replay``'s foreachBatch maintenance sinks):
-    write ordered batch files, open them as a one-file-per-micro-batch
-    stream, run ``build(stream)`` under ``Trigger.AvailableNow``, and
-    return the final result frame.  Complete mode (aggregations) uses a
-    MEMORY sink and surfaces the FINAL incremental state for the gate —
-    the state rows are exactly what a real update-mode run carries in
-    the state store, and the output is aggregate-bounded (windows x
-    keys), never input-sized, so driver residency is safe.  Append mode
-    (stream-stream joins, stateful dedup) can emit INPUT-SIZED output,
-    so it goes to a parquet FILE sink under the session temp root and
-    is returned as a lazy file read — nothing lands in driver memory
-    (the module's bounded-driver contract).
-
-    State-store sizing: a stateful query's state partition count is
-    frozen from ``spark.sql.shuffle.partitions`` at checkpoint
-    creation, and EVERY micro-batch then schedules that many state
-    tasks per stateful operator whether or not they hold keys.  The
-    replay change logs are deliberately small, so the harness
-    right-sizes to ``partitions`` — ``_DRIVE_PARTITIONS_JVM`` by
-    default, ``_DRIVE_PARTITIONS`` for the applyInPandasWithState
-    callers (the tuning any production streaming job applies: state
-    partitions sized to the work per key; see the constants' measured
-    rationale) — and restores the session conf before returning:
-    results are partition-count invariant, only the fixed per-batch
-    task overhead changes."""
-    stream, work = _open_batch_stream(spark, batches, schema, name)
-    ckpt = os.path.join(work, "ckpt")
-    built = build(stream)
-    if output_mode == "append":
-        out = os.path.join(work, "out")
-        writer = (
-            built.writeStream.format("parquet")
-            .option("path", out)
-            .outputMode("append")
-        )
-    else:
-        out = None
-        writer = built.writeStream.format("memory").queryName(name).outputMode(
-            output_mode
-        )
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", partitions)
-    try:
-        q = (
-            writer.option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise RuntimeError(f"{name}: drain timed out")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    if out is not None:
-        return spark.read.schema(built.schema).parquet(out)
-    return spark.table(name)
-
-
-def _drive_stream_to_memory_with_restart(
-    spark,
-    batches,
-    schema: str,
-    build,
-    name: str,
-    stop_after: int = 2,
-    output_mode: str = "complete",
-    partitions: str = _DRIVE_PARTITIONS_JVM,
-):
-    """RESTART variant of :func:`_drive_stream_to_memory`: the change
-    log is delivered across two query runs sharing one checkpoint —
-    run 1 sees only the first ``stop_after`` batch files and drains to
-    termination, then the remaining files are written and a NEW query
-    resumes.  What this uniquely exercises is STATE-STORE RECOVERY:
-    run 2 must reload the operator state (open sessions, partial
-    windows, buffered join rows) from the checkpointed store and keep
-    merging/matching into it — state lost or doubled across the
-    restart changes the final answer.  Complete mode re-emits the
-    whole state, so the memory-sink read at the end is run 2's full
-    final table; append mode (joins) goes to a parquet FILE sink that
-    persists across the runs, so the read at the end is the union of
-    both runs' emissions (the bounded-driver contract, as in the
-    non-restart harness).  Deterministic: the stop point is which
-    files exist, never a poll."""
-    work = _replay_workdir(name)
-    changes_dir = os.path.join(work, "changes")
-    os.makedirs(changes_dir, exist_ok=True)
-    ckpt = os.path.join(work, "ckpt")
-    out = os.path.join(work, "out") if output_mode == "append" else None
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", partitions)
-    built_schema = None
-
-    def run(bs):
-        nonlocal built_schema
-        _write_ordered_batches(bs, changes_dir)
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(changes_dir)
-        )
-        built = build(stream)
-        built_schema = built.schema
-        if output_mode == "append":
-            writer = (
-                built.writeStream.format("parquet")
-                .option("path", out)
-                .outputMode("append")
-            )
-        else:
-            writer = (
-                built.writeStream.format("memory")
-                .queryName(name)
-                .outputMode(output_mode)
-            )
-        q = (
-            writer.option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise RuntimeError(f"{name}: drain timed out")
-
-    try:
-        run(batches[:stop_after])
-        run(batches[stop_after:])
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    if out is not None:
-        return spark.read.schema(built_schema).parquet(out)
-    return spark.table(name)
+    return _read_table(
+        spark, os.path.join(out, "pairs"), _NEARDUP_PAIRS_SCHEMA
+    ).select("id_a", "id_b", "jaccard")
 
 
 _EVENTS_REPLAY_SCHEMA = (
@@ -838,6 +684,47 @@ def _events_raw_day_terciles(spark, sf_dir):
         _t(spark, sf_dir, "events").select(
             "event_id", "user_id", "event_type", "ts", "value"
         )
+    )
+
+
+def _appended(spark, build):
+    """``(start, read)`` for an append-mode operator cell.  ``start``
+    sends ``build(stream)`` to the exactly-once parquet file sink at
+    ``out``: stream-stream joins and stateful dedup can emit INPUT-SIZED
+    output, so nothing lands in driver memory.  ``read(out)`` reads what
+    the sink appended lazily, with the built frame's schema, so a drain
+    that appended nothing reads as zero rows of it.  The file sink
+    persists across a restart's two legs, so the read is the union of
+    both legs' emissions."""
+    from label_maker_dask_spark.streaming.windows import stream_to_parquet
+
+    built = []
+
+    def start(stream, out, ckpt):
+        built.append(build(stream))
+        return stream_to_parquet(built[-1], out, ckpt)
+
+    def read(out):
+        return spark.read.schema(built[-1].schema).parquet(out)
+
+    return start, read
+
+
+def _to_memory(name: str, build, mode: str = "complete"):
+    """``start`` for a complete/update-mode aggregation cell: the built
+    stream goes to the memory table ``name``, which the cell reads with
+    ``spark.table(name)``.  Complete mode surfaces the FINAL incremental
+    state — the rows a real update-mode run carries in the state store —
+    and after a restart it is leg 2's full final table.  The output is
+    aggregate-bounded (windows x keys, or users x batches in update
+    mode), never input-sized, so driver residency is safe."""
+    return lambda stream, out, ckpt: (
+        build(stream).writeStream.format("memory")
+        .queryName(name)
+        .outputMode(mode)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
     )
 
 
@@ -860,30 +747,35 @@ def stream_ohlc_hourly_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     from label_maker_dask_spark.operators.timeseries import ohlc_aggs
     from label_maker_dask_spark.streaming.windows import tumbling_agg
 
-    out = _drive_stream_to_memory(
-        spark,
-        _events_raw_day_terciles(spark, sf_dir),
+    name = "stream_ohlc_hourly_replay"
+    _drive(
+        spark, name, _events_raw_day_terciles(spark, sf_dir),
         _EVENTS_REPLAY_SCHEMA,
-        lambda s: tumbling_agg(
+        _to_memory(name, lambda s: tumbling_agg(
             s, "ts", "1 hour", ["event_type"],
             ohlc_aggs("ts", "value", tie_break="event_id"),
             watermark="30 minutes",
-        ),
-        "stream_ohlc_hourly_replay",
+        )),
+        partitions=_DRIVE_PARTITIONS_JVM,
     )
-    return out.select(
+    return spark.table(name).select(
         "event_type",
         F.col("window_start").alias("bucket"),
         "open", "high", "low", "close", "n",
     )
 
 
-_SESSION_REPLAY_ORACLE = """
+def _session_oracle(users: str = "") -> str:
+    """The batch sessionization the 30-minute session twins gate
+    against, over the events whose ``user_id`` passes ``users`` (a SQL
+    predicate the cell also applies; empty = all events)."""
+    events = f"events WHERE {users}" if users else "events"
+    return f"""
 WITH flagged AS (
   SELECT user_id, event_id, ts, value,
          CASE WHEN epoch_us(ts) - lag(epoch_us(ts)) OVER w > 1800000000
               THEN 1 ELSE 0 END AS new_session
-  FROM events
+  FROM {events}
   WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
 ), sessions AS (
   SELECT user_id, ts, value,
@@ -902,7 +794,25 @@ FROM sessions GROUP BY user_id, session_id
 """
 
 
-@register("stream_session_30m_replay", _SESSION_REPLAY_ORACLE)
+def _session_30m(stream):
+    """The native ``session_window`` aggregation of the session twins:
+    30-minute gap per user, 1-hour watermark."""
+    from label_maker_dask_spark.streaming.windows import session_agg
+
+    return session_agg(
+        stream, "ts", "30 minutes", ["user_id"],
+        [
+            F.count(F.lit(1)).alias("n_events"),
+            F.max("ts").alias("last_ts"),
+            F.round(F.sum(F.col("value").cast("decimal(28,8)")), 2)
+            .cast("double")
+            .alias("session_value"),
+        ],
+        watermark="1 hour",
+    )
+
+
+@register("stream_session_30m_replay", _session_oracle())
 def stream_session_30m_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Three day-tercile event micro-batches through the REAL native
     ``session_window`` streaming aggregation (``streaming/windows.py
@@ -918,26 +828,13 @@ def stream_session_30m_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     event ts, exactly); ``session_end`` is max event ts (aggregated —
     the native window end is last-ts + gap, a different convention than
     the batch twin pins)."""
-    from label_maker_dask_spark.streaming.windows import session_agg
-
-    out = _drive_stream_to_memory(
-        spark,
-        _events_raw_day_terciles(spark, sf_dir),
-        _EVENTS_REPLAY_SCHEMA,
-        lambda s: session_agg(
-            s, "ts", "30 minutes", ["user_id"],
-            [
-                F.count(F.lit(1)).alias("n_events"),
-                F.max("ts").alias("last_ts"),
-                F.round(F.sum(F.col("value").cast("decimal(28,8)")), 2)
-                .cast("double")
-                .alias("session_value"),
-            ],
-            watermark="1 hour",
-        ),
-        "stream_session_30m_replay",
+    name = "stream_session_30m_replay"
+    _drive(
+        spark, name, _events_raw_day_terciles(spark, sf_dir),
+        _EVENTS_REPLAY_SCHEMA, _to_memory(name, _session_30m),
+        partitions=_DRIVE_PARTITIONS_JVM,
     )
-    return out.select(
+    return spark.table(name).select(
         "user_id",
         F.col("session_start"),
         F.col("last_ts").alias("session_end"),
@@ -946,26 +843,18 @@ def stream_session_30m_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SESSION_RESTART_REPLAY_ORACLE = _SESSION_REPLAY_ORACLE.replace(
-    "FROM events\n", "FROM events WHERE user_id % 4 = 3\n"
-)
-# a formatting drift in the parent SQL would make the replace a silent
-# no-op and drop the slice predicate — the gate would still fail loud
-# (hash mismatch, oracle unsliced) but far from the cause; fail at
-# import instead
-assert _SESSION_RESTART_REPLAY_ORACLE != _SESSION_REPLAY_ORACLE, (
-    "session-restart oracle slice did not apply: the parent "
-    "_SESSION_REPLAY_ORACLE no longer contains the exact text "
-    "'FROM events\\n' the slice rewrites"
-)
+#: the session-restart twin's user slice, applied by the cell and its oracle
+_SESSION_RESTART_USERS = "user_id % 4 = 3"
 
 
-@register("stream_session_restart_replay", _SESSION_RESTART_REPLAY_ORACLE)
+@register(
+    "stream_session_restart_replay", _session_oracle(_SESSION_RESTART_USERS)
+)
 def stream_session_restart_replay(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """The session-window aggregation delivered across a QUERY RESTART
-    (``_drive_stream_to_memory_with_restart``): run 1 drains terciles
+    (``_drive`` with ``stop_after=2``): run 1 drains terciles
     1-2 and terminates cleanly, a NEW query resumes from the same
     checkpoint and delivers tercile 3 — so every session straddling
     the tercile-2/3 cut must be reunited by state the second run
@@ -982,31 +871,17 @@ def stream_session_restart_replay(
     a linear-by-construction cost the parent twin's probe documents —
     recovery is a per-user property, so the slice bounds the sf1 drive
     without weakening the restart claim."""
-    from label_maker_dask_spark.streaming.windows import session_agg
-
+    name = "stream_session_restart_replay"
     batches = [
-        t.where(F.col("user_id") % 4 == 3)
+        t.where(_SESSION_RESTART_USERS)
         for t in _events_raw_day_terciles(spark, sf_dir)
     ]
-    out = _drive_stream_to_memory_with_restart(
-        spark,
-        batches,
-        _EVENTS_REPLAY_SCHEMA,
-        lambda s: session_agg(
-            s, "ts", "30 minutes", ["user_id"],
-            [
-                F.count(F.lit(1)).alias("n_events"),
-                F.max("ts").alias("last_ts"),
-                F.round(F.sum(F.col("value").cast("decimal(28,8)")), 2)
-                .cast("double")
-                .alias("session_value"),
-            ],
-            watermark="1 hour",
-        ),
-        "stream_session_restart_replay",
-        stop_after=2,
+    _drive(
+        spark, name, batches, _EVENTS_REPLAY_SCHEMA,
+        _to_memory(name, _session_30m), stop_after=2,
+        partitions=_DRIVE_PARTITIONS_JVM,
     )
-    return out.select(
+    return spark.table(name).select(
         "user_id",
         F.col("session_start"),
         F.col("last_ts").alias("session_end"),
@@ -1024,6 +899,28 @@ FROM events l JOIN events r
 WHERE l.event_type = 'click' AND r.event_type = 'purchase'
   AND l.user_id % 4 = 1
 """
+
+
+def _click_purchase_join(how: str = "inner"):
+    """The build of the interval-join twins: clicks pair with the same
+    user's purchases within [ts, ts+6h], both sides watermarked at 1
+    hour, both derived from ONE file stream by filter."""
+    from label_maker_dask_spark.streaming.windows import interval_join
+
+    def build(df):
+        left = df.filter(F.col("event_type") == "click").select(
+            "user_id", "ts", "event_id"
+        )
+        right = df.filter(F.col("event_type") == "purchase").select(
+            "user_id", "ts", "event_id", "value"
+        )
+        return interval_join(
+            left, right, "ts", "ts", ["user_id"],
+            lower="0 seconds", upper="6 hours",
+            left_watermark="1 hour", right_watermark="1 hour", how=how,
+        )
+
+    return build
 
 
 @register("stream_interval_join_replay", _INTERVAL_JOIN_REPLAY_ORACLE)
@@ -1050,33 +947,16 @@ def stream_interval_join_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     slice cuts the per-batch state work without changing anything the
     gate proves — cross-boundary matches, eviction timing, and replay
     idempotency are per-user properties."""
-    from label_maker_dask_spark.streaming.windows import interval_join
-
-    def build(df):
-        left = df.filter(F.col("event_type") == "click").select(
-            "user_id", "ts", "event_id"
-        )
-        right = df.filter(F.col("event_type") == "purchase").select(
-            "user_id", "ts", "event_id", "value"
-        )
-        return interval_join(
-            left, right, "ts", "ts", ["user_id"],
-            lower="0 seconds", upper="6 hours",
-            left_watermark="1 hour", right_watermark="1 hour",
-        )
-
     batches = [
         t.where(F.col("user_id") % 4 == 1)
         for t in _events_raw_day_terciles(spark, sf_dir)
     ]
-    return _drive_stream_to_memory(
-        spark,
-        batches,
-        _EVENTS_REPLAY_SCHEMA,
-        build,
-        "stream_interval_join_replay",
-        output_mode="append",
+    start, read = _appended(spark, _click_purchase_join())
+    out = _drive(
+        spark, "stream_interval_join_replay", batches, _EVENTS_REPLAY_SCHEMA,
+        start, partitions=_DRIVE_PARTITIONS_JVM,
     )
+    return read(out)
 
 
 @register("stream_interval_join_restart_replay", _INTERVAL_JOIN_REPLAY_ORACLE)
@@ -1099,34 +979,17 @@ def stream_interval_join_restart_replay(
     one, and both hash-mismatch.  Append mode writes to a parquet file
     sink that persists across the runs, so the final read is the union
     of both runs' emissions."""
-    from label_maker_dask_spark.streaming.windows import interval_join
-
-    def build(df):
-        left = df.filter(F.col("event_type") == "click").select(
-            "user_id", "ts", "event_id"
-        )
-        right = df.filter(F.col("event_type") == "purchase").select(
-            "user_id", "ts", "event_id", "value"
-        )
-        return interval_join(
-            left, right, "ts", "ts", ["user_id"],
-            lower="0 seconds", upper="6 hours",
-            left_watermark="1 hour", right_watermark="1 hour",
-        )
-
     batches = [
         t.where(F.col("user_id") % 4 == 1)
         for t in _events_raw_day_terciles(spark, sf_dir)
     ]
-    return _drive_stream_to_memory_with_restart(
-        spark,
-        batches,
-        _EVENTS_REPLAY_SCHEMA,
-        build,
-        "stream_interval_join_restart_replay",
-        stop_after=1,
-        output_mode="append",
+    start, read = _appended(spark, _click_purchase_join())
+    out = _drive(
+        spark, "stream_interval_join_restart_replay", batches,
+        _EVENTS_REPLAY_SCHEMA, start, stop_after=1,
+        partitions=_DRIVE_PARTITIONS_JVM,
     )
+    return read(out)
 
 
 _INTERVAL_JOIN_SEMI_REPLAY_ORACLE = """
@@ -1159,34 +1022,17 @@ def stream_interval_join_semi_replay(
     must equal the batch EXISTS — the oracle.  The 1-in-4 user slice
     (``user_id % 4 == 3``, a disjoint slice from the inner twin's)
     bounds the fixed state-store cost the same way."""
-    from label_maker_dask_spark.streaming.windows import interval_join
-
-    def build(df):
-        left = df.filter(F.col("event_type") == "click").select(
-            "user_id", "ts", "event_id"
-        )
-        right = df.filter(F.col("event_type") == "purchase").select(
-            "user_id", "ts", "event_id", "value"
-        )
-        return interval_join(
-            left, right, "ts", "ts", ["user_id"],
-            lower="0 seconds", upper="6 hours",
-            left_watermark="1 hour", right_watermark="1 hour",
-            how="left_semi",
-        )
-
     batches = [
         t.where(F.col("user_id") % 4 == 3)
         for t in _events_raw_day_terciles(spark, sf_dir)
     ]
-    return _drive_stream_to_memory(
-        spark,
-        batches,
-        _EVENTS_REPLAY_SCHEMA,
-        build,
-        "stream_interval_join_semi_replay",
-        output_mode="append",
+    start, read = _appended(spark, _click_purchase_join("left_semi"))
+    out = _drive(
+        spark, "stream_interval_join_semi_replay", batches,
+        _EVENTS_REPLAY_SCHEMA, start,
+        partitions=_DRIVE_PARTITIONS_JVM,
     )
+    return read(out)
 
 
 _INTERVAL_JOIN_OUTER_REPLAY_ORACLE = """
@@ -1220,11 +1066,10 @@ WHERE j.r_event_id IS NOT NULL
 """
 
 
-def _frozen_watermark_interval_drive(
-    spark, sf_dir: str, user_slice, how: str, name: str,
-    right_margin: bool = False,
-):
-    """Shared frozen-watermark construction for the outer and full
+def _frozen_watermark_batches(
+    spark, sf_dir: str, user_slice, name: str, right_margin: bool = False
+) -> list:
+    """The frozen-watermark change log of the outer and full
     interval-join twins: the LEFT side (clicks, ``user_slice`` users)
     comes from day-tercile 1 ONLY — its event-time maximum ``mxl``
     freezes the global watermark at ``mxl − 1h`` from batch 1 onward —
@@ -1234,8 +1079,6 @@ def _frozen_watermark_interval_drive(
     band around ITS null horizon (``ts = mxl − 1h``, full-outer only).
     Both entries' oracles restate the same horizons in SQL, so this
     helper and those oracles must change in lockstep."""
-    from label_maker_dask_spark.streaming.windows import interval_join
-
     t1, t2, t3 = _events_raw_day_terciles(spark, sf_dir)
     clicks1 = t1.where(user_slice & (F.col("event_type") == "click"))
     mxl = clicks1.agg(F.max("ts")).first()[0]
@@ -1262,30 +1105,7 @@ def _frozen_watermark_interval_drive(
             )
         return p
 
-    batches = [
-        left1.unionByName(purchases(t1)),
-        purchases(t2),
-        purchases(t3),
-    ]
-
-    def build(df):
-        left = df.filter(F.col("event_type") == "click").select(
-            "user_id", "ts", "event_id"
-        )
-        right = df.filter(F.col("event_type") == "purchase").select(
-            "user_id", "ts", "event_id", "value"
-        )
-        return interval_join(
-            left, right, "ts", "ts", ["user_id"],
-            lower="0 seconds", upper="6 hours",
-            left_watermark="1 hour", right_watermark="1 hour",
-            how=how,
-        )
-
-    return _drive_stream_to_memory(
-        spark, batches, _EVENTS_REPLAY_SCHEMA, build, name,
-        output_mode="append",
-    )
+    return [left1.unionByName(purchases(t1)), purchases(t2), purchases(t3)]
 
 
 @register(
@@ -1325,10 +1145,16 @@ def stream_interval_join_outer_replay(
     unconditionally, null rows only where ``ts + 7h < mxl``.  An
     engine that emits a withheld null row, withholds an emittable one,
     or double-emits on replay all hash-mismatch."""
-    return _frozen_watermark_interval_drive(
-        spark, sf_dir, F.col("user_id") % 2 == 0, "left_outer",
-        "stream_interval_join_outer_replay",
+    name = "stream_interval_join_outer_replay"
+    batches = _frozen_watermark_batches(
+        spark, sf_dir, F.col("user_id") % 2 == 0, name
     )
+    start, read = _appended(spark, _click_purchase_join("left_outer"))
+    out = _drive(
+        spark, name, batches, _EVENTS_REPLAY_SCHEMA, start,
+        partitions=_DRIVE_PARTITIONS_JVM,
+    )
+    return read(out)
 
 
 #: the grid is closed-form: corner indices for bounds (-10,36,10,44) at
@@ -1518,15 +1344,15 @@ def stream_static_join_enrich_replay(
             "c_name", "c_mktsegment",
         )
 
-    return _drive_stream_to_memory(
-        spark,
-        _day_terciles(orders),
-        "o_orderkey long, o_custkey long, ts timestamp, "
-        "totalprice_cents long",
-        build,
-        "stream_static_join_enrich_replay",
-        output_mode="append",
+    schema = (
+        "o_orderkey long, o_custkey long, ts timestamp, totalprice_cents long"
     )
+    start, read = _appended(spark, build)
+    out = _drive(
+        spark, "stream_static_join_enrich_replay", _day_terciles(orders),
+        schema, start, partitions=_DRIVE_PARTITIONS_JVM,
+    )
+    return read(out)
 
 
 _INTERVAL_JOIN_FULL_REPLAY_ORACLE = """
@@ -1595,10 +1421,16 @@ def stream_interval_join_full_replay(
     proves is never late, or mis-coalesces the key on a right-null row
     all hash-mismatch.  The ``user_id % 4 == 0`` slice is disjoint from
     the inner/semi/timeout twins'."""
-    return _frozen_watermark_interval_drive(
-        spark, sf_dir, F.col("user_id") % 4 == 0, "full_outer",
-        "stream_interval_join_full_replay", right_margin=True,
+    name = "stream_interval_join_full_replay"
+    batches = _frozen_watermark_batches(
+        spark, sf_dir, F.col("user_id") % 4 == 0, name, right_margin=True
     )
+    start, read = _appended(spark, _click_purchase_join("full_outer"))
+    out = _drive(
+        spark, name, batches, _EVENTS_REPLAY_SCHEMA, start,
+        partitions=_DRIVE_PARTITIONS_JVM,
+    )
+    return read(out)
 
 
 _INTERVAL_JOIN_HOTUSER_REPLAY_ORACLE = """
@@ -1648,21 +1480,6 @@ def stream_interval_join_hotuser_replay(
     state per key is bounded by watermark + interval exactly as in the
     uniform twin; the hot key's buffer is the designed worst case and
     is still watermark-bounded."""
-    from label_maker_dask_spark.streaming.windows import interval_join
-
-    def build(df):
-        left = df.filter(F.col("event_type") == "click").select(
-            "user_id", "ts", "event_id"
-        )
-        right = df.filter(F.col("event_type") == "purchase").select(
-            "user_id", "ts", "event_id", "value"
-        )
-        return interval_join(
-            left, right, "ts", "ts", ["user_id"],
-            lower="0 seconds", upper="6 hours",
-            left_watermark="1 hour", right_watermark="1 hour",
-        )
-
     hot = F.when(F.col("event_id") % 10 < 3, F.lit(-1)).otherwise(
         F.col("user_id")
     )
@@ -1670,14 +1487,13 @@ def stream_interval_join_hotuser_replay(
         t.where(F.col("user_id") % 8 == 1).withColumn("user_id", hot)
         for t in _events_raw_day_terciles(spark, sf_dir)
     ]
-    return _drive_stream_to_memory(
-        spark,
-        batches,
-        _EVENTS_REPLAY_SCHEMA,
-        build,
-        "stream_interval_join_hotuser_replay",
-        output_mode="append",
+    start, read = _appended(spark, _click_purchase_join())
+    out = _drive(
+        spark, "stream_interval_join_hotuser_replay", batches,
+        _EVENTS_REPLAY_SCHEMA, start,
+        partitions=_DRIVE_PARTITIONS_JVM,
     )
+    return read(out)
 
 
 @register("stream_sliding_1h30m_replay", SLIDING_1H30_ORACLE)
@@ -1708,13 +1524,13 @@ def stream_sliding_1h30m_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             watermark="30 minutes",
         ).select("window_start", "n_events")
 
-    return _drive_stream_to_memory(
-        spark,
-        _events_raw_day_terciles(spark, sf_dir),
-        _EVENTS_REPLAY_SCHEMA,
-        build,
-        "stream_sliding_1h30m_replay",
+    name = "stream_sliding_1h30m_replay"
+    _drive(
+        spark, name, _events_raw_day_terciles(spark, sf_dir),
+        _EVENTS_REPLAY_SCHEMA, _to_memory(name, build),
+        partitions=_DRIVE_PARTITIONS_JVM,
     )
+    return spark.table(name)
 
 
 _LATE_DROP_REPLAY_ORACLE = """
@@ -1823,14 +1639,13 @@ def stream_late_data_drop_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             watermark="1 hour",
         ).select("window_start", "event_type", "n_events")
 
-    return _drive_stream_to_memory(
-        spark,
-        batches,
-        _EVENTS_REPLAY_SCHEMA,
-        build,
-        "stream_late_data_drop_replay",
-        output_mode="append",
+    start, read = _appended(spark, build)
+    out = _drive(
+        spark, "stream_late_data_drop_replay", batches,
+        _EVENTS_REPLAY_SCHEMA, start,
+        partitions=_DRIVE_PARTITIONS_JVM,
     )
+    return read(out)
 
 
 _DEDUP_REPLAY_ORACLE = """
@@ -1870,14 +1685,12 @@ def stream_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build(df):
         return dedup_within_watermark(df, ["event_id"], "ts", delay="35 days")
 
-    return _drive_stream_to_memory(
-        spark,
-        batches,
-        _EVENTS_REPLAY_SCHEMA,
-        build,
-        "stream_dedup_replay",
-        output_mode="append",
+    start, read = _appended(spark, build)
+    out = _drive(
+        spark, "stream_dedup_replay", batches, _EVENTS_REPLAY_SCHEMA,
+        start, partitions=_DRIVE_PARTITIONS_JVM,
     )
+    return read(out)
 
 
 @register("stream_scd2_bucketed_user_state_replay", _SCD2_REPLAY_ORACLE)
@@ -1899,38 +1712,60 @@ def stream_scd2_bucketed_user_state_replay(
     from label_maker_dask_spark.operators.scd import (
         stream_scd2_to_parquet_bucketed,
     )
-    from label_maker_dask_spark.streaming.bucketed import (
-        read_maintained_table,
-    )
 
-    base = _drive_replay(
-        spark,
-        _events_day_tercile_batches(spark, sf_dir),
-        _SCD2_CHANGE_SCHEMA,
-        lambda s, b, c: stream_scd2_to_parquet_bucketed(
-            s, b, c, keys=["user_id"], ts_col="ts", tie_break="event_id",
+    out = _drive(
+        spark, "stream_scd2_bucketed_user_state_replay",
+        _events_day_tercile_batches(spark, sf_dir), _SCD2_CHANGE_SCHEMA,
+        lambda s, o, c: stream_scd2_to_parquet_bucketed(
+            s, o, c, keys=["user_id"], ts_col="ts", tie_break="event_id",
             n_buckets=8,
         ),
-        "stream_scd2_bucketed_user_state_replay",
     )
-    return read_maintained_table(spark, base).select(
+    return _read_table(spark, out, _SCD2_HISTORY_SCHEMA).select(
         "user_id", "event_id", "state", "valid_from", "valid_to", "is_current"
     )
 
 
-_TRANSITIONS_STATEFUL_REPLAY_ORACLE = """
+def _transitions_oracle(users: str) -> str:
+    """The whole-table lag-window edge count the sliced transitions
+    twins gate against, over the events whose ``user_id`` passes
+    ``users`` (a SQL predicate the cell also applies)."""
+    return f"""
 WITH s AS (
   SELECT event_type AS dst,
          lag(event_type) OVER (PARTITION BY user_id
                                ORDER BY ts, event_id) AS src
-  FROM events WHERE user_id % 4 = 1)
+  FROM events WHERE {users})
 SELECT src, dst, CAST(count(*) AS BIGINT) AS w
 FROM s WHERE src IS NOT NULL GROUP BY src, dst
 """
 
 
+def _weight_totals(spark, name: str, batches, stop_after=None) -> DataFrame:
+    """The transitions twins' drive and read-back: ``batches`` through
+    the ``applyInPandasWithState`` edge builder
+    (``streaming_transition_counts``) to the file sink, whose appended
+    per-batch (src, dst) delta counts are summed per edge.  Full drive
+    parallelism: per-key pandas compute scales with data (see
+    ``_DRIVE_PARTITIONS``)."""
+    from label_maker_dask_spark.streaming.stateful import (
+        streaming_transition_counts,
+    )
+
+    start, read = _appended(spark, streaming_transition_counts)
+    out = _drive(
+        spark, name, batches, _EVENTS_REPLAY_SCHEMA, start, stop_after
+    )
+    return read(out).groupBy("src", "dst").agg(F.sum("w").alias("w"))
+
+
+#: the transitions twins' user slices, applied by each cell and its oracle
+_TRANSITIONS_STATEFUL_USERS = "user_id % 4 = 1"
+
+
 @register(
-    "stream_transitions_stateful_replay", _TRANSITIONS_STATEFUL_REPLAY_ORACLE
+    "stream_transitions_stateful_replay",
+    _transitions_oracle(_TRANSITIONS_STATEFUL_USERS),
 )
 def stream_transitions_stateful_replay(
     spark: SparkSession, sf_dir: str
@@ -1954,45 +1789,19 @@ def stream_transitions_stateful_replay(
     per-KEY invocation overhead — the slice cuts exactly that without
     touching what the gate proves.  The hot-key twin stays UNsliced:
     its >=512-row vectorized-fold path needs the full hot group."""
-    from label_maker_dask_spark.streaming.stateful import (
-        streaming_transition_counts,
-    )
-
     batches = [
-        t.where(F.col("user_id") % 4 == 1)
+        t.where(_TRANSITIONS_STATEFUL_USERS)
         for t in _events_raw_day_terciles(spark, sf_dir)
     ]
-    out = _drive_stream_to_memory(
-        spark,
-        batches,
-        _EVENTS_REPLAY_SCHEMA,
-        streaming_transition_counts,
-        "stream_transitions_stateful_replay",
-        output_mode="append",
-        # applyInPandasWithState: per-key pandas compute scales with
-        # data, so keep full drive parallelism (see _DRIVE_PARTITIONS)
-        partitions=_DRIVE_PARTITIONS,
-    )
-    return out.groupBy("src", "dst").agg(F.sum("w").alias("w"))
+    return _weight_totals(spark, "stream_transitions_stateful_replay", batches)
 
 
-_TRANSITIONS_RESTART_REPLAY_ORACLE = (
-    _TRANSITIONS_STATEFUL_REPLAY_ORACLE.replace(
-        "user_id % 4 = 1", "user_id % 4 = 2"
-    )
-)
-# drift guard, same rationale as _SESSION_RESTART_REPLAY_ORACLE: a
-# silent no-op replace would gate the wrong slice far from the cause
-assert (
-    _TRANSITIONS_RESTART_REPLAY_ORACLE != _TRANSITIONS_STATEFUL_REPLAY_ORACLE
-), (
-    "transitions-restart oracle slice did not apply: the parent oracle "
-    "no longer contains the exact text 'user_id % 4 = 1'"
-)
+_TRANSITIONS_RESTART_USERS = "user_id % 4 = 2"
 
 
 @register(
-    "stream_transitions_restart_replay", _TRANSITIONS_RESTART_REPLAY_ORACLE
+    "stream_transitions_restart_replay",
+    _transitions_oracle(_TRANSITIONS_RESTART_USERS),
 )
 def stream_transitions_restart_replay(
     spark: SparkSession, sf_dir: str
@@ -2012,27 +1821,36 @@ def stream_transitions_restart_replay(
     them, and both hash-mismatch against the whole-table lag oracle.
     Disjoint 1-in-4 user slice (``user_id % 4 == 2``) from the
     non-restart twin's, mirrored in the oracle."""
-    from label_maker_dask_spark.streaming.stateful import (
-        streaming_transition_counts,
-    )
-
     batches = [
-        t.where(F.col("user_id") % 4 == 2)
+        t.where(_TRANSITIONS_RESTART_USERS)
         for t in _events_raw_day_terciles(spark, sf_dir)
     ]
-    out = _drive_stream_to_memory_with_restart(
-        spark,
-        batches,
-        _EVENTS_REPLAY_SCHEMA,
-        streaming_transition_counts,
-        "stream_transitions_restart_replay",
-        stop_after=2,
-        output_mode="append",
-        # applyInPandasWithState: per-key pandas compute scales with
-        # data, so keep full drive parallelism (see _DRIVE_PARTITIONS)
-        partitions=_DRIVE_PARTITIONS,
+    return _weight_totals(
+        spark, "stream_transitions_restart_replay", batches, stop_after=2
     )
-    return out.groupBy("src", "dst").agg(F.sum("w").alias("w"))
+
+
+def _events_cents(spark, sf_dir: str, users) -> DataFrame:
+    """The events of the ``users`` slice with ``value`` quantized to
+    integer cents BEFORE the stream (exact decimal round, mirrored in
+    the oracles), so a pandas-side float64 running sum adds
+    exactly-representable integers — order-free and engine-independent,
+    the module's integer-summation rule applied to the arbitrary-state
+    path."""
+    return (
+        _t(spark, sf_dir, "events")
+        .where(users)
+        .select(
+            "event_id",
+            "user_id",
+            "event_type",
+            "ts",
+            F.round(F.col("value").cast("decimal(28,8)") * 100, 0)
+            .cast("long")
+            .cast("double")
+            .alias("value"),
+        )
+    )
 
 
 _RUNNING_STATS_REPLAY_ORACLE = """
@@ -2075,34 +1893,16 @@ def stream_running_stats_replay(
 
     from label_maker_dask_spark.streaming.stateful import running_user_stats
 
-    ev = (
-        _t(spark, sf_dir, "events")
-        .where(F.col("user_id") % 4 == 2)
-        .select(
-            "event_id",
-            "user_id",
-            "event_type",
-            "ts",
-            F.round(F.col("value").cast("decimal(28,8)") * 100, 0)
-            .cast("long")
-            .cast("double")
-            .alias("value"),
-        )
-    )
-    out = _drive_stream_to_memory(
-        spark,
-        _day_terciles(ev),
-        _EVENTS_REPLAY_SCHEMA,
-        running_user_stats,
-        "stream_running_stats_replay",
-        output_mode="update",
-        # applyInPandasWithState: per-key pandas compute scales with
-        # data, so keep full drive parallelism (see _DRIVE_PARTITIONS)
-        partitions=_DRIVE_PARTITIONS,
+    name = "stream_running_stats_replay"
+    ev = _events_cents(spark, sf_dir, F.col("user_id") % 4 == 2)
+    # applyInPandasWithState: full drive parallelism (_DRIVE_PARTITIONS)
+    _drive(
+        spark, name, _day_terciles(ev), _EVENTS_REPLAY_SCHEMA,
+        _to_memory(name, running_user_stats, "update"),
     )
     w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
     return (
-        out.withColumn("rn", F.row_number().over(w))
+        spark.table(name).withColumn("rn", F.row_number().over(w))
         .where(F.col("rn") == 1)
         .select(
             "user_id",
@@ -2177,22 +1977,16 @@ def stream_session_timeout_replay(
         streaming_session_stats,
     )
 
-    ev = (
-        _t(spark, sf_dir, "events")
-        .where(F.col("user_id") % 8 == 2)
-        .select(
-            "event_id",
-            "user_id",
-            "event_type",
-            "ts",
-            F.round(F.col("value").cast("decimal(28,8)") * 100, 0)
-            .cast("long")
-            .cast("double")
-            .alias("value"),
-        )
-    )
+    name = "stream_session_timeout_replay"
+    ev = _events_cents(spark, sf_dir, F.col("user_id") % 8 == 2)
     t1, t2, t3 = _day_terciles(ev)
     mx = ev.agg(F.max("ts")).first()[0]
+    if mx is None:
+        # no event to place the sentinel after, and so no timeout to fire
+        raise ValueError(
+            f"{name} needs >=1 event in its user slice (user_id % 8 == 2); "
+            "the source events table is too small"
+        )
     # JVM-side single-row construction: createDataFrame of one local row
     # parallelizes to defaultParallelism PYTHON partitions (32 python
     # worker round-trips ≈ 4 s of the entry's 8.7 s at sf0.1 — profiled
@@ -2211,18 +2005,10 @@ def stream_session_timeout_replay(
             df.withWatermark("ts", "1 hour"), gap_minutes=30
         )
 
-    out = _drive_stream_to_memory(
-        spark,
-        batches,
-        _EVENTS_REPLAY_SCHEMA,
-        build,
-        "stream_session_timeout_replay",
-        output_mode="append",
-        # applyInPandasWithState: per-key pandas compute scales with
-        # data, so keep full drive parallelism (see _DRIVE_PARTITIONS)
-        partitions=_DRIVE_PARTITIONS,
-    )
-    return out.where(F.col("user_id") != -99)
+    # applyInPandasWithState: full drive parallelism (_DRIVE_PARTITIONS)
+    start, read = _appended(spark, build)
+    out = _drive(spark, name, batches, _EVENTS_REPLAY_SCHEMA, start)
+    return read(out).where(F.col("user_id") != -99)
 
 
 _TRANSITIONS_HOTKEY_REPLAY_ORACLE = """
@@ -2263,10 +2049,6 @@ def stream_transitions_hotkey_replay(
     count.  Scale shape: state stays one row per user; the hot group's
     per-batch work is a vectorized pandas fold over its Arrow batch —
     the regime a bot-heavy 100 TB event log produces."""
-    from label_maker_dask_spark.streaming.stateful import (
-        streaming_transition_counts,
-    )
-
     ev = _t(spark, sf_dir, "events").select(
         "event_id",
         F.when(F.col("event_id") % 10 < 3, F.lit(-1))
@@ -2277,18 +2059,9 @@ def stream_transitions_hotkey_replay(
         "ts",
         "value",
     )
-    out = _drive_stream_to_memory(
-        spark,
-        _day_terciles(ev),
-        _EVENTS_REPLAY_SCHEMA,
-        streaming_transition_counts,
-        "stream_transitions_hotkey_replay",
-        output_mode="append",
-        # applyInPandasWithState: per-key pandas compute scales with
-        # data, so keep full drive parallelism (see _DRIVE_PARTITIONS)
-        partitions=_DRIVE_PARTITIONS,
+    return _weight_totals(
+        spark, "stream_transitions_hotkey_replay", _day_terciles(ev)
     )
-    return out.groupBy("src", "dst").agg(F.sum("w").alias("w"))
 
 
 
@@ -2330,12 +2103,9 @@ def stream_pq_index_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_pq_index(boot, base)
         return stream_embeddings_to_pq_index(stream, base, ckpt)
 
-    base = _drive_replay(
-        spark,
-        batches,
-        "vec_id long, embedding array<float>",
-        sink,
-        "stream_pq_index_replay",
+    base = _drive(
+        spark, "stream_pq_index_replay", batches,
+        "vec_id long, embedding array<float>", sink,
     )
     return pq_adc_topk_stored(
         spark, base, emb.where(F.col("vec_id") % 50 == 0), k=5
@@ -2416,17 +2186,19 @@ def stream_upsert_schema_evolution_replay(
         "o_orderstatus string, seq long"
     )
 
-    base = _drive_replay_with_restart(
-        spark,
-        [b0, b1, b2],
+    out = _drive(
+        spark, "stream_upsert_schema_evolution_replay", [b0, b1, b2],
         (schema_a, schema_b),
-        lambda s, b, c: stream_upsert_to_parquet(
-            s, b, c, keys=["o_orderkey"], seq_col="seq", evolve_schema=True
+        lambda s, o, c: stream_upsert_to_parquet(
+            s, o, c, keys=["o_orderkey"], seq_col="seq", evolve_schema=True
         ),
-        "stream_upsert_schema_evolution_replay",
         stop_after=2,
     )
-    return spark.read.parquet(base)
+    return _read_table(
+        spark, out,
+        "o_orderkey long, o_custkey long, totalprice_cents long, "
+        "o_orderstatus string",
+    )
 
 
 _TYPE_WIDENING_ORACLE = """
@@ -2495,17 +2267,17 @@ def stream_upsert_type_widening_replay(
         "o_orderkey long, o_custkey long, totalprice_cents long, seq long"
     )
 
-    base = _drive_replay_with_restart(
-        spark,
-        [b0, b1, b2],
+    out = _drive(
+        spark, "stream_upsert_type_widening_replay", [b0, b1, b2],
         (schema_narrow, schema_wide),
-        lambda s, b, c: stream_upsert_to_parquet(
-            s, b, c, keys=["o_orderkey"], seq_col="seq", evolve_schema=True
+        lambda s, o, c: stream_upsert_to_parquet(
+            s, o, c, keys=["o_orderkey"], seq_col="seq", evolve_schema=True
         ),
-        "stream_upsert_type_widening_replay",
         stop_after=2,
     )
-    return spark.read.parquet(base)
+    return _read_table(
+        spark, out, "o_orderkey long, o_custkey long, totalprice_cents long"
+    )
 
 
 from label_maker_dask_spark.queries import (  # noqa: E402
@@ -2552,14 +2324,12 @@ def stream_bpe_word_freq_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum("freq").alias("freq"))
         for i in range(3)
     ]
-    base = _drive_replay(
-        spark,
-        batches,
-        "word string, freq long",
-        lambda s, b, c: stream_accumulate_to_parquet(
-            s, b, c, keys=["word"], sum_cols=["freq"]
+    schema = "word string, freq long"
+    out = _drive(
+        spark, "stream_bpe_word_freq_replay", batches, schema,
+        lambda s, o, c: stream_accumulate_to_parquet(
+            s, o, c, keys=["word"], sum_cols=["freq"]
         ),
-        "stream_bpe_word_freq_replay",
     )
-    maintained = spark.read.parquet(base).select("word", "freq")
+    maintained = _read_table(spark, out, schema).select("word", "freq")
     return bpe_train_merges_from_frequencies(maintained, rounds=12)

@@ -74,13 +74,17 @@ def _embeddings(rows):
 def test_phash_of_null_pixel_array_is_zero(spark, tmp_path):
     """A NULL embedding renders to a NULL pixel array; the SQL twin's
     NULL arithmetic signs every coefficient false, so its pHash is 0,
-    and the Arrow pass must give the same instead of failing the task."""
-    rows = [(1, [((i * 7) % 11) / 5.5 - 1.0 for i in range(64)]), (2, None)]
+    and the Arrow pass must give the same instead of failing the task.
+    So does a 10-float embedding, whose pixels past the 10th read as
+    NULL in SQL; a 66-float one hashes as its first 64 floats."""
+    v = [((i * 7) % 11) / 5.5 - 1.0 for i in range(64)]
+    rows = [(1, v), (2, None), (3, v[:10]), (4, v + [0.5, -0.5])]
     tables = _embeddings(rows)
     sf_dir = str(tmp_path)
     _write_tables(sf_dir, tables)
     got, want = _both(spark, sf_dir, "multimodal_phash_signatures", tables)
-    assert want[1] == (2, 0) and want[0][1] != 0
+    h = want[0][1]
+    assert h != 0 and want == [(1, h), (2, 0), (3, 0), (4, h)]
     assert got == want
 
 
@@ -114,3 +118,57 @@ def test_kmeans_cells_on_empty_or_null_embeddings(spark, tmp_path, name, rows):
         assert want == []
     elif name != "curation_semdedup_cluster_profiles":
         assert (99, 0, None) in want and len(want) == 13
+
+
+#: zero-row source tables with the testdata's column types
+_EMPTY_SOURCES = {
+    "orders": {
+        "o_orderkey": pa.array([], pa.int64()),
+        "o_custkey": pa.array([], pa.int64()),
+        "o_orderstatus": pa.array([], pa.string()),
+        "o_totalprice": pa.array([], pa.float64()),
+        "o_orderdate": pa.array([], pa.timestamp("us")),
+        "o_orderpriority": pa.array([], pa.string()),
+    },
+    "events": {
+        "event_id": pa.array([], pa.int64()),
+        "ts": pa.array([], pa.timestamp("us")),
+        "user_id": pa.array([], pa.int64()),
+        "event_type": pa.array([], pa.string()),
+        "value": pa.array([], pa.float64()),
+        "props": pa.array([], pa.string()),
+    },
+    "lineitem": {
+        "l_orderkey": pa.array([], pa.int64()),
+        "l_suppkey": pa.array([], pa.int64()),
+        "l_linenumber": pa.array([], pa.int32()),
+        "l_quantity": pa.array([], pa.float64()),
+        "l_extendedprice": pa.array([], pa.float64()),
+    },
+}
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "stream_upsert_orders_replay",
+        "stream_accumulate_supplier_replay",
+        "stream_scd2_user_state_replay",
+        "stream_ohlc_hourly_replay",
+        "stream_session_timeout_replay",
+    ],
+)
+def test_stream_replay_cells_on_empty_sources(spark, tmp_path, name):
+    """Empty sources give the oracle's zero rows: the day terciles of no
+    events are three empty batches, and a sink whose drain committed
+    nothing reads as an empty table.  The session-timeout cell has no
+    event to place its sentinel after, so it raises a ValueError that
+    names it."""
+    sf_dir = str(tmp_path)
+    _write_tables(sf_dir, _EMPTY_SOURCES)
+    if name == "stream_session_timeout_replay":
+        with pytest.raises(ValueError, match=name):
+            QUERIES[name](spark, sf_dir)
+        return
+    got, want = _both(spark, sf_dir, name, _EMPTY_SOURCES)
+    assert want == [] and got == want

@@ -12,6 +12,10 @@ streaming source depends on must survive that change:
 - pre-existing files (the restart harness's earlier leg) are untouched,
 - mixed-schema sequences (the schema-evolution legs) and empty batches
   fall back to the per-batch write without breaking ordering.
+
+The last test drives the one replay driver (``_drive``) itself: a
+restart delivers each batch exactly once, and the shuffle-partition
+conf is restored even when ``start`` raises.
 """
 
 import os
@@ -20,6 +24,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from label_maker_dask_spark.queries_streaming_replay_ext import (
+    _drive,
     _write_ordered_batches,
 )
 
@@ -129,3 +134,39 @@ def test_existing_files_untouched(spark, changes_dir):
     # the leg-2 files are mutually mtime-ordered and distinct
     leg2 = [t for t, f in files if f != first[0][1]]
     assert leg2 == sorted(leg2) and len(set(leg2)) == 2
+
+
+def test_drive_restart_delivers_each_batch_once_and_restores_conf(spark):
+    base = spark.range(9).select(F.col("id").alias("k"))
+    batches = [base.where(F.col("k") % 3 == i) for i in range(3)]
+    conf = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(conf)
+    delivered, during = [], []
+
+    def start(stream, out, ckpt):
+        during.append(spark.conf.get(conf))
+        return (
+            stream.writeStream.foreachBatch(
+                lambda b, _i: delivered.append(
+                    sorted(r.k for r in b.collect())
+                )
+            )
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+
+    # two legs on one checkpoint: batch 0, then batches 1 and 2
+    _drive(spark, "drive_restart", batches, "k long", start, stop_after=1,
+           partitions="7")
+    assert [b for b in delivered if b] == [[0, 3, 6], [1, 4, 7], [2, 5, 8]]
+    assert during == ["7", "7"]
+    assert spark.conf.get(conf) == before
+
+    def failing_start(stream, out, ckpt):
+        raise RuntimeError("start failed")
+
+    with pytest.raises(RuntimeError, match="start failed"):
+        _drive(spark, "drive_raise", batches, "k long", failing_start,
+               partitions="7")
+    assert spark.conf.get(conf) == before
