@@ -225,13 +225,14 @@ def main() -> None:
 
     # ---- Part 8 (round 13): quantized ANN index lifecycle ----------------
     # Build a product-quantization index (16x-compressed codes at rest),
-    # append new vectors under the FROZEN codebooks (LSM delta zone),
-    # compact the deltas back into bucket partitions, and query by
-    # asymmetric distance — the FAISS-style triad's PQ member, next to
-    # the IVF and SQ8 paths.
+    # append new vectors under the FROZEN codebooks (they land in the
+    # index's delta zone), compact the deltas back into bucket partitions,
+    # and query by asymmetric distance — the FAISS-style triad's PQ
+    # member, next to the IVF and SQ8 paths.  Every stored index (IVF,
+    # PQ, SRP) keeps this one layout: operators/index_layout.py.
+    from label_maker_dask_spark.operators.index_layout import compact_index
     from label_maker_dask_spark.operators.similarity import (
         append_pq_index,
-        compact_pq_index,
         pq_adc_topk_stored,
         write_pq_index,
     )
@@ -240,7 +241,7 @@ def main() -> None:
     pq = tempfile.mkdtemp() + "/pq"
     write_pq_index(emb.where("vec_id % 2 = 0"), pq)
     append_pq_index(emb.where("vec_id % 2 = 1"), pq)
-    folded = compact_pq_index(spark, pq)
+    folded = compact_index(spark, pq)
     ann = pq_adc_topk_stored(spark, pq, emb.where("vec_id % 25 = 0"), k=3)
     print(
         f"PQ index: built on half the corpus, appended the rest "

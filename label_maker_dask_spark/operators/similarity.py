@@ -21,13 +21,14 @@ from pyspark.sql import functions as F
 
 from label_maker_dask_spark.functions.vectors import dot, dot_fixed, norm
 from label_maker_dask_spark.operators.guards import parallelism_floor
-from label_maker_dask_spark.streaming.commit import (
-    append_exactly_once,
-    read_state,
-    rollback_inventory,
-    start_sink,
-    write_state,
+from label_maker_dask_spark.operators.index_layout import (
+    append_delta,
+    append_delta_exactly_once,
+    compact_index,
+    read_index,
+    write_base,
 )
+from label_maker_dask_spark.streaming.commit import start_sink
 
 #: Brute-force / IVF operators ship the query set with the task closure, so
 #: it must stay driver- and executor-memory small.  At 64-dim float64 the
@@ -55,6 +56,64 @@ def _collect_queries(queries: DataFrame, id_col: str, vec_col: str, max_queries:
             "the driver can hold the set."
         )
     return qpd
+
+
+def _top_k(
+    scored: DataFrame, k: int, score: str = "cosine_sim", asc: bool = False
+) -> DataFrame:
+    """(query_id, rank, neighbor_id, ``score``): per query, the k rows
+    best by ``score`` (highest first, lowest with ``asc``), ties to the
+    lower neighbor id — the one total order every top-k here ranks by,
+    so stored, on-the-fly and SQL forms agree row for row."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col(score).asc() if asc else F.col(score).desc(),
+        F.col("neighbor_id").asc(),
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select("query_id", "rank", "neighbor_id", score)
+    )
+
+
+def _scored_top_k(rows: DataFrame, score, id_col: str, k: int) -> DataFrame:
+    """:func:`_top_k` of an Arrow scorer: ``score`` maps ``rows``'
+    batches to (query_id, neighbor_id, raw_sim) candidate rows;
+    self-matches are dropped and the similarity is rounded to 6 places.
+
+    No parallelism floor: per-row work is bounded by the collected query
+    set (<= max_queries dots), so a small single-partition input is fast
+    serially, and a large input scans with parallelism anyway — the
+    floor's exchange + per-task Python worker fan-out measured as a net
+    LOSS on every bounded-query scorer (round-17 interleaved A/B; the
+    floor stays ONLY where per-row work is corpus-sized:
+    neardup_exact_pairs)."""
+    id_type = rows.schema[id_col].dataType.simpleString()
+    scored = rows.mapInPandas(
+        score, f"query_id {id_type}, neighbor_id {id_type}, raw_sim double"
+    )
+    return _top_k(
+        scored.where(F.col("query_id") != F.col("neighbor_id")).withColumn(
+            "cosine_sim", F.round(F.col("raw_sim"), 6)
+        ),
+        k,
+    )
+
+
+def _cosine_top_k(pairs: DataFrame, k: int, dim: int) -> DataFrame:
+    """:func:`_top_k` of candidate (query_id, neighbor_id, qv, cv) pairs
+    of unit vectors, scored by the fixed-``dim`` fold dot rounded to 6
+    places."""
+    return _top_k(
+        pairs.select(
+            "query_id",
+            "neighbor_id",
+            F.round(
+                dot_fixed(F.col("qv"), F.col("cv"), dim), 6
+            ).alias("cosine_sim"),
+        ),
+        k,
+    )
 
 
 def normalized(df: DataFrame, id_col: str, vec_col: str, id_alias: str, vec_alias: str) -> DataFrame:
@@ -143,27 +202,7 @@ def cosine_topk(
                 }
             )
 
-    id_type = embeddings.schema[id_col].dataType.simpleString()
-    # no parallelism floor here: per-row work is bounded by the collected
-    # query set (<= max_queries dots), so a small single-partition input
-    # is fast serially, and a large input scans with parallelism anyway —
-    # the floor's exchange + per-task Python worker fan-out measured as a
-    # net LOSS on every bounded-query scorer (round-17 interleaved A/B;
-    # the floor stays ONLY where per-row work is corpus-sized:
-    # neardup_exact_pairs)
-    scored = embeddings.select(id_col, vec_col).mapInPandas(
-        score, f"query_id {id_type}, neighbor_id {id_type}, raw_sim double"
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.where(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cosine_sim", F.round(F.col("raw_sim"), 6))
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cosine_sim")
-    )
+    return _scored_top_k(embeddings.select(id_col, vec_col), score, id_col, k)
 
 
 def _unit_exact(mat):
@@ -378,24 +417,12 @@ def lsh_topk(
             ],
         )
         q = q.withColumn("bucket", F.explode(probes))
-    scored = (
-        c.join(F.broadcast(q), "bucket")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                dot_fixed(F.col("qv"), F.col("cv"), dim), 6
-            ).alias("cosine_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cosine_sim")
+    return _cosine_top_k(
+        c.join(F.broadcast(q), "bucket").where(
+            F.col("query_id") != F.col("neighbor_id")
+        ),
+        k,
+        dim,
     )
 
 
@@ -529,21 +556,7 @@ def lsh_multitable_topk(
         .where(F.col("query_id") != F.col("neighbor_id"))
         .dropDuplicates(["query_id", "neighbor_id"])
     )
-    scored = cand.select(
-        "query_id",
-        "neighbor_id",
-        F.round(
-            dot_fixed(F.col("qv"), F.col("cv"), dim), 6
-        ).alias("cosine_sim"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cosine_sim")
-    )
+    return _cosine_top_k(cand, k, dim)
 
 
 def embedding_neardup_pairs(
@@ -743,27 +756,7 @@ def ivf_topk(
             if out is not None:
                 yield out
 
-    id_type = embeddings.schema[id_col].dataType.simpleString()
-    # no parallelism floor here: per-row work is bounded by the collected
-    # query set (<= max_queries dots), so a small single-partition input
-    # is fast serially, and a large input scans with parallelism anyway —
-    # the floor's exchange + per-task Python worker fan-out measured as a
-    # net LOSS on every bounded-query scorer (round-17 interleaved A/B;
-    # the floor stays ONLY where per-row work is corpus-sized:
-    # neardup_exact_pairs)
-    scored = embeddings.select(id_col, vec_col).mapInPandas(
-        score, f"query_id {id_type}, neighbor_id {id_type}, raw_sim double"
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.where(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cosine_sim", F.round(F.col("raw_sim"), 6))
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cosine_sim")
-    )
+    return _scored_top_k(embeddings.select(id_col, vec_col), score, id_col, k)
 
 
 def write_ivf_index(
@@ -796,10 +789,7 @@ def write_ivf_index(
         ),
         "cell int, cv array<double>",
     ).coalesce(1).write.mode("overwrite").parquet(path + "/centroids")
-
-    _assigned_cells(embeddings, cm, id_col, vec_col).write.partitionBy(
-        "cell"
-    ).mode("overwrite").parquet(path + "/data")
+    write_base(_assigned_cells(embeddings, cm, id_col, vec_col), path, "cell")
 
 
 def _assigned_cells(embeddings: DataFrame, cm, id_col: str, vec_col: str) -> DataFrame:
@@ -837,7 +827,8 @@ def append_ivf_index(
     """Incrementally add vectors to a stored IVF index WITHOUT a rebuild:
     new rows are assigned to cells under the index's *existing* coarse
     quantizer (stored centroids are read, never recomputed — standard IVF
-    maintenance) and appended as new files inside their cell partitions.
+    maintenance) and land in the index's delta zone
+    (:func:`index_layout.append_delta`, sorted by cell).
 
     Queries against the appended index are identical to queries against
     an index rebuilt over the union with the same centroids, because cell
@@ -848,20 +839,20 @@ def append_ivf_index(
 
     100 TB posture: this is how an embedding index tracks a growing
     corpus — per batch, one narrow Arrow pass over only the NEW vectors
-    plus a partitioned append; the existing data files are untouched, so
-    maintenance cost is proportional to the increment, not the index.
-    Over many appends, cell partitions accumulate small files — run
-    ``sources.layout.compact_small_files`` per cell directory as the
-    bin-packing maintenance job.
+    plus one delta-zone append; the existing data files are untouched,
+    so maintenance cost is proportional to the increment, not the index.
+    Stored reads union the delta zone under the same cell predicate;
+    :func:`index_layout.compact_index` folds it into the cell
+    partitions (and :func:`rebalance_ivf_index` compacts first).
     """
     import numpy as np
 
     spark = new_embeddings.sparkSession
     cent = spark.read.parquet(path + "/centroids").orderBy("cell").toPandas()
     cm = np.stack(cent["cv"].to_numpy()).astype(np.float64)
-    _assigned_cells(new_embeddings, cm, id_col, vec_col).write.partitionBy(
-        "cell"
-    ).mode("append").parquet(path + "/data")
+    append_delta(
+        _assigned_cells(new_embeddings, cm, id_col, vec_col), path, "cell"
+    )
 
 
 def ivf_topk_join(
@@ -959,14 +950,7 @@ def ivf_topk_join(
             F.round(dot(F.col("qv"), F.col("cv")), 6).alias("cosine_sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cosine_sim")
-    )
+    return _top_k(scored, k)
 
 
 def ivf_cell_stats(spark, path: str) -> dict:
@@ -979,10 +963,10 @@ def ivf_cell_stats(spark, path: str) -> dict:
     "oversized"}`` where ``imbalance`` = max/mean occupancy and
     ``oversized`` lists cells above 2x mean — the signal to run
     :func:`rebalance_ivf_index`.  Cost: one partition-column aggregate
-    (a metadata-cheap scan of cell ids only)."""
+    (a metadata-cheap scan of cell ids only, plus the delta zone's)."""
     counts = {
         r["cell"]: r["n"]
-        for r in spark.read.parquet(path + "/data")
+        for r in read_index(spark, path)
         .groupBy("cell")
         .agg(F.count(F.lit(1)).alias("n"))
         .collect()
@@ -1088,8 +1072,11 @@ def rebalance_ivf_index(
     The quantizer changes (that is the point), so post-rebalance queries
     may return different — equally valid — ANN results; recall against
     brute force is re-tested after skewed appends in
-    tests/test_similarity.py.  Crash safety: all replacement data is
-    staged under ``data._rebal`` with a manifest before any rename;
+    tests/test_similarity.py.  Each round first compacts the delta zone
+    (:func:`index_layout.compact_index`, which refuses while an append
+    intent is pending), so the split reads and rewrites only cell
+    partitions.  Crash safety: all replacement data is staged under
+    ``data._rebal`` with a manifest before any rename;
     :func:`recover_ivf_rebalance` rolls a torn swap back to the
     pre-rebalance index.  Run single-writer, like every maintenance op
     here."""
@@ -1115,21 +1102,8 @@ def _rebalance_ivf_round(
     import pandas as pd
 
     recover_ivf_rebalance(path)
-    # Same hazard as compact_pq_index: a pending APPEND intent means a
-    # crashed streaming append may have left partial files in the cell
-    # partitions.  Splitting/rewriting those cells would carry the torn
-    # rows into new files the replay bracket's inventory rollback can't
-    # identify, so the replayed re-append would duplicate them.  Refuse
-    # and let the stream replay/recover first.
-    if read_state(path, "_lmds_appending") is not None:
-        raise RuntimeError(
-            f"rebalance_ivf_index: index {path!r} has a pending append "
-            "intent (_lmds_appending) — a crashed streaming append may "
-            "have left partial cell files.  Let the stream replay "
-            "(append_ivf_index_exactly_once recovers the torn batch) "
-            "before rebalancing."
-        )
-    data = spark.read.parquet(path + "/data")
+    compact_index(spark, path)
+    data = read_index(spark, path)
     counts = {
         r["cell"]: r["n"]
         for r in data.groupBy("cell").agg(F.count(F.lit(1)).alias("n")).collect()
@@ -1209,22 +1183,6 @@ def _rebalance_ivf_round(
     return oversized
 
 
-def _partition_inventory(path: str, prefix: str) -> dict:
-    import os
-
-    data = os.path.join(path, "data")
-    inv = {}
-    if os.path.isdir(data):
-        for name in os.listdir(data):
-            if name.startswith(prefix):
-                inv[name] = sorted(os.listdir(os.path.join(data, name)))
-    return inv
-
-
-def _ivf_cell_inventory(path: str) -> dict:
-    return _partition_inventory(path, "cell=")
-
-
 def append_ivf_index_exactly_once(
     new_embeddings: DataFrame,
     path: str,
@@ -1234,13 +1192,12 @@ def append_ivf_index_exactly_once(
     vec_col: str = "embedding",
 ) -> bool:
     """:func:`append_ivf_index` under the shared replay-safety bracket
-    (:func:`streaming.commit.append_exactly_once`) — the building block
-    of the streaming index sink."""
-    return append_exactly_once(
+    (:func:`index_layout.append_delta_exactly_once`) — the building
+    block of the streaming index sink."""
+    return append_delta_exactly_once(
         path,
         batch_id,
         run_id,
-        lambda: _ivf_cell_inventory(path),
         lambda: append_ivf_index(new_embeddings, path, id_col, vec_col),
         "ivf",
     )
@@ -1291,9 +1248,10 @@ def ivf_topk_stored(
 ) -> DataFrame:
     """ANN top-k against a stored IVF index: per-query probe cells are
     computed driver-side from the stored centroids, and the corpus scan is
-    filtered with ``cell IN (probed)`` — a PARTITION filter, so non-probed
-    cells never leave storage (the pruning `ivf_topk`'s docstring
-    promises; asserted in tests/test_plans.py).  Results are identical to
+    filtered with ``cell IN (probed)`` — a PARTITION filter on the base,
+    so non-probed cells never leave storage (the pruning `ivf_topk`'s
+    docstring promises; asserted in tests/test_plans.py), and a
+    row-group-stats filter on the delta zone.  Results are identical to
     the on-the-fly ``ivf_topk`` under the same centroids."""
     import numpy as np
     import pandas as pd
@@ -1308,9 +1266,7 @@ def ivf_topk_stored(
     probed_cells = sorted({int(c) for row in probe for c in row})
     take = k + 1
 
-    corpus = spark.read.parquet(path + "/data").where(
-        F.col("cell").isin(probed_cells)
-    )
+    corpus = read_index(spark, path, F.col("cell").isin(probed_cells))
 
     def score(batches):
         for pdf in batches:
@@ -1325,20 +1281,8 @@ def ivf_topk_stored(
             if out is not None:
                 yield out
 
-    id_type = corpus.schema[id_col].dataType.simpleString()
-    # no floor: bounded-query scorer (see the ivf_topk rationale)
-    scored = corpus.select(id_col, vec_col, "cell").mapInPandas(
-        score, f"query_id {id_type}, neighbor_id {id_type}, raw_sim double"
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.where(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cosine_sim", F.round(F.col("raw_sim"), 6))
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cosine_sim")
+    return _scored_top_k(
+        corpus.select(id_col, vec_col, "cell"), score, id_col, k
     )
 
 
@@ -1354,11 +1298,10 @@ def write_srp_index(
     partitioned by bucket (``<path>/data``).  No centroid sidecar is
     needed — the hyperplanes are index-derived arithmetic
     (:func:`projection_coeff`), so any reader recomputes them."""
-    (
-        srp_units(embeddings, id_col, "v", n_planes, dim, id_col, vec_col)
-        .write.partitionBy("bucket")
-        .mode("overwrite")
-        .parquet(path + "/data")
+    write_base(
+        srp_units(embeddings, id_col, "v", n_planes, dim, id_col, vec_col),
+        path,
+        "bucket",
     )
 
 
@@ -1381,29 +1324,15 @@ def lsh_topk_stored(
     q_buckets = sorted(
         r["bucket"] for r in q.select("bucket").distinct().collect()
     )
-    c = spark.read.parquet(path + "/data").where(
-        F.col("bucket").isin(q_buckets)
+    c = read_index(spark, path, F.col("bucket").isin(q_buckets)).select(
+        F.col(id_col).alias("neighbor_id"), F.col("v").alias("cv"), "bucket"
     )
-    c = c.select(F.col(id_col).alias("neighbor_id"), F.col("v").alias("cv"),
-                 "bucket")
-    scored = (
-        c.join(F.broadcast(q), "bucket")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                dot_fixed(F.col("qv"), F.col("cv"), dim), 6
-            ).alias("cosine_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cosine_sim")
+    return _cosine_top_k(
+        c.join(F.broadcast(q), "bucket").where(
+            F.col("query_id") != F.col("neighbor_id")
+        ),
+        k,
+        dim,
     )
 
 
@@ -1422,14 +1351,14 @@ def write_srp_multitable_index(
     touches only its probed partitions.  Like the single-table index,
     no sidecar: hyperplanes are index-derived arithmetic any reader
     recomputes."""
-    (
+    write_base(
         srp_units_tables(
             embeddings, id_col, "v", n_planes, n_tables, dim,
             id_col, vec_col,
-        )
-        .write.partitionBy("tbl", "bucket")
-        .mode("overwrite")
-        .parquet(path + "/data")
+        ),
+        path,
+        "tbl",
+        "bucket",
     )
 
 
@@ -1468,36 +1397,18 @@ def lsh_multitable_topk_stored(
     for t, buckets in sorted(probed.items()):
         c_t = (F.col("tbl") == t) & F.col("bucket").isin(sorted(buckets))
         cond = c_t if cond is None else (cond | c_t)
-    c = (
-        spark.read.parquet(path + "/data")
-        .where(cond)
-        .select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col("v").alias("cv"),
-            "tbl",
-            "bucket",
-        )
+    c = read_index(spark, path, cond).select(
+        F.col(id_col).alias("neighbor_id"),
+        F.col("v").alias("cv"),
+        "tbl",
+        "bucket",
     )
     cand = (
         c.join(F.broadcast(q), ["tbl", "bucket"])
         .where(F.col("query_id") != F.col("neighbor_id"))
         .dropDuplicates(["query_id", "neighbor_id"])
     )
-    scored = cand.select(
-        "query_id",
-        "neighbor_id",
-        F.round(
-            dot_fixed(F.col("qv"), F.col("cv"), dim), 6
-        ).alias("cosine_sim"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cosine_sim")
-    )
+    return _cosine_top_k(cand, k, dim)
 
 
 # ---------------------------------------------------------------------------
@@ -1605,14 +1516,7 @@ def sq8_rescore_topk(
             sq8_dot(F.col("qcode"), F.col("code")).alias("q8_score"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("q8_score").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "q8_score")
-    )
+    return _top_k(scored, k, "q8_score")
 
 
 def sq8_rescore_exact_topk(
@@ -1670,28 +1574,16 @@ def exact_rescore_topk(
     corpus scan for the neighbor vectors (the corpus never shuffles),
     then the query vectors — a query-subset-sized frame — broadcast in
     turn."""
-    cv = normalized(embeddings, id_col, vec_col, "neighbor_id", "cnv")
+    cv = normalized(embeddings, id_col, vec_col, "neighbor_id", "cv")
     qv = normalized(
-        embeddings.where(query_pred), id_col, vec_col, "query_id", "qnv"
+        embeddings.where(query_pred), id_col, vec_col, "query_id", "qv"
     )
-    rescored = (
-        cv.join(F.broadcast(candidates), "neighbor_id")
-        .join(F.broadcast(qv), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                dot_fixed(F.col("qnv"), F.col("cnv"), dim), 6
-            ).alias("cosine_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        rescored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cosine_sim")
+    return _cosine_top_k(
+        cv.join(F.broadcast(candidates), "neighbor_id").join(
+            F.broadcast(qv), "query_id"
+        ),
+        k,
+        dim,
     )
 
 
@@ -1896,11 +1788,12 @@ def pq_encode(subv: DataFrame, codebooks: DataFrame) -> DataFrame:
 def _pq_geometry(codebooks: DataFrame) -> tuple:
     """(n_sub, sub_dim, dim) derived from a codebook frame — the stored
     sidecar is the source of truth for index geometry, so maintenance
-    and stored-query paths can never encode with mismatched defaults."""
+    and stored-query paths can never encode with mismatched defaults.
+    A codebook trained on no vectors gives (0, 0, 0)."""
     row = codebooks.select(
         F.max("m").alias("n_sub"), F.max(F.size("cu")).alias("sub_dim")
     ).collect()[0]
-    n_sub, sub_dim = int(row["n_sub"]), int(row["sub_dim"])
+    n_sub, sub_dim = int(row["n_sub"] or 0), int(row["sub_dim"] or 0)
     return n_sub, sub_dim, n_sub * sub_dim
 
 
@@ -1931,26 +1824,25 @@ def _pq_pack_codes(
     return codes.join(bkt, "vec_id")
 
 
-def _pq_rank_adc(pairm: DataFrame, k: int) -> DataFrame:
-    """Shared ADC tail: order-free integer cross-subspace sum, rank
-    ascending by distance with lower-id ties, emit the rounded double
+def _pq_rank_adc(pairs: DataFrame, k: int) -> DataFrame:
+    """Shared ADC tail over (query_id, neighbor_id, qsub, cu) rows, one
+    per candidate subspace: each subspace's squared distance is
+    quantized to an integer, summed order-free across subspaces, ranked
+    ascending with lower-id ties, and emitted as the rounded double
     distance.  One definition — the on-the-fly and stored paths MUST
     rank identically or the catalog gate's hash-equality breaks."""
-    adc = pairm.groupBy("query_id", "neighbor_id").agg(
-        F.sum("dm").alias("adc_nano")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_nano").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        adc.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "rank",
-            "neighbor_id",
-            F.round(F.col("adc_nano") / PQ_DIST_QUANT, 6).alias("adc_dist"),
-        )
+    adc = pairs.select(
+        "query_id",
+        "neighbor_id",
+        F.round(_pq_sqdist(F.col("qsub"), F.col("cu")) * PQ_DIST_QUANT)
+        .cast("long")
+        .alias("dm"),
+    ).groupBy("query_id", "neighbor_id").agg(F.sum("dm").alias("adc_nano"))
+    return _top_k(adc, k, "adc_nano", asc=True).select(
+        "query_id",
+        "rank",
+        "neighbor_id",
+        F.round(F.col("adc_nano") / PQ_DIST_QUANT, 6).alias("adc_dist"),
     )
 
 
@@ -1999,19 +1891,12 @@ def pq_adc_topk(
         .where(F.col("query_id") != F.col("vec_id"))
         .select("query_id", F.col("vec_id").alias("neighbor_id"))
     )
-    pairm = (
+    pairs = (
         cand.join(codes.withColumnRenamed("vec_id", "neighbor_id"), "neighbor_id")
         .join(F.broadcast(cb), ["m", "code"])
         .join(F.broadcast(qsub), ["query_id", "m"])
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(_pq_sqdist(F.col("qsub"), F.col("cu")) * PQ_DIST_QUANT)
-            .cast("long")
-            .alias("dm"),
-        )
     )
-    return _pq_rank_adc(pairm, k)
+    return _pq_rank_adc(pairs, k)
 
 
 def _pq_train_ctes_sql(
@@ -2171,16 +2056,54 @@ def write_pq_index(
     # truncates the two-pass training lineage, so the encode+write pass
     # doesn't re-run training (measured: write 7.0s -> ~3s at sf0.1)
     cb = spark.read.parquet(path + "/codebook")
-    (
+    write_base(
         _pq_pack_codes(embeddings, cb, n_sub, sub_dim, dim, id_col, vec_col)
         # cluster rows by bucket before the dynamic-partition write: each
         # bucket directory is then written by exactly one task (one file,
         # no cross-task handle fanout)
-        .repartition(F.col("bucket"))
-        .write.partitionBy("bucket")
-        .mode("overwrite")
-        .parquet(path + "/data")
+        .repartition(F.col("bucket")),
+        path,
+        "bucket",
     )
+
+
+#: the stored PQ row, which an index built from no vectors reads as
+_PQ_ROW = "vec_id long, codes array<int>, bucket int"
+
+
+def _pq_queries(spark, path: str, queries: DataFrame, id_col: str, vec_col: str):
+    """(codebook, query subvectors, query buckets) for a stored PQ
+    query, under the geometry of the stored codebook sidecar."""
+    cb = spark.read.parquet(path + "/codebook")
+    n_sub, sub_dim, dim = _pq_geometry(cb)
+    qsub = pq_subvectors(queries, n_sub, sub_dim, id_col, vec_col).select(
+        F.col("vec_id").alias("query_id"), "m", F.col("sub").alias("qsub")
+    )
+    qbkt = queries.select(
+        F.col(id_col).alias("query_id"),
+        srp_bucket(F.col(vec_col), dim=dim).alias("bucket"),
+    )
+    return cb, qsub, qbkt
+
+
+def _pq_adc_pairs(cand: DataFrame, cb: DataFrame, qsub: DataFrame, k: int) -> DataFrame:
+    """The stored ADC body: candidate (query_id, vec_id, codes) rows
+    explode to one row per subspace code, meet their codebook entry
+    (broadcast: n_sub * n_codes rows) and the query subvector, and rank
+    by :func:`_pq_rank_adc`.  The caller passes ``qsub`` broadcast or
+    not, as its query set is small or corpus-sized."""
+    pairs = (
+        cand.where(F.col("query_id") != F.col("vec_id"))
+        .select(
+            "query_id",
+            F.col("vec_id").alias("neighbor_id"),
+            F.posexplode("codes").alias("m0", "code"),
+        )
+        .withColumn("m", F.col("m0") + 1)
+        .join(F.broadcast(cb), ["m", "code"])
+        .join(qsub, ["query_id", "m"])
+    )
+    return _pq_rank_adc(pairs, k)
 
 
 def pq_adc_topk_stored(
@@ -2193,72 +2116,22 @@ def pq_adc_topk_stored(
 ) -> DataFrame:
     """ANN top-k against a stored PQ index: query buckets are computed on
     the (small) query side and the code scan is filtered with ``bucket IN
-    (query buckets)`` — a partition filter, so non-probed buckets never
-    leave storage and what DOES stream is n_sub-byte codes, not vectors.
+    (query buckets)`` — a partition filter on the base, so non-probed
+    buckets never leave storage and what DOES stream is n_sub-byte
+    codes, not vectors; the delta zone is pruned by row-group stats.
     Index geometry (n_sub, sub_dim, dim) is derived from the stored
     codebook sidecar, never assumed.  Results are identical to the
     on-the-fly :func:`pq_adc_topk` given the same corpus (same
-    codebooks, same folds, same integer ADC)."""
-    cb = spark.read.parquet(path + "/codebook")
-    n_sub, sub_dim, dim = _pq_geometry(cb)
-    qsub = pq_subvectors(queries, n_sub, sub_dim, id_col, vec_col).select(
-        F.col("vec_id").alias("query_id"), "m", F.col("sub").alias("qsub")
-    )
-    qbkt = queries.select(
-        F.col(id_col).alias("query_id"),
-        srp_bucket(F.col(vec_col), dim=dim).alias("bucket"),
-    )
+    codebooks, same folds, same integer ADC); an index built from no
+    vectors answers no rows."""
+    cb, qsub, qbkt = _pq_queries(spark, path, queries, id_col, vec_col)
     q_buckets = sorted(
         r["bucket"] for r in qbkt.select("bucket").distinct().collect()
     )
-    data = _pq_read_codes(spark, path, q_buckets)
-    cand = (
-        data.join(F.broadcast(qbkt), "bucket")
-        .where(F.col("query_id") != F.col("vec_id"))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), "codes")
+    codes = read_index(spark, path, F.col("bucket").isin(q_buckets), _PQ_ROW)
+    return _pq_adc_pairs(
+        codes.join(F.broadcast(qbkt), "bucket"), cb, F.broadcast(qsub), k
     )
-    pairm = (
-        cand.select(
-            "query_id",
-            "neighbor_id",
-            F.posexplode("codes").alias("m0", "code"),
-        )
-        .withColumn("m", F.col("m0") + 1)
-        .join(F.broadcast(cb), ["m", "code"])
-        .join(F.broadcast(qsub), ["query_id", "m"])
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(_pq_sqdist(F.col("qsub"), F.col("cu")) * PQ_DIST_QUANT)
-            .cast("long")
-            .alias("dm"),
-        )
-    )
-    return _pq_rank_adc(pairm, k)
-
-
-def _pq_read_codes(spark, path: str, buckets=None) -> DataFrame:
-    """Stored code rows (vec_id, codes, bucket): the bucket-partitioned
-    base, optionally pruned to ``buckets`` (a partition filter — non-
-    probed buckets never leave storage), unioned with the append delta
-    zone when present.  Delta bucket pruning is parquet row-group stats
-    (deltas are bucket-sorted), not directory pruning —
-    :func:`compact_pq_index` restores full partition pruning."""
-    import os
-
-    data = spark.read.parquet(path + "/data")
-    if buckets is not None:
-        data = data.where(F.col("bucket").isin(buckets))
-    data = data.select("vec_id", "codes", "bucket")
-    delta_dir = os.path.join(path, "data", "_delta")
-    if os.path.isdir(delta_dir) and any(
-        not f.startswith(("_", ".")) for f in os.listdir(delta_dir)
-    ):
-        delta = spark.read.parquet(delta_dir)
-        if buckets is not None:
-            delta = delta.where(F.col("bucket").isin(buckets))
-        data = data.unionByName(delta.select("vec_id", "codes", "bucket"))
-    return data
 
 
 def pq_adc_topk_join(
@@ -2286,39 +2159,9 @@ def pq_adc_topk_join(
     shuffles per-bucket candidate volume (sum of squares over bucket
     occupancy — profile with ``profile_srp_bucket_skew``, route hot
     buckets via the adversarial dedup gate)."""
-    cb = spark.read.parquet(path + "/codebook")
-    n_sub, sub_dim, dim = _pq_geometry(cb)
-    qsub = pq_subvectors(queries, n_sub, sub_dim, id_col, vec_col).select(
-        F.col("vec_id").alias("query_id"), "m", F.col("sub").alias("qsub")
-    )
-    qbkt = queries.select(
-        F.col(id_col).alias("query_id"),
-        srp_bucket(F.col(vec_col), dim=dim).alias("bucket"),
-    )
-    cand = (
-        _pq_read_codes(spark, path)
-        .join(qbkt, "bucket")
-        .where(F.col("query_id") != F.col("vec_id"))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), "codes")
-    )
-    pairm = (
-        cand.select(
-            "query_id",
-            "neighbor_id",
-            F.posexplode("codes").alias("m0", "code"),
-        )
-        .withColumn("m", F.col("m0") + 1)
-        .join(F.broadcast(cb), ["m", "code"])
-        .join(qsub, ["query_id", "m"])
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(_pq_sqdist(F.col("qsub"), F.col("cu")) * PQ_DIST_QUANT)
-            .cast("long")
-            .alias("dm"),
-        )
-    )
-    return _pq_rank_adc(pairm, k)
+    cb, qsub, qbkt = _pq_queries(spark, path, queries, id_col, vec_col)
+    codes = read_index(spark, path, schema=_PQ_ROW)
+    return _pq_adc_pairs(codes.join(qbkt, "bucket"), cb, qsub, k)
 
 
 def append_pq_index(
@@ -2330,15 +2173,10 @@ def append_pq_index(
     """Incrementally add vectors to a stored PQ index WITHOUT retraining:
     new rows are encoded under the index's *existing* codebooks (the
     sidecar is read, never recomputed — the PQ analogue of IVF's frozen
-    coarse quantizer) and land in the DELTA ZONE (``data/_delta``, the
-    LSM shape): one bucket-sorted file per append instead of a write
-    into every touched bucket partition (measured: the per-partition
-    append paid ~220 directory writes for a few hundred rows — 3.1 s of
-    machinery per micro-batch at bench scale; the delta file pays one).
-    Readers union the partition-pruned base with the delta zone (the
-    bucket sort gives parquet row-group stats, so bucket predicates
-    skip within the delta files too); :func:`compact_pq_index` folds
-    accumulated deltas into the bucket partitions crash-safely.
+    coarse quantizer) and land in the index's delta zone
+    (:func:`index_layout.append_delta`, sorted by bucket), which stored
+    reads union with the partition-pruned base and
+    :func:`index_layout.compact_index` folds into the bucket partitions.
 
     Queries against the appended index equal queries against the union
     encoded under the same codebooks, because encoding and ADC depend
@@ -2351,120 +2189,11 @@ def append_pq_index(
     spark = new_embeddings.sparkSession
     cb = spark.read.parquet(path + "/codebook")
     n_sub, sub_dim, dim = _pq_geometry(cb)
-    (
-        _pq_pack_codes(new_embeddings, cb, n_sub, sub_dim, dim, id_col, vec_col)
-        .sortWithinPartitions("bucket")
-        .write.mode("append")
-        .parquet(path + "/data/_delta")
-    )
-
-
-def _pq_delta_inventory(path: str) -> dict:
-    import os
-
-    d = os.path.join(path, "data", "_delta")
-    if not os.path.isdir(d):
-        return {}
-    return {"_delta": sorted(os.listdir(d))}
-
-
-def recover_pq_compaction(path: str) -> None:
-    """Finish or roll back a torn :func:`compact_pq_index`.  Two torn
-    states are possible, each marked: ``_lmds_compacting`` alone (fold
-    incomplete — remove base files the intent's inventory doesn't list;
-    the delta files are still intact, so the fold simply reruns) and
-    ``_lmds_compacted`` (fold complete, delta deletion incomplete —
-    delete the listed delta files; idempotent; takes PRECEDENCE over a
-    lingering intent, which is retired without rollback because the
-    completion record proves the fold's output is the legitimate base).
-    Called automatically by
-    :func:`compact_pq_index`; call directly before serving reads after a
-    crash mid-compaction."""
-    import os
-
-    # COMPLETION takes precedence: if the record exists the fold already
-    # finished, so a still-present intent must NOT roll anything back
-    # (the fold's output is the legitimate base now) — it is simply
-    # retired and the delta deletion finishes idempotently.
-    applied = read_state(path, "_lmds_compacted")
-    if applied is not None:
-        intent_p = os.path.join(path, "_lmds_compacting")
-        if os.path.exists(intent_p):
-            os.remove(intent_p)
-        ddir = os.path.join(path, "data", "_delta")
-        for f in applied.get("deltas", []):
-            fp = os.path.join(ddir, f)
-            if os.path.exists(fp):
-                os.remove(fp)
-        os.remove(os.path.join(path, "_lmds_compacted"))
-        return
-    intent = read_state(path, "_lmds_compacting")
-    if intent is not None:
-        rollback_inventory(
-            path,
-            _partition_inventory(path, "bucket="),
-            intent.get("existing", {}),
-        )
-        os.remove(os.path.join(path, "_lmds_compacting"))
-
-
-def compact_pq_index(spark, path: str) -> int:
-    """Fold the delta zone into the bucket partitions — the maintenance
-    job that keeps stored reads partition-pruned as appends accumulate.
-    Crash-safe in every window: an intent written BEFORE the fold holds
-    the pre-fold base inventory (a torn fold's partials are removed and
-    the fold reruns — delta files are never touched until the fold is
-    complete), and the completion record is written BEFORE the intent is
-    retired — so there is no instant where the fold's output exists with
-    no marker (recovery gives the completion record precedence).  Delta
-    deletion after the completion record is idempotent.  Returns the
-    number of delta files folded (0 = nothing to do)."""
-    import os
-
-    recover_pq_compaction(path)
-    # A pending APPEND intent means the delta zone may hold a torn
-    # batch's partial files.  Folding them into the base partitions
-    # would put them beyond the replay bracket's reach
-    # (:func:`streaming.commit.append_exactly_once` rolls back only delta
-    # files absent from its pre-append inventory), so the replayed re-append
-    # would then duplicate the partially-applied vectors in query
-    # results.  Refuse and let the stream replay/recover first.
-    if read_state(path, "_lmds_appending") is not None:
-        raise RuntimeError(
-            f"compact_pq_index: index {path!r} has a pending append "
-            "intent (_lmds_appending) — a crashed streaming append may "
-            "have left partial delta files.  Let the stream replay "
-            "(append_pq_index_exactly_once recovers the torn batch) "
-            "before compacting."
-        )
-    deltas = _pq_delta_inventory(path).get("_delta", [])
-    data_files = [f for f in deltas if not f.startswith(("_", "."))]
-    if not data_files:
-        return 0
-    write_state(
+    append_delta(
+        _pq_pack_codes(new_embeddings, cb, n_sub, sub_dim, dim, id_col, vec_col),
         path,
-        "_lmds_compacting",
-        {"existing": _partition_inventory(path, "bucket=")},
+        "bucket",
     )
-    ddir = os.path.join(path, "data", "_delta")
-    (
-        spark.read.parquet(*[os.path.join(ddir, f) for f in data_files])
-        .write.partitionBy("bucket")
-        .mode("append")
-        .parquet(path + "/data")
-    )
-    # completion record FIRST, then retire the intent: every crash
-    # window is now covered (intent alone -> roll back and rerun, delta
-    # intact; completion present -> fold final, recovery only finishes
-    # the idempotent delta deletion — never rolls back)
-    write_state(path, "_lmds_compacted", {"deltas": deltas})
-    os.remove(os.path.join(path, "_lmds_compacting"))
-    for f in deltas:
-        fp = os.path.join(ddir, f)
-        if os.path.exists(fp):
-            os.remove(fp)
-    os.remove(os.path.join(path, "_lmds_compacted"))
-    return len(data_files)
 
 
 def append_pq_index_exactly_once(
@@ -2476,12 +2205,11 @@ def append_pq_index_exactly_once(
     vec_col: str = "embedding",
 ) -> bool:
     """:func:`append_pq_index` under the shared replay-safety bracket
-    (:func:`streaming.commit.append_exactly_once`, the delta zone)."""
-    return append_exactly_once(
+    (:func:`index_layout.append_delta_exactly_once`)."""
+    return append_delta_exactly_once(
         path,
         batch_id,
         run_id,
-        lambda: _pq_delta_inventory(path),
         lambda: append_pq_index(
             new_embeddings, path, id_col=id_col, vec_col=vec_col
         ),

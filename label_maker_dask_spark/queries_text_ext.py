@@ -830,9 +830,9 @@ def similarity_pq_index_build(spark, sf_dir):
     the training/write cost so the stored/join read entries (which
     reuse this process-shared index) time the read path alone."""
     idx = _pq_shared_index(spark, sf_dir, rebuild=True)
-    from label_maker_dask_spark.operators.similarity import _pq_read_codes
+    from label_maker_dask_spark.operators.index_layout import read_index
 
-    ex = _pq_read_codes(spark, idx).select(
+    ex = read_index(spark, idx).select(
         F.col("bucket").cast("int").alias("bucket"),
         "vec_id",
         F.posexplode("codes").alias("m0", "code"),

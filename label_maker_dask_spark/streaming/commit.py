@@ -25,23 +25,29 @@ their table layouts; this module is the protocol they share:
   checkpoint resets *between* batches, the lock catches two writers
   racing *within* one;
 - **append bracket** (:func:`append_exactly_once`) — intent record with
-  the pre-append file inventory, for appends that are not idempotent;
-  :func:`rollback_inventory` removes a torn write's partial files;
+  the pre-append :func:`inventory` (every subdirectory of ``path/data``),
+  for appends that are not idempotent; :func:`rollback_inventory`
+  removes a torn write's partial files;
 - **rename-aside swap** (:func:`swap_in` / :func:`recover_swap`) — a
   rewritten directory replaces its base only once it is complete, and
   every crash point leaves a state the recovery finishes.  Each entry
   point that writes a tmp dir recovers first, so no sink has to
   remember to.
 
-The paths are explicit, so each layout keeps its own names: the plain
-maintained tables (``streaming/upsert.py``) swap ``<base>._applying``
-through ``<base>._old``, ``sources/layout.compact_small_files`` swaps
-``<path>._compacting``, and the bucketed tables swap each
-``<base>._scratch/lmdsb=i`` through ``<base>._old/lmdsb=i``.  Two
-layouts keep their own protocol: immutable versions
-(``streaming/versioned.py``) never swap, and the IVF rebalance
-(``operators/similarity.recover_ivf_rebalance``) swaps many directories
-all-or-nothing, decided by its journal.
+The paths are explicit, so each layout keeps its own names:
+
+- the plain maintained tables (``streaming/upsert.py``) swap
+  ``<base>._applying`` through ``<base>._old``;
+- ``sources/layout.compact_small_files`` swaps ``<path>._compacting``;
+- the bucketed tables (``streaming/bucketed.py``) swap each
+  ``<base>._scratch/lmdsb=i`` through ``<base>._old/lmdsb=i``;
+- immutable versions (``streaming/versioned.py``) never swap;
+- the stored ANN indexes (IVF, PQ, SRP) share one layout, which lives
+  in ``operators/index_layout.py``: a partitioned base, a delta zone
+  that appends land in under the append bracket, and one compaction
+  with its own intent/completion records.  The IVF rebalance
+  (``operators/similarity.recover_ivf_rebalance``) swaps many
+  directories all-or-nothing, decided by its journal.
 """
 
 from __future__ import annotations
@@ -59,6 +65,8 @@ from pyspark.sql import DataFrame
 _LOCK_NAME = "_lmds_writer_lock"
 _BATCH_MARKER = "_lmds_applied_batch"
 _RUN_ID = "_lmds_run_id"
+_APPEND_INTENT = "_lmds_appending"
+_APPEND_APPLIED = "_lmds_applied"
 
 
 def write_text(path: str, text: str) -> None:
@@ -266,62 +274,91 @@ def writer_lock(base_path: str, run_id: Optional[str]) -> Iterator[None]:
             pass
 
 
+def inventory(path: str) -> dict:
+    """``{subdirectory: sorted file names}`` for every subdirectory of
+    ``path/data``: the partitions and the delta zone alike
+    (:mod:`operators.index_layout`).  This is the pre-write record an
+    intent holds, and what :func:`rollback_inventory` compares it to."""
+    data = os.path.join(path, "data")
+    if not os.path.isdir(data):
+        return {}
+    return {
+        name: sorted(os.listdir(os.path.join(data, name)))
+        for name in os.listdir(data)
+        if os.path.isdir(os.path.join(data, name))
+    }
+
+
+def append_pending(path: str) -> bool:
+    """Whether an append into ``path/data`` was interrupted: its intent
+    record is still present, so the data may hold a torn batch's files
+    until the batch is replayed."""
+    return read_state(path, _APPEND_INTENT) is not None
+
+
 def append_exactly_once(
     path: str,
     batch_id: int,
     run_id: Optional[str],
-    inventory: Callable[[], dict],
     do_append: Callable[[], None],
     what: str,
 ) -> bool:
-    """Replay-safety bracket for partitioned appends under ``path/data``
-    (IVF cells, the PQ delta zone).  A bare append is NOT idempotent:
-    replaying a crashed micro-batch would append its rows twice.  The
-    append is bracketed with an intent record (``_lmds_appending``)
-    holding the PRE-append file inventory of every partition: a replay
-    that finds the intent deletes any file the inventory doesn't list
-    (the torn append's partials), then re-appends; a replay of a
-    fully-applied batch is skipped by the applied record
+    """Replay-safety bracket for an append under ``path/data`` (a stored
+    index's delta zone).  A bare append is NOT idempotent: replaying a
+    crashed micro-batch would append its rows twice.  The append is
+    bracketed with an intent record (``_lmds_appending``) holding the
+    PRE-append :func:`inventory`: a replay that finds the intent rolls
+    the torn append back (:func:`rollback_inventory`), then re-appends;
+    a replay of a fully-applied batch is skipped by the applied record
     (``_lmds_applied``); a foreign run id raises.  Returns True when the
     batch was applied, False on an already-applied replay."""
     if already_applied(
-        read_state(path, "_lmds_applied"), run_id, batch_id,
+        read_state(path, _APPEND_APPLIED), run_id, batch_id,
         f"{what} append: index {path!r}",
     ):
         return False
-    intent = read_state(path, "_lmds_appending")
+    intent = read_state(path, _APPEND_INTENT)
     if intent is not None:
         if int(intent.get("batch", -1)) == batch_id:
             # torn append of THIS batch: remove its partial files
-            rollback_inventory(path, inventory(), intent.get("existing", {}))
+            rollback_inventory(path, intent.get("existing", {}))
         # a stale intent from an APPLIED batch (crash between the applied
         # marker and the intent removal) carries no partial files
-        os.remove(os.path.join(path, "_lmds_appending"))
+        os.remove(os.path.join(path, _APPEND_INTENT))
     write_state(
         path,
-        "_lmds_appending",
-        {"run": run_id, "batch": batch_id, "existing": inventory()},
+        _APPEND_INTENT,
+        {"run": run_id, "batch": batch_id, "existing": inventory(path)},
     )
     do_append()
-    write_state(path, "_lmds_applied", {"run": run_id, "batch": batch_id})
-    os.remove(os.path.join(path, "_lmds_appending"))
+    write_state(path, _APPEND_APPLIED, {"run": run_id, "batch": batch_id})
+    os.remove(os.path.join(path, _APPEND_INTENT))
     return True
 
 
-def rollback_inventory(path: str, current: dict, existing: dict) -> None:
-    """Undo a torn write into the partitions under ``path/data``: delete
-    every entry of ``current`` (``{partition: [file, ...]}``, listed now)
-    that the pre-write inventory ``existing`` does not list, and remove a
-    partition directory the write created and the rollback emptied."""
-    for part, files in current.items():
-        keep = set(existing.get(part, []))
-        cdir = os.path.join(path, "data", part)
-        for f in files:
-            if f not in keep:
-                fp = os.path.join(cdir, f)
+def rollback_inventory(path: str, existing: dict) -> None:
+    """Undo a torn write into ``path/data``.  ``existing`` is the
+    :func:`inventory` taken before the write: files it does not list
+    are removed from the subdirectories it lists.  A subdirectory it
+    does not list was made by the write, and is removed whole, when it
+    is a partition (``col=v``) of a column the record lists, or when it
+    is not a partition and the record lists nothing.  Other unlisted
+    subdirectories stay: an intent written by an earlier version listed
+    only the subdirectories its writer wrote into (the IVF cells, the PQ
+    delta zone or the PQ buckets), and was empty when that zone did not
+    exist yet."""
+    cols = {p.split("=", 1)[0] for p in existing if "=" in p}
+    data = os.path.join(path, "data")
+    for part, files in inventory(path).items():
+        pdir = os.path.join(data, part)
+        if part in existing:
+            for f in set(files) - set(existing[part]):
+                fp = os.path.join(pdir, f)
                 (shutil.rmtree if os.path.isdir(fp) else os.remove)(fp)
-        if not keep and not os.listdir(cdir):
-            os.rmdir(cdir)
+        elif ("=" in part and part.split("=", 1)[0] in cols) or (
+            "=" not in part and not existing
+        ):
+            shutil.rmtree(pdir)
 
 
 def swap_in(tmp: str, base: str, old: str) -> None:
@@ -358,9 +395,11 @@ def recover_swap(tmp: str, base: str, old: str) -> None:
 __all__ = [
     "already_applied",
     "append_exactly_once",
+    "append_pending",
     "applied_state",
     "break_writer_lock",
     "ensure_run_id",
+    "inventory",
     "read_state",
     "recover_swap",
     "rollback_inventory",

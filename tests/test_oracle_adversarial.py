@@ -145,6 +145,7 @@ _EMPTY_SOURCES = {
         "l_quantity": pa.array([], pa.float64()),
         "l_extendedprice": pa.array([], pa.float64()),
     },
+    **_embeddings([]),
 }
 
 
@@ -156,12 +157,14 @@ _EMPTY_SOURCES = {
         "stream_scd2_user_state_replay",
         "stream_ohlc_hourly_replay",
         "stream_session_timeout_replay",
+        "stream_pq_index_replay",
     ],
 )
 def test_stream_replay_cells_on_empty_sources(spark, tmp_path, name):
     """Empty sources give the oracle's zero rows: the day terciles of no
-    events are three empty batches, and a sink whose drain committed
-    nothing reads as an empty table.  The session-timeout cell has no
+    events are three empty batches, a sink whose drain committed
+    nothing reads as an empty table, and a PQ index built from no
+    vectors (an empty codebook) answers no neighbors.  The session-timeout cell has no
     event to place its sentinel after, so it raises a ValueError that
     names it."""
     sf_dir = str(tmp_path)

@@ -160,13 +160,18 @@ def test_srp_units_bit_identical_to_expression_form(spark):
 def test_ivf_stored_index_matches_onthefly_and_prunes(spark, tmp_path):
     """The stored IVF index must return the identical result to the
     on-the-fly ivf_topk (same exact-fold arithmetic), and its corpus scan
-    must prune non-probed cells at the PARTITION level."""
+    must prune non-probed cells at the PARTITION level.  Built in one
+    write, or built on the 16 lowest ids' slice with the rest appended:
+    the appended rows sit in the delta zone, are read under the same
+    cell predicate, and compaction leaves the result unchanged."""
     import contextlib
     import io
 
     from pyspark.sql import functions as F
 
+    from label_maker_dask_spark.operators.index_layout import compact_index
     from label_maker_dask_spark.operators.similarity import (
+        append_ivf_index,
         ivf_topk,
         ivf_topk_stored,
         write_ivf_index,
@@ -174,24 +179,35 @@ def test_ivf_stored_index_matches_onthefly_and_prunes(spark, tmp_path):
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     queries = emb.where(F.col("vec_id") % 25 == 0)
-    path = str(tmp_path / "ivf_index")
-    write_ivf_index(emb, path, n_cells=16)
-
-    stored = ivf_topk_stored(spark, path, queries, k=5, n_probe=4)
     onthefly = ivf_topk(emb, queries, k=5, n_probe=4)
-    a = sorted(map(tuple, stored.collect()))
     b = sorted(map(tuple, onthefly.collect()))
-    assert a == b and len(a) > 0
+    for appended in (False, True):
+        path = str(tmp_path / f"ivf_index_{appended}")
+        if appended:
+            write_ivf_index(emb.where(F.col("vec_id") < 100), path, n_cells=16)
+            append_ivf_index(emb.where(F.col("vec_id") >= 100), path)
+        else:
+            write_ivf_index(emb, path, n_cells=16)
 
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        stored.explain("formatted")
-    plan = buf.getvalue()
-    assert "PartitionFilters" in plan
-    # the cell IN (...) predicate reaches the partition filter, not a
-    # post-scan Filter over all cells
-    pf_line = [l for l in plan.splitlines() if "PartitionFilters" in l][0]
-    assert "cell" in pf_line
+        stored = ivf_topk_stored(spark, path, queries, k=5, n_probe=4)
+        a = sorted(map(tuple, stored.collect()))
+        assert a == b and len(a) > 0
+
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            stored.explain("formatted")
+        plan = buf.getvalue()
+        assert "PartitionFilters" in plan
+        # the cell IN (...) predicate reaches the partition filter, not a
+        # post-scan Filter over all cells
+        pf_line = [l for l in plan.splitlines() if "PartitionFilters" in l][0]
+        assert "cell" in pf_line
+        # the delta zone is scanned iff rows were appended
+        assert ("_delta" in plan) == appended
+        if appended:
+            assert compact_index(spark, path) > 0
+            again = ivf_topk_stored(spark, path, queries, k=5, n_probe=4)
+            assert sorted(map(tuple, again.collect())) == a
 
 
 def test_lsh_stored_index_matches_onthefly_and_prunes(spark, tmp_path):
@@ -545,11 +561,12 @@ def test_ivf_append_replay_and_torn_append_recovery(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
+    from label_maker_dask_spark.operators.index_layout import read_index
     from label_maker_dask_spark.operators.similarity import (
-        _ivf_cell_inventory,
         append_ivf_index_exactly_once,
         write_ivf_index,
     )
+    from label_maker_dask_spark.streaming.commit import inventory
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     path = str(tmp_path / "ivf")
@@ -557,14 +574,14 @@ def test_ivf_append_replay_and_torn_append_recovery(spark, tmp_path):
     batch = emb.where((F.col("vec_id") >= 100) & (F.col("vec_id") < 150))
 
     assert append_ivf_index_exactly_once(batch, path, 0, "r") is True
-    n = spark.read.parquet(path + "/data").count()
+    n = read_index(spark, path).count()
     assert append_ivf_index_exactly_once(batch, path, 0, "r") is False
-    assert spark.read.parquet(path + "/data").count() == n  # no double add
+    assert read_index(spark, path).count() == n  # no double add
 
     # simulate the torn append of batch 1: intent written with the
     # CURRENT inventory, then "partial" files appear (copy an existing
     # parquet into two cells), then the crash replay runs
-    inv = _ivf_cell_inventory(path)
+    inv = inventory(path)
     with open(path + "/_lmds_appending", "w") as fh:
         json.dump({"run": "r", "batch": 1, "existing": inv}, fh)
     cells = [c for c, files in inv.items() if any(
@@ -577,11 +594,11 @@ def test_ivf_append_replay_and_torn_append_recovery(spark, tmp_path):
             os.path.join(path, "data", c, src),
             os.path.join(path, "data", c, "part-torn.parquet"),
         )
-    assert spark.read.parquet(path + "/data").count() > n  # corrupted now
+    assert read_index(spark, path).count() > n  # corrupted now
 
     nxt = emb.where((F.col("vec_id") >= 150) & (F.col("vec_id") < 160))
     assert append_ivf_index_exactly_once(nxt, path, 1, "r") is True
-    assert spark.read.parquet(path + "/data").count() == n + 10
+    assert read_index(spark, path).count() == n + 10
     assert not os.path.exists(path + "/_lmds_appending")
 
     import pytest
@@ -884,14 +901,12 @@ def test_pq_append_composes_and_replays_exactly_once(spark, tmp_path):
     # torn append: fake an intent for batch 3 with the CURRENT inventory,
     # then drop an alien partial file into the delta zone; the replay
     # must remove it before re-appending
-    from label_maker_dask_spark.operators.similarity import (
-        _pq_delta_inventory,
-    )
+    from label_maker_dask_spark.streaming.commit import inventory
 
     _ivf_state_write(
         two, "_lmds_appending",
         {"run": "run-a", "batch": 3,
-         "existing": _pq_delta_inventory(two)},
+         "existing": inventory(two)},
     )
     partial = os.path.join(two, "data", "_delta", "part-torn.parquet")
     open(partial, "w").write("junk")
@@ -948,7 +963,7 @@ def test_streaming_pq_maintenance_matches_oneshot(spark, tmp_path):
 
 
 def test_pq_compaction_folds_delta_and_recovers(spark, tmp_path):
-    """compact_pq_index folds the delta zone into bucket partitions with
+    """compact_index folds the delta zone into bucket partitions with
     identical query results; a torn fold (intent present, partial base
     files) rolls back and reruns; a torn delete (completion record
     present) finishes idempotently."""
@@ -956,16 +971,14 @@ def test_pq_compaction_folds_delta_and_recovers(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
+    from label_maker_dask_spark.operators.index_layout import compact_index
     from label_maker_dask_spark.operators.similarity import (
-        _partition_inventory,
-        _pq_delta_inventory,
         append_pq_index,
-        compact_pq_index,
         pq_adc_topk_stored,
-        recover_pq_compaction,
         write_pq_index,
     )
     from label_maker_dask_spark.streaming.commit import (
+        inventory,
         read_state as _ivf_state_read,
         write_state as _ivf_state_write,
     )
@@ -975,21 +988,21 @@ def test_pq_compaction_folds_delta_and_recovers(spark, tmp_path):
     idx = str(tmp_path / "idx")
     write_pq_index(emb.where(F.col("vec_id") < 300), idx)
     append_pq_index(emb.where(F.col("vec_id") >= 300), idx)
-    assert _pq_delta_inventory(idx)  # delta zone populated
+    assert inventory(idx)["_delta"]  # delta zone populated
 
     before = sorted(map(tuple, pq_adc_topk_stored(spark, idx, queries).collect()))
-    n = compact_pq_index(spark, idx)
+    n = compact_index(spark, idx)
     assert n > 0
-    assert not _pq_delta_inventory(idx).get("_delta")
+    assert not inventory(idx).get("_delta")
     after = sorted(map(tuple, pq_adc_topk_stored(spark, idx, queries).collect()))
     assert before == after and len(after) > 0
-    assert compact_pq_index(spark, idx) == 0  # nothing left to fold
+    assert compact_index(spark, idx) == 0  # nothing left to fold
 
     # torn fold: append more, then fake an intent + alien base partial
     append_pq_index(emb.where(F.col("vec_id") < 50), idx)
     _ivf_state_write(
         idx, "_lmds_compacting",
-        {"existing": _partition_inventory(idx, "bucket=")},
+        {"existing": inventory(idx)},
     )
     bdir = next(
         d for d in os.listdir(os.path.join(idx, "data"))
@@ -997,20 +1010,20 @@ def test_pq_compaction_folds_delta_and_recovers(spark, tmp_path):
     )
     partial = os.path.join(idx, "data", bdir, "part-torn.parquet")
     open(partial, "w").write("junk")
-    assert compact_pq_index(spark, idx) > 0  # recovery removed the partial
+    assert compact_index(spark, idx) > 0  # recovery removed the partial
     assert not os.path.exists(partial)
 
     # torn delete: completion record listing a still-present delta file
     append_pq_index(emb.where(F.col("vec_id") < 20), idx)
-    leftover = _pq_delta_inventory(idx)["_delta"]
+    leftover = inventory(idx)["_delta"]
     _ivf_state_write(idx, "_lmds_compacted", {"deltas": leftover})
-    recover_pq_compaction(idx)
-    assert not _pq_delta_inventory(idx).get("_delta")
+    compact_index(spark, idx)  # recovers on entry
+    assert not inventory(idx).get("_delta")
     assert _ivf_state_read(idx, "_lmds_compacted") is None
 
 
 def test_pq_compaction_refuses_pending_append_intent(spark, tmp_path):
-    """compact_pq_index must REFUSE while an append intent is pending: a
+    """compact_index must REFUSE while an append intent is pending: a
     crashed streaming append may have left partial delta files, and
     folding them into the base partitions would put them beyond the
     replay bracket's rollback (which only removes delta files absent
@@ -1021,14 +1034,14 @@ def test_pq_compaction_refuses_pending_append_intent(spark, tmp_path):
     import pytest
     from pyspark.sql import functions as F
 
+    from label_maker_dask_spark.operators.index_layout import compact_index
     from label_maker_dask_spark.operators.similarity import (
-        _pq_delta_inventory,
         append_pq_index,
         append_pq_index_exactly_once,
-        compact_pq_index,
         write_pq_index,
     )
     from label_maker_dask_spark.streaming.commit import (
+        inventory,
         write_state as _ivf_state_write,
     )
 
@@ -1040,18 +1053,18 @@ def test_pq_compaction_refuses_pending_append_intent(spark, tmp_path):
     batch = emb.where(F.col("vec_id") >= 300)
     _ivf_state_write(
         idx, "_lmds_appending",
-        {"run": "r1", "batch": 0, "existing": _pq_delta_inventory(idx)},
+        {"run": "r1", "batch": 0, "existing": inventory(idx)},
     )
     append_pq_index(batch, idx)  # the "torn" files of the in-flight batch
 
     with pytest.raises(RuntimeError, match="pending append intent"):
-        compact_pq_index(spark, idx)
-    assert _pq_delta_inventory(idx)["_delta"]  # delta zone untouched
+        compact_index(spark, idx)
+    assert inventory(idx)["_delta"]  # delta zone untouched
 
     # the stream replay recovers the torn batch; compaction then works
     # and the corpus holds every vector exactly once
     assert append_pq_index_exactly_once(batch, idx, 0, "r1")
-    assert compact_pq_index(spark, idx) > 0
+    assert compact_index(spark, idx) > 0
     ids = spark.read.parquet(idx + "/data").groupBy("vec_id").count()
     assert ids.where("count > 1").count() == 0
     assert ids.count() == emb.count()
@@ -1094,14 +1107,15 @@ def test_ivf_rebalance_refuses_pending_append_intent(spark, tmp_path):
     import pytest
     from pyspark.sql import functions as F
 
+    from label_maker_dask_spark.operators.index_layout import read_index
     from label_maker_dask_spark.operators.similarity import (
-        _ivf_cell_inventory,
         append_ivf_index,
         append_ivf_index_exactly_once,
         rebalance_ivf_index,
         write_ivf_index,
     )
     from label_maker_dask_spark.streaming.commit import (
+        inventory,
         write_state as _ivf_state_write,
     )
 
@@ -1112,7 +1126,7 @@ def test_ivf_rebalance_refuses_pending_append_intent(spark, tmp_path):
     batch = emb.where(F.col("vec_id") >= 300)
     _ivf_state_write(
         idx, "_lmds_appending",
-        {"run": "r1", "batch": 0, "existing": _ivf_cell_inventory(idx)},
+        {"run": "r1", "batch": 0, "existing": inventory(idx)},
     )
     append_ivf_index(batch, idx)  # the torn batch's in-flight files
 
@@ -1123,7 +1137,7 @@ def test_ivf_rebalance_refuses_pending_append_intent(spark, tmp_path):
     # holds every vector exactly once
     assert append_ivf_index_exactly_once(batch, idx, 0, "r1")
     rebalance_ivf_index(spark, idx, threshold=0.5)
-    ids = spark.read.parquet(idx + "/data").groupBy("vec_id").count()
+    ids = read_index(spark, idx).groupBy("vec_id").count()
     assert ids.where("count > 1").count() == 0
     assert ids.count() == emb.count()
     assert not os.path.exists(os.path.join(idx, "_lmds_appending"))
@@ -1138,15 +1152,14 @@ def test_pq_compaction_completion_precedes_intent(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
+    from label_maker_dask_spark.operators.index_layout import compact_index
     from label_maker_dask_spark.operators.similarity import (
-        _partition_inventory,
-        _pq_delta_inventory,
         append_pq_index,
         pq_adc_topk_stored,
-        recover_pq_compaction,
         write_pq_index,
     )
     from label_maker_dask_spark.streaming.commit import (
+        inventory,
         write_state as _ivf_state_write,
     )
 
@@ -1154,9 +1167,9 @@ def test_pq_compaction_completion_precedes_intent(spark, tmp_path):
     queries = emb.where("vec_id % 25 = 0")
     idx = str(tmp_path / "idx")
     write_pq_index(emb.where(F.col("vec_id") < 300), idx)
-    pre_fold_inventory = _partition_inventory(idx, "bucket=")
+    pre_fold_inventory = inventory(idx)
     append_pq_index(emb.where(F.col("vec_id") >= 300), idx)
-    deltas = _pq_delta_inventory(idx)["_delta"]
+    deltas = inventory(idx)["_delta"]
 
     # manually perform the fold (what compact does before its markers)
     ddir = os.path.join(idx, "data", "_delta")
@@ -1172,9 +1185,9 @@ def test_pq_compaction_completion_precedes_intent(spark, tmp_path):
                      {"existing": pre_fold_inventory})
     _ivf_state_write(idx, "_lmds_compacted", {"deltas": deltas})
 
-    recover_pq_compaction(idx)
+    compact_index(spark, idx)  # recovers on entry
     # folded files kept (not rolled back), deltas gone, markers cleared
-    assert not _pq_delta_inventory(idx).get("_delta")
+    assert not inventory(idx).get("_delta")
     assert not os.path.exists(os.path.join(idx, "_lmds_compacting"))
     assert not os.path.exists(os.path.join(idx, "_lmds_compacted"))
     got = pq_adc_topk_stored(spark, idx, queries).collect()

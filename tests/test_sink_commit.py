@@ -14,7 +14,14 @@ from label_maker_dask_spark.operators.scd import (
     stream_scd2_to_parquet,
     stream_scd2_to_parquet_bucketed,
 )
+from label_maker_dask_spark.operators.index_layout import (
+    compact_index,
+    read_index,
+)
 from label_maker_dask_spark.operators.similarity import (
+    append_ivf_index,
+    append_pq_index,
+    rebalance_ivf_index,
     stream_embeddings_to_ivf_index,
     stream_embeddings_to_pq_index,
     write_ivf_index,
@@ -193,10 +200,11 @@ def test_empty_batch_never_reaches_apply(spark, tmp_path):
         assert calls == [(1, fh.read())]
 
 
-# --- crash matrix over the rename-aside swap's entry points ----------------
-# Each entry point that writes a tmp dir and swaps it in is crashed at every
-# filesystem call it makes, then replayed as the engine would replay the
-# batch: the replay must give the uncrashed rows and leave no swap debris.
+# --- crash matrix over the swap entry points and index maintenance ---------
+# Each entry point that writes a tmp dir and swaps it in, and each stored-
+# index maintenance op, is crashed at every filesystem call it makes, then
+# replayed as the engine (or the operator) would replay it: the replay must
+# give the uncrashed rows and leave no swap or compaction debris.
 
 
 class _Crash(Exception):
@@ -268,6 +276,44 @@ def _compact(spark, table, batch_id):
         compact_small_files(spark, table)
 
 
+def _index_compact(build, append):
+    """Batch 0 builds an index on 100 vectors and appends 60 more into
+    its delta zone; batch 1 compacts it."""
+
+    def run(spark, table, batch_id):
+        emb = spark.read.parquet(EMB)
+        if batch_id == 0:
+            build(emb.where("vec_id < 100"), table)
+            append(emb.where("vec_id >= 100 AND vec_id < 160"), table)
+        else:
+            compact_index(spark, table)
+
+    return run
+
+
+def _ivf_rebalance(spark, table, batch_id):
+    """Batch 0 builds a 4-cell IVF index on 40 spread vectors and
+    appends 120 vectors packed around one of them (a drifted index);
+    batch 1 rebalances it, which compacts the delta zone first."""
+    if batch_id == 0:
+        spread = [
+            (i, [((i * 37 + j * 11) % 97) / 97.0 - 0.5 for j in range(8)])
+            for i in range(40)
+        ]
+        packed = [
+            (1000 + i, [
+                c + ((i * 13 + j * 7 + i * j) % 23) / 23.0 * 0.3 - 0.15
+                for j, c in enumerate(spread[5][1])
+            ])
+            for i in range(120)
+        ]
+        schema = "vec_id long, embedding array<double>"
+        write_ivf_index(spark.createDataFrame(spread, schema), table, n_cells=4)
+        append_ivf_index(spark.createDataFrame(packed, schema), table)
+    else:
+        rebalance_ivf_index(spark, table)
+
+
 SWAP_OPS = [
     pytest.param((_accumulate, lambda spark, t: spark.read.parquet(t)),
                  id="accumulate_batch"),
@@ -275,7 +321,16 @@ SWAP_OPS = [
                  id="apply_bucketed_upsert"),
     pytest.param((_compact, lambda spark, t: spark.read.parquet(t)),
                  id="compact_small_files"),
+    pytest.param((_index_compact(
+        lambda df, t: write_ivf_index(df, t, n_cells=4), append_ivf_index
+    ), read_index), id="compact_index_ivf"),
+    pytest.param((_index_compact(write_pq_index, append_pq_index), read_index),
+                 id="compact_index_pq"),
+    pytest.param((_ivf_rebalance, read_index), id="rebalance_ivf_index"),
 ]
+
+#: names that no finished or recovered op leaves inside its table
+_DEBRIS = ("._old", "._new", "._rebal", "_lmds_compacting", "_lmds_compacted")
 
 
 @pytest.mark.parametrize("op", SWAP_OPS)
@@ -283,8 +338,9 @@ def test_crash_at_every_fs_call_then_replay(spark, tmp_path, monkeypatch, op):
     """Batch 0 seeds the table; batch 1 is the op under test.  For every
     filesystem call k of an uncrashed batch 1: a fresh copy of the seeded
     table, batch 1 crashed at call k, batch 1 replayed — the rows equal
-    the uncrashed run's and no ._applying/._old/._scratch/._compacting
-    directory is left beside the table."""
+    the uncrashed run's, no ._applying/._old/._scratch/._compacting
+    directory is left beside the table, and no rebalance set-aside or
+    compaction record is left inside it."""
     run, read = op
     root = str(tmp_path)
     seed = os.path.join(root, "seed", "t")
@@ -314,3 +370,6 @@ def test_crash_at_every_fs_call_then_replay(spark, tmp_path, monkeypatch, op):
         run(spark, table, 1)  # the replay
         assert rows(table) == want, (k, calls[k])
         assert os.listdir(os.path.dirname(table)) == ["t"], (k, calls[k])
+        assert not [
+            p for p in _listing(table) if p.endswith(_DEBRIS)
+        ], (k, calls[k])
