@@ -113,7 +113,12 @@ def read_index(
     by (:func:`compact_index` restores directory pruning).  An index
     that stores no rows (built from none) reads as zero rows of
     ``schema``, a DDL string; without one it fails as an empty parquet
-    directory does."""
+    directory does.
+
+    Nothing here recovers a failed :func:`compact_index`: until it is
+    run again, the torn fold's partial base files are read beside the
+    intact delta zone, so some rows are read twice.  After a failed
+    compaction, rerun :func:`compact_index` before serving reads."""
     data = _data(path)
     frames = []
     if os.path.isdir(data) and any("=" in n for n in os.listdir(data)):
@@ -138,7 +143,9 @@ def _recover_compaction(path: str) -> None:
     legitimate base), and the listed delta files are deleted
     (idempotent).  An intent alone means the fold is incomplete: base
     files and partitions its inventory does not list are removed, and
-    the delta files, still intact, fold again on the rerun."""
+    the delta files, still intact, fold again on the rerun.  The delta
+    zone itself is never rolled back: the fold does not write into it,
+    and appends made after the torn fold are committed batches."""
     done = read_state(path, _COMPACTED)
     if done is not None:
         if os.path.exists(os.path.join(path, _COMPACTING)):
@@ -151,7 +158,10 @@ def _recover_compaction(path: str) -> None:
         return
     intent = read_state(path, _COMPACTING)
     if intent is not None:
-        rollback_inventory(path, intent.get("existing", {}))
+        existing = intent.get("existing", {})
+        if os.path.isdir(_delta(path)):
+            existing[_DELTA] = os.listdir(_delta(path))
+        rollback_inventory(path, existing)
         os.remove(os.path.join(path, _COMPACTING))
 
 
@@ -168,7 +178,8 @@ def compact_index(spark, path: str) -> int:
     fold's partials are removed and the fold reruns; delta files are not
     touched until the fold is complete), and the completion record is
     written BEFORE the intent is retired, so the fold's output never
-    exists without a marker.
+    exists without a marker.  A failed compaction leaves rows that
+    :func:`read_index` returns twice until this is run again.
 
     Refuses while an append intent is pending: the delta zone may then
     hold a crashed append's partial files, and folding them would put

@@ -1218,7 +1218,11 @@ def stream_embeddings_to_ivf_index(
     ``rebalance_imbalance`` is set, any batch that leaves
     ``ivf_cell_stats``'s max/mean occupancy above it triggers
     :func:`rebalance_ivf_index` — the full index-maintenance loop
-    (ingest → drift watch → split) as one streaming sink."""
+    (ingest → drift watch → split) as one streaming sink.  Appended rows
+    sit in the delta zone, which stored queries read whole, until
+    :func:`index_layout.compact_index` folds them into the cells; only a
+    rebalance compacts here, so without one run ``compact_index``
+    between stream runs (SCALE.md has the measured query cost)."""
 
     def apply(batch: DataFrame, batch_id: int, run_id: str) -> None:
         spark = batch.sparkSession

@@ -1071,6 +1071,61 @@ def test_pq_compaction_refuses_pending_append_intent(spark, tmp_path):
     assert not os.path.exists(os.path.join(idx, "_lmds_appending"))
 
 
+def test_ivf_and_pq_appends_survive_torn_compaction(
+    spark, tmp_path, monkeypatch
+):
+    """A compaction that fails after its intent leaves the delta zone
+    intact, and the stream keeps appending into it.  The next
+    compact_index rolls back only the torn fold: a batch appended in
+    between is committed (its applied marker skips any replay), so it
+    must survive the rollback, and every vector is then present exactly
+    once — for IVF and PQ alike."""
+    import pytest
+    from pyspark.sql import functions as F
+
+    from label_maker_dask_spark.operators import index_layout
+    from label_maker_dask_spark.operators.index_layout import (
+        compact_index,
+        read_index,
+    )
+    from label_maker_dask_spark.operators.similarity import (
+        append_ivf_index_exactly_once,
+        append_pq_index_exactly_once,
+        write_ivf_index,
+        write_pq_index,
+    )
+
+    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    for kind, write, append in (
+        ("ivf", lambda df, p: write_ivf_index(df, p, n_cells=8),
+         append_ivf_index_exactly_once),
+        ("pq", write_pq_index, append_pq_index_exactly_once),
+    ):
+        idx = str(tmp_path / kind)
+        write(emb.where(F.col("vec_id") < 300), idx)
+        assert append(emb.where(F.col("vec_id").between(300, 399)), idx, 0, "r1")
+
+        # the fold completes but the completion record is never written:
+        # the intent alone is left, with the fold's files in the base
+        real_write_state = index_layout.write_state
+
+        def failing(p, name, state):
+            if name == "_lmds_compacted":
+                raise OSError("injected: fold failed before completion")
+            real_write_state(p, name, state)
+
+        monkeypatch.setattr(index_layout, "write_state", failing)
+        with pytest.raises(OSError, match="injected"):
+            compact_index(spark, idx)
+        monkeypatch.setattr(index_layout, "write_state", real_write_state)
+
+        assert append(emb.where(F.col("vec_id") >= 400), idx, 1, "r1")
+        assert compact_index(spark, idx) > 0
+        ids = read_index(spark, idx).groupBy("vec_id").count()
+        assert ids.where("count > 1").count() == 0, kind
+        assert ids.count() == emb.count(), kind
+
+
 def test_pq_join_form_equals_broadcast_form(spark, tmp_path):
     """pq_adc_topk_join (shuffle-join, corpus-sized queries) must return
     exactly pq_adc_topk_stored's results over the same stored index —
