@@ -228,8 +228,8 @@ def main() -> None:
     # append new vectors under the FROZEN codebooks (they land in the
     # index's delta zone), compact the deltas back into bucket partitions,
     # and query by asymmetric distance — the FAISS-style triad's PQ
-    # member, next to the IVF and SQ8 paths.  Every stored index (IVF,
-    # PQ, SRP) keeps this one layout: operators/index_layout.py.
+    # member, next to the IVF and SQ8 paths.  Both stored indexes (IVF
+    # and PQ) keep this one layout: operators/index_layout.py.
     from label_maker_dask_spark.operators.index_layout import compact_index
     from label_maker_dask_spark.operators.similarity import (
         append_pq_index,

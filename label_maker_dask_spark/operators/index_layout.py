@@ -1,13 +1,12 @@
 """The one stored layout of the ANN indexes in :mod:`operators.similarity`.
 
 An index at ``<path>`` keeps its sidecar (IVF ``centroids``, PQ
-``codebook``; SRP needs none) beside ``<path>/data``, which holds its
-rows in two parts:
+``codebook``) beside ``<path>/data``, which holds its rows in two parts:
 
 - the **base**, partitioned by the index's assignment column
-  (``data/<col>=v/``: IVF ``cell``, PQ and SRP ``bucket``, multi-table
-  SRP ``tbl`` then ``bucket``), written by the build (:func:`write_base`),
-  so a predicate on that column prunes whole directories at the scan;
+  (``data/<col>=v/``: IVF ``cell``, PQ ``bucket``), written by the build
+  (:func:`write_base`), so a predicate on that column prunes whole
+  directories at the scan;
 - the **delta zone** ``data/_delta``, where every append lands
   (:func:`append_delta`) as files sorted by the partition column.  One
   append is one directory write however many partitions it touches
@@ -63,11 +62,11 @@ def _delta_files(path: str) -> list:
     return sorted(f for f in os.listdir(d) if not f.startswith(("_", ".")))
 
 
-def write_base(rows: DataFrame, path: str, *cols: str) -> None:
-    """(Re)write the index's rows as its base, partitioned by ``cols``,
+def write_base(rows: DataFrame, path: str, col: str) -> None:
+    """(Re)write the index's rows as its base, partitioned by ``col``,
     with an empty delta zone: the zone exists from the build on, so the
     pre-append inventory of every exactly-once append lists it."""
-    rows.write.partitionBy(*cols).mode("overwrite").parquet(_data(path))
+    rows.write.partitionBy(col).mode("overwrite").parquet(_data(path))
     os.makedirs(_delta(path), exist_ok=True)
 
 

@@ -1,17 +1,27 @@
 """Similarity search over embedding columns (SURVEY.md Part B).
 
-Two paths:
+The families, all ranked by the one top-k order of :func:`_top_k`:
 
-- **Brute-force cosine top-k** (the exactness baseline): broadcast the query
-  set against the corpus — a narrow map-side join, one window for per-query
-  top-k.  Cost is O(|queries| * |corpus|) dot products, all JVM-side via
-  higher-order functions; correct at any scale where the *query set* is
-  broadcastable (the corpus streams, never collects).
-- **LSH-bucketed ANN** (the scale path): deterministic signed-random-
-  projection bucketing; only same-bucket pairs are compared.  Probe cost
-  follows bucket occupancy instead of corpus size.  The projection
-  coefficients are arithmetic (index-derived), so the operator needs no
-  stored model and both engines can replay it.
+- **Brute force** (:func:`cosine_topk`, :func:`neardup_exact_pairs`): the
+  exactness baseline.  The small query set rides the task closure and the
+  corpus streams through an Arrow scorer of exact left-fold dots.
+- **SRP** (signed random projections: :func:`lsh_topk`,
+  :func:`lsh_multitable_topk`, :func:`embedding_neardup_pairs`): one Arrow
+  pass (:func:`srp_units`) buckets each vector in one or more hyperplane
+  tables, and only same-bucket pairs are scored.  The coefficients are
+  index-derived arithmetic, so there is no model to store and DuckDB
+  replays the buckets (:func:`srp_bucket_sql`).
+- **IVF** (inverted file: :func:`ivf_topk`, :func:`ivf_topk_join`): Voronoi
+  cells around the lowest-id vectors; each query scores only its
+  ``n_probe`` nearest cells.
+- **SQ8** (:func:`sq8_rescore_topk`) and **PQ** (:func:`pq_adc_topk`):
+  1-byte codes rank the SRP candidates; :func:`exact_rescore_topk` re-ranks
+  a quantized top-R with exact folds.
+- **Stored indexes**: IVF (:func:`write_ivf_index`,
+  :func:`ivf_topk_stored`) and PQ (:func:`write_pq_index`,
+  :func:`pq_adc_topk_stored`) keep the one layout of
+  :mod:`operators.index_layout` (partitioned base, appendable delta zone,
+  crash-safe compaction).
 """
 
 from __future__ import annotations
@@ -50,10 +60,11 @@ def _collect_queries(queries: DataFrame, id_col: str, vec_col: str, max_queries:
         raise ValueError(
             f"{op}: query set exceeds max_queries={max_queries}. The "
             "brute-force/IVF paths collect and broadcast the query side; "
-            "for large query sets use lsh_topk / lsh_topk_stored "
-            "(bucket-join, no collect) or write_ivf_index + ivf_topk_stored "
-            "with a chunked query loop, or raise max_queries explicitly if "
-            "the driver can hold the set."
+            "for large query sets use lsh_topk / lsh_multitable_topk "
+            "(bucket-join, no collect), ivf_topk_join (cell join, no "
+            "collect) or write_ivf_index + ivf_topk_stored with a chunked "
+            "query loop, or raise max_queries explicitly if the driver can "
+            "hold the set."
         )
     return qpd
 
@@ -161,15 +172,15 @@ def cosine_topk(
 
     qpd = _collect_queries(queries, id_col, vec_col, max_queries, "cosine_topk")
     q_ids = qpd[id_col].to_numpy()
-    qm = _unit_exact(np.stack(qpd[vec_col].to_numpy()).astype(np.float64))
+    qm = _unit_exact(_matrix(qpd[vec_col]))
     take = k + 1
 
     def score(batches):
         for pdf in batches:
-            if len(pdf) == 0:
+            if len(pdf) == 0 or len(q_ids) == 0:
                 continue
             ids = pdf[id_col].to_numpy()
-            cm = _unit_exact(np.stack(pdf[vec_col].to_numpy()).astype(np.float64))
+            cm = _unit_exact(_matrix(pdf[vec_col]))
             # sort batch rows by neighbor id so a row's index IS its id
             # rank — the tie-break key below stays a scalar
             id_order = np.argsort(ids, kind="stable")
@@ -205,6 +216,16 @@ def cosine_topk(
     return _scored_top_k(embeddings.select(id_col, vec_col), score, id_col, k)
 
 
+def _matrix(vectors):
+    """The float64 (rows, dim) matrix of a pandas column of vectors; a
+    (0, 0) matrix for no rows, which ``np.stack`` refuses."""
+    import numpy as np
+
+    if len(vectors) == 0:
+        return np.zeros((0, 0))
+    return np.stack(vectors.to_numpy()).astype(np.float64)
+
+
 def _unit_exact(mat):
     """Unit-normalize rows with the exact left-fold norm (loop over the
     dim axis; bit-identical to the expression/SQL fold, unlike
@@ -220,18 +241,20 @@ def _unit_exact(mat):
 def _dots_exact(a, b):
     """(n,dim) x (m,dim) -> (n,m) dot products accumulated left-to-right
     over the dim axis — the vectorized twin of the fold dot, bit-identical
-    to the SQL oracle (never BLAS matmul)."""
+    to the SQL oracle (never BLAS matmul).  An empty side gives an empty
+    product, whatever the other side's width."""
     import numpy as np
 
     dp = np.zeros((len(a), len(b)))
+    if dp.size == 0:
+        return dp
     for d in range(a.shape[1]):
         dp = dp + a[:, d : d + 1] * b[:, d][None, :]
     return dp
 
 
 def _score_probed(ids, cells, xm, q_ids, qm, probe, take):
-    """Shared per-batch IVF scorer (on-the-fly and stored-index paths MUST
-    use the same candidate cut or their bit-identity breaks): for each
+    """The per-batch IVF scorer of :func:`_ivf_probe_topk`: for each
     query, score unit rows whose cell is probed and keep the batch
     top-``take`` under the (rounded sim desc, neighbor asc) order the
     final window also uses.  Returns a DataFrame or None."""
@@ -301,12 +324,14 @@ def srp_bucket(
     """Signed-random-projection bucket id: bit j = sign of <vec, r_j>.
     ``plane_offset`` selects the hyperplane family (multi-table LSH).
 
-    Stays the interpreted fold on purpose: this expression form only
-    runs once per ROW (not per pair), so per-row cost is negligible,
-    while an unrolled n_planes*dim chain multiplies the plan size and
-    measurably slows analysis/codegen of every query embedding it
-    (round-17 measurement; the per-PAIR scoring path is where
-    ``dot_fixed`` pays off)."""
+    Stays beside the Arrow pass :func:`srp_units` on purpose: the SQ8
+    encode and PQ build/query projections compute the bucket inline in
+    the projection that already reads the vector, where ``srp_units``
+    would add a ``mapInPandas`` and a join back on the id.  Swapped in,
+    that measured slower in ``bench.py`` at sf0.1 (4 cores, median of
+    3 runs x 3 passes): ``similarity_pq_index_build`` 4.17 -> 4.55 s,
+    ``similarity_pq_adc_topk_ann`` 1.57 -> 2.04 s,
+    ``similarity_sq8_rescore_ann`` 0.82 -> 0.83 s."""
     bits = []
     for bit in range(n_planes):
         j = plane_offset + bit
@@ -328,9 +353,14 @@ def srp_units(
     dim: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
+    n_tables: int = 1,
 ) -> DataFrame:
-    """Arrow-vectorized twin of ``srp_bucket`` + ``normalized``: one
-    ``mapInPandas`` pass emitting ``(id, unit vector, bucket)``.
+    """The one SRP signature pass: one ``mapInPandas`` emitting
+    ``(id, unit vector, tbl, bucket)``, ``n_tables`` rows per input row,
+    table t bucketed by hyperplanes ``t*n_planes..(t+1)*n_planes-1``
+    (table 0 is the single-table family of :func:`srp_bucket`).  All
+    ``n_tables * n_planes`` projections come from one batched fold, so L
+    tables cost one corpus pass, not L.
 
     Bit-exactness contract: every fold is evaluated left-to-right per
     element — a Python loop over the (fixed, small) dim axis with numpy
@@ -343,7 +373,10 @@ def srp_units(
     import pandas as pd
 
     coeffs = np.array(
-        [[projection_coeff(j, d) for d in range(dim)] for j in range(n_planes)]
+        [
+            [projection_coeff(j, d) for d in range(dim)]
+            for j in range(n_tables * n_planes)
+        ]
     )
     id_type = df.schema[id_col].dataType.simpleString()
 
@@ -351,26 +384,66 @@ def srp_units(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            ids = pdf[id_col].to_numpy()
-            mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            mat = _matrix(pdf[vec_col])
             unit = _unit_exact(mat)
-            dp = _dots_exact(mat, coeffs)  # (n, n_planes), raw-vector dots
-            bucket = np.zeros(len(mat), dtype=np.int64)
-            for j in range(n_planes):
-                bucket |= (dp[:, j] > 0).astype(np.int64) << j
+            signs = (_dots_exact(mat, coeffs) > 0).astype(np.int64)
+            buckets = np.zeros((len(mat), n_tables), dtype=np.int64)
+            for t in range(n_tables):
+                for bit in range(n_planes):
+                    buckets[:, t] |= signs[:, t * n_planes + bit] << bit
             yield pd.DataFrame(
                 {
-                    id_alias: ids,
-                    vec_alias: list(unit),
-                    "bucket": bucket.astype("int32"),
+                    id_alias: np.repeat(pdf[id_col].to_numpy(), n_tables),
+                    vec_alias: [u for u in unit for _ in range(n_tables)],
+                    "tbl": np.tile(
+                        np.arange(n_tables, dtype=np.int32), len(mat)
+                    ),
+                    "bucket": buckets.reshape(-1).astype("int32"),
                 }
             )
 
-    # no floor: per-row work is a fixed n_planes*dim stencil — serial is
-    # fine for small inputs, scans parallelize large ones (r17 A/B)
+    # no floor: per-row work is a fixed L*n_planes*dim stencil — serial
+    # is fine for small inputs, scans parallelize large ones (r17 A/B)
     return df.select(id_col, vec_col).mapInPandas(
-        gen, f"{id_alias} {id_type}, {vec_alias} array<double>, bucket int"
+        gen,
+        f"{id_alias} {id_type}, {vec_alias} array<double>, "
+        "tbl int, bucket int",
     )
+
+
+def _srp_topk(
+    embeddings, queries, k, n_planes, n_tables, dim, id_col, vec_col,
+    multiprobe=0,
+):
+    """The one SRP top-k body of :func:`lsh_topk` and
+    :func:`lsh_multitable_topk`: the broadcast query side meets the
+    corpus in an EQUI-join on (tbl, bucket), multi-probe explodes the
+    query side over its Hamming-1 buckets, and with several tables the
+    (query, neighbor) pairs colliding in more than one table collapse
+    BEFORE scoring (value-deterministic: every copy carries the same unit
+    vectors), so each pair is scored once."""
+    c = srp_units(
+        embeddings, "neighbor_id", "cv", n_planes, dim, id_col, vec_col,
+        n_tables,
+    )
+    q = srp_units(
+        queries, "query_id", "qv", n_planes, dim, id_col, vec_col, n_tables
+    )
+    if multiprobe:
+        probes = F.array(
+            F.col("bucket"),
+            *[
+                F.col("bucket").bitwiseXOR(F.lit(1 << j))
+                for j in range(n_planes)
+            ],
+        )
+        q = q.withColumn("bucket", F.explode(probes))
+    cand = c.join(F.broadcast(q), ["tbl", "bucket"]).where(
+        F.col("query_id") != F.col("neighbor_id")
+    )
+    if n_tables > 1:
+        cand = cand.dropDuplicates(["query_id", "neighbor_id"])
+    return _cosine_top_k(cand, k, dim)
 
 
 def lsh_topk(
@@ -406,113 +479,8 @@ def lsh_topk(
             "lsh_multitable_topk (L independent tables, the high-recall "
             "tier) or IVF probes (ivf_topk) for a tunable recall/cost dial"
         )
-    c = srp_units(embeddings, "neighbor_id", "cv", n_planes, dim, id_col, vec_col)
-    q = srp_units(queries, "query_id", "qv", n_planes, dim, id_col, vec_col)
-    if multiprobe:
-        probes = F.array(
-            F.col("bucket"),
-            *[
-                F.col("bucket").bitwiseXOR(F.lit(1 << j))
-                for j in range(n_planes)
-            ],
-        )
-        q = q.withColumn("bucket", F.explode(probes))
-    return _cosine_top_k(
-        c.join(F.broadcast(q), "bucket").where(
-            F.col("query_id") != F.col("neighbor_id")
-        ),
-        k,
-        dim,
-    )
-
-
-#: per-bucket occupancy the plane ladder targets (same figure as the IVF
-#: cell ladder: a bucket's candidates stay a constant-sized unit of work)
-SRP_TARGET_OCCUPANCY = 64
-
-
-def srp_auto_planes(n: int, n_tables: int = 1) -> int:
-    """Corpus-scaled plane count: the SRP twin of ``_ivf_auto_cells``.
-
-    A FIXED ``n_planes`` fixes the bucket count at ``2^b`` per table, so
-    per-bucket occupancy — and with it candidate volume per query —
-    grows linearly with the corpus (the round-16 scaling probe measured
-    exp 0.95 on the top decade at b=8).  Sizing ``b = ceil(log2(n /
-    SRP_TARGET_OCCUPANCY))`` keeps expected occupancy ~constant, making
-    probe work per query O(1) in corpus size; each extra plane halves
-    occupancy, and the plane family is an infinite deterministic
-    coefficient stream (:func:`projection_coeff`), so raising b is a
-    re-bucketing, not a redesign.  ``n_tables`` does not change the
-    sizing: L multiplies the candidate constant, never the growth
-    exponent — recall, not occupancy, is what L buys.
-
-    Floor 3 (8 buckets — below that bucketing stops pruning), cap 24
-    (16M buckets per table covers 10^9 vectors at the target occupancy;
-    beyond that the INT bucket id would need widening first)."""
-    import math
-
-    if n <= SRP_TARGET_OCCUPANCY:
-        return 3
-    return max(3, min(24, math.ceil(math.log2(n / SRP_TARGET_OCCUPANCY))))
-
-
-def srp_units_tables(
-    df: DataFrame,
-    id_alias: str,
-    vec_alias: str,
-    n_planes: int = 8,
-    n_tables: int = 4,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Multi-table twin of :func:`srp_units`: one Arrow pass emitting
-    ``(id, unit vector, tbl, bucket)`` — ``n_tables`` rows per input row,
-    table t bucketed by hyperplanes ``t*n_planes..(t+1)*n_planes-1``.
-    All ``n_tables * n_planes`` projections are computed in a single
-    batched fold (numpy across rows, Python loop over the fixed plane
-    axis — the same left-to-right bit-exactness contract as
-    ``srp_units``), so the multi-table index costs one corpus pass, not
-    L."""
-    import numpy as np
-    import pandas as pd
-
-    total = n_tables * n_planes
-    coeffs = np.array(
-        [[projection_coeff(j, d) for d in range(dim)] for j in range(total)]
-    )
-    id_type = df.schema[id_col].dataType.simpleString()
-
-    def gen(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ids = pdf[id_col].to_numpy()
-            mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            unit = _unit_exact(mat)
-            dp = _dots_exact(mat, coeffs)  # (n, n_tables * n_planes)
-            signs = (dp > 0).astype(np.int64)
-            n = len(mat)
-            buckets = np.zeros((n, n_tables), dtype=np.int64)
-            for t in range(n_tables):
-                for bit in range(n_planes):
-                    buckets[:, t] |= signs[:, t * n_planes + bit] << bit
-            yield pd.DataFrame(
-                {
-                    id_alias: np.repeat(ids, n_tables),
-                    vec_alias: [u for u in unit for _ in range(n_tables)],
-                    "tbl": np.tile(
-                        np.arange(n_tables, dtype=np.int32), n
-                    ),
-                    "bucket": buckets.reshape(-1).astype("int32"),
-                }
-            )
-
-    # no floor: fixed L*n_planes*dim per-row stencil (see srp_units)
-    return df.select(id_col, vec_col).mapInPandas(
-        gen,
-        f"{id_alias} {id_type}, {vec_alias} array<double>, "
-        "tbl int, bucket int",
+    return _srp_topk(
+        embeddings, queries, k, n_planes, 1, dim, id_col, vec_col, multiprobe
     )
 
 
@@ -539,24 +507,12 @@ def lsh_multitable_topk(
     Scale shape: the corpus emits L index rows per vector in ONE Arrow
     pass (the L-times index size every multi-table LSH deployment pays);
     the join stays an EQUI-join on the composite (tbl, bucket) key with
-    the query side broadcast; duplicate (query, neighbor) candidates —
-    pairs colliding in several tables — collapse BEFORE scoring via
-    dropDuplicates (value-deterministic: every copy carries the same
-    unit vectors), so each surviving pair is scored exactly once and the
-    candidate-work bound is sum over tables of per-bucket occupancy."""
-    c = srp_units_tables(
-        embeddings, "neighbor_id", "cv", n_planes, n_tables, dim,
-        id_col, vec_col,
+    the query side broadcast, and colliding pairs collapse before
+    scoring (:func:`_srp_topk`), so the candidate-work bound is the sum
+    over tables of per-bucket occupancy."""
+    return _srp_topk(
+        embeddings, queries, k, n_planes, n_tables, dim, id_col, vec_col
     )
-    q = srp_units_tables(
-        queries, "query_id", "qv", n_planes, n_tables, dim, id_col, vec_col
-    )
-    cand = (
-        c.join(F.broadcast(q), ["tbl", "bucket"])
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .dropDuplicates(["query_id", "neighbor_id"])
-    )
-    return _cosine_top_k(cand, k, dim)
 
 
 def embedding_neardup_pairs(
@@ -705,6 +661,61 @@ def neardup_exact_pairs(
     )
 
 
+def _seed_centroids(
+    embeddings: DataFrame, n_cells: int, id_col: str, vec_col: str
+):
+    """The coarse quantizer every IVF build starts from: the ``n_cells``
+    lowest-id vectors, unit-normalized (none for an empty corpus)."""
+    cpd = embeddings.orderBy(id_col).limit(n_cells).select(vec_col).toPandas()
+    return _unit_exact(_matrix(cpd[vec_col]))
+
+
+def _stored_centroids(spark, path: str):
+    """A stored IVF index's unit centroids, in cell order."""
+    cent = spark.read.parquet(path + "/centroids").orderBy("cell").toPandas()
+    return _matrix(cent["cv"])
+
+
+def _ivf_probe_topk(
+    queries, cm, corpus, k, n_probe, id_col, vec_col, max_queries, op
+):
+    """The one IVF probe-and-score body of :func:`ivf_topk` and
+    :func:`ivf_topk_stored`: collect the queries, pick each query's
+    ``n_probe`` nearest of the unit centroids ``cm`` (ties by cell
+    index, stable), and score the rows of ``corpus(probed cells)`` that
+    lie in a probed cell with :func:`_score_probed`.  A row's cell is
+    its stored ``cell`` column when the corpus has one, else its nearest
+    centroid, computed on the fly.  No queries or no centroids probe
+    nothing and give zero rows."""
+    import numpy as np
+
+    qpd = _collect_queries(queries, id_col, vec_col, max_queries, op)
+    q_ids = qpd[id_col].to_numpy()
+    qm = _unit_exact(_matrix(qpd[vec_col]))
+    probe = np.argsort(
+        -_dots_exact(qm, cm), kind="stable", axis=1
+    )[:, :n_probe]
+    rows = corpus(sorted({int(c) for c in probe.ravel()}))
+    take = k + 1
+
+    def score(batches):
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            xm = _unit_exact(_matrix(pdf[vec_col]))
+            if "cell" in pdf.columns:
+                cells = pdf["cell"].to_numpy()
+            else:
+                cells = np.argmax(_dots_exact(xm, cm), axis=1)
+            out = _score_probed(
+                pdf[id_col].to_numpy(), cells, xm, q_ids, qm, probe, take
+            )
+            if out is not None:
+                yield out
+
+    return _scored_top_k(rows, score, id_col, k)
+
+
 def ivf_topk(
     embeddings: DataFrame,
     queries: DataFrame,
@@ -730,33 +741,12 @@ def ivf_topk(
     per element (never BLAS matmul / pairwise summation), so cell
     assignment, probe ranking, and scores are bit-exact replayable — the
     oracle recomputes the identical result in SQL."""
-    import numpy as np
-    import pandas as pd
-
-    cpd = (
-        embeddings.orderBy(id_col).limit(n_cells).select(vec_col).toPandas()
+    return _ivf_probe_topk(
+        queries,
+        _seed_centroids(embeddings, n_cells, id_col, vec_col),
+        lambda _cells: embeddings.select(id_col, vec_col),
+        k, n_probe, id_col, vec_col, max_queries, "ivf_topk",
     )
-    cm = _unit_exact(np.stack(cpd[vec_col].to_numpy()).astype(np.float64))
-
-    qpd = _collect_queries(queries, id_col, vec_col, max_queries, "ivf_topk")
-    q_ids = qpd[id_col].to_numpy()
-    qm = _unit_exact(np.stack(qpd[vec_col].to_numpy()).astype(np.float64))
-    # per query: the n_probe nearest cells (ties by cell index, stable)
-    probe = np.argsort(-_dots_exact(qm, cm), kind="stable", axis=1)[:, :n_probe]
-    take = k + 1
-
-    def score(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ids = pdf[id_col].to_numpy()
-            xm = _unit_exact(np.stack(pdf[vec_col].to_numpy()).astype(np.float64))
-            cells = np.argmax(_dots_exact(xm, cm), axis=1)
-            out = _score_probed(ids, cells, xm, q_ids, qm, probe, take)
-            if out is not None:
-                yield out
-
-    return _scored_top_k(embeddings.select(id_col, vec_col), score, id_col, k)
 
 
 def write_ivf_index(
@@ -772,18 +762,15 @@ def write_ivf_index(
     same exact left-fold arithmetic as ``ivf_topk``, so a stored-index
     query returns the identical result — the only difference is that
     non-probed cells are pruned at the parquet scan instead of filtered
-    after a full read."""
-    import numpy as np
+    after a full read.  An empty corpus gives an index with no centroids
+    and no rows, which answers zero rows."""
     import pandas as pd
 
-    cpd = embeddings.orderBy(id_col).limit(n_cells).select(vec_col).toPandas()
-    craw = np.stack(cpd[vec_col].to_numpy()).astype(np.float64)
-    cm = _unit_exact(craw)
-    spark = embeddings.sparkSession
-    spark.createDataFrame(
+    cm = _seed_centroids(embeddings, n_cells, id_col, vec_col)
+    embeddings.sparkSession.createDataFrame(
         pd.DataFrame(
             {
-                "cell": range(n_cells),
+                "cell": range(len(cm)),
                 "cv": [[float(x) for x in v] for v in cm],
             }
         ),
@@ -805,9 +792,7 @@ def _assigned_cells(embeddings: DataFrame, cm, id_col: str, vec_col: str) -> Dat
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            xm = _unit_exact(
-                np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            )
+            xm = _unit_exact(_matrix(pdf[vec_col]))
             out = pdf[[id_col, vec_col]].copy()
             out["cell"] = np.argmax(_dots_exact(xm, cm), axis=1).astype("int32")
             yield out
@@ -835,7 +820,9 @@ def append_ivf_index(
     assignment and scoring depend only on the centroids — which this
     operation never changes.  (A from-scratch ``write_ivf_index`` on the
     union could pick different seed centroids and so different — equally
-    valid — probe sets; pin the quantizer by appending.)
+    valid — probe sets; pin the quantizer by appending.)  An index built
+    from no vectors has no centroids to assign under: appending to it
+    raises ``ValueError``; rebuild it with ``write_ivf_index``.
 
     100 TB posture: this is how an embedding index tracks a growing
     corpus — per batch, one narrow Arrow pass over only the NEW vectors
@@ -845,11 +832,13 @@ def append_ivf_index(
     :func:`index_layout.compact_index` folds it into the cell
     partitions (and :func:`rebalance_ivf_index` compacts first).
     """
-    import numpy as np
-
-    spark = new_embeddings.sparkSession
-    cent = spark.read.parquet(path + "/centroids").orderBy("cell").toPandas()
-    cm = np.stack(cent["cv"].to_numpy()).astype(np.float64)
+    cm = _stored_centroids(new_embeddings.sparkSession, path)
+    if len(cm) == 0:
+        raise ValueError(
+            f"append_ivf_index: index {path!r} has no centroids (it was "
+            "built from no vectors), so appended rows have no cell; "
+            "rebuild it with write_ivf_index over the vectors instead"
+        )
     append_delta(
         _assigned_cells(new_embeddings, cm, id_col, vec_col), path, "cell"
     )
@@ -887,17 +876,14 @@ def ivf_topk_join(
     import numpy as np
     import pandas as pd
 
-    cpd = embeddings.orderBy(id_col).limit(n_cells).select(vec_col).toPandas()
-    cm = _unit_exact(np.stack(cpd[vec_col].to_numpy()).astype(np.float64))
+    cm = _seed_centroids(embeddings, n_cells, id_col, vec_col)
     id_type = embeddings.schema[id_col].dataType.simpleString()
 
     def corpus_gen(batches):
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            xm = _unit_exact(
-                np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            )
+            xm = _unit_exact(_matrix(pdf[vec_col]))
             yield pd.DataFrame(
                 {
                     "neighbor_id": pdf[id_col].to_numpy(),
@@ -917,22 +903,18 @@ def ivf_topk_join(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            qm = _unit_exact(
-                np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            )
+            qm = _unit_exact(_matrix(pdf[vec_col]))
             probe = np.argsort(
                 -_dots_exact(qm, cm), kind="stable", axis=1
             )[:, :n_probe]
-            ids = np.repeat(pdf[id_col].to_numpy(), n_probe)
-            vecs = [
-                [float(x) for x in qm[j]]
-                for j in range(len(qm))
-                for _ in range(n_probe)
-            ]
+            # probe.shape[1] < n_probe when there are fewer cells
+            per_q = probe.shape[1]
             yield pd.DataFrame(
                 {
-                    "query_id": ids,
-                    "qv": vecs,
+                    "query_id": np.repeat(pdf[id_col].to_numpy(), per_q),
+                    "qv": [
+                        [float(x) for x in q] for q in qm for _ in range(per_q)
+                    ],
                     "cell": probe.ravel().astype("int32"),
                 }
             )
@@ -953,6 +935,17 @@ def ivf_topk_join(
     return _top_k(scored, k)
 
 
+def _cell_occupancy(spark, path: str):
+    """({cell: rows}, mean rows per cell) of a stored IVF index, base and
+    delta zone; ({}, 0.0) for an index that stores no rows."""
+    counts = {
+        r["cell"]: r["count"]
+        for r in read_index(spark, path, schema="cell int")
+        .groupBy("cell").count().collect()
+    }
+    return counts, sum(counts.values()) / max(len(counts), 1)
+
+
 def ivf_cell_stats(spark, path: str) -> dict:
     """Cell-occupancy drift metrics for a stored IVF index.  After heavy
     appends under a frozen quantizer (``append_ivf_index``), inserts
@@ -964,19 +957,11 @@ def ivf_cell_stats(spark, path: str) -> dict:
     ``oversized`` lists cells above 2x mean — the signal to run
     :func:`rebalance_ivf_index`.  Cost: one partition-column aggregate
     (a metadata-cheap scan of cell ids only, plus the delta zone's)."""
-    counts = {
-        r["cell"]: r["n"]
-        for r in read_index(spark, path)
-        .groupBy("cell")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    total = sum(counts.values())
-    mean = total / max(len(counts), 1)
+    counts, mean = _cell_occupancy(spark, path)
     mx = max(counts.values(), default=0)
     return {
         "n_cells": len(counts),
-        "total": total,
+        "total": sum(counts.values()),
         "mean": mean,
         "max": mx,
         "imbalance": mx / mean if mean else 0.0,
@@ -1098,24 +1083,18 @@ def _rebalance_ivf_round(
     import os
     import shutil
 
-    import numpy as np
     import pandas as pd
 
     recover_ivf_rebalance(path)
     compact_index(spark, path)
-    data = read_index(spark, path)
-    counts = {
-        r["cell"]: r["n"]
-        for r in data.groupBy("cell").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    total = sum(counts.values())
-    mean = total / max(len(counts), 1)
+    counts, mean = _cell_occupancy(spark, path)
     oversized = sorted(
         c for c, n in counts.items() if n > threshold * mean
     )
     if not oversized:
         return []
 
+    data = read_index(spark, path)
     cent = spark.read.parquet(path + "/centroids").orderBy("cell").toPandas()
     next_id = int(cent["cell"].max()) + 1
     staging = path + "/data._rebal"
@@ -1134,9 +1113,7 @@ def _rebalance_ivf_round(
             .select(vec_col)
             .toPandas()
         )
-        sub_cm = _unit_exact(
-            np.stack(seeds[vec_col].to_numpy()).astype(np.float64)
-        )
+        sub_cm = _unit_exact(_matrix(seeds[vec_col]))
         # global ids: sub-cell 0 keeps id c, the rest are appended
         ids = [c] + list(range(next_id, next_id + len(sub_cm) - 1))
         next_id += len(sub_cm) - 1
@@ -1254,165 +1231,24 @@ def ivf_topk_stored(
     computed driver-side from the stored centroids, and the corpus scan is
     filtered with ``cell IN (probed)`` — a PARTITION filter on the base,
     so non-probed cells never leave storage (the pruning `ivf_topk`'s
-    docstring promises; asserted in tests/test_plans.py), and a
-    row-group-stats filter on the delta zone.  Results are identical to
-    the on-the-fly ``ivf_topk`` under the same centroids."""
-    import numpy as np
-    import pandas as pd
-
-    cent = spark.read.parquet(path + "/centroids").orderBy("cell").toPandas()
-    cm = np.stack(cent["cv"].to_numpy()).astype(np.float64)
-
-    qpd = _collect_queries(queries, id_col, vec_col, max_queries, "ivf_topk_stored")
-    q_ids = qpd[id_col].to_numpy()
-    qm = _unit_exact(np.stack(qpd[vec_col].to_numpy()).astype(np.float64))
-    probe = np.argsort(-_dots_exact(qm, cm), kind="stable", axis=1)[:, :n_probe]
-    probed_cells = sorted({int(c) for row in probe for c in row})
-    take = k + 1
-
-    corpus = read_index(spark, path, F.col("cell").isin(probed_cells))
-
-    def score(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ids = pdf[id_col].to_numpy()
-            cells = pdf["cell"].to_numpy()
-            xm = _unit_exact(
-                np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            )
-            out = _score_probed(ids, cells, xm, q_ids, qm, probe, take)
-            if out is not None:
-                yield out
-
-    return _scored_top_k(
-        corpus.select(id_col, vec_col, "cell"), score, id_col, k
+    docstring promises; asserted in
+    tests/test_similarity.py::test_ivf_stored_index_matches_onthefly_and_prunes),
+    and a row-group-stats filter on the delta zone.  Results are identical
+    to the on-the-fly ``ivf_topk`` under the same centroids: both run
+    :func:`_ivf_probe_topk`.  An index built from no vectors reads as
+    zero rows of the query side's id and vector types."""
+    row = ", ".join(
+        f"`{c}` {queries.schema[c].dataType.simpleString()}"
+        for c in (id_col, vec_col)
     )
-
-
-def write_srp_index(
-    embeddings: DataFrame,
-    path: str,
-    n_planes: int = 8,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Materialize the SRP-LSH index: unit vectors + bucket ids written
-    partitioned by bucket (``<path>/data``).  No centroid sidecar is
-    needed — the hyperplanes are index-derived arithmetic
-    (:func:`projection_coeff`), so any reader recomputes them."""
-    write_base(
-        srp_units(embeddings, id_col, "v", n_planes, dim, id_col, vec_col),
-        path,
-        "bucket",
+    return _ivf_probe_topk(
+        queries,
+        _stored_centroids(spark, path),
+        lambda cells: read_index(
+            spark, path, F.col("cell").isin(cells), f"{row}, cell int"
+        ).select(id_col, vec_col, "cell"),
+        k, n_probe, id_col, vec_col, max_queries, "ivf_topk_stored",
     )
-
-
-def lsh_topk_stored(
-    spark,
-    path: str,
-    queries: DataFrame,
-    k: int = 5,
-    n_planes: int = 8,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """ANN top-k against a stored SRP index: query buckets are computed
-    on the (small) query side, and the corpus scan is filtered with
-    ``bucket IN (query buckets)`` — a PARTITION filter, so non-probed
-    buckets never leave storage.  Results are identical to the on-the-fly
-    :func:`lsh_topk` (same coefficients, same fold arithmetic)."""
-    q = srp_units(queries, "query_id", "qv", n_planes, dim, id_col, vec_col)
-    q_buckets = sorted(
-        r["bucket"] for r in q.select("bucket").distinct().collect()
-    )
-    c = read_index(spark, path, F.col("bucket").isin(q_buckets)).select(
-        F.col(id_col).alias("neighbor_id"), F.col("v").alias("cv"), "bucket"
-    )
-    return _cosine_top_k(
-        c.join(F.broadcast(q), "bucket").where(
-            F.col("query_id") != F.col("neighbor_id")
-        ),
-        k,
-        dim,
-    )
-
-
-def write_srp_multitable_index(
-    embeddings: DataFrame,
-    path: str,
-    n_planes: int = 8,
-    n_tables: int = 4,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Materialize the multi-table SRP index: unit vectors written once
-    per table, partitioned by ``(tbl, bucket)`` — the L-times storage
-    every multi-table LSH deployment provisions, laid out so a query
-    touches only its probed partitions.  Like the single-table index,
-    no sidecar: hyperplanes are index-derived arithmetic any reader
-    recomputes."""
-    write_base(
-        srp_units_tables(
-            embeddings, id_col, "v", n_planes, n_tables, dim,
-            id_col, vec_col,
-        ),
-        path,
-        "tbl",
-        "bucket",
-    )
-
-
-def lsh_multitable_topk_stored(
-    spark,
-    path: str,
-    queries: DataFrame,
-    k: int = 5,
-    n_planes: int = 8,
-    n_tables: int = 4,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """High-recall ANN against a stored multi-table index: the query
-    side computes its L buckets, and the corpus scan is filtered with
-    an OR-of-(tbl, bucket IN ...) predicate — PARTITION filters, so of
-    the L * 2^n_planes partitions only the probed ones leave storage
-    (<= |queries| * L, independent of corpus size).  Results are
-    identical to the on-the-fly :func:`lsh_multitable_topk` (same
-    coefficients, same fold arithmetic, same pair dedup).
-
-    The probed-key collect is bounded by the query-set contract
-    (|queries| * n_tables rows of two ints), mirroring
-    :func:`lsh_topk_stored`."""
-    q = srp_units_tables(
-        queries, "query_id", "qv", n_planes, n_tables, dim, id_col, vec_col
-    )
-    probed: dict = {}
-    for r in q.select("tbl", "bucket").distinct().collect():
-        probed.setdefault(r["tbl"], []).append(r["bucket"])
-    # empty query set → no probed partitions: fold would leave cond=None
-    # and .where(None) raises an opaque error; an always-false predicate
-    # keeps the plan (and output schema) intact and returns zero rows
-    cond = F.lit(False) if not probed else None
-    for t, buckets in sorted(probed.items()):
-        c_t = (F.col("tbl") == t) & F.col("bucket").isin(sorted(buckets))
-        cond = c_t if cond is None else (cond | c_t)
-    c = read_index(spark, path, cond).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col("v").alias("cv"),
-        "tbl",
-        "bucket",
-    )
-    cand = (
-        c.join(F.broadcast(q), ["tbl", "bucket"])
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .dropDuplicates(["query_id", "neighbor_id"])
-    )
-    return _cosine_top_k(cand, k, dim)
 
 
 # ---------------------------------------------------------------------------
@@ -1523,43 +1359,6 @@ def sq8_rescore_topk(
     return _top_k(scored, k, "q8_score")
 
 
-def sq8_rescore_exact_topk(
-    embeddings: DataFrame,
-    query_pred: Column,
-    k: int = 5,
-    rescore: int = 50,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """THREE-stage ANN — the full production SQ8 shape: SRP buckets
-    generate candidates, int8 code dots keep the quantized
-    top-``rescore`` per query, and ONLY those R rows are rescored with
-    exact unit-cosine folds for the final top-k.
-
-    Why: the planted-corpus gates measured the quantized RANKING losing
-    recall as candidate counts grow (0.38 of the 0.56 candidate ceiling
-    at sf0.01, 0.24 at the sf1 replay — near-ties cross the code grid's
-    resolution).  Rescoring the quantized top-R with exact vectors
-    recovers the ceiling at R ~ 10k-fold fewer exact dots than scoring
-    every candidate: the float vectors are touched for R rows per
-    query, never for the candidate set — the memory-bound win of the
-    codes survives.  Gated:
-    ``similarity_recall_sq8_rescored_planted_vs_exact``.
-
-    Determinism: quantized cut ties break (q8_score desc, neighbor
-    asc); final ties (cosine desc, neighbor asc) — both replayed by the
-    oracle.  A true top-k neighbor outside the quantized top-R stays
-    missed (that residual IS the measured recall gap)."""
-    quantized = sq8_rescore_topk(
-        embeddings, query_pred, k=rescore, dim=dim,
-        id_col=id_col, vec_col=vec_col,
-    ).select("query_id", "neighbor_id")
-    return exact_rescore_topk(
-        embeddings, query_pred, quantized, k, id_col, vec_col, dim
-    )
-
-
 def exact_rescore_topk(
     embeddings: DataFrame,
     query_pred: Column,
@@ -1569,10 +1368,23 @@ def exact_rescore_topk(
     vec_col: str = "embedding",
     dim: int = 64,
 ) -> DataFrame:
-    """The shared exact-rescoring stage of the two-stage quantized ANN
-    shapes (:func:`sq8_rescore_exact_topk`, :func:`pq_rescore_exact_
-    topk`): score each (query_id, neighbor_id) candidate pair with the
-    exact unit-cosine fold and keep the per-query top-k.
+    """The one exact-rescoring stage of the quantized ANN shapes: score
+    each (query_id, neighbor_id) candidate pair with the exact
+    unit-cosine fold and keep the per-query top-k.  The candidates are a
+    quantized top-R — ``sq8_rescore_topk`` or ``pq_adc_topk`` at
+    ``k=R`` — so the full production shape is three stages: SRP buckets,
+    a quantized cut, exact folds on R rows per query.
+
+    Why: the planted-corpus gates measured the quantized RANKING losing
+    recall as candidate counts grow (SQ8: 0.38 of the 0.56 candidate
+    ceiling at sf0.01, 0.24 at the sf1 replay — near-ties cross the code
+    grid's resolution).  Rescoring the quantized top-R with exact vectors
+    recovers the ceiling while touching the float vectors for R rows per
+    query, never for the candidate set — the memory-bound win of the
+    codes survives.  R must track per-bucket occupancy, not k.  Gated:
+    ``similarity_recall_{sq8,pq}_rescored_planted_vs_exact``.  A true
+    top-k neighbor outside the quantized top-R stays missed (that
+    residual IS the measured recall gap).
 
     Plan shape: the (queries x R) candidate frame broadcasts INTO the
     corpus scan for the neighbor vectors (the corpus never shuffles),
@@ -1588,32 +1400,6 @@ def exact_rescore_topk(
         ),
         k,
         dim,
-    )
-
-
-def pq_rescore_exact_topk(
-    embeddings: DataFrame,
-    query_pred: Column,
-    k: int = 5,
-    rescore: int = 50,
-    n_sub: int = 8,
-    sub_dim: int = 8,
-    n_codes: int = 16,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """The PQ twin of :func:`sq8_rescore_exact_topk`: ADC ranks the SRP
-    candidates by 1-byte subspace codes, the quantized top-``rescore``
-    per query re-rank under exact unit-cosine folds.  Same measured
-    rationale and R sizing (R tracks per-bucket occupancy, not k) —
-    gated: ``similarity_recall_pq_rescored_planted_vs_exact``."""
-    quantized = pq_adc_topk(
-        embeddings, query_pred, k=rescore, n_sub=n_sub, sub_dim=sub_dim,
-        n_codes=n_codes, dim=dim, id_col=id_col, vec_col=vec_col,
-    ).select("query_id", "neighbor_id")
-    return exact_rescore_topk(
-        embeddings, query_pred, quantized, k, id_col, vec_col, dim
     )
 
 
@@ -1903,6 +1689,14 @@ def pq_adc_topk(
     return _pq_rank_adc(pairs, k)
 
 
+def _pq_sqdist_sql(sub_dim: int, a: str, b: str) -> str:
+    """DuckDB twin of :func:`_pq_sqdist` over two ``sub_dim`` lists."""
+    return (
+        f"list_reduce(list_transform(generate_series(1, {sub_dim}), "
+        f"j -> ({a}[j] - {b}[j]) * ({a}[j] - {b}[j])), (x,y) -> x + y)"
+    )
+
+
 def _pq_train_ctes_sql(
     n_sub: int,
     sub_dim: int,
@@ -1917,10 +1711,6 @@ def _pq_train_ctes_sql(
     query oracle and the index-build stats oracle so the two can never
     drift.  ``table`` names the source relation (a view or upstream
     CTE, e.g. the planted-cluster corpus of the recall gates)."""
-    sq = (
-        f"list_reduce(list_transform(generate_series(1, {sub_dim}), "
-        "j -> ({a}[j] - {b}[j]) * ({a}[j] - {b}[j])), (x,y) -> x + y)"
-    )
     return f"""subv AS (
       SELECT vec_id, m, v[(m-1)*{sub_dim}+1 : m*{sub_dim}] AS sub
       FROM (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM {table}
@@ -1935,7 +1725,7 @@ def _pq_train_ctes_sql(
       SELECT vec_id, m, code, sub FROM (
         SELECT s.vec_id, s.m, i.code, s.sub,
                row_number() OVER (PARTITION BY s.vec_id, s.m ORDER BY
-                 {sq.format(a='s.sub', b='i.cu')} ASC, i.code ASC) AS rn
+                 {_pq_sqdist_sql(sub_dim, 's.sub', 'i.cu')} ASC, i.code ASC) AS rn
         FROM tsub s JOIN init i USING (m)) WHERE rn = 1),
     qsum AS (
       SELECT m, code, pos,
@@ -1953,7 +1743,7 @@ def _pq_train_ctes_sql(
       SELECT vec_id, m, code FROM (
         SELECT s.vec_id, s.m, c.code,
                row_number() OVER (PARTITION BY s.vec_id, s.m ORDER BY
-                 {sq.format(a='s.sub', b='c.cu')} ASC, c.code ASC) AS rn
+                 {_pq_sqdist_sql(sub_dim, 's.sub', 'c.cu')} ASC, c.code ASC) AS rn
         FROM subv s JOIN cb1 c USING (m)) WHERE rn = 1),
     bkt AS (SELECT vec_id, {srp_bucket_sql('embedding', dim=dim)} AS bucket
             FROM {table} WHERE {corpus_pred})"""
@@ -1977,10 +1767,6 @@ def pq_adc_oracle_sql(
     rows TRAIN the codebooks (the incremental-maintenance contract:
     appended vectors encode under codebooks they never trained);
     ``table`` names the source relation."""
-    sq = (
-        f"list_reduce(list_transform(generate_series(1, {sub_dim}), "
-        "j -> ({a}[j] - {b}[j]) * ({a}[j] - {b}[j])), (x,y) -> x + y)"
-    )
     ctes = _pq_train_ctes_sql(
         n_sub, sub_dim, n_codes, dim, corpus_pred, train_pred, table
     )
@@ -1992,7 +1778,7 @@ def pq_adc_oracle_sql(
       WHERE q.{filter_pred}),
     pairm AS (
       SELECT cand.query_id, cand.neighbor_id,
-             CAST(round({sq.format(a='qs.sub', b='cb.cu')}
+             CAST(round({_pq_sqdist_sql(sub_dim, 'qs.sub', 'cb.cu')}
                   * {PQ_DIST_QUANT}) AS BIGINT) AS dm
       FROM cand
       JOIN codes co ON co.vec_id = cand.neighbor_id
@@ -2050,7 +1836,7 @@ def write_pq_index(
     n_sub codes + SRP bucket, partitioned by bucket (``<path>/data``).
     At rest a vector is one small int array — 16x below float32 at the
     defaults — and the bucket partitioning gives stored queries the same
-    partition-pruned scan as the SRP index."""
+    partition-pruned scan as the IVF index's cells."""
     subv = pq_subvectors(embeddings, n_sub, sub_dim, id_col, vec_col)
     spark = embeddings.sparkSession
     pq_train_codebooks(subv, k=n_codes).write.mode("overwrite").parquet(

@@ -58,6 +58,7 @@ from label_maker_dask_spark.functions.vectors import (
 )
 from label_maker_dask_spark.operators.similarity import (
     cosine_topk,
+    exact_rescore_topk,
     lsh_multitable_topk,
     lsh_topk,
     pq_adc_oracle_sql,
@@ -389,14 +390,12 @@ def profile_multitable_candidate_volume(spark, sf_dir):
     Scale shape: the same broadcast equi-join as the ANN entries, with
     the scoring stage replaced by counting aggregates that collapse
     map-side."""
-    from label_maker_dask_spark.operators.similarity import (
-        srp_units_tables,
-    )
+    from label_maker_dask_spark.operators.similarity import srp_units
 
     planted = _planted_embeddings(spark, sf_dir)
     queries = planted.where(F.col("vec_id") % 25 == 0)
-    c = srp_units_tables(planted, "neighbor_id", "cv", 8, 4, _DIM)
-    q = srp_units_tables(queries, "query_id", "qv", 8, 4, _DIM)
+    c = srp_units(planted, "neighbor_id", "cv", 8, _DIM, n_tables=4)
+    q = srp_units(queries, "query_id", "qv", 8, _DIM, n_tables=4)
     pairs = (
         c.join(F.broadcast(q), ["tbl", "bucket"])
         .where(F.col("query_id") != F.col("neighbor_id"))
@@ -412,8 +411,9 @@ def profile_multitable_candidate_volume(spark, sf_dir):
 def _sq8_rescored_planted_oracle(
     filter_pred: str, k: int = 5, rescore: int = 50
 ) -> str:
-    """DuckDB twin of sq8_rescore_exact_topk over the planted corpus:
-    quantized top-``rescore`` cut, exact unit-cosine re-rank."""
+    """DuckDB twin of the rescored SQ8 shape over the planted corpus:
+    quantized top-``rescore`` cut (sq8_rescore_topk), exact unit-cosine
+    re-rank (exact_rescore_topk)."""
     nv = normalized_sql("embedding")
     cos = unit_dot_rounded_sql("q.nv", "c.nv")
     return f"""
@@ -447,7 +447,7 @@ def _sq8_rescored_planted_oracle(
 )
 def similarity_recall_sq8_rescored_planted_vs_exact(spark, sf_dir):
     """Recall@5 of the FULL production SQ8 shape — quantized top-50 cut
-    + exact rescoring (similarity.sq8_rescore_exact_topk) — on the
+    + exact rescoring (similarity.exact_rescore_topk) — on the
     planted corpus.  The companion ``similarity_recall_sq8_planted_
     vs_exact`` row measured the quantized ranking losing recall as
     candidates grow (0.38 / 0.53 / 0.24 across the sf ladder); this row
@@ -461,16 +461,14 @@ def similarity_recall_sq8_rescored_planted_vs_exact(spark, sf_dir):
     candidate set, so the codes' memory-bound win survives at every R
     that matters.  Together the pair is the measured case FOR two-stage
     rescoring — including how to size it — not an assumption."""
-    from label_maker_dask_spark.operators.similarity import (
-        sq8_rescore_exact_topk,
-    )
-
     planted = _planted_embeddings(spark, sf_dir)
-    queries = planted.where(F.col("vec_id") % 25 == 0)
+    pred = F.col("vec_id") % 25 == 0
+    queries = planted.where(pred)
+    cut = sq8_rescore_topk(planted, pred, k=50)
     return _recall_counts(
         cosine_topk(planted, queries, k=5),
-        sq8_rescore_exact_topk(
-            planted, F.col("vec_id") % 25 == 0, k=5, rescore=50
+        exact_rescore_topk(
+            planted, pred, cut.select("query_id", "neighbor_id"), k=5
         ),
     )
 
@@ -478,9 +476,9 @@ def similarity_recall_sq8_rescored_planted_vs_exact(spark, sf_dir):
 def _pq_rescored_planted_oracle(
     filter_pred: str, k: int = 5, rescore: int = 50
 ) -> str:
-    """DuckDB twin of pq_rescore_exact_topk over the planted corpus:
-    the full ADC oracle at k=``rescore`` is the cut, exact unit-cosine
-    re-ranks it."""
+    """DuckDB twin of the rescored PQ shape over the planted corpus:
+    the full ADC oracle at k=``rescore`` is the cut (pq_adc_topk), exact
+    unit-cosine re-ranks it (exact_rescore_topk)."""
     nv = normalized_sql("embedding")
     cos = unit_dot_rounded_sql("q.nv", "c.nv")
     cut = pq_adc_oracle_sql(
@@ -508,7 +506,7 @@ def _pq_rescored_planted_oracle(
 )
 def similarity_recall_pq_rescored_planted_vs_exact(spark, sf_dir):
     """Recall@5 of the full production PQ shape — ADC top-50 cut + exact
-    rescoring (similarity.pq_rescore_exact_topk) — on the planted
+    rescoring (similarity.exact_rescore_topk) — on the planted
     corpus, the PQ twin of the rescored-SQ8 row.  Measures the recovery
     of the ADC ranking loss (raw 0.48/0.62/0.28 across the sf ladder)
     toward the 1-table SRP candidate ceiling at the same R sizing rule:
@@ -516,16 +514,14 @@ def similarity_recall_pq_rescored_planted_vs_exact(spark, sf_dir):
     candidates outgrow R (SCALE.md).  With both quantized tiers' raw
     AND rescored recalls gated, the two-stage recommendation is fully
     measured on both code families."""
-    from label_maker_dask_spark.operators.similarity import (
-        pq_rescore_exact_topk,
-    )
-
     planted = _planted_embeddings(spark, sf_dir)
-    queries = planted.where(F.col("vec_id") % 25 == 0)
+    pred = F.col("vec_id") % 25 == 0
+    queries = planted.where(pred)
+    cut = pq_adc_topk(planted, pred, k=50)
     return _recall_counts(
         cosine_topk(planted, queries, k=5),
-        pq_rescore_exact_topk(
-            planted, F.col("vec_id") % 25 == 0, k=5, rescore=50
+        exact_rescore_topk(
+            planted, pred, cut.select("query_id", "neighbor_id"), k=5
         ),
     )
 

@@ -44,20 +44,6 @@ def class_color(c: int) -> tuple[int, int, int]:
     return CLASS_PALETTE[(c - 1) % len(CLASS_PALETTE)]
 
 
-def class_color_col(c: Column) -> Column:
-    """The same lookup as a Column expression (array literal + element_at)."""
-    palette = F.array(
-        *[
-            F.array(F.lit(r), F.lit(g), F.lit(b))
-            for (r, g, b) in CLASS_PALETTE
-        ]
-    )
-    black = F.array(F.lit(0), F.lit(0), F.lit(0))
-    return F.when(c == 0, black).otherwise(
-        F.element_at(palette, ((c - 1) % len(CLASS_PALETTE) + 1).cast("int"))
-    )
-
-
 def class_match(ml_type: str, i: int, label: Column = None) -> Column:
     """Does a label contain class ``i``?  (reference utils.py:32-40, the
     post-hoc result query.)  Returns a boolean Column over the ``label``

@@ -146,15 +146,3 @@ def tile_ul_lat(y: Column, z: Column) -> Column:
     """Latitude of a tile's upper-left corner (inverse Web Mercator)."""
     n = F.lit(math.pi) - F.lit(2.0 * math.pi) * y / F.pow(F.lit(2.0), z)
     return F.degrees(F.atan(F.sinh(n)))
-
-
-def tile_bounds_cols(x: Column, y: Column, z: Column) -> Column:
-    """WGS84 ``struct(west, south, east, north)`` of a tile — the Column
-    analogue of mercantile.bounds used by the WMS reader (reference
-    utils.py:192)."""
-    return F.struct(
-        tile_ul_lng(x, z).alias("west"),
-        tile_ul_lat(y + 1, z).alias("south"),
-        tile_ul_lng(x + 1, z).alias("east"),
-        tile_ul_lat(y, z).alias("north"),
-    )

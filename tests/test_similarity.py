@@ -2,6 +2,7 @@
 
 import math
 
+import pytest
 from pyspark.sql import Row
 
 from label_maker_dask_spark.operators.similarity import (
@@ -208,37 +209,6 @@ def test_ivf_stored_index_matches_onthefly_and_prunes(spark, tmp_path):
             assert compact_index(spark, path) > 0
             again = ivf_topk_stored(spark, path, queries, k=5, n_probe=4)
             assert sorted(map(tuple, again.collect())) == a
-
-
-def test_lsh_stored_index_matches_onthefly_and_prunes(spark, tmp_path):
-    import contextlib
-    import io
-
-    from pyspark.sql import functions as F
-
-    from label_maker_dask_spark.operators.similarity import (
-        lsh_topk,
-        lsh_topk_stored,
-        write_srp_index,
-    )
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    queries = emb.where(F.col("vec_id") % 25 == 0)
-    path = str(tmp_path / "srp_index")
-    write_srp_index(emb, path)
-
-    stored = lsh_topk_stored(spark, path, queries, k=5)
-    onthefly = lsh_topk(emb, queries, k=5)
-    a = sorted(map(tuple, stored.collect()))
-    b = sorted(map(tuple, onthefly.collect()))
-    assert a == b and len(a) > 0
-
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        stored.explain("formatted")
-    plan = buf.getvalue()
-    pf_lines = [l for l in plan.splitlines() if "PartitionFilters" in l]
-    assert pf_lines and "bucket" in pf_lines[0]
 
 
 def test_query_side_contract_enforced(spark):
@@ -1450,94 +1420,80 @@ def test_planted_recall_ladder_and_floor(spark):
     assert sq8r > sq8 and pqr > pq        # the recovery is real
 
 
-def test_multitable_stored_index_matches_onthefly_and_prunes(spark, tmp_path):
-    """The stored multi-table index must return EXACTLY the on-the-fly
-    result and prune non-probed (tbl, bucket) partitions at the scan."""
-    import contextlib
-    import io
-
-    from pyspark.sql import functions as F
-
-    from label_maker_dask_spark.operators.similarity import (
-        lsh_multitable_topk,
-        lsh_multitable_topk_stored,
-        write_srp_multitable_index,
-    )
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    queries = emb.where(F.col("vec_id") % 25 == 0)
-    path = str(tmp_path / "srp_mt_index")
-    write_srp_multitable_index(emb, path, n_tables=4)
-
-    stored = lsh_multitable_topk_stored(spark, path, queries, k=5, n_tables=4)
-    onthefly = lsh_multitable_topk(emb, queries, k=5, n_tables=4)
-    a = sorted(map(tuple, stored.collect()))
-    b = sorted(map(tuple, onthefly.collect()))
-    assert a == b and len(a) > 0
-
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        stored.explain("formatted")
-    plan = buf.getvalue()
-    pf_lines = [l for l in plan.splitlines() if "PartitionFilters" in l]
-    assert pf_lines and "tbl" in pf_lines[0] and "bucket" in pf_lines[0]
-
-
-def test_srp_auto_planes_keeps_occupancy_constant(spark):
-    """The plane ladder must hold expected per-bucket occupancy near
-    SRP_TARGET_OCCUPANCY across corpus decades (the fixed-b hazard the
-    round-16 probe measured as exp 0.95), and MEASURED mean occupancy
-    on the real embeddings ladder must stay within 4x of target (signs
-    are data-dependent, not uniform)."""
-    from pyspark.sql import functions as F
-
-    from label_maker_dask_spark.operators.similarity import (
-        SRP_TARGET_OCCUPANCY,
-        srp_auto_planes,
-        srp_units,
-    )
-
-    # expected occupancy n / 2^b lands in (target/2, target] by the
-    # ceil; floor/cap behavior pinned
-    for n in (100, 500, 2_000, 20_000, 1_000_000, 10**9):
-        b = srp_auto_planes(n)
-        assert 3 <= b <= 24
-        if 8 * SRP_TARGET_OCCUPANCY < n < 2**24 * SRP_TARGET_OCCUPANCY:
-            assert SRP_TARGET_OCCUPANCY / 2 < n / 2**b <= SRP_TARGET_OCCUPANCY
-    assert srp_auto_planes(1) == 3
-    assert srp_auto_planes(10**12) == 24
-
-    for sf_dir, n in [("/root/testdata/sf0.01", 500),
-                      ("/root/testdata/sf0.1", 2_000)]:
-        emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        b = srp_auto_planes(n)
-        occ = (
-            srp_units(emb, "vec_id", "v", n_planes=b)
-            .groupBy("bucket").count()
-            .agg(F.avg("count").alias("m")).collect()[0].m
-        )
-        assert occ <= 4 * SRP_TARGET_OCCUPANCY, (sf_dir, b, occ)
-
-
-def test_multitable_stored_empty_query_set_returns_empty_not_error(
-    spark, tmp_path
+@pytest.mark.parametrize("kind", ["ivf", "pq"])
+def test_stored_empty_query_set_returns_empty_not_error(
+    spark, tmp_path, kind
 ):
-    """An empty probe set must yield an empty result frame with the
-    output schema — the bucket-predicate fold over zero collected query
-    buckets previously left cond=None and .where(None) raised an opaque
-    error (round-16 advice item)."""
+    """An empty query set against a built stored index answers zero rows
+    with the output schema, not an error."""
     from pyspark.sql import functions as F
 
     from label_maker_dask_spark.operators.similarity import (
-        lsh_multitable_topk_stored,
-        write_srp_multitable_index,
+        ivf_topk_stored,
+        pq_adc_topk_stored,
+        write_ivf_index,
+        write_pq_index,
     )
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    path = str(tmp_path / "srp_mt_empty")
-    write_srp_multitable_index(emb, path, n_tables=2)
-    out = lsh_multitable_topk_stored(
-        spark, path, emb.where(F.lit(False)), k=5, n_tables=2
+    none = emb.where(F.lit(False))
+    path = str(tmp_path / kind)
+    if kind == "ivf":
+        write_ivf_index(emb, path, n_cells=16)
+        out = ivf_topk_stored(spark, path, none, k=5)
+        score = "cosine_sim"
+    else:
+        write_pq_index(emb, path)
+        out = pq_adc_topk_stored(spark, path, none, k=5)
+        score = "adc_dist"
+    assert out.columns == ["query_id", "rank", "neighbor_id", score]
+    assert out.count() == 0
+
+
+def test_ivf_paths_answer_empty_inputs_with_zero_rows(spark, tmp_path):
+    """No queries or no corpus gives zero rows on the brute-force and
+    every IVF path.  An index built from no vectors has no centroids: it
+    answers zero rows and reports no cells, and appending to it raises a
+    ValueError that says to rebuild."""
+    from pyspark.sql import functions as F
+
+    from label_maker_dask_spark.operators.similarity import (
+        append_ivf_index,
+        ivf_cell_stats,
+        ivf_topk,
+        ivf_topk_join,
+        ivf_topk_stored,
+        write_ivf_index,
     )
+
+    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    none = emb.where(F.lit(False))
+    queries = emb.where(F.col("vec_id") % 25 == 0)
+    for corpus, q in ((emb, none), (none, queries)):
+        assert cosine_topk(corpus, q, k=5).count() == 0
+        assert ivf_topk(corpus, q, k=5).count() == 0
+        assert ivf_topk_join(corpus, q, k=5).count() == 0
+
+    path = str(tmp_path / "ivf_empty")
+    write_ivf_index(none, path, n_cells=16)
+    out = ivf_topk_stored(spark, path, queries, k=5)
     assert out.columns == ["query_id", "rank", "neighbor_id", "cosine_sim"]
     assert out.count() == 0
+    assert ivf_cell_stats(spark, path)["n_cells"] == 0
+    with pytest.raises(ValueError, match="write_ivf_index"):
+        append_ivf_index(queries, path)
+
+
+def test_ivf_join_probes_every_cell_when_fewer_cells_than_probes(spark):
+    """With fewer cells than ``n_probe`` each query probes every cell, in
+    the join form as in the broadcast form."""
+    from label_maker_dask_spark.operators.similarity import (
+        ivf_topk,
+        ivf_topk_join,
+    )
+
+    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    queries = emb.where("vec_id % 25 = 0")
+    a = ivf_topk(emb, queries, k=5, n_cells=2, n_probe=4).collect()
+    b = ivf_topk_join(emb, queries, k=5, n_cells=2, n_probe=4).collect()
+    assert sorted(map(tuple, a)) == sorted(map(tuple, b)) and a
