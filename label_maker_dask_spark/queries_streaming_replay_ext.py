@@ -250,18 +250,22 @@ def _read_table(spark, path: str, schema: str) -> DataFrame:
     """The table a maintenance sink keeps at ``path``, plain or bucketed.
     A sink skips an empty micro-batch, so a drain that committed nothing
     (an empty change log) left no table: that reads as zero rows of
-    ``schema``, the table's schema, as the oracle's end state does.
-    Those rows are built JVM-side (``range(0)`` and typed NULL
-    literals): ``createDataFrame`` would fan out to Python partitions
-    on the replay hot path (``tests/test_plans.py``)."""
-    from pyspark.sql.types import DataType
-
+    ``schema``, the table's schema, as the oracle's end state does."""
     from label_maker_dask_spark.streaming.bucketed import (
         read_maintained_table,
     )
 
     if os.path.exists(path):
         return read_maintained_table(spark, path)
+    return _no_rows(spark, schema)
+
+
+def _no_rows(spark, schema: str) -> DataFrame:
+    """Zero rows of the DDL ``schema``, built JVM-side (``range(0)``
+    and typed NULL literals): ``createDataFrame`` would fan out to
+    Python partitions on the replay hot path (``tests/test_plans.py``)."""
+    from pyspark.sql.types import DataType
+
     return spark.range(0).select(
         *(
             F.lit(None).cast(f.dataType).alias(f.name)
@@ -602,6 +606,7 @@ def stream_versioned_diff_replay(
     a diff that reads an unchanged bucket, or sums applied twice all
     hash-mismatch."""
     from label_maker_dask_spark.streaming.versioned import (
+        latest_table_version,
         stream_accumulate_to_versioned_table,
         table_version_diff,
     )
@@ -623,6 +628,14 @@ def stream_versioned_diff_replay(
             s, o, c, keys=["o_custkey"], sum_cols=["rev_cents"], n_buckets=8
         ),
     )
+    if latest_table_version(table) is None:
+        # the sink skips empty micro-batches, so an empty ``orders``
+        # published no version: no customer changed, as in the oracle
+        return _no_rows(
+            spark,
+            "o_custkey long, change string, old_rev_cents long, "
+            "new_rev_cents long",
+        )
     diff = table_version_diff(spark, table, v_from=1, v_to=3)
     return diff.select(
         "o_custkey",

@@ -16,7 +16,9 @@ file; each ``read_tile`` window touches only the source files whose
 DstRects intersect it, and those underlying reads are themselves
 strip/tile-windowed (``TiffFile.read_rows``), so a z15 tile over a
 10k-file mosaic opens a handful of files and decodes a few strips — the
-same I/O shape rasterio's VRT driver produces.
+same I/O shape rasterio's VRT driver produces.  Members are read by
+range (``tiff.open_tiff``), never whole, and decode into one block LRU
+per mosaic, bounded by ``tiff.BLOCK_CACHE_BYTES``.
 """
 
 from __future__ import annotations
@@ -27,6 +29,8 @@ import xml.etree.ElementTree as ET
 from typing import Optional
 
 import numpy as np
+
+from label_maker_dask_spark.sources import tiff
 
 _UNSUPPORTED = (
     "unsupported VRT feature {what}: the dependency-free reader handles "
@@ -76,6 +80,7 @@ class VrtDataset:
         self._bands = []  # per band: list of source dicts
         self._base_dir = base_dir
         self._open_files: dict = {}
+        self._blocks = tiff._Lru(tiff.BLOCK_CACHE_BYTES)
         for band_el in sorted(
             root.findall("VRTRasterBand"),
             key=lambda b: int(b.attrib.get("band", "1")),
@@ -137,18 +142,14 @@ class VrtDataset:
     # -- underlying file access ------------------------------------------
 
     def _tif(self, fname: str):
+        """The member ``fname``, opened once over ranged reads.  Every
+        member decodes into the mosaic's one block LRU, so a task's
+        decoded blocks stay under one ``BLOCK_CACHE_BYTES`` however many
+        members it opens."""
         tif = self._open_files.get(fname)
         if tif is None:
-            from label_maker_dask_spark.sources.tiff import (
-                HttpRangeSource,
-                TiffFile,
-            )
-
-            if fname.startswith(("http://", "https://")):
-                tif = TiffFile(HttpRangeSource(fname))
-            else:
-                with open(fname, "rb") as fh:
-                    tif = TiffFile(fh.read())
+            tif = tiff.open_tiff(fname)
+            tif._blocks = self._blocks
             self._open_files[fname] = tif
         return tif
 

@@ -344,3 +344,67 @@ def test_unsupported_wms_crs_fails_at_plan_time(spark):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert sc.statusTracker().getJobIdsForGroup("wms-crs-plan-time") == []
+
+
+def _nn_resample(full, bounds, z, x, y):
+    """Nearest-neighbour 256x256 resample of a decoded raster under slippy
+    tile (z, x, y), sampled at pixel centres; pixels off the raster are
+    0.  Plain geo math over the whole array, no windowing."""
+    h, w = full.shape[:2]
+    west, south, east, north = bounds
+    n = 2.0 ** z
+    t_west, t_east = x / n * 360.0 - 180.0, (x + 1) / n * 360.0 - 180.0
+    t_north, t_south = (
+        np.degrees(np.arctan(np.sinh(np.pi * (1 - 2 * v / n))))
+        for v in (y, y + 1)
+    )
+    centre = np.arange(256) + 0.5
+    col = np.floor(
+        (t_west + centre * (t_east - t_west) / 256 - west) / ((east - west) / w)
+    ).astype(int)
+    row = np.floor(
+        (north - (t_north - centre * (t_north - t_south) / 256))
+        / ((north - south) / h)
+    ).astype(int)
+    ok = ((row >= 0) & (row < h))[:, None] & ((col >= 0) & (col < w))[None, :]
+    out = np.zeros((256, 256, full.shape[2]), dtype=np.uint8)
+    out[ok] = full[np.clip(row, 0, h - 1)][:, np.clip(col, 0, w - 1)][ok]
+    return out, ok
+
+
+@pytest.mark.parametrize(
+    "layout",
+    [
+        dict(tiled=True, tile_size=64, compression=8),
+        dict(rows_per_strip=16, compression=8, predictor=2),
+    ],
+    ids=["tiled-deflate", "striped-predictor2"],
+)
+def test_job_reads_on_disk_geotiff(spark, tmp_path, layout):
+    """A classification job over a real GeoTIFF on disk (not an injected
+    fetcher): every tile's image equals a nearest-neighbour resample of
+    the raster's full decode, including the tiles that straddle its
+    edges.  The raster sits inside the job's bounds, so the outer tiles
+    are part raster, part zero fill."""
+    from label_maker_dask_spark.sources.tiff import TiffFile
+    from label_maker_dask_spark.sources.tiff_write import write_geotiff
+
+    rng = np.random.default_rng(11)
+    arr = rng.integers(1, 256, size=(240, 320, 3), dtype=np.uint8)
+    bounds = (-9.175, 38.712, -9.125, 38.750)
+    blob = write_geotiff(arr, bounds, **layout)
+    path = tmp_path / "basemap.tif"
+    path.write_bytes(blob)
+    full = TiffFile(blob).read_rows(0, arr.shape[0])
+    assert np.array_equal(full, arr)
+
+    job = LabelMakerJob(spark, zoom=15, bounds=LISBON, classes=CLASSES,
+                        imagery=str(path), tile_fetcher=fake_features)
+    rows = job.execute_job()
+    assert len(rows) == job.n_tiles() == 36
+    straddling = 0
+    for r in rows:
+        want, ok = _nn_resample(full, bounds, r.z, r.x, r.y)
+        assert bytes(r.image) == want.tobytes(), (r.z, r.x, r.y)
+        straddling += bool(ok.any() and not ok.all())
+    assert straddling >= 12

@@ -158,12 +158,14 @@ _EMPTY_SOURCES = {
         "stream_ohlc_hourly_replay",
         "stream_session_timeout_replay",
         "stream_pq_index_replay",
+        "stream_versioned_diff_replay",
     ],
 )
 def test_stream_replay_cells_on_empty_sources(spark, tmp_path, name):
     """Empty sources give the oracle's zero rows: the day terciles of no
     events are three empty batches, a sink whose drain committed
-    nothing reads as an empty table, and a PQ index built from no
+    nothing reads as an empty table, a versioned table that published
+    no version has no change to diff, and a PQ index built from no
     vectors (an empty codebook) answers no neighbors.  The session-timeout cell has no
     event to place its sentinel after, so it raises a ValueError that
     names it."""

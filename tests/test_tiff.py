@@ -499,3 +499,194 @@ def test_engine_writer_rejects_bad_input():
         write_geotiff(arr, (0, 0, 1, 1), compression=5)
     with pytest.raises(ValueError, match="multiple of 16"):
         write_geotiff(arr, (0, 0, 1, 1), tiled=True, tile_size=20)
+
+
+# --- decoded-block cache and ranged local reads ------------------------------
+
+#: a raster that does not line up with the slippy grid: z12 tiles
+#: straddle each of its edges, and its 32 px blocks do not fill the last
+#: block row/column
+_SWEEP_Z = TILE[0] + 2
+
+
+def _sweep_raster(big_source_array):
+    west, south, east, north = _tile_bounds_4326(*TILE)
+    dx, dy = (east - west) / 7, (north - south) / 5
+    arr = np.ascontiguousarray(big_source_array[:200, :240])
+    return arr, (west + dx, south + dy, east - dx / 2, north - dy / 3)
+
+
+def _sweep_tiles():
+    """Row-major z12 tiles over TILE's footprint plus a one-tile ring,
+    in the order ``tiles_df`` numbers them."""
+    _z, x, y = TILE
+    return [
+        (_SWEEP_Z, xx, yy)
+        for yy in range(4 * y - 1, 4 * y + 5)
+        for xx in range(4 * x - 1, 4 * x + 5)
+    ]
+
+
+def _window_blocks(shape, bounds, z, x, y, block=32):
+    """The 32 px blocks under the bounding box of the raster pixels that
+    tile (z, x, y) samples, from the geo math alone."""
+    h, w = shape[:2]
+    west, south, east, north = bounds
+    tw, tsouth, teast, tnorth = _tile_bounds_4326(z, x, y)
+    rows = [
+        math.floor((north - (tnorth - (i + 0.5) * (tnorth - tsouth) / 256))
+                   / ((north - south) / h))
+        for i in range(256)
+    ]
+    cols = [
+        math.floor((tw + (j + 0.5) * (teast - tw) / 256 - west)
+                   / ((east - west) / w))
+        for j in range(256)
+    ]
+    rows = [r for r in rows if 0 <= r < h]
+    cols = [c for c in cols if 0 <= c < w]
+    if not rows or not cols:
+        return set()
+    return {
+        (br, bc)
+        for br in range(min(rows) // block, max(rows) // block + 1)
+        for bc in range(min(cols) // block, max(cols) // block + 1)
+    }
+
+
+@pytest.fixture()
+def count_decompress(monkeypatch):
+    calls = []
+    real = zlib.decompress
+
+    def counting(*args, **kwargs):
+        calls.append(1)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(zlib, "decompress", counting)
+    return calls
+
+
+def test_row_major_sweep_decodes_each_block_once(
+    big_source_array, count_decompress
+):
+    """A row-major sweep through one TiffFile, as one task's tile scan
+    does, decompresses each touched block exactly once, although
+    neighbouring tiles share blocks."""
+    arr, bounds = _sweep_raster(big_source_array)
+    tif = TiffFile(write_tiff(arr, bounds, compression=8, tiled=True))
+    touched, per_tile = set(), 0
+    for t in _sweep_tiles():
+        got = read_tile(tif, *t)
+        blocks = _window_blocks(arr.shape, bounds, *t)
+        touched |= blocks
+        per_tile += len(blocks)
+        if t == _sweep_tiles()[7]:  # straddles the raster's west edge
+            np.testing.assert_array_equal(
+                got, _expected_resample(arr, bounds, *t)
+            )
+    assert len(count_decompress) == len(touched)
+    assert len(touched) < per_tile  # the sweep did reuse blocks
+
+
+def test_block_cache_eviction_keeps_output_identical(
+    monkeypatch, big_source_array, count_decompress
+):
+    """With the bound cut to two blocks the LRU evicts all the time; the
+    pixels stay byte-identical and the cache stays within its bound."""
+    from label_maker_dask_spark.sources import tiff
+
+    arr, bounds = _sweep_raster(big_source_array)
+    blob = write_tiff(arr, bounds, compression=8, tiled=True)
+    roomy = TiffFile(blob)
+    want = [read_tile(roomy, *t) for t in _sweep_tiles()]
+    n_roomy = len(count_decompress)
+
+    bound = 2 * 32 * 32 * 3
+    monkeypatch.setattr(tiff, "BLOCK_CACHE_BYTES", bound)
+    tight = TiffFile(blob)
+    for t, expected in zip(_sweep_tiles(), want):
+        np.testing.assert_array_equal(read_tile(tight, *t), expected)
+        assert tight._blocks.nbytes <= bound and len(tight._blocks) <= 2
+    assert len(count_decompress) - n_roomy > n_roomy  # it did evict
+
+
+def test_cached_blocks_are_read_only(source_array):
+    """A caller cannot write into a cached block and so corrupt the next
+    tile that reads it."""
+    z, x, y = TILE
+    bounds = _tile_bounds_4326(z, x, y)
+    for kw in (dict(tiled=True), dict(compression=8, predictor=2)):
+        tif = TiffFile(write_tiff(source_array, bounds, **kw))
+        first = read_tile(tif, z, x, y)
+        blocks = [v for v, _n in tif._blocks._items.values()]
+        assert blocks and not any(b.flags.writeable for b in blocks)
+        with pytest.raises(ValueError):
+            blocks[0][0, 0, 0] = 0
+        np.testing.assert_array_equal(read_tile(tif, z, x, y), first)
+
+
+def test_local_tile_read_is_ranged(tmp_path, big_source_array):
+    """A local raster is read by range: one map tile reads the header,
+    the IFD and its own blocks, not the file."""
+    from label_maker_dask_spark.sources.tiff import FileRangeSource, open_tiff
+
+    z, x, y = TILE
+    bounds = _tile_bounds_4326(z, x, y)
+    path = tmp_path / "basemap.tif"
+    blob = write_tiff(big_source_array, bounds, compression=8, tiled=True)
+    path.write_bytes(blob)
+    tif = open_tiff(str(path))
+    assert isinstance(tif._src, FileRangeSource)
+    got = read_tile(tif, z + 2, 4 * x + 1, 4 * y + 2)
+    np.testing.assert_array_equal(
+        got, read_tile(TiffFile(blob), z + 2, 4 * x + 1, 4 * y + 2)
+    )
+    assert 0 < tif._src.bytes_fetched < len(blob) / 4
+
+
+def test_vrt_members_share_one_block_budget(
+    monkeypatch, tmp_path, source_array
+):
+    """Every member a VRT opens decodes into the mosaic's one LRU, so a
+    task's decoded blocks stay under one bound however many members it
+    touches."""
+    from label_maker_dask_spark.sources import tiff
+    from label_maker_dask_spark.sources.vrt import open_vrt
+
+    z, x, y = 15, 16495, 10900
+    bounds = _tile_bounds_4326(z, x, y)
+    mono = read_tile(TiffFile(write_tiff(source_array, bounds)), z, x, y)
+    bound = 32 * 16 * 3  # one member strip
+    monkeypatch.setattr(tiff, "BLOCK_CACHE_BYTES", bound)
+    vrt = open_vrt(_write_vrt_mosaic(tmp_path, source_array, bounds))
+    np.testing.assert_array_equal(read_tile(vrt, z, x, y), mono)
+    members = list(vrt._open_files.values())
+    assert len(members) == 4
+    assert all(m._blocks is vrt._blocks for m in members)
+    assert vrt._blocks.nbytes <= bound
+
+
+def test_http_range_cache_is_bounded(
+    monkeypatch, http_tiff_server, big_source_array
+):
+    """The remote source's raw-byte LRU keeps at most RANGE_CACHE_BYTES
+    and still decodes identically when it evicts."""
+    from label_maker_dask_spark.sources import tiff
+
+    z, x, y = TILE
+    bounds = _tile_bounds_4326(z, x, y)
+    blob = write_tiff(big_source_array, bounds, compression=8, tiled=True)
+    http_tiff_server.payload = blob
+    bound = 4 * 8192
+    monkeypatch.setattr(tiff, "RANGE_CACHE_BYTES", bound)
+    src = tiff.HttpRangeSource(
+        f"http://127.0.0.1:{http_tiff_server.server_address[1]}/b.tif",
+        block=8192,
+    )
+    remote, local = TiffFile(src), TiffFile(blob)
+    for child in ((0, 0), (1, 1), (0, 1)):
+        t = (z + 1, 2 * x + child[0], 2 * y + child[1])
+        np.testing.assert_array_equal(read_tile(remote, *t), read_tile(local, *t))
+        assert src._blocks.nbytes <= bound
+    assert src.bytes_fetched > bound  # eviction was exercised
