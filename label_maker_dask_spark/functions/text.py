@@ -155,12 +155,3 @@ LANG_MARKERS = {
     "fr": ["le", "la", "et"],
     "es": ["el", "los", "que"],
 }
-
-
-def lang_scores(toks: Column) -> list[Column]:
-    return [
-        F.size(F.filter(toks, lambda t: F.lower(t).isin(markers))).alias(
-            f"score_{lang}"
-        )
-        for lang, markers in LANG_MARKERS.items()
-    ]

@@ -51,24 +51,7 @@ def norm(a: Column) -> Column:
     return F.sqrt(_sum(F.transform(a, lambda x: x.cast("double") * x.cast("double"))))
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
-
-
-def cosine_rounded(a: Column, b: Column, digits: int = 6) -> Column:
-    """Cosine similarity rounded for stable cross-engine comparison."""
-    return F.round(cosine(a, b), digits)
-
-
 # --- DuckDB twins (same fold order, double precision) ------------------------
-
-
-def dot_sql(a: str, b: str) -> str:
-    return (
-        f"list_reduce(list_prepend(0.0::DOUBLE, "
-        f"list_transform(generate_series(1, len({a})), "
-        f"i -> {a}[i]::DOUBLE * {b}[i]::DOUBLE)), (x, y) -> x + y)"
-    )
 
 
 def norm_sql(a: str) -> str:
@@ -76,10 +59,6 @@ def norm_sql(a: str) -> str:
         f"sqrt(list_reduce(list_prepend(0.0::DOUBLE, "
         f"list_transform({a}, x -> x::DOUBLE * x::DOUBLE)), (x, y) -> x + y))"
     )
-
-
-def cosine_rounded_sql(a: str, b: str, digits: int = 6) -> str:
-    return f"round({dot_sql(a, b)} / ({norm_sql(a)} * {norm_sql(b)}), {digits})"
 
 
 def normalized_sql(a: str) -> str:

@@ -506,8 +506,3 @@ def _convert_geom(geom: dict) -> dict:
     if "coordinates" in g:
         g["coordinates"] = conv(g["coordinates"])
     return g
-
-
-def empty_label_classification(n_classes: int) -> list[int]:
-    """[1, 0, …] — background-only (reference label.py:197-202)."""
-    return [1] + [0] * n_classes

@@ -68,16 +68,4 @@ def resample_ohlc(
     )
 
 
-def time_bucket_sum(
-    df: DataFrame,
-    ts_col: str,
-    keys: Sequence[str],
-    aggs: Sequence[Column],
-    granularity: str = "day",
-) -> DataFrame:
-    """Generic single-pass time-bucket rollup (the non-OHLC fast path)."""
-    bucket = F.date_trunc(granularity, F.col(ts_col)).alias("bucket")
-    return df.groupBy(*keys, bucket).agg(*aggs)
-
-
-__all__ = ["ohlc_aggs", "resample_ohlc", "time_bucket_sum"]
+__all__ = ["ohlc_aggs", "resample_ohlc"]

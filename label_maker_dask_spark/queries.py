@@ -18,11 +18,11 @@ quadratic verification.
 
 from __future__ import annotations
 
-from typing import Callable, Dict, Optional
+import importlib
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from label_maker_dask_spark.filters import compile_filter, filter_sql
@@ -36,159 +36,36 @@ from label_maker_dask_spark.functions.text import (
     stopword_ratio,
     tokens,
 )
-from label_maker_dask_spark import queries_shared as _shared
 from label_maker_dask_spark.labels import classification_labels
 from label_maker_dask_spark.operators import dedup as D
 from label_maker_dask_spark.operators.similarity import cosine_topk, lsh_topk
 from label_maker_dask_spark.operators.topk import topk_per_group
+# the registries, the loader and the shared oracle fragments live in the
+# catalog's leaf module; re-exported here for callers of ``queries``
+from label_maker_dask_spark.queries_shared import (  # noqa: F401
+    ORACLES,
+    QUERIES,
+    SLIDING_1H30_ORACLE,
+    _GL_ORACLE_LOOKUP,
+    _PUNCT_RE,
+    _TOKS_SQL,
+    _emb_count,
+    _ivf_auto_cells,
+    _ivf_oracle,
+    _minhash_oracle,
+    _recall_counts,
+    _recall_oracle_from,
+    _shingle_cte,
+    _t,
+    image_channel_sums,
+    register,
+    session_defaults,
+)
 from label_maker_dask_spark.streaming.windows import (
     sessionize_lag,
     sliding_agg,
     tumbling_agg,
 )
-
-class _CuratedRegistry(dict):
-    """Registry dict whose ITERATION ORDER puts the curated driver
-    window (``_DRIVER_WINDOW``, end of this module) first — the
-    driver's correctness gate checks exactly the first 50 names it
-    sees, so the window must be a deliberate choice, not an accident
-    of module layout.  Ordering is applied dynamically at iteration
-    (not by rebuilding the dict at import) so a partially-initialized
-    registry — an ext module imported directly, mid-circular-import —
-    stays consistent; names outside the window keep registration
-    order.  Lookup/insert are plain dict operations.  C-level iteration
-    (``dict(reg)``, ``json.dumps``, ``**`` unpacking) bypasses these
-    overrides and reads raw storage order — ``_finalize_registry_order``
-    (bottom of this module) rebuilds the storage in curated order after
-    all ext modules import, so both paths agree once the package is
-    fully importable."""
-
-    def _order(self):
-        window = globals().get("_DRIVER_WINDOW", ())
-        present = [n for n in window if dict.__contains__(self, n)]
-        w = set(present)
-        return present + [n for n in dict.keys(self) if n not in w]
-
-    def __iter__(self):
-        return iter(self._order())
-
-    def keys(self):  # noqa: D102 - dict API
-        return list(self._order())
-
-    def items(self):  # noqa: D102 - dict API
-        return [(n, dict.__getitem__(self, n)) for n in self._order()]
-
-    def values(self):  # noqa: D102 - dict API
-        return [dict.__getitem__(self, n) for n in self._order()]
-
-
-QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = (
-    _CuratedRegistry()
-)
-ORACLES: Dict[str, str] = _CuratedRegistry()
-
-
-def register(name: str, oracle: Optional[str] = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
-
-
-def _finalize_registry_order() -> None:
-    """Rebuild the registries' UNDERLYING dict storage in curated order.
-
-    ``_CuratedRegistry`` orders Python-level iteration dynamically, but
-    C-level consumers (``dict(QUERIES)``, ``json.dumps``, ``**``
-    unpacking) read the raw insertion order directly — without this
-    rebuild the same mapping would expose two different orders depending
-    on how it is consumed.  Called at the bottom of this module (after
-    every ext module has registered and ``_DRIVER_WINDOW`` exists) AND
-    at the bottom of each ext module: when an ext module is the
-    process's first catalog import, its own registrations execute after
-    this module's bottom ran mid-circular-import, and the ext-side call
-    re-sorts the late arrivals.  Defined ABOVE the ext-import block so
-    those bottoms can import it mid-initialization; ordering is
-    dynamic (``_order`` reads ``_DRIVER_WINDOW`` via globals), so a
-    call before the window exists just preserves registration order."""
-    for reg in (QUERIES, ORACLES):
-        ordered = [(n, dict.__getitem__(reg, n)) for n in reg._order()]
-        dict.clear(reg)
-        dict.update(reg, ordered)
-
-
-#: Sessions already configured by :func:`session_defaults`.  Keyed on the
-#: session object itself via a WeakSet, not ``id(spark)``: CPython reuses
-#: freed addresses, so an id-keyed set would silently SKIP configuring a
-#: new session allocated at a dead session's address — wrong timezone,
-#: wrong nanos handling, corrupted timestamp arithmetic.  The weak
-#: reference drops the entry when the session is GC'd, so a reused
-#: address always reconfigures.
-import weakref
-
-_SESSIONS_CONFIGURED: "weakref.WeakSet" = weakref.WeakSet()
-
-
-def session_defaults(spark: SparkSession) -> SparkSession:
-    """Apply the catalog's session configuration once per session — the
-    single place the engine mutates session state (queries themselves are
-    side-effect-free):
-
-    - UTC session timezone, so TIMESTAMP_NTZ epoch arithmetic matches
-      DuckDB's ``epoch_us`` on naive timestamps (functions/timeutil.py);
-    - ``nanosAsLong``, so a TIMESTAMP(NANOS) regeneration of the testdata
-      (which stock Spark refuses to read) degrades to a long column that
-      :func:`_t` converts explicitly instead of a read-time error.
-
-    Entry points (``__spark_entry__``, ``bench.py``, the test session
-    fixture) call this directly; :func:`_t` also routes through it so a
-    catalog query handed a fresh session still runs correctly."""
-    if spark not in _SESSIONS_CONFIGURED:
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        _SESSIONS_CONFIGURED.add(spark)
-    return spark
-
-
-#: inferred parquet schema per testdata table path — METADATA only,
-#: never data or results: every action over a ``_t`` frame still scans
-#: the parquet files.  ``spark.read.parquet`` re-infers the schema from
-#: file footers on EVERY call (~50-60 ms per read at sf0.1 vs ~12 ms
-#: with an explicit schema — measured round 18), and the catalog calls
-#: ``_t`` 1-3x per query x 258 queries x 2 bench passes, so the
-#: re-inference alone costs 15-30 s per bench pass.  Safe to key on the
-#: path because the testdata directories are immutable for a process's
-#: lifetime (this cache is NOT for maintained/mutable tables — those
-#: manage their own schema lifecycles, e.g. streaming/upsert.py's
-#: per-batch ``base_schema``).
-_T_SCHEMAS: dict = {}
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load a testdata table.  The events table has carried TIMESTAMP(NANOS)
-    across driver regenerations, which Spark's parquet reader rejects by
-    default — session_defaults reads nanos as long, and this loader
-    truncates to micros with integer arithmetic (``div``, not double
-    division: epoch-nanos exceed a double's 53-bit mantissa).  DuckDB
-    truncates nanos to its micro timestamps the same way, so the engines
-    agree."""
-    session_defaults(spark)
-    path = f"{sf_dir}/{name}.parquet"
-    schema = _T_SCHEMAS.get(path)
-    if schema is None:
-        # one inference per table per process (nanosAsLong is set above,
-        # so a TIMESTAMP(NANOS) column infers as long here exactly as it
-        # did on the uncached path)
-        schema = spark.read.parquet(path).schema
-        _T_SCHEMAS[path] = schema
-    df = spark.read.schema(schema).parquet(path)
-    if name == "events":
-        if dict(df.dtypes).get("ts") == "bigint":
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return df
 
 
 # =====================================================================
@@ -676,7 +553,7 @@ def events_tumbling(spark, sf_dir):
     return out.select("window_start", "event_type", "n_events", "total_value")
 
 
-@register("events_sliding_1h_30m", _shared.SLIDING_1H30_ORACLE)
+@register("events_sliding_1h_30m", SLIDING_1H30_ORACLE)
 def events_sliding(spark, sf_dir):
     """Sliding 1h windows every 30m: each event lands in exactly two windows
     (oracle replays that membership arithmetic with unnest)."""
@@ -761,7 +638,6 @@ def events_sessionize_chunked(spark, sf_dir):
 # the GL filters exercised against the events table (props JSON acts as the
 # feature properties; event_type plays $type; event_id plays $id)
 _GL_FILTER_SELECT = ["all", [">=", "k", 50], ["!in", "$type", "error", "signup"]]
-_GL_ORACLE_LOOKUP = "json_extract_string({props}, '$.' || {key})"
 
 
 def _events_as_features(spark, sf_dir, tile_expr="user_id % 100"):
@@ -862,22 +738,6 @@ def classification_flagship(spark, sf_dir):
 )
 def dedup_exact(spark, sf_dir):
     return D.exact_duplicate_groups(_t(spark, sf_dir, "documents"))
-
-
-def _shingle_cte(n: int = 3) -> str:
-    """Shared oracle CTE: distinct (doc_id, shingle-hash) pairs mirroring
-    operators/dedup.doc_shingles (token char-folds combined arithmetically
-    into shingle hashes, per-doc list_distinct)."""
-    from label_maker_dask_spark.functions.text import shingle_hashes_sql
-
-    toks = "list_filter(string_split_regex(trim(text), '[ \\t\\n\\x0B\\f\\r]+'), t -> t != '')"
-    shs = shingle_hashes_sql("t", n)
-    return f"""
-    toks AS (SELECT doc_id, {toks} AS t FROM documents),
-    shr AS (SELECT doc_id, list_distinct({shs}) AS shs FROM toks),
-    sh AS (SELECT doc_id, unnest(shs) AS sh FROM shr),
-    sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id)
-    """
 
 
 @register(
@@ -986,43 +846,6 @@ def dedup_containment_lsh(spark, sf_dir):
     return D.containment_neardup_pairs(
         _t(spark, sf_dir, "documents"), k=16, bands=4, threshold=0.25
     )
-
-
-def _minhash_oracle(k: int = 16, bands: int = 4, threshold: float = 0.12) -> str:
-    coeffs = D.MINHASH_COEFFS[:k]
-    mins = ", ".join(
-        f"min((sh * {a} + {b}) % {HASH_P}) AS mh{j}"
-        for j, (a, b) in enumerate(coeffs)
-    )
-    rows_per_band = k // bands
-    band_selects = " UNION ALL ".join(
-        "SELECT doc_id, {bi} AS band, {concat} AS bsig FROM sig".format(
-            bi=bi,
-            concat="||'-'||".join(
-                f"mh{bi * rows_per_band + r}::VARCHAR" for r in range(rows_per_band)
-            ),
-        )
-        for bi in range(bands)
-    )
-    return f"""
-    WITH {_shingle_cte()},
-    sig AS (SELECT doc_id, {mins} FROM sh GROUP BY doc_id),
-    banded AS ({band_selects}),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-      FROM banded a JOIN banded b
-        ON a.band = b.band AND a.bsig = b.bsig AND a.doc_id < b.doc_id),
-    inter AS (
-      SELECT c.id_a, c.id_b, count(*) AS n_inter
-      FROM cand c JOIN sh a ON a.doc_id = c.id_a
-                  JOIN sh b ON b.doc_id = c.id_b AND a.sh = b.sh
-      GROUP BY 1, 2)
-    SELECT id_a, id_b,
-           round(n_inter / (sa.n_sh + sb.n_sh - n_inter), 6) AS jaccard
-    FROM inter JOIN sizes sa ON sa.doc_id = id_a
-               JOIN sizes sb ON sb.doc_id = id_b
-    WHERE round(n_inter / (sa.n_sh + sb.n_sh - n_inter), 6) >= {threshold}
-    """
 
 
 @register("dedup_minhash_lsh_pairs", _minhash_oracle())
@@ -1231,13 +1054,6 @@ ORACLES["similarity_neardup_cosine"] = _neardup_oracle()
 
 
 # --- text analysis -----------------------------------------------------------
-
-_PUNCT_RE = r"[^.,;:!?'\"()\[\]{}-]"
-#: whitespace spelled explicitly (functions/text.py WS_CLASS rationale:
-#: Java's \s includes \x0B, RE2's does not — a bare \s+ silently
-#: diverges between the Spark tokenizer and these oracles)
-_TOKS_SQL = "list_filter(string_split_regex(trim(text), '[ \\t\\n\\x0B\\f\\r]+'), t -> t != '')"
-
 
 @register(
     "text_stats_per_doc",
@@ -1472,37 +1288,6 @@ def similarity_lsh_multiprobe(spark, sf_dir):
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") % 25 == 0)
     return lsh_topk(emb, queries, k=5, multiprobe=1)
-
-
-def _recall_oracle_from(exact_sql: str, ann_sql: str) -> str:
-    """Compose two top-k oracle SELECTs into a per-query recall count —
-    the intersected hit count of the approximate top-k against the exact
-    one (both queries already rank deterministically)."""
-    return f"""
-    WITH exact AS (SELECT query_id, neighbor_id FROM ({exact_sql})),
-    ann AS (SELECT query_id, neighbor_id FROM ({ann_sql}))
-    SELECT e.query_id,
-           count(*) AS n_exact,
-           CAST(sum(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
-                AS BIGINT) AS n_hit
-    FROM exact e LEFT JOIN ann a
-      ON e.query_id = a.query_id AND e.neighbor_id = a.neighbor_id
-    GROUP BY e.query_id
-    """
-
-
-def _recall_counts(exact, ann):
-    """Per-query intersection counts of two deterministic top-k frames."""
-    hits = ann.select("query_id", "neighbor_id", F.lit(1).alias("hit"))
-    return (
-        exact.select("query_id", "neighbor_id")
-        .join(hits, ["query_id", "neighbor_id"], "left")
-        .groupBy("query_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_exact"),
-            F.count(F.col("hit")).alias("n_hit"),
-        )
-    )
 
 
 def _srp_recall_oracle(filter_pred: str) -> str:
@@ -2844,7 +2629,6 @@ def multimodal_jpeg_tile_channel_sums(spark, sf_dir):
         ZOOM,
         tile_bytes,
     )
-    from label_maker_dask_spark.queries_shared import image_channel_sums
     from label_maker_dask_spark.sources.imagery import fetch_images
 
     tiles = spark.createDataFrame(
@@ -2863,107 +2647,6 @@ def _decode_jpeg_pixels(blob: bytes):
     from label_maker_dask_spark.multimodal.images import decode_compressed
 
     return decode_compressed("jpeg")(blob)
-
-
-#: power-of-two n_cells ladder targeting ~64 vectors per cell, floor 16
-#: — constant per-cell occupancy keeps probe work per query CONSTANT as
-#: the corpus grows (n_probe x occupancy), where a fixed cell count
-#: makes it linear per query and quadratic overall.  Pure integer
-#: comparisons so Spark and DuckDB derive the identical cell count from
-#: the identical corpus (a float log2/sqrt could round differently at
-#: exact powers).  The floor keeps corpora <= 1024 exactly on the
-#: historical n_cells=16 behavior (tests, gates).  Capped at 1024:
-#: past that, a trained quantizer replaces lowest-id seed centroids
-#: anyway (operators/clustering.py is the upgrade path).  The 1024-cell
-#: ceiling is ORACLE-CORPUS sizing, not the production rule: past ~65k
-#: vectors occupancy grows linearly again under this ladder, and the
-#: stored-IVF/production path (operators/similarity.py) takes an
-#: explicit ``n_cells`` derived from the real corpus count instead.
-_IVF_CELL_LADDER = [(1024, 16), (2048, 32), (4096, 64), (8192, 128),
-                    (16384, 256), (32768, 512)]
-
-
-def _ivf_auto_cells(n: int) -> int:
-    for bound, cells in _IVF_CELL_LADDER:
-        if n <= bound:
-            return cells
-    return 1024
-
-
-#: Corpus row counts memoized per sf_dir so query *construction* costs at
-#: most one count job per directory per process — the IVF entries need the
-#: count to size the cell ladder, and without the memo every call (including
-#: plan-only inspection that never executes the query) re-scanned the corpus.
-_CORPUS_COUNT_CACHE: dict = {}
-
-
-def _emb_count(spark: SparkSession, sf_dir) -> int:
-    key = str(sf_dir)
-    if key not in _CORPUS_COUNT_CACHE:
-        _CORPUS_COUNT_CACHE[key] = _t(spark, sf_dir, "embeddings").count()
-    return _CORPUS_COUNT_CACHE[key]
-
-
-def _ivf_cells_sql(src: str = "embeddings") -> str:
-    """The ladder as a scalar subquery over the corpus row count."""
-    whens = " ".join(
-        f"WHEN count(*) <= {bound} THEN {cells}"
-        for bound, cells in _IVF_CELL_LADDER
-    )
-    return f"(SELECT CASE {whens} ELSE 1024 END FROM {src})"
-
-
-def _ivf_oracle(
-    filter_pred: str, k: int = 5, n_probe: int = 4,
-    src: str = "embeddings",
-) -> str:
-    """``src`` names the corpus relation — a view or a parenthesized
-    inline SELECT (the planted-cluster recall gate passes the latter)."""
-    from label_maker_dask_spark.functions.vectors import (
-        normalized_sql,
-        unit_dot_rounded_sql,
-        unit_dot_sql,
-    )
-
-    nv = normalized_sql("embedding")
-    return f"""
-    WITH cent AS (
-      SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cell, {nv} AS cv
-      FROM (SELECT * FROM {src} ORDER BY vec_id
-            LIMIT {_ivf_cells_sql(src)})),
-    corpus AS (SELECT vec_id, {nv} AS nv FROM {src}),
-    assign AS (
-      SELECT c.vec_id, cent.cell,
-             row_number() OVER (
-               PARTITION BY c.vec_id
-               ORDER BY {unit_dot_sql('c.nv', 'cent.cv')} DESC,
-                        cent.cell ASC) AS rn
-      FROM corpus c CROSS JOIN cent),
-    cells AS (SELECT vec_id, cell FROM assign WHERE rn = 1),
-    qs AS (SELECT vec_id, nv FROM corpus WHERE {filter_pred}),
-    qprobe AS (
-      SELECT q.vec_id AS query_id, cent.cell,
-             row_number() OVER (
-               PARTITION BY q.vec_id
-               ORDER BY {unit_dot_sql('q.nv', 'cent.cv')} DESC,
-                        cent.cell ASC) AS rn
-      FROM qs q CROSS JOIN cent),
-    probed AS (SELECT query_id, cell FROM qprobe WHERE rn <= {n_probe}),
-    scored AS (
-      SELECT p.query_id, cl.vec_id AS neighbor_id,
-             {unit_dot_rounded_sql('q.nv', 'n.nv')} AS cosine_sim
-      FROM probed p
-      JOIN cells cl ON cl.cell = p.cell
-      JOIN qs q ON q.vec_id = p.query_id
-      JOIN corpus n ON n.vec_id = cl.vec_id
-      WHERE p.query_id != cl.vec_id)
-    SELECT query_id, rank, neighbor_id, cosine_sim FROM (
-      SELECT *, row_number() OVER (
-               PARTITION BY query_id
-               ORDER BY cosine_sim DESC, neighbor_id ASC) AS rank
-      FROM scored)
-    WHERE rank <= {k}
-    """
 
 
 def _ivf_recall_oracle() -> str:
@@ -3334,18 +3017,23 @@ def multimodal_audio_zcr_windows(spark, sf_dir):
     return audio_zcr_windows(clips, window_samples=16)
 
 
-# Extension registrations (import side-effect populates QUERIES/ORACLES;
-# placed at module end so the extensions can import `register`/`_t` back).
-from label_maker_dask_spark import queries_tpch_ext  # noqa: E402,F401
-from label_maker_dask_spark import queries_text_ext  # noqa: E402,F401
-from label_maker_dask_spark import queries_raster_ext  # noqa: E402,F401
-from label_maker_dask_spark import queries_pipeline_ext  # noqa: E402,F401
-from label_maker_dask_spark import queries_analytics_ext  # noqa: E402,F401
-from label_maker_dask_spark import queries_relational_ext  # noqa: E402,F401
-from label_maker_dask_spark import queries_graph_ext  # noqa: E402,F401
-from label_maker_dask_spark import queries_scale_ext  # noqa: E402,F401
-from label_maker_dask_spark import queries_streaming_replay_ext  # noqa: E402,F401
-from label_maker_dask_spark import queries_planted_ext  # noqa: E402,F401
+# The ext modules register into the same registries when imported.  They
+# import only queries_shared, so any of them may be a process's first
+# catalog import; this list is also the catalog order (_order_registries).
+_EXT_MODULES = [
+    "label_maker_dask_spark.queries_tpch_ext",
+    "label_maker_dask_spark.queries_text_ext",
+    "label_maker_dask_spark.queries_raster_ext",
+    "label_maker_dask_spark.queries_pipeline_ext",
+    "label_maker_dask_spark.queries_analytics_ext",
+    "label_maker_dask_spark.queries_relational_ext",
+    "label_maker_dask_spark.queries_graph_ext",
+    "label_maker_dask_spark.queries_scale_ext",
+    "label_maker_dask_spark.queries_streaming_replay_ext",
+    "label_maker_dask_spark.queries_planted_ext",
+]
+for _module in _EXT_MODULES:
+    importlib.import_module(_module)
 
 # ---------------------------------------------------------------------------
 # Driver-visible window curation.
@@ -3461,15 +3149,11 @@ _DRIVER_WINDOW = [
 ]
 
 
-_finalize_registry_order()
-
-
 def validate_driver_window() -> None:
     """Assert the curated window is fully registered and fully
-    hash-gated.  Called from tests (test_catalog_contract), NOT at
-    import: an ext module imported directly makes the registry
-    legitimately partial mid-import, and the registry's dynamic
-    iteration order already tolerates that."""
+    hash-gated.  Runs once at import, after every catalog module has
+    registered, so a window name without a cell or an oracle fails the
+    import."""
     missing = [n for n in _DRIVER_WINDOW if n not in QUERIES]
     if missing:
         raise RuntimeError(f"driver window names not registered: {missing}")
@@ -3478,3 +3162,25 @@ def validate_driver_window() -> None:
         raise RuntimeError(
             f"driver window entries without a value-hash oracle: {no_oracle}"
         )
+
+
+def _order_registries() -> None:
+    """Reorder both registries in place, once: the driver window first,
+    then every other name by the place of its defining module in
+    ``[queries, *_EXT_MODULES]``, in registration order within a module.
+    The order is the same whichever catalog module was imported first."""
+    rank = {m: i for i, m in enumerate([__name__, *_EXT_MODULES])}
+    window = set(_DRIVER_WINDOW)
+    rest = sorted(
+        (n for n in QUERIES if n not in window),
+        key=lambda n: rank[QUERIES[n].__module__],
+    )
+    order = _DRIVER_WINDOW + rest
+    for reg in (QUERIES, ORACLES):
+        items = [(n, reg[n]) for n in order if n in reg]
+        reg.clear()
+        reg.update(items)
+
+
+validate_driver_window()
+_order_registries()

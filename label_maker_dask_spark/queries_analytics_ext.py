@@ -29,9 +29,10 @@ from label_maker_dask_spark.operators.materialize import materialize
 from pyspark.sql import functions as F
 
 from label_maker_dask_spark.functions.timeutil import epoch_micros
-from label_maker_dask_spark.queries import ORACLES, QUERIES, _t, register
 from label_maker_dask_spark.queries_shared import (
+    _t,
     components_oracle as _components_oracle,
+    register,
 )
 
 _GAPFILL_ORACLE = """
@@ -857,18 +858,6 @@ def analytics_market_basket_part_pairs(spark, sf_dir):
         .orderBy(F.desc("n_both"), F.asc("item_a"), F.asc("item_b"))
         .limit(50)
     )
-
-
-# Re-sort the registry storage after THIS module's registrations: when an
-# ext module is the process's first catalog import, queries.py's own
-# bottom-of-module finalize runs mid-circular-import, BEFORE this module's
-# @register calls execute — without this call the late registrations would
-# append behind the curated order for C-level dict consumers.
-from label_maker_dask_spark.queries import (  # noqa: E402
-    _finalize_registry_order as _refinalize,
-)
-
-_refinalize()
 
 
 _RATIO_ORACLE = """

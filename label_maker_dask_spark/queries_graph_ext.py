@@ -35,14 +35,16 @@ from pyspark.sql import functions as F
 
 from label_maker_dask_spark.functions.timeutil import epoch_micros
 from label_maker_dask_spark.operators.materialize import materialize
-from label_maker_dask_spark.queries import _t, register
+from label_maker_dask_spark.queries_shared import (
+    EDGES_CTE as _EDGES_CTE,
+    _t,
+    register,
+)
 
 #: rank unit: 1e12 integer steps per unit of PageRank mass
 _PR_SCALE = 1_000_000_000_000.0
 _PR_DAMP = 0.85
 _PR_ITERS = 3
-
-from label_maker_dask_spark.queries_shared import EDGES_CTE as _EDGES_CTE
 
 _TRANSITIONS_ORACLE = f"""
 WITH {_EDGES_CTE}
@@ -800,7 +802,6 @@ def graph_triangle_copurchase(spark, sf_dir):
     )
 
 
-
 _SEASONAL_DOW_ORACLE = """
 WITH daily AS (
   SELECT event_type, CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
@@ -901,15 +902,3 @@ def anomaly_seasonal_dow_residual(spark, sf_dir):
         .otherwise(F.lit(0))
         .alias("is_anomaly"),
     )
-
-
-# Re-sort the registry storage after THIS module's registrations: when an
-# ext module is the process's first catalog import, queries.py's own
-# bottom-of-module finalize runs mid-circular-import, BEFORE this module's
-# @register calls execute — without this call the late registrations would
-# append behind the curated order for C-level dict consumers.
-from label_maker_dask_spark.queries import (  # noqa: E402
-    _finalize_registry_order as _refinalize,
-)
-
-_refinalize()

@@ -38,7 +38,16 @@ from label_maker_dask_spark.operators.pipeline import (
     split_bucket_sql,
     stratified_sample_hash,
 )
-from label_maker_dask_spark.queries import _TOKS_SQL, _shingle_cte, _t, register
+from label_maker_dask_spark.queries_shared import (
+    _PUNCT_RE,
+    _TOKS_SQL,
+    _minhash_oracle,
+    _shingle_cte,
+    _t,
+    components_cte,
+    components_oracle as _components_oracle,
+    register,
+)
 
 
 @register(
@@ -191,11 +200,6 @@ def text_repetition_bigrams(spark, sf_dir):
     repetitive boilerplate, the classic pre-training quality filter)."""
     docs = _t(spark, sf_dir, "documents")
     return repetition_scores(docs)
-
-
-from label_maker_dask_spark.queries_shared import (  # noqa: E402
-    components_oracle as _components_oracle,
-)
 
 
 @register("dedup_components_minhash", _components_oracle())
@@ -357,7 +361,6 @@ def _quality_sql() -> str:
     """DuckDB rendering of functions/text.quality_score over columns
     ``text`` + ``toks`` — shared by every oracle that gates on quality so
     the (FP-epsilon-shifted) band bounds exist in exactly one place."""
-    from label_maker_dask_spark.queries import _PUNCT_RE
     from label_maker_dask_spark.functions.text import STOPWORDS
 
     punct = _PUNCT_RE.replace("'", "''")
@@ -372,8 +375,6 @@ def _quality_sql() -> str:
 
 
 def _curation_e2e_oracle(seq_len: int = 512, n_buckets: int = 32) -> str:
-    from label_maker_dask_spark.queries import _minhash_oracle
-
     quality = _quality_sql()
     split = split_bucket_sql("doc_id")
     pack_bucket = split_bucket_sql("doc_id", salt="pack")
@@ -716,8 +717,6 @@ def timeseries_trailing_p90_value(spark, sf_dir):
 
 
 def _leakage_safe_split_oracle() -> str:
-    from label_maker_dask_spark.queries_shared import components_cte
-
     split_g = split_bucket_sql("grp")
     return f"""
     {components_cte()},
@@ -1363,8 +1362,6 @@ def curation_quality_funnel(spark, sf_dir):
 
 
 def _token_budget_oracle() -> str:
-    from label_maker_dask_spark.queries import _TOKS_SQL
-
     return f"""
     WITH t0 AS (SELECT doc_id, text, {_TOKS_SQL} AS toks FROM documents),
     t AS (
@@ -1421,15 +1418,3 @@ def curation_token_budget_select(spark, sf_dir):
     return c.where(F.col("cum_tokens") <= budget).select(
         "doc_id", "quality", "n_tokens", "cum_tokens"
     )
-
-
-# Re-sort the registry storage after THIS module's registrations: when an
-# ext module is the process's first catalog import, queries.py's own
-# bottom-of-module finalize runs mid-circular-import, BEFORE this module's
-# @register calls execute — without this call the late registrations would
-# append behind the curated order for C-level dict consumers.
-from label_maker_dask_spark.queries import (  # noqa: E402
-    _finalize_registry_order as _refinalize,
-)
-
-_refinalize()

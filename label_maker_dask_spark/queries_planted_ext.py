@@ -67,7 +67,7 @@ from label_maker_dask_spark.operators.similarity import (
     sq8_rescore_topk,
     srp_bucket_sql,
 )
-from label_maker_dask_spark.queries import (
+from label_maker_dask_spark.queries_shared import (
     _emb_count,
     _ivf_auto_cells,
     _ivf_oracle,
@@ -557,10 +557,3 @@ def similarity_recall_ivf_planted_vs_exact(spark, sf_dir):
             n_cells=_ivf_auto_cells(_emb_count(spark, sf_dir)), n_probe=4,
         ),
     )
-
-
-from label_maker_dask_spark.queries import (  # noqa: E402
-    _finalize_registry_order as _refinalize,
-)
-
-_refinalize()

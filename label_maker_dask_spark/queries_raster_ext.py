@@ -28,7 +28,12 @@ from pyspark.sql import functions as F
 
 from label_maker_dask_spark.filters import filter_sql
 from label_maker_dask_spark.labels import segmentation_labels
-from label_maker_dask_spark.queries import _GL_ORACLE_LOOKUP, _t, register
+from label_maker_dask_spark.queries_shared import (
+    _GL_ORACLE_LOOKUP,
+    _t,
+    image_channel_sums,
+    register,
+)
 
 # overlapping class filters so REPLACE order matters: k=95 matches all
 # three and must rasterize as class 3
@@ -353,11 +358,6 @@ def segmentation_buffered_ring_areas(spark, sf_dir):
     return _class_pixel_counts(rasters)
 
 
-# Re-sort the registry storage after THIS module's registrations: when an
-# ext module is the process's first catalog import, queries.py's own
-# bottom-of-module finalize runs mid-circular-import, BEFORE this module's
-# @register calls execute — without this call the late registrations would
-# append behind the curated order for C-level dict consumers.
 # --------------------------------------------------------------------------
 # COG windowed-read gate: an engine-WRITTEN GeoTIFF (sources/tiff_write,
 # tiled + deflate + predictor — the COG interior shape) read back through
@@ -584,8 +584,6 @@ def raster_wms_window_channel_sums(spark, sf_dir):
         wms_image_fetcher,
     )
 
-    from label_maker_dask_spark.queries_shared import image_channel_sums
-
     tiles = spark.createDataFrame(
         [(int(_COG_ZOOM), int(x), int(y)) for x in _COG_XS for y in _COG_YS],
         "z int, x long, y long",
@@ -805,8 +803,6 @@ def raster_wms_utm_window_channel_sums(spark, sf_dir):
         _WMS_UTM_TEMPLATE, http_get=_wms_utm_fixture_server
     )
     images = fetch_images(tiles, image_fetcher=fetcher)
-    from label_maker_dask_spark.queries_shared import image_channel_sums
-
     return image_channel_sums(images, _decode_geotiff_pixels)
 
 
@@ -886,7 +882,6 @@ def raster_tms_window_channel_sums(spark, sf_dir):
     Scale shape: one executor task per tile partition, each fetch
     independent; swap http_get for the default pooled-requests session
     and the same plan runs against a live XYZ endpoint."""
-    from label_maker_dask_spark.queries_shared import image_channel_sums
     from label_maker_dask_spark.sources.imagery import (
         fetch_images,
         tms_image_fetcher,
@@ -1131,10 +1126,3 @@ def mvt_roundtrip_feature_stats(spark, sf_dir):
             F.sum("csum").alias("coord_sum"),
         )
     )
-
-
-from label_maker_dask_spark.queries import (  # noqa: E402
-    _finalize_registry_order as _refinalize,
-)
-
-_refinalize()

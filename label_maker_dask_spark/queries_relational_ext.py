@@ -50,9 +50,8 @@ from label_maker_dask_spark.operators.clustering import spherical_kmeans
 from label_maker_dask_spark.operators.merge import merge_upsert
 from label_maker_dask_spark.operators.skew import salted_join
 from label_maker_dask_spark.operators.timeseries import resample_ohlc
-from label_maker_dask_spark.queries import _t, register
-
 from label_maker_dask_spark.queries_shared import OHLC_ORACLE as _OHLC_ORACLE
+from label_maker_dask_spark.queries_shared import _TOKS_SQL, _t, register
 
 
 @register("timeseries_ohlc_hourly_by_type", _OHLC_ORACLE)
@@ -827,8 +826,6 @@ def scalar_date_arithmetic(spark, sf_dir):
 
 
 def _chunk_oracle() -> str:
-    from label_maker_dask_spark.queries import _TOKS_SQL
-
     return f"""
     WITH t AS (SELECT doc_id, {_TOKS_SQL} AS toks FROM documents),
     ix AS (SELECT doc_id, toks,
@@ -1398,15 +1395,3 @@ def analytics_equidepth_histogram_price(spark, sf_dir):
             F.max("cents").alias("hi_cents"),
         )
     )
-
-
-# Re-sort the registry storage after THIS module's registrations: when an
-# ext module is the process's first catalog import, queries.py's own
-# bottom-of-module finalize runs mid-circular-import, BEFORE this module's
-# @register calls execute — without this call the late registrations would
-# append behind the curated order for C-level dict consumers.
-from label_maker_dask_spark.queries import (  # noqa: E402
-    _finalize_registry_order as _refinalize,
-)
-
-_refinalize()

@@ -44,8 +44,8 @@ from pyspark.sql import functions as F
 from label_maker_dask_spark.functions.timeutil import epoch_micros
 from label_maker_dask_spark.operators.materialize import materialize
 from label_maker_dask_spark.operators.bloom import bloom_pruned_join
-from label_maker_dask_spark.queries import _t, register
 from label_maker_dask_spark.queries_shared import EDGES_CTE as _EDGES_CTE
+from label_maker_dask_spark.queries_shared import _t, register, session_tmpdir
 
 _BLOOM_JOIN_ORACLE = """
 SELECT c.c_custkey,
@@ -1419,8 +1419,6 @@ def _zprune_workdir() -> str:
     the one shared copy of that contract: the returned frame lazily
     reads the written layout, so the driver's collect happens after
     the entry returns)."""
-    from label_maker_dask_spark.queries_shared import session_tmpdir
-
     return session_tmpdir("layout_session", "zprune")
 
 
@@ -1705,15 +1703,3 @@ def layout_compaction_rewrite(spark, sf_dir):
         .cast("double")
         .alias("sum_price"),
     )
-
-
-# Re-sort the registry storage after THIS module's registrations: when an
-# ext module is the process's first catalog import, queries.py's own
-# bottom-of-module finalize runs mid-circular-import, BEFORE this module's
-# @register calls execute — without this call the late registrations would
-# append behind the curated order for C-level dict consumers.
-from label_maker_dask_spark.queries import (  # noqa: E402
-    _finalize_registry_order as _refinalize,
-)
-
-_refinalize()

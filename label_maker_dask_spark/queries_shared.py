@@ -1,12 +1,107 @@
-"""Oracle-SQL fragments shared between query-catalog ext modules.
+"""The query catalog's leaf module: the registries, the testdata loader
+and the oracle fragments that more than one catalog module uses.
 
-Lives in its own module (importing nothing from the catalog) so ext
-modules can share fragments without importing each other: ext modules
-are imported at the bottom of ``queries.py``, and a cross-ext
-from-import creates a circular hole whenever the importing module
-happens to be loaded first (e.g. a test importing one ext module
-directly).
+It imports nothing from the catalog.  Every ``queries_*_ext`` module
+imports from here only, ``queries.py`` imports every ext module and
+re-exports these names, and the bottom of ``queries.py`` orders both
+registries once, after every module has registered.
 """
+
+from __future__ import annotations
+
+import weakref
+from typing import Callable, Dict, Optional
+
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+from label_maker_dask_spark.functions.text import HASH_P
+from label_maker_dask_spark.operators import dedup as D
+
+#: name -> query and name -> DuckDB oracle SQL, in registration order
+#: until ``queries.py`` orders them (driver window first)
+QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {}
+ORACLES: Dict[str, str] = {}
+
+
+def register(name: str, oracle: Optional[str] = None):
+    def deco(fn):
+        QUERIES[name] = fn
+        if oracle is not None:
+            ORACLES[name] = oracle
+        return fn
+
+    return deco
+
+
+#: Sessions already configured by :func:`session_defaults`.  Keyed on the
+#: session object itself via a WeakSet, not ``id(spark)``: CPython reuses
+#: freed addresses, so an id-keyed set would silently SKIP configuring a
+#: new session allocated at a dead session's address — wrong timezone,
+#: wrong nanos handling, corrupted timestamp arithmetic.  The weak
+#: reference drops the entry when the session is GC'd, so a reused
+#: address always reconfigures.
+_SESSIONS_CONFIGURED: "weakref.WeakSet" = weakref.WeakSet()
+
+
+def session_defaults(spark: SparkSession) -> SparkSession:
+    """Apply the catalog's session configuration once per session — the
+    single place the engine mutates session state (queries themselves are
+    side-effect-free):
+
+    - UTC session timezone, so TIMESTAMP_NTZ epoch arithmetic matches
+      DuckDB's ``epoch_us`` on naive timestamps (functions/timeutil.py);
+    - ``nanosAsLong``, so a TIMESTAMP(NANOS) regeneration of the testdata
+      (which stock Spark refuses to read) degrades to a long column that
+      :func:`_t` converts explicitly instead of a read-time error.
+
+    Entry points (``__spark_entry__``, ``bench.py``, the test session
+    fixture) call this directly; :func:`_t` also routes through it so a
+    catalog query handed a fresh session still runs correctly."""
+    if spark not in _SESSIONS_CONFIGURED:
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        _SESSIONS_CONFIGURED.add(spark)
+    return spark
+
+
+#: inferred parquet schema per testdata table path — METADATA only,
+#: never data or results: every action over a ``_t`` frame still scans
+#: the parquet files.  ``spark.read.parquet`` re-infers the schema from
+#: file footers on EVERY call (~50-60 ms per read at sf0.1 vs ~12 ms
+#: with an explicit schema — measured round 18), and the catalog calls
+#: ``_t`` 1-3x per query x 258 queries x 2 bench passes, so the
+#: re-inference alone costs 15-30 s per bench pass.  Safe to key on the
+#: path because the testdata directories are immutable for a process's
+#: lifetime (this cache is NOT for maintained/mutable tables — those
+#: manage their own schema lifecycles, e.g. streaming/upsert.py's
+#: per-batch ``base_schema``).
+_T_SCHEMAS: dict = {}
+
+
+def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Load a testdata table.  The events table has carried TIMESTAMP(NANOS)
+    across driver regenerations, which Spark's parquet reader rejects by
+    default — session_defaults reads nanos as long, and this loader
+    truncates to micros with integer arithmetic (``div``, not double
+    division: epoch-nanos exceed a double's 53-bit mantissa).  DuckDB
+    truncates nanos to its micro timestamps the same way, so the engines
+    agree."""
+    session_defaults(spark)
+    path = f"{sf_dir}/{name}.parquet"
+    schema = _T_SCHEMAS.get(path)
+    if schema is None:
+        # one inference per table per process (nanosAsLong is set above,
+        # so a TIMESTAMP(NANOS) column infers as long here exactly as it
+        # did on the uncached path)
+        schema = spark.read.parquet(path).schema
+        _T_SCHEMAS[path] = schema
+    df = spark.read.schema(schema).parquet(path)
+    if name == "events":
+        if dict(df.dtypes).get("ts") == "bigint":
+            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    return df
+
 
 #: one process-lifetime temp root per consumer module, removed at
 #: interpreter exit.  Cleanup must be DEFERRED: entries that write a
@@ -35,6 +130,70 @@ def session_tmpdir(root_key: str, prefix: str) -> str:
     return tempfile.mkdtemp(prefix=prefix + "_", dir=root)
 
 
+_PUNCT_RE = r"[^.,;:!?'\"()\[\]{}-]"
+#: whitespace spelled explicitly (functions/text.py WS_CLASS rationale:
+#: Java's \s includes \x0B, RE2's does not — a bare \s+ silently
+#: diverges between the Spark tokenizer and these oracles)
+_TOKS_SQL = "list_filter(string_split_regex(trim(text), '[ \\t\\n\\x0B\\f\\r]+'), t -> t != '')"
+
+
+#: feature-property lookup the GL-filter oracles pass to
+#: ``filters.filter_sql`` (props JSON plays the feature properties)
+_GL_ORACLE_LOOKUP = "json_extract_string({props}, '$.' || {key})"
+
+
+def _shingle_cte(n: int = 3) -> str:
+    """Shared oracle CTE: distinct (doc_id, shingle-hash) pairs mirroring
+    operators/dedup.doc_shingles (token char-folds combined arithmetically
+    into shingle hashes, per-doc list_distinct)."""
+    from label_maker_dask_spark.functions.text import shingle_hashes_sql
+
+    shs = shingle_hashes_sql("t", n)
+    return f"""
+    toks AS (SELECT doc_id, {_TOKS_SQL} AS t FROM documents),
+    shr AS (SELECT doc_id, list_distinct({shs}) AS shs FROM toks),
+    sh AS (SELECT doc_id, unnest(shs) AS sh FROM shr),
+    sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id)
+    """
+
+
+def _minhash_oracle(k: int = 16, bands: int = 4, threshold: float = 0.12) -> str:
+    coeffs = D.MINHASH_COEFFS[:k]
+    mins = ", ".join(
+        f"min((sh * {a} + {b}) % {HASH_P}) AS mh{j}"
+        for j, (a, b) in enumerate(coeffs)
+    )
+    rows_per_band = k // bands
+    band_selects = " UNION ALL ".join(
+        "SELECT doc_id, {bi} AS band, {concat} AS bsig FROM sig".format(
+            bi=bi,
+            concat="||'-'||".join(
+                f"mh{bi * rows_per_band + r}::VARCHAR" for r in range(rows_per_band)
+            ),
+        )
+        for bi in range(bands)
+    )
+    return f"""
+    WITH {_shingle_cte()},
+    sig AS (SELECT doc_id, {mins} FROM sh GROUP BY doc_id),
+    banded AS ({band_selects}),
+    cand AS (
+      SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+      FROM banded a JOIN banded b
+        ON a.band = b.band AND a.bsig = b.bsig AND a.doc_id < b.doc_id),
+    inter AS (
+      SELECT c.id_a, c.id_b, count(*) AS n_inter
+      FROM cand c JOIN sh a ON a.doc_id = c.id_a
+                  JOIN sh b ON b.doc_id = c.id_b AND a.sh = b.sh
+      GROUP BY 1, 2)
+    SELECT id_a, id_b,
+           round(n_inter / (sa.n_sh + sb.n_sh - n_inter), 6) AS jaccard
+    FROM inter JOIN sizes sa ON sa.doc_id = id_a
+               JOIN sizes sb ON sb.doc_id = id_b
+    WHERE round(n_inter / (sa.n_sh + sb.n_sh - n_inter), 6) >= {threshold}
+    """
+
+
 #: lag-window edge list over the event stream — the transition-graph
 #: base shared by the graph queries (queries_graph_ext) and the k-hop
 #: BFS (queries_scale_ext)
@@ -56,13 +215,7 @@ def components_cte() -> str:
     ``comps (id, component)`` (plus ``csizes``).  The single source of
     truth consumers extend with their own CTEs/SELECT
     (``components_oracle`` below, the leakage-safe split's oracle in
-    queries_pipeline_ext).
-
-    The ``queries`` import is deliberately lazy: ``_minhash_oracle`` is
-    defined above the ext-module imports in queries.py, so it exists by
-    the time any ext module evaluates its oracles, even mid-import."""
-    from label_maker_dask_spark.queries import _minhash_oracle
-
+    queries_pipeline_ext)."""
     return f"""
     WITH RECURSIVE pairs AS ({_minhash_oracle()}),
     edges AS (SELECT id_a AS s, id_b AS d FROM pairs
@@ -165,3 +318,135 @@ def image_channel_sums(images, decode):
     return images.mapInPandas(
         sums, "z int, x int, y int, channel int, px_sum long"
     )
+
+
+def _recall_oracle_from(exact_sql: str, ann_sql: str) -> str:
+    """Compose two top-k oracle SELECTs into a per-query recall count —
+    the intersected hit count of the approximate top-k against the exact
+    one (both queries already rank deterministically)."""
+    return f"""
+    WITH exact AS (SELECT query_id, neighbor_id FROM ({exact_sql})),
+    ann AS (SELECT query_id, neighbor_id FROM ({ann_sql}))
+    SELECT e.query_id,
+           count(*) AS n_exact,
+           CAST(sum(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
+                AS BIGINT) AS n_hit
+    FROM exact e LEFT JOIN ann a
+      ON e.query_id = a.query_id AND e.neighbor_id = a.neighbor_id
+    GROUP BY e.query_id
+    """
+
+
+def _recall_counts(exact, ann):
+    """Per-query intersection counts of two deterministic top-k frames."""
+    hits = ann.select("query_id", "neighbor_id", F.lit(1).alias("hit"))
+    return (
+        exact.select("query_id", "neighbor_id")
+        .join(hits, ["query_id", "neighbor_id"], "left")
+        .groupBy("query_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_exact"),
+            F.count(F.col("hit")).alias("n_hit"),
+        )
+    )
+
+
+#: power-of-two n_cells ladder targeting ~64 vectors per cell, floor 16
+#: — constant per-cell occupancy keeps probe work per query CONSTANT as
+#: the corpus grows (n_probe x occupancy), where a fixed cell count
+#: makes it linear per query and quadratic overall.  Pure integer
+#: comparisons so Spark and DuckDB derive the identical cell count from
+#: the identical corpus (a float log2/sqrt could round differently at
+#: exact powers).  The floor keeps corpora <= 1024 exactly on the
+#: historical n_cells=16 behavior (tests, gates).  Capped at 1024:
+#: past that, a trained quantizer replaces lowest-id seed centroids
+#: anyway (operators/clustering.py is the upgrade path).  The 1024-cell
+#: ceiling is ORACLE-CORPUS sizing, not the production rule: past ~65k
+#: vectors occupancy grows linearly again under this ladder, and the
+#: stored-IVF/production path (operators/similarity.py) takes an
+#: explicit ``n_cells`` derived from the real corpus count instead.
+_IVF_CELL_LADDER = [(1024, 16), (2048, 32), (4096, 64), (8192, 128),
+                    (16384, 256), (32768, 512)]
+
+
+def _ivf_auto_cells(n: int) -> int:
+    for bound, cells in _IVF_CELL_LADDER:
+        if n <= bound:
+            return cells
+    return 1024
+
+
+#: Corpus row counts memoized per sf_dir so query *construction* costs at
+#: most one count job per directory per process — the IVF entries need the
+#: count to size the cell ladder, and without the memo every call (including
+#: plan-only inspection that never executes the query) re-scanned the corpus.
+_CORPUS_COUNT_CACHE: dict = {}
+
+
+def _emb_count(spark: SparkSession, sf_dir) -> int:
+    key = str(sf_dir)
+    if key not in _CORPUS_COUNT_CACHE:
+        _CORPUS_COUNT_CACHE[key] = _t(spark, sf_dir, "embeddings").count()
+    return _CORPUS_COUNT_CACHE[key]
+
+
+def _ivf_cells_sql(src: str = "embeddings") -> str:
+    """The ladder as a scalar subquery over the corpus row count."""
+    whens = " ".join(
+        f"WHEN count(*) <= {bound} THEN {cells}"
+        for bound, cells in _IVF_CELL_LADDER
+    )
+    return f"(SELECT CASE {whens} ELSE 1024 END FROM {src})"
+
+
+def _ivf_oracle(
+    filter_pred: str, k: int = 5, n_probe: int = 4,
+    src: str = "embeddings",
+) -> str:
+    """``src`` names the corpus relation — a view or a parenthesized
+    inline SELECT (the planted-cluster recall gate passes the latter)."""
+    from label_maker_dask_spark.functions.vectors import (
+        normalized_sql,
+        unit_dot_rounded_sql,
+        unit_dot_sql,
+    )
+
+    nv = normalized_sql("embedding")
+    return f"""
+    WITH cent AS (
+      SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cell, {nv} AS cv
+      FROM (SELECT * FROM {src} ORDER BY vec_id
+            LIMIT {_ivf_cells_sql(src)})),
+    corpus AS (SELECT vec_id, {nv} AS nv FROM {src}),
+    assign AS (
+      SELECT c.vec_id, cent.cell,
+             row_number() OVER (
+               PARTITION BY c.vec_id
+               ORDER BY {unit_dot_sql('c.nv', 'cent.cv')} DESC,
+                        cent.cell ASC) AS rn
+      FROM corpus c CROSS JOIN cent),
+    cells AS (SELECT vec_id, cell FROM assign WHERE rn = 1),
+    qs AS (SELECT vec_id, nv FROM corpus WHERE {filter_pred}),
+    qprobe AS (
+      SELECT q.vec_id AS query_id, cent.cell,
+             row_number() OVER (
+               PARTITION BY q.vec_id
+               ORDER BY {unit_dot_sql('q.nv', 'cent.cv')} DESC,
+                        cent.cell ASC) AS rn
+      FROM qs q CROSS JOIN cent),
+    probed AS (SELECT query_id, cell FROM qprobe WHERE rn <= {n_probe}),
+    scored AS (
+      SELECT p.query_id, cl.vec_id AS neighbor_id,
+             {unit_dot_rounded_sql('q.nv', 'n.nv')} AS cosine_sim
+      FROM probed p
+      JOIN cells cl ON cl.cell = p.cell
+      JOIN qs q ON q.vec_id = p.query_id
+      JOIN corpus n ON n.vec_id = cl.vec_id
+      WHERE p.query_id != cl.vec_id)
+    SELECT query_id, rank, neighbor_id, cosine_sim FROM (
+      SELECT *, row_number() OVER (
+               PARTITION BY query_id
+               ORDER BY cosine_sim DESC, neighbor_id ASC) AS rank
+      FROM scored)
+    WHERE rank <= {k}
+    """

@@ -46,8 +46,14 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from label_maker_dask_spark.queries import _minhash_oracle, _t, register
-from label_maker_dask_spark.queries_shared import OHLC_ORACLE, SLIDING_1H30_ORACLE
+from label_maker_dask_spark.queries_shared import (
+    OHLC_ORACLE,
+    SLIDING_1H30_ORACLE,
+    _minhash_oracle,
+    _t,
+    register,
+    session_tmpdir,
+)
 
 #: seconds between the forced file mtimes of consecutive change batches:
 #: the file streaming source orders its initial listing by modification
@@ -76,8 +82,6 @@ def _replay_workdir(name: str) -> str:
     """Fresh per-entry scratch under the process-lifetime replay root
     (deferred atexit cleanup — see ``queries_shared.session_tmpdir``,
     the one shared copy of that contract)."""
-    from label_maker_dask_spark.queries_shared import session_tmpdir
-
     return session_tmpdir("replay_session", name)
 
 
@@ -596,17 +600,22 @@ def stream_versioned_diff_replay(
 ) -> DataFrame:
     """Three additive micro-batches through the REAL
     ``stream_accumulate_to_versioned_table`` sink (per-customer revenue
-    running sums, one immutable version per batch), then the
-    manifest-pruned CDC feed ``table_version_diff(v1 -> v3)`` flattened
-    to scalar columns.  The oracle states the diff directly: version 1
-    is batch 0's sums, version 3 is the full log's sums, and the feed
-    must contain exactly the customers whose state changed in between —
-    inserts (first order arrived after batch 0) with a NULL old side,
-    updates with both.  A torn publish, a wrong manifest bucket entry,
-    a diff that reads an unchanged bucket, or sums applied twice all
-    hash-mismatch."""
+    running sums, one immutable version per non-empty batch), then the
+    manifest-pruned CDC feed ``table_version_diff`` from batch 0's
+    version to the latest, flattened to scalar columns.  The oracle
+    states the diff directly: batch 0's sums against the full log's
+    sums, and the feed must contain exactly the customers whose state
+    changed in between — inserts (first order arrived after batch 0)
+    with a NULL old side, updates with both.  The sink skips an empty
+    batch, so version numbers need not match batch numbers: the diff
+    starts at the version whose manifest records batch 0, and with no
+    such version every customer is an insert.  A torn publish, a wrong
+    manifest bucket entry, a diff that reads an unchanged bucket, or
+    sums applied twice all hash-mismatch."""
     from label_maker_dask_spark.streaming.versioned import (
+        _read_manifest,
         latest_table_version,
+        read_table_version,
         stream_accumulate_to_versioned_table,
         table_version_diff,
     )
@@ -636,7 +645,15 @@ def stream_versioned_diff_replay(
             "o_custkey long, change string, old_rev_cents long, "
             "new_rev_cents long",
         )
-    diff = table_version_diff(spark, table, v_from=1, v_to=3)
+    if _read_manifest(table, 1)["batch"] != 0:
+        # batch 0 was empty and published no version: nothing to diff from
+        return read_table_version(spark, table).select(
+            "o_custkey",
+            F.lit("insert").alias("change"),
+            F.lit(None).cast("long").alias("old_rev_cents"),
+            F.col("rev_cents").alias("new_rev_cents"),
+        )
+    diff = table_version_diff(spark, table, v_from=1)
     return diff.select(
         "o_custkey",
         "change",
@@ -2291,13 +2308,6 @@ def stream_upsert_type_widening_replay(
     return _read_table(
         spark, out, "o_orderkey long, o_custkey long, totalprice_cents long"
     )
-
-
-from label_maker_dask_spark.queries import (  # noqa: E402
-    _finalize_registry_order as _refinalize,
-)
-
-_refinalize()
 
 
 def _bpe_stream_oracle():

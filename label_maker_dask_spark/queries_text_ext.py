@@ -12,7 +12,12 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from label_maker_dask_spark.functions.text import tokens, word_shingles, word_shingles_sql
-from label_maker_dask_spark.queries import _TOKS_SQL, _t, register
+from label_maker_dask_spark.queries_shared import (
+    _TOKS_SQL,
+    _t,
+    register,
+    session_tmpdir,
+)
 
 # shared tf-idf expression: rounded BEFORE ranking so the rank ordering is
 # identical cross-engine (unrounded doubles can differ by an ulp between
@@ -503,7 +508,6 @@ def text_vocab_coverage_top30(spark, sf_dir):
     )
 
 
-
 # ---------------------------------------------------------------------------
 # Round-13 additions: quantized ANN, bigram-LM scoring, character entropy.
 # ---------------------------------------------------------------------------
@@ -695,7 +699,6 @@ def text_char_entropy(spark, sf_dir):
     )
 
 
-
 def _pq_adc_oracle():
     from label_maker_dask_spark.operators.similarity import pq_adc_oracle_sql
 
@@ -718,7 +721,6 @@ def similarity_pq_adc_topk_ann(spark, sf_dir):
 
     emb = _t(spark, sf_dir, "embeddings")
     return pq_adc_topk(emb, F.col("vec_id") % 25 == 0, k=5)
-
 
 
 _SOURCE_KL_ORACLE = f"""
@@ -783,7 +785,6 @@ def text_source_kl_divergence(spark, sf_dir):
     )
 
 
-
 #: process-lifetime shared PQ index per sf_dir — the build (training +
 #: write) runs once and its cost lands in the similarity_pq_index_build
 #: bench cell, so the stored/join READ entries time the read path alone
@@ -801,8 +802,6 @@ def _pq_shared_index(spark, sf_dir, rebuild: bool = False) -> str:
     ``rebuild=False`` and reuse whatever build ran last; the write is
     deterministic, so a rebuild never changes read results."""
     from label_maker_dask_spark.operators.similarity import write_pq_index
-    from label_maker_dask_spark.queries_shared import session_tmpdir
-
     path = _PQ_SHARED.get(sf_dir)
     if path is None or rebuild:
         if path is None:
@@ -891,7 +890,6 @@ def similarity_pq_join_topk_ann(spark, sf_dir):
     )
 
 
-
 def _srp_skew_oracle():
     from label_maker_dask_spark.operators.similarity import srp_bucket_sql
 
@@ -956,7 +954,6 @@ def profile_srp_bucket_skew(spark, sf_dir):
             F.col("nbuckets").alias("n_buckets"),
         )
     )
-
 
 
 def _hotbucket_oracle():
@@ -1054,18 +1051,6 @@ def similarity_hotbucket_dedup_adversarial(spark, sf_dir):
     return stage_stats(mod, "adversarial").unionByName(
         stage_stats(dedup, "code_deduped")
     )
-
-
-# Re-sort the registry storage after THIS module's registrations: when an
-# ext module is the process's first catalog import, queries.py's own
-# bottom-of-module finalize runs mid-circular-import, BEFORE this module's
-# @register calls execute — without this call the late registrations would
-# append behind the curated order for C-level dict consumers.
-from label_maker_dask_spark.queries import (  # noqa: E402
-    _finalize_registry_order as _refinalize,
-)
-
-_refinalize()
 
 
 def _bpe_merges_oracle():

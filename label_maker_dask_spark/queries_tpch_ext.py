@@ -9,7 +9,7 @@ semi-join qualification (Q20), EXISTS/NOT-EXISTS self-join (Q21) — with
 supply facts derived from ``lineitem`` where ``partsupp`` would be used.
 
 Registered into the same QUERIES/ORACLES catalog as
-``label_maker_dask_spark.queries`` (imported from its module end).
+``label_maker_dask_spark.queries``, which imports this module.
 """
 
 from __future__ import annotations
@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from label_maker_dask_spark.queries import _t, register
+from label_maker_dask_spark.queries_shared import _t, register
 
 
 @register(
@@ -528,15 +528,3 @@ def agg_winsorized_mean_price(spark, sf_dir):
             ).alias("n_clipped"),
         )
     )
-
-
-# Re-sort the registry storage after THIS module's registrations: when an
-# ext module is the process's first catalog import, queries.py's own
-# bottom-of-module finalize runs mid-circular-import, BEFORE this module's
-# @register calls execute — without this call the late registrations would
-# append behind the curated order for C-level dict consumers.
-from label_maker_dask_spark.queries import (  # noqa: E402
-    _finalize_registry_order as _refinalize,
-)
-
-_refinalize()

@@ -26,16 +26,13 @@ common curation shape, don't need it.)
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 from typing import List, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
-from label_maker_dask_spark.streaming.commit import read_state, write_text
-
-_META_FILE = "_lmds_meta.json"
+from label_maker_dask_spark.streaming.commit import write_text
 
 
 def _versions(table_path: str) -> List[int]:
@@ -48,32 +45,18 @@ def _versions(table_path: str) -> List[int]:
     return sorted(out)
 
 
-def write_snapshot(
-    df: DataFrame, table_path: str, metadata: Optional[dict] = None
-) -> int:
+def write_snapshot(df: DataFrame, table_path: str) -> int:
     """Publish ``df`` as the table's next immutable version; returns the
     new version number (1-based).  The snapshot directory appears
-    atomically, and ``_latest`` is repointed only after it is complete.
-    ``metadata`` (JSON-serializable) is written INTO the version directory
-    before the rename, so it appears atomically with the data — the hook
-    streaming sinks use to fold their exactly-once batch marker into the
-    snapshot itself (underscore-prefixed, invisible to parquet reads)."""
+    atomically, and ``_latest`` is repointed only after it is complete."""
     os.makedirs(table_path, exist_ok=True)
     version = (_versions(table_path) or [0])[-1] + 1
     final = os.path.join(table_path, f"v={version}")
     tmp = os.path.join(table_path, f"_publishing_v{version}")
     df.write.mode("overwrite").parquet(tmp)
-    if metadata is not None:
-        with open(os.path.join(tmp, _META_FILE), "w") as fh:
-            json.dump(metadata, fh)
     os.rename(tmp, final)
     _point_latest(table_path, version)
     return version
-
-
-def snapshot_metadata(table_path: str, version: int) -> Optional[dict]:
-    """The metadata dict published with ``version``, or None."""
-    return read_state(os.path.join(table_path, f"v={version}"), _META_FILE)
 
 
 def _point_latest(table_path: str, version: int) -> None:
@@ -132,7 +115,6 @@ def expire_snapshots(table_path: str, keep: int = 2) -> List[int]:
 __all__ = [
     "write_snapshot",
     "read_snapshot",
-    "snapshot_metadata",
     "latest_version",
     "rollback",
     "expire_snapshots",

@@ -1,7 +1,6 @@
 """Snapshot-versioned BUCKETED maintenance: per-batch cost proportional
-to the delta AND full table history — the intersection of
-:mod:`streaming.bucketed` (bucket-pruned rewrites) and
-:mod:`streaming.snapshot_sink` (immutable versions, O(1) rollback).
+to the delta AND full table history — :mod:`streaming.bucketed`'s
+bucket-pruned rewrites, kept as immutable versions with O(1) rollback.
 
 This is the minimal shape every production table format (Iceberg/Delta/
 Hudi) builds on: immutable data files + a tiny manifest naming which

@@ -132,17 +132,3 @@ def lnglat_to_tile_cols(lng: Column, lat: Column, zoom: int) -> Column:
     x = F.least(F.lit(z2 - 1), F.greatest(F.lit(0.0), F.floor(x_frac * z2)))
     y = F.least(F.lit(z2 - 1), F.greatest(F.lit(0.0), F.floor(y_frac * z2)))
     return F.struct(x.cast("int").alias("x"), y.cast("int").alias("y"))
-
-
-# --- tile -> geography, as Column expressions (no UDF) -----------------------
-
-
-def tile_ul_lng(x: Column, z: Column) -> Column:
-    """Longitude of a tile's upper-left corner."""
-    return x / F.pow(F.lit(2.0), z) * 360.0 - 180.0
-
-
-def tile_ul_lat(y: Column, z: Column) -> Column:
-    """Latitude of a tile's upper-left corner (inverse Web Mercator)."""
-    n = F.lit(math.pi) - F.lit(2.0 * math.pi) * y / F.pow(F.lit(2.0), z)
-    return F.degrees(F.atan(F.sinh(n)))

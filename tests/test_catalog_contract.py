@@ -7,6 +7,13 @@ DuckDB DESCRIBE (parse+bind only, no execution), so this stays fast."""
 
 from __future__ import annotations
 
+import ast
+import json
+import os
+import pathlib
+import subprocess
+import sys
+
 import duckdb
 import pytest
 from pyspark.sql.types import ArrayType, MapType, StructType
@@ -96,6 +103,73 @@ PINNED_DRIVER_WINDOW = [
 def test_driver_window_is_pinned():
     assert list(Q.QUERIES)[:50] == PINNED_DRIVER_WINDOW
     Q.validate_driver_window()
+
+
+ROOT = pathlib.Path(__file__).resolve().parent.parent
+CATALOG = ROOT / "label_maker_dask_spark"
+EXT_MODULES = sorted(p.stem for p in CATALOG.glob("queries_*_ext.py"))
+
+# import ``argv[1]`` first, then the catalog, and print both registries'
+# orders (Python-level and C-level iteration)
+_ORDER_PROBE = """
+import importlib, json, sys
+importlib.import_module(sys.argv[1])
+import label_maker_dask_spark.queries as Q
+print(json.dumps([list(Q.QUERIES), list(dict(Q.QUERIES)), list(Q.ORACLES)]))
+"""
+
+
+@pytest.mark.parametrize("first", EXT_MODULES)
+def test_catalog_order_does_not_depend_on_the_first_import(first):
+    """A process that imports an ext module before ``queries`` sees the
+    same registry order, window first, as one that imports ``queries``
+    first."""
+    env = dict(os.environ)
+    env["PYTHONPATH"] = os.pathsep.join(
+        p for p in (str(ROOT), env.get("PYTHONPATH")) if p
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", _ORDER_PROBE, f"label_maker_dask_spark.{first}"],
+        cwd=ROOT, env=env, capture_output=True, text=True, check=True,
+    ).stdout
+    queries, raw, oracles = json.loads(out.splitlines()[-1])
+    assert queries == list(Q.QUERIES)
+    assert raw == list(dict(Q.QUERIES))
+    assert oracles == list(Q.ORACLES)
+    assert queries[:50] == PINNED_DRIVER_WINDOW
+
+
+def _imported_modules(tree):
+    """(line, dotted name) for each module or name an import statement
+    names, relative imports resolved against the package."""
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            for alias in node.names:
+                yield node.lineno, alias.name
+        elif isinstance(node, ast.ImportFrom):
+            base = node.module or ""
+            if node.level:
+                base = ".".join(
+                    p for p in ("label_maker_dask_spark", node.module) if p
+                )
+            yield node.lineno, base
+            for alias in node.names:
+                yield node.lineno, f"{base}.{alias.name}"
+
+
+def test_catalog_modules_do_not_import_queries():
+    """The ext modules and ``queries_shared`` import nothing from
+    ``queries``: the catalog imports one way, so no registry is ever
+    seen half-built by a circular import."""
+    paths = sorted(CATALOG.glob("queries_*.py"))
+    assert len(paths) == len(EXT_MODULES) + 1
+    offenders = [
+        f"{path.name}:{line}"
+        for path in paths
+        for line, name in _imported_modules(ast.parse(path.read_text()))
+        if name == "label_maker_dask_spark.queries"
+    ]
+    assert not offenders, f"imports of queries: {offenders}"
 
 
 def test_window_matches_rotation_derivation():

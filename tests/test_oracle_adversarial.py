@@ -177,3 +177,28 @@ def test_stream_replay_cells_on_empty_sources(spark, tmp_path, name):
         return
     got, want = _both(spark, sf_dir, name, _EMPTY_SOURCES)
     assert want == [] and got == want
+
+
+def test_versioned_diff_replay_when_batch_0_is_empty(spark, tmp_path):
+    """No order key is a multiple of 3, so batch 0 is empty and the sink
+    publishes no version for it: versions 1 and 2 hold batches 1 and 2.
+    Against batch 0's (empty) sums every customer is an insert with a
+    NULL old side."""
+    tables = {
+        "orders": {
+            "o_orderkey": pa.array([1, 4, 7, 2, 5], pa.int64()),
+            "o_custkey": pa.array([10, 20, 10, 30, 20], pa.int64()),
+            "o_totalprice": pa.array(
+                [1.0, 2.0, 3.0, 4.0, 5.0], pa.float64()
+            ),
+        }
+    }
+    sf_dir = str(tmp_path)
+    _write_tables(sf_dir, tables)
+    got, want = _both(spark, sf_dir, "stream_versioned_diff_replay", tables)
+    assert want == [
+        (10, "insert", None, 400),
+        (20, "insert", None, 700),
+        (30, "insert", None, 400),
+    ]
+    assert got == want

@@ -37,10 +37,6 @@ from label_maker_dask_spark.streaming.bucketed import (
 )
 from label_maker_dask_spark.streaming.commit import start_sink
 from label_maker_dask_spark.streaming.neardup import stream_neardup_index
-from label_maker_dask_spark.streaming.snapshot_sink import (
-    stream_accumulate_to_snapshots,
-    stream_upsert_to_snapshots,
-)
 from label_maker_dask_spark.streaming.upsert import (
     accumulate_batch,
     stream_accumulate_to_parquet,
@@ -86,12 +82,6 @@ SINKS = [
     _sink("accumulate_versioned", DELTAS,
           lambda s, t, c: stream_accumulate_to_versioned_table(
               s, t, c, keys=["k"], sum_cols=["w"], n_buckets=2)),
-    _sink("upsert_snapshots", CHANGES,
-          lambda s, t, c: stream_upsert_to_snapshots(
-              s, t, c, keys=["k"], seq_col="seq")),
-    _sink("accumulate_snapshots", DELTAS,
-          lambda s, t, c: stream_accumulate_to_snapshots(
-              s, t, c, keys=["k"], sum_cols=["w"])),
     _sink("neardup", DOCS, lambda s, t, c: stream_neardup_index(
         s, t, t + "_pairs", c)),
     _sink("scd2", HISTORY, lambda s, t, c: stream_scd2_to_parquet(
