@@ -31,6 +31,10 @@ from typing import Optional, Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from label_maker_dask_spark.streaming.bucketed import _apply_bucketed
+from label_maker_dask_spark.streaming.commit import start_sink
+from label_maker_dask_spark.streaming.upsert import rewrite_exactly_once
+
 
 def historize_changes(
     changes: DataFrame,
@@ -167,9 +171,6 @@ def stream_scd2_to_parquet(
     (they sit at or before the affected keys' current ``valid_from``), so
     exactly-once needs the in-table marker
     (:func:`streaming.upsert.rewrite_exactly_once`)."""
-    from label_maker_dask_spark.streaming.commit import start_sink
-    from label_maker_dask_spark.streaming.upsert import rewrite_exactly_once
-
     merge_fn = _scd2_merge(keys, ts_col, tie_break)
 
     def apply(batch: DataFrame, batch_id: int, run_id: str) -> None:
@@ -206,9 +207,6 @@ def stream_scd2_to_parquet_bucketed(
     Exactly-once rides on the per-bucket markers (partial replays
     re-merge only unapplied buckets) — the :mod:`streaming.bucketed`
     contract."""
-    from label_maker_dask_spark.streaming.bucketed import _apply_bucketed
-    from label_maker_dask_spark.streaming.commit import start_sink
-
     merge_fn = _scd2_merge(keys, ts_col, tie_break)
 
     def apply(batch: DataFrame, batch_id: int, run_id: str) -> None:

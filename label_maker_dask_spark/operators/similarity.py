@@ -1454,9 +1454,11 @@ def pq_subvectors(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Explode vectors into (vec_id, m, sub) subspace rows, m in 1..n_sub,
-    each sub an array of ``sub_dim`` doubles (contiguous dim blocks)."""
+    each sub an array of ``sub_dim`` doubles (contiguous dim blocks).  A
+    NULL vector gives no rows, so PQ training, encoding, the index build
+    and append, and the queries all skip it: it is not indexed."""
     v = F.col(vec_col).cast("array<double>")
-    return embeddings.select(
+    return embeddings.where(F.col(vec_col).isNotNull()).select(
         F.col(id_col).alias("vec_id"),
         F.explode(
             F.transform(
@@ -1710,11 +1712,12 @@ def _pq_train_ctes_sql(
     SRP bucketing (``subv``/``cb1``/``codes``/``bkt``) — used by the ADC
     query oracle and the index-build stats oracle so the two can never
     drift.  ``table`` names the source relation (a view or upstream
-    CTE, e.g. the planted-cluster corpus of the recall gates)."""
+    CTE, e.g. the planted-cluster corpus of the recall gates).  NULL
+    vectors are not indexed, as in :func:`pq_subvectors`."""
     return f"""subv AS (
       SELECT vec_id, m, v[(m-1)*{sub_dim}+1 : m*{sub_dim}] AS sub
       FROM (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM {table}
-            WHERE {corpus_pred})
+            WHERE embedding IS NOT NULL AND ({corpus_pred}))
       CROSS JOIN (SELECT unnest(generate_series(1, {n_sub})) AS m)),
     tsub AS (SELECT * FROM subv WHERE {train_pred}),
     init AS (
@@ -1746,7 +1749,7 @@ def _pq_train_ctes_sql(
                  {_pq_sqdist_sql(sub_dim, 's.sub', 'c.cu')} ASC, c.code ASC) AS rn
         FROM subv s JOIN cb1 c USING (m)) WHERE rn = 1),
     bkt AS (SELECT vec_id, {srp_bucket_sql('embedding', dim=dim)} AS bucket
-            FROM {table} WHERE {corpus_pred})"""
+            FROM {table} WHERE embedding IS NOT NULL AND ({corpus_pred}))"""
 
 
 def pq_adc_oracle_sql(

@@ -74,8 +74,8 @@ def session_defaults(spark: SparkSession) -> SparkSession:
 #: re-inference alone costs 15-30 s per bench pass.  Safe to key on the
 #: path because the testdata directories are immutable for a process's
 #: lifetime (this cache is NOT for maintained/mutable tables — those
-#: manage their own schema lifecycles, e.g. streaming/upsert.py's
-#: per-batch ``base_schema``).
+#: keep their schema in their own state records, read by
+#: ``streaming.commit.read_stored``).
 _T_SCHEMAS: dict = {}
 
 

@@ -55,6 +55,27 @@ from label_maker_dask_spark.tiles import tile_range
 _FLOOR_FILE = "_slippy_floor.json"
 
 
+def _set_grid(reader, options) -> List[float]:
+    """Parse and validate the ``bounds``/``zoom`` options for any of the
+    readers: sets ``reader.zoom`` and its tile index range
+    ``xmin, ymin, xmax, ymax``; → the bounds."""
+    bounds_s, zoom_s = options.get("bounds"), options.get("zoom")
+    if bounds_s is None or zoom_s is None:
+        raise ValueError(
+            "slippy_tiles requires options bounds='w,s,e,n' and zoom"
+        )
+    bounds = [float(v) for v in str(bounds_s).split(",")]
+    if len(bounds) != 4:
+        raise ValueError(
+            f"slippy_tiles bounds must be 'w,s,e,n' (got {bounds_s!r})"
+        )
+    reader.zoom = int(zoom_s)
+    reader.xmin, reader.ymin, reader.xmax, reader.ymax = tile_range(
+        bounds, reader.zoom
+    )
+    return bounds
+
+
 class _Band(InputPartition):
     def __init__(self, zoom, xmin, xmax, ymin, ymax):
         self.zoom, self.xmin, self.xmax = zoom, xmin, xmax
@@ -101,22 +122,8 @@ class SlippyTileDataSource(DataSource):
 
 class SlippyTileReader(DataSourceReader):
     def __init__(self, options):
-        bounds_s = options.get("bounds")
-        zoom_s = options.get("zoom")
-        if bounds_s is None or zoom_s is None:
-            raise ValueError(
-                "slippy_tiles requires options bounds='w,s,e,n' and zoom"
-            )
-        bounds = [float(v) for v in str(bounds_s).split(",")]
-        if len(bounds) != 4:
-            raise ValueError(
-                f"slippy_tiles bounds must be 'w,s,e,n' (got {bounds_s!r})"
-            )
-        self.zoom = int(zoom_s)
+        _set_grid(self, options)
         self.n_parts = max(1, int(options.get("numpartitions", 8)))
-        self.xmin, self.ymin, self.xmax, self.ymax = tile_range(
-            bounds, self.zoom
-        )
 
     def pushFilters(self, filters: List[Filter]) -> Iterator[Filter]:
         """Tighten the generated x/y ranges (and short-circuit on a z
@@ -192,23 +199,8 @@ class SlippyTileStreamReader(SimpleDataSourceStreamReader):
     crash).  Offsets are tiny dicts; no driver state beyond them."""
 
     def __init__(self, options):
-        bounds_s = options.get("bounds")
-        zoom_s = options.get("zoom")
-        if bounds_s is None or zoom_s is None:
-            raise ValueError(
-                "slippy_tiles (stream) requires options bounds='w,s,e,n' "
-                "and zoom"
-            )
-        bounds = [float(v) for v in str(bounds_s).split(",")]
-        if len(bounds) != 4:
-            raise ValueError(
-                f"slippy_tiles bounds must be 'w,s,e,n' (got {bounds_s!r})"
-            )
-        self.zoom = int(zoom_s)
+        _set_grid(self, options)
         self.rows_per_batch = max(1, int(options.get("rowsperbatch", 4)))
-        self.xmin, self.ymin, self.xmax, self.ymax = tile_range(
-            bounds, self.zoom
-        )
 
     def initialOffset(self) -> dict:  # noqa: N802
         return {"y": self.ymin}
@@ -260,26 +252,8 @@ class SlippyTilePartitionedStreamReader(DataSourceStreamReader):
     against the same closed-form grid oracle."""
 
     def __init__(self, options):
-        bounds_s = options.get("bounds")
-        zoom_s = options.get("zoom")
-        if bounds_s is None or zoom_s is None:
-            raise ValueError(
-                "slippy_tiles (stream) requires options bounds='w,s,e,n' "
-                "and zoom"
-            )
-        bounds = [float(v) for v in str(bounds_s).split(",")]
-        if len(bounds) != 4:
-            raise ValueError(
-                f"slippy_tiles bounds must be 'w,s,e,n' (got {bounds_s!r})"
-            )
-        self.zoom = int(zoom_s)
+        bounds = _set_grid(self, options)
         self.rows_per_batch = max(1, int(options.get("rowsperbatch", 4)))
-        self.xmin, self.ymin, self.xmax, self.ymax = tile_range(
-            bounds, self.zoom
-        )
-        # opt-in call trace (restart debugging): driver-side planner
-        # calls append one line each to this path
-        self._dbg = options.get("debuglog")
         # opt-in DURABLE floor (option floordir=<checkpoint dir>):
         # commit(end) persists the committed frontier beside the
         # checkpoint, and a fresh post-restart reader loads it here —
@@ -334,26 +308,15 @@ class SlippyTilePartitionedStreamReader(DataSourceStreamReader):
                     or st.get("run") is None
                 ):
                     self._floor = max(self.ymin, int(st["y"]))
-                else:
-                    self._log(
-                        f"stale floor ignored (run {st.get('run')!r} != "
-                        f"{self._floor_run!r})"
-                    )
-
-    def _log(self, msg: str) -> None:
-        if self._dbg:
-            with open(self._dbg, "a") as fh:
-                fh.write(f"{id(self)} {msg}\n")
 
     def initialOffset(self) -> dict:  # noqa: N802
-        self._log("initialOffset")
         return {"y": self.ymin}
 
     def latestOffset(self) -> dict:  # noqa: N802
         # advances a reader-local cursor.  The API gives latestOffset()
         # no previous-offset argument, so a fresh post-restart reader
         # cannot know the checkpointed frontier by itself.  Measured
-        # call order (debuglog traces, both restart shapes): Spark
+        # call order (planner calls traced in both restart shapes): Spark
         # ALWAYS calls partitions() before the first latestOffset() on
         # a restarted reader — with (end_k, end_k) as a probe in the
         # committed case, with the replayed (s_k, e_k) range in the
@@ -383,14 +346,10 @@ class SlippyTilePartitionedStreamReader(DataSourceStreamReader):
         )
         nxt = min(self.ymax + 1, cur + self.rows_per_batch)
         self._cur = nxt
-        self._log(f"latestOffset -> {nxt}")
         return {"y": nxt}
 
     def partitions(self, start: dict, end: dict):
         y0, y1 = int(start["y"]), int(end["y"])
-        self._log(
-            f"partitions({y0},{y1}) floor={getattr(self, '_floor', None)}"
-        )
         # `floor` = the highest committed frontier this reader has
         # observed, learned from planned-batch STARTS.  Delivery is
         # clipped to it: after a committed-batch restart the first
@@ -434,7 +393,6 @@ class SlippyTilePartitionedStreamReader(DataSourceStreamReader):
         # data; a crash between checkpoint commit and this call merely
         # leaves the floor one batch low (safe — commits are never
         # replayed).
-        self._log(f"commit({end})")
         y = int(end["y"])
         self._floor = max(getattr(self, "_floor", self.ymin), y)
         if self._floor_dir:

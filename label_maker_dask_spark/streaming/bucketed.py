@@ -1,17 +1,20 @@
 """Bucket-pruned maintenance sinks: per-batch cost scales with the DELTA,
 not the base table.
 
-The plain sinks in :mod:`streaming.upsert` rewrite the whole base table
-every micro-batch — crash-safe and simple, but at 100 TB a batch touching
-1% of keys pays a 100% rewrite.  This module stores the maintained table
-hash-bucketed by its merge key:
+The plain sinks (:mod:`streaming.upsert` and
+:func:`operators.scd.stream_scd2_to_parquet`, all through
+:func:`streaming.upsert.rewrite_exactly_once`) rewrite the whole base
+table every micro-batch — crash-safe and simple, but at 100 TB a batch
+touching 1% of keys pays a 100% rewrite.  This module stores the
+maintained table hash-bucketed by its merge key:
 
     <base>/_lmds_table.json          table metadata (n_buckets, keys,
                                      cached data schema)
     <base>/lmdsb=0/part-*.parquet    one directory per key bucket,
-    <base>/lmdsb=1/...               each carrying a ``_lmds_state``
-    ...                              marker (run id + highest applied
-                                     batch id for THAT bucket)
+    <base>/lmdsb=1/...               each carrying a
+    ...                              ``_lmds_applied_batch`` marker (run
+                                     id + highest applied batch id for
+                                     THAT bucket)
 
 and per micro-batch rewrites ONLY the bucket directories whose keys
 appear in the delta: one Spark job reads exactly the touched directories
@@ -23,7 +26,9 @@ the plain sink uses, per bucket directory.  Expected touched buckets
 for a k-key delta over n buckets is ``n·(1-(1-1/n)^k) ≈ k`` when k ≪ n,
 so batch cost follows delta size while the base grows without bound
 (measured: ``tools/scaling_probe.py`` bucketed-maintenance cell,
-SCALE.md).
+SCALE.md).  That touched-bucket pass (:func:`_merge_touched_buckets`) is
+shared with :mod:`streaming.versioned`, which publishes the same scratch
+buckets as immutable versions instead of swapping them in.
 
 Crash safety mirrors the plain sink, bucket-wise.  All scratch buckets
 are fully written BEFORE any rename starts, so a set-aside directory
@@ -55,7 +60,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
-from typing import Callable, List, Optional, Sequence
+from typing import Callable, List, Optional, Sequence, Tuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -70,6 +75,7 @@ from label_maker_dask_spark.streaming.commit import (
     already_applied,
     applied_state,
     read_state,
+    read_stored,
     recover_swap,
     start_sink,
     swap_in,
@@ -120,25 +126,15 @@ def recover_buckets(base_path: str) -> None:
         shutil.rmtree(scratch)
 
 
-def _schema_with_bucket(meta: dict) -> StructType:
-    schema = StructType.fromJson(json.loads(meta["schema"]))
-    return schema.add(BUCKET_COL, IntegerType())
-
-
 def read_maintained_table(
     spark: SparkSession, base_path: str, with_bucket: bool = False
 ) -> DataFrame:
     """Read a maintained table, bucketed or plain.  For bucketed tables
     the cached metadata schema skips footer inference and the bucket
-    partition column is hidden unless asked for."""
+    partition column is hidden unless asked for; a plain table has no
+    metadata, so its schema is inferred."""
     meta = read_state(base_path, _TABLE_META)
-    if meta is None:
-        return spark.read.parquet(base_path)
-    df = (
-        spark.read.schema(_schema_with_bucket(meta))
-        .option("basePath", base_path)
-        .parquet(base_path)
-    )
+    df = read_stored(spark, base_path, meta, [base_path], BUCKET_COL)
     return df if with_bucket else df.drop(BUCKET_COL)
 
 
@@ -178,6 +174,69 @@ def key_lookup(spark: SparkSession, base_path: str, **key_values) -> DataFrame:
     return df.where(cond).drop(BUCKET_COL)
 
 
+def _merge_touched_buckets(
+    delta: DataFrame,
+    base_path: str,
+    scratch: str,
+    keys: Sequence[str],
+    n_buckets: int,
+    meta: Optional[dict],
+    kind: str,
+    read_base: Callable[[List[int]], Optional[DataFrame]],
+    merge_fn: Callable[[Optional[DataFrame], DataFrame], DataFrame],
+    applied: Callable[[int], bool] = lambda bucket: False,
+) -> Optional[Tuple[List[int], str, int]]:
+    """The touched-bucket pass both bucketed layouts share (this module's
+    in-place buckets and :mod:`streaming.versioned`'s immutable
+    versions); each layout keeps only its replay check and its publish.
+
+    ``meta`` is the record stored with the table (None before its first
+    batch): its bucket count wins over ``n_buckets``, and other ``keys``
+    are refused.  The delta's key buckets are collected, those that
+    ``applied`` skips are dropped, ``read_base(buckets)`` reads the
+    stored rows of the rest (None when none exist yet), and
+    ``merge_fn(base or None, delta)`` — the replacement rows of those
+    buckets — is written to ``scratch/lmdsb=<i>``.  ``kind`` names the
+    layout in errors.  → ``(buckets, schema json, n_buckets)`` to
+    publish, or None when the delta is empty or every touched bucket
+    was applied."""
+    if BUCKET_COL in delta.columns:
+        raise ValueError(
+            f"{kind} maintenance reserves column name {BUCKET_COL!r}"
+        )
+    if meta is not None:
+        n_buckets = int(meta["n_buckets"])  # creation-time value wins
+        if list(meta["keys"]) != list(keys):
+            raise ValueError(
+                f"{kind} table at {base_path!r} is keyed on "
+                f"{meta['keys']}, not {list(keys)}"
+            )
+    delta = delta.withColumn(BUCKET_COL, _bucket_expr(keys, n_buckets))
+    delta.persist()
+    try:
+        touched = sorted(
+            r[0] for r in delta.select(BUCKET_COL).distinct().collect()
+        )
+        work = [i for i in touched if not applied(i)]
+        if not work:
+            return None  # empty delta, or full replay of an applied batch
+        base_part = read_base(work)
+        merged = merge_fn(
+            None if base_part is None else base_part.drop(BUCKET_COL),
+            delta.where(F.col(BUCKET_COL).isin(work)).drop(BUCKET_COL),
+        )
+        out = merged.withColumn(BUCKET_COL, _bucket_expr(keys, n_buckets))
+        # one shuffle of the touched rows (only — never the untouched base)
+        # so each bucket is written by exactly one task: without it every
+        # write task emits a file into every touched bucket, and the
+        # small-file count grows as tasks x buckets x batches
+        out = out.repartition(F.col(BUCKET_COL))
+        out.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(scratch)
+        return work, merged.schema.json(), n_buckets
+    finally:
+        delta.unpersist()
+
+
 def _apply_bucketed(
     delta: DataFrame,
     base_path: str,
@@ -195,75 +254,33 @@ def _apply_bucketed(
     touched buckets; ``base_part`` is None when none of them exist
     yet."""
     with writer_lock(base_path, run_id):
-        _apply_bucketed_locked(
-            delta, base_path, keys, n_buckets, batch_id, run_id, merge_fn
-        )
+        recover_buckets(base_path)
+        meta = read_state(base_path, _TABLE_META)
 
+        def read_base(work: List[int]) -> Optional[DataFrame]:
+            dirs = [_bucket_dir(base_path, i) for i in work]
+            return read_stored(
+                delta.sparkSession, base_path, meta,
+                [d for d in dirs if os.path.isdir(d)], BUCKET_COL,
+            )
 
-def _apply_bucketed_locked(
-    delta: DataFrame,
-    base_path: str,
-    keys: Sequence[str],
-    n_buckets: int,
-    batch_id: int,
-    run_id: Optional[str],
-    merge_fn: Callable[[Optional[DataFrame], DataFrame], DataFrame],
-) -> None:
-    if BUCKET_COL in delta.columns:
-        raise ValueError(
-            f"bucketed maintenance reserves column name {BUCKET_COL!r}"
-        )
-    recover_buckets(base_path)
-    spark = delta.sparkSession
-    meta = read_state(base_path, _TABLE_META)
-    if meta is not None:
-        n_buckets = int(meta["n_buckets"])  # creation-time value wins
-        if list(meta["keys"]) != list(keys):
-            raise ValueError(
-                f"bucketed table at {base_path!r} is keyed on "
-                f"{meta['keys']}, not {list(keys)}"
-            )
-    delta = delta.withColumn(BUCKET_COL, _bucket_expr(keys, n_buckets))
-    delta.persist()
-    try:
-        touched = sorted(
-            r[0] for r in delta.select(BUCKET_COL).distinct().collect()
-        )
-        what = f"bucketed maintenance: base table {base_path!r}"
-        work: List[int] = [
-            i
-            for i in touched
-            if not already_applied(
-                applied_state(_bucket_dir(base_path, i)), run_id, batch_id, what
-            )
-        ]
-        if not work:
-            return  # full replay of an applied batch
-        existing = [i for i in work if os.path.isdir(_bucket_dir(base_path, i))]
-        base_part = None
-        if existing:
-            reader = spark.read.option("basePath", base_path)
-            if meta is not None:
-                reader = reader.schema(_schema_with_bucket(meta))
-            base_part = reader.parquet(
-                *[_bucket_dir(base_path, i) for i in existing]
-            ).drop(BUCKET_COL)
-        delta_work = delta.where(F.col(BUCKET_COL).isin(work)).drop(BUCKET_COL)
-        merged = merge_fn(base_part, delta_work)
-        out = merged.withColumn(BUCKET_COL, _bucket_expr(keys, n_buckets))
-        # one shuffle of the touched rows (only — never the untouched base)
-        # so each bucket is written by exactly one task: without it every
-        # write task emits a file into every touched bucket, and the
-        # small-file count grows as tasks x buckets x batches
-        out = out.repartition(F.col(BUCKET_COL))
         scratch = base_path + "._scratch"
-        out.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(scratch)
-
+        done = _merge_touched_buckets(
+            delta, base_path, scratch, keys, n_buckets, meta, "bucketed",
+            read_base, merge_fn,
+            lambda i: already_applied(
+                applied_state(_bucket_dir(base_path, i)), run_id, batch_id,
+                f"bucketed maintenance: base table {base_path!r}",
+            ),
+        )
+        if done is None:
+            return
+        work, schema, n_buckets = done
         # (re)write the metadata whenever the stored schema changes, not
         # just at creation — a later batch that evolves the schema (new
         # update column) would otherwise leave the cached read schema
         # stale and silently drop the new column from every read
-        if meta is None or meta.get("schema") != merged.schema.json():
+        if meta is None or meta.get("schema") != schema:
             write_state(
                 base_path,
                 _TABLE_META,
@@ -271,25 +288,22 @@ def _apply_bucketed_locked(
                     "n_buckets": n_buckets,
                     "keys": list(keys),
                     "bucket_col": BUCKET_COL,
-                    "schema": merged.schema.json(),
+                    "schema": schema,
                 },
             )
         oldd = base_path + "._old"
         os.makedirs(oldd, exist_ok=True)
         for i in work:
-            sdir = os.path.join(scratch, f"{BUCKET_COL}={i}")
-            if not os.path.isdir(sdir):
-                os.makedirs(sdir)  # bucket emptied by deletes: keep marker
-            write_applied(sdir, run_id, batch_id)
+            # the marker write makes the directory of a bucket that
+            # deletes emptied, so the bucket still records this batch
+            write_applied(_bucket_dir(scratch, i), run_id, batch_id)
             swap_in(
-                sdir,
+                _bucket_dir(scratch, i),
                 _bucket_dir(base_path, i),
-                os.path.join(oldd, f"{BUCKET_COL}={i}"),
+                _bucket_dir(oldd, i),
             )
         shutil.rmtree(oldd, ignore_errors=True)
         shutil.rmtree(scratch, ignore_errors=True)
-    finally:
-        delta.unpersist()
 
 
 def stream_upsert_to_parquet_bucketed(

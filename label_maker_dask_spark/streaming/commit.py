@@ -20,7 +20,8 @@ their table layouts; this module is the protocol they share:
   a batch at or below the recorded one is an applied replay;
 - **state files** (:func:`read_state` / :func:`write_state`) — JSON
   written to a tmp file and ``os.replace``-d, so a reader never sees a
-  torn record;
+  torn record.  The record of a maintained table also keeps its schema,
+  which :func:`read_stored` reads the table with;
 - **single-writer lock** (:func:`writer_lock`) — the run id catches
   checkpoint resets *between* batches, the lock catches two writers
   racing *within* one;
@@ -58,9 +59,10 @@ import os
 import shutil
 import socket
 import uuid
-from typing import Callable, Iterator, Optional
+from typing import Callable, Iterator, List, Optional
 
 from pyspark.sql import DataFrame
+from pyspark.sql.types import IntegerType, StructType
 
 _LOCK_NAME = "_lmds_writer_lock"
 _BATCH_MARKER = "_lmds_applied_batch"
@@ -111,8 +113,33 @@ def applied_state(dir_path: str) -> Optional[dict]:
     return read_state(dir_path, _BATCH_MARKER)
 
 
-def write_applied(dir_path: str, run_id: Optional[str], batch_id: int) -> None:
-    write_state(dir_path, _BATCH_MARKER, {"run": run_id, "batch": batch_id})
+def write_applied(
+    dir_path: str, run_id: Optional[str], batch_id: int, **fields
+) -> None:
+    """Write the marker ``{"run", "batch", **fields}`` into ``dir_path``
+    (a plain table's marker also keeps its ``schema``)."""
+    write_state(
+        dir_path, _BATCH_MARKER, {"run": run_id, "batch": batch_id, **fields}
+    )
+
+
+def read_stored(
+    spark, base: str, state: Optional[dict], paths: List[str], *part_cols: str
+) -> Optional[DataFrame]:
+    """Read ``paths`` of the maintained table at ``base`` with the
+    ``schema`` its state record stores, plus the int partition columns
+    ``part_cols``, so no job infers it from parquet footers.  A record
+    without a schema (none yet, or one written before the field existed)
+    falls back to inference.  None when ``paths`` is empty."""
+    if not paths:
+        return None
+    reader = spark.read.option("basePath", base)
+    if (state or {}).get("schema"):
+        schema = StructType.fromJson(json.loads(state["schema"]))
+        for col in part_cols:
+            schema = schema.add(col, IntegerType())
+        reader = reader.schema(schema)
+    return reader.parquet(*paths)
 
 
 def already_applied(
@@ -401,6 +428,7 @@ __all__ = [
     "ensure_run_id",
     "inventory",
     "read_state",
+    "read_stored",
     "recover_swap",
     "rollback_inventory",
     "start_sink",

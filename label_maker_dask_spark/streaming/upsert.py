@@ -10,21 +10,26 @@ so the merge skips its duplicate-key scan), and (3) the merged table swaps
 in via write-to-temp + rename-aside — reading and overwriting the same path
 in one job would corrupt the base mid-scan.
 
+Every plain sink (upsert, accumulate, and ``operators/scd.py``'s SCD-2
+history) applies its batch through one body, :func:`rewrite_exactly_once`.
+
 Crash safety: the merged table is written to ``<base>._applying`` and
 swapped in through ``<base>._old`` by :func:`streaming.commit.swap_in`;
 the base directory is never deleted before its replacement exists.
-Every rewrite (the upsert sink's batch, :func:`rewrite_exactly_once`)
-first runs :func:`streaming.commit.recover_swap` on the same paths, which
-finishes an interrupted swap before the base or its marker is read.
-Without it, a crash between the two renames would make the next batch
-see "no base table" and silently rebuild it from that one batch.
+The rewrite first runs :func:`streaming.commit.recover_swap` on the same
+paths, which finishes an interrupted swap before the base or its marker
+is read.  Without it, a crash between the two renames would make the
+next batch see "no base table" and silently rebuild it from that one
+batch.
 
 Exactly-once (run ids, markers, the foreachBatch driver:
-:mod:`streaming.commit`): the upsert is idempotent by construction —
-re-applying a batch merges the same keys to the same values — so it needs
-no marker.  The accumulate sink is not idempotent; its applied-batch
-marker rides inside the swapped directory (:func:`rewrite_exactly_once`),
-so table and marker change together with the rename.
+:mod:`streaming.commit`): the applied-batch marker rides inside the
+swapped directory, so table and marker change together with the rename.
+Accumulation and SCD-2 need it, since a replay would double-count or be
+rejected; the upsert is idempotent, but the marker's run id is what
+refuses a fresh checkpoint pointed at an existing table.  The marker
+also keeps the table's schema, which the next batch reads the base with
+instead of inferring it from the parquet footers.
 
 Scale posture: per batch, the merge is the broadcast-left-join +
 keys-only-anti shape (base table never shuffles); the rewrite cost is the
@@ -49,6 +54,7 @@ from label_maker_dask_spark.operators.merge import (
 from label_maker_dask_spark.streaming.commit import (
     already_applied,
     applied_state,
+    read_stored,
     recover_swap,
     start_sink,
     swap_in,
@@ -93,27 +99,15 @@ def stream_upsert_to_parquet(
     has exactly one schema; the bucket-pruned sink rewrites only touched
     buckets and deliberately does NOT offer this knob."""
 
-    # the stored table's schema, cached after the first read/write so later
-    # batches skip the footer-inference job a bare read pays every time
-    base_schema = [None]
-    tmp, old = base_path + "._applying", base_path + "._old"
-
-    def apply(batch: DataFrame, _batch_id: int, _run_id: str) -> None:
-        recover_swap(tmp, base_path, old)
-        spark = batch.sparkSession
+    def apply(batch: DataFrame, batch_id: int, run_id: str) -> None:
         compacted = compact_last_per_key(batch, keys, seq_col).drop(seq_col)
-        base = None
-        if os.path.exists(base_path):
-            reader = spark.read
-            if base_schema[0] is not None:
-                reader = reader.schema(base_schema[0])
-            base = reader.parquet(base_path)
-        merged = merge_upsert_delta(
-            base, compacted, keys, update_cols, delete_col, evolve_schema
+        rewrite_exactly_once(
+            batch.sparkSession, base_path, batch_id, run_id,
+            lambda base: merge_upsert_delta(
+                base, compacted, keys, update_cols, delete_col, evolve_schema
+            ),
+            "stream_upsert_to_parquet: base table",
         )
-        merged.write.mode("overwrite").parquet(tmp)
-        base_schema[0] = merged.schema
-        swap_in(tmp, base_path, old)
 
     return start_sink(changes, checkpoint, apply, "update", available_now)
 
@@ -133,15 +127,18 @@ def rewrite_exactly_once(
     ``merge_fn(base or None)`` is written to the tmp dir with the applied
     marker inside it and swapped in, so table and marker change
     atomically.  The marker is an underscore-prefixed data file —
-    Spark's parquet listing ignores it, like _SUCCESS."""
+    Spark's parquet listing ignores it, like _SUCCESS — and keeps the
+    table's schema, so the base is read without footer inference."""
     tmp, old = base_path + "._applying", base_path + "._old"
     recover_swap(tmp, base_path, old)
     state = applied_state(base_path)
     if already_applied(state, run_id, batch_id, f"{what} {base_path!r}"):
         return
-    base = spark.read.parquet(base_path) if os.path.exists(base_path) else None
-    merge_fn(base).write.mode("overwrite").parquet(tmp)
-    write_applied(tmp, run_id or (state or {}).get("run"), batch_id)
+    paths = [base_path] if os.path.exists(base_path) else []
+    merged = merge_fn(read_stored(spark, base_path, state, paths))
+    merged.write.mode("overwrite").parquet(tmp)
+    run_id = run_id or (state or {}).get("run")
+    write_applied(tmp, run_id, batch_id, schema=merged.schema.json())
     swap_in(tmp, base_path, old)
 
 

@@ -16,8 +16,9 @@ Layout::
     <table>/b=5/v=1/...  b=5/v=2/...
 
 Per micro-batch: the delta's key-hash buckets are computed, ONLY the
-touched buckets are re-merged (one partition-pruned job, as the
-in-place bucketed sink), each touched bucket's replacement lands as a
+touched buckets are re-merged (one partition-pruned job: the pass
+:func:`streaming.bucketed._merge_touched_buckets` the in-place bucketed
+sink runs too), each touched bucket's replacement lands as a
 NEW immutable ``v=<n>`` directory, and a new manifest — copying the
 previous bucket→version map with just the touched entries bumped — is
 published atomically (tmp + rename), then the ``_latest`` pointer moves.
@@ -43,21 +44,26 @@ from __future__ import annotations
 import json
 import os
 import shutil
-from typing import Dict, List, Optional, Sequence
+from typing import List, Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import IntegerType, StructType
+from pyspark.sql.types import StructType
 
 from label_maker_dask_spark.operators.merge import (
     merge_additive,
     merge_upsert_delta,
     sum_per_key,
 )
-from label_maker_dask_spark.streaming.bucketed import BUCKET_COL, _bucket_expr
+from label_maker_dask_spark.streaming.bucketed import (
+    BUCKET_COL,
+    _bucket_dir,
+    _merge_touched_buckets,
+)
 from label_maker_dask_spark.streaming.commit import (
     already_applied,
     read_state,
+    read_stored,
     start_sink,
     write_state,
     write_text,
@@ -94,6 +100,11 @@ def _write_manifest(table: str, version: int, manifest: dict) -> None:
     write_state(_manifest_dir(table), f"{version}.json", manifest)
 
 
+def _version_dir(table: str, b, v) -> str:
+    """The immutable directory of version ``v`` of bucket ``b``."""
+    return os.path.join(_bucket_dir(table, b), f"{_VERSION_COL}={v}")
+
+
 def _point_latest(table: str, version: int) -> None:
     write_text(os.path.join(table, "_latest"), str(version))
 
@@ -116,6 +127,20 @@ def rollback_table(table: str, version: int) -> None:
     _point_latest(table, version)
 
 
+def _read_buckets(
+    spark: SparkSession, table: str, manifest: dict, buckets: Sequence
+) -> Optional[DataFrame]:
+    """The directories ``manifest`` names for those of ``buckets`` it has,
+    read with its stored schema (other versions of the same buckets are
+    invisible to the scan); the bucket column stays.  None when it has
+    none of them."""
+    stored = manifest["buckets"]
+    paths = [_version_dir(table, b, stored[str(b)]) for b in buckets
+             if str(b) in stored]
+    df = read_stored(spark, table, manifest, paths, BUCKET_COL, _VERSION_COL)
+    return None if df is None else df.drop(_VERSION_COL)
+
+
 def read_table_version(
     spark: SparkSession,
     table: str,
@@ -129,21 +154,7 @@ def read_table_version(
     if v is None:
         raise FileNotFoundError(f"no versions published at {table!r}")
     m = _read_manifest(table, v)
-    schema = (
-        StructType.fromJson(json.loads(m["schema"]))
-        .add(BUCKET_COL, IntegerType())
-        .add(_VERSION_COL, IntegerType())
-    )
-    paths = [
-        os.path.join(table, f"{BUCKET_COL}={b}", f"{_VERSION_COL}={bv}")
-        for b, bv in sorted(m["buckets"].items(), key=lambda kv: int(kv[0]))
-    ]
-    df = (
-        spark.read.schema(schema)
-        .option("basePath", table)
-        .parquet(*paths)
-        .drop(_VERSION_COL)
-    )
+    df = _read_buckets(spark, table, m, sorted(map(int, m["buckets"])))
     return df if with_bucket else df.drop(BUCKET_COL)
 
 
@@ -159,87 +170,33 @@ def _apply_versioned(
     """Publish one delta as the table's next version under the
     single-writer lock (see :func:`streaming.commit.writer_lock`: a
     second concurrent writer raises instead of corrupting a publish);
-    returns the new version (None on an applied replay)."""
+    returns the new version (None on an applied replay or an empty
+    delta)."""
     with writer_lock(table, run_id):
-        return _apply_versioned_locked(
-            delta, table, keys, n_buckets, batch_id, run_id, merge_fn
+        vs = _versions(table)
+        tip = vs[-1] if vs else None
+        m = _read_manifest(table, tip) if tip is not None else None
+        if already_applied(
+            m, run_id, batch_id, f"versioned maintenance: table {table!r}"
+        ):
+            _point_latest(table, tip)  # heal a torn publish on replay
+            return None
+        spark, scratch = delta.sparkSession, os.path.join(table, "_publishing")
+        done = _merge_touched_buckets(
+            delta, table, scratch, keys, n_buckets, m, "versioned",
+            lambda work: _read_buckets(spark, table, m, work) if m else None,
+            merge_fn,
         )
-
-
-def _apply_versioned_locked(
-    delta: DataFrame,
-    table: str,
-    keys: Sequence[str],
-    n_buckets: int,
-    batch_id: int,
-    run_id: Optional[str],
-    merge_fn,
-) -> Optional[int]:
-    if BUCKET_COL in delta.columns:
-        raise ValueError(
-            f"versioned maintenance reserves column name {BUCKET_COL!r}"
-        )
-    spark = delta.sparkSession
-    vs = _versions(table)
-    tip = vs[-1] if vs else None
-    m = _read_manifest(table, tip) if tip is not None else None
-    if already_applied(
-        m, run_id, batch_id, f"versioned maintenance: table {table!r}"
-    ):
-        _point_latest(table, tip)  # heal a torn publish on replay
-        return None
-    prev: Dict[str, int] = {}
-    if m is not None:
-        prev = dict(m["buckets"])
-        n_buckets = int(m["n_buckets"])
-        if list(m["keys"]) != list(keys):
-            raise ValueError(
-                f"versioned table at {table!r} is keyed on {m['keys']}, "
-                f"not {list(keys)}"
-            )
-
-    delta = delta.withColumn(BUCKET_COL, _bucket_expr(keys, n_buckets))
-    delta.persist()
-    try:
-        touched = sorted(
-            int(r[0]) for r in delta.select(BUCKET_COL).distinct().collect()
-        )
-        existing = [b for b in touched if str(b) in prev]
-        base_part = None
-        if existing:
-            schema = (
-                StructType.fromJson(json.loads(m["schema"]))
-                .add(BUCKET_COL, IntegerType())
-                .add(_VERSION_COL, IntegerType())
-            )
-            paths = [
-                os.path.join(
-                    table, f"{BUCKET_COL}={b}", f"{_VERSION_COL}={prev[str(b)]}"
-                )
-                for b in existing
-            ]
-            base_part = (
-                spark.read.schema(schema)
-                .option("basePath", table)
-                .parquet(*paths)
-                .drop(_VERSION_COL, BUCKET_COL)
-            )
-        delta_work = delta.drop(BUCKET_COL)
-        merged = merge_fn(base_part, delta_work)
-        out = merged.withColumn(BUCKET_COL, _bucket_expr(keys, n_buckets))
-        out = out.repartition(F.col(BUCKET_COL))  # one file per bucket
-        scratch = os.path.join(table, "_publishing")
-        out.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(scratch)
-
+        if done is None:
+            return None  # an empty delta publishes no version
+        touched, schema, n_buckets = done
         new_version = (tip or 0) + 1
-        buckets = dict(prev)
+        buckets = dict(m["buckets"]) if m else {}
         for b in touched:
-            src = os.path.join(scratch, f"{BUCKET_COL}={b}")
-            if not os.path.isdir(src):
-                os.makedirs(src)  # bucket emptied by deletes
-            bdir = os.path.join(table, f"{BUCKET_COL}={b}")
-            os.makedirs(bdir, exist_ok=True)
-            dst = os.path.join(bdir, f"{_VERSION_COL}={new_version}")
+            src = _bucket_dir(scratch, b)
+            os.makedirs(src, exist_ok=True)  # bucket emptied by deletes
+            dst = _version_dir(table, b, new_version)
+            os.makedirs(os.path.dirname(dst), exist_ok=True)
             if os.path.exists(dst):
                 # orphan from a crash between renames and the manifest
                 # write (no manifest references it — a published version
@@ -257,13 +214,11 @@ def _apply_versioned_locked(
                 "buckets": buckets,
                 "n_buckets": n_buckets,
                 "keys": list(keys),
-                "schema": merged.schema.json(),
+                "schema": schema,
             },
         )
         _point_latest(table, new_version)
         return new_version
-    finally:
-        delta.unpersist()
 
 
 def expire_table_versions(table: str, keep: int = 2) -> List[int]:
@@ -390,22 +345,18 @@ def table_version_diff(
     # added/renamed/dropped column would otherwise surface as an opaque
     # unresolved-column AnalysisException deep in the join.  Fail early
     # and name the drift instead.
-    _shape = lambda m: [
-        (f.name, f.dataType.simpleString())
-        for f in StructType.fromJson(json.loads(m["schema"]))
-    ]
-    if _shape(m_from) != _shape(m_to):
-        f_cols = [f.name for f in
-                  StructType.fromJson(json.loads(m_from["schema"]))]
-        t_cols = [f.name for f in
-                  StructType.fromJson(json.loads(m_to["schema"]))]
+    s_from, schema = (
+        StructType.fromJson(json.loads(m["schema"])) for m in (m_from, m_to)
+    )
+    shape = lambda s: [(f.name, f.dataType.simpleString()) for f in s]
+    if shape(s_from) != shape(schema):
         raise ValueError(
             f"table_version_diff: schema changed between version {v_from} "
-            f"(columns {f_cols}) and version {v_to} (columns {t_cols}) — "
-            "schema evolution is not supported across a diff interval; "
-            "diff within each schema epoch separately."
+            f"(columns {s_from.fieldNames()}) and version {v_to} (columns "
+            f"{schema.fieldNames()}) — schema evolution is not supported "
+            "across a diff interval; diff within each schema epoch "
+            "separately."
         )
-    schema = StructType.fromJson(json.loads(m_to["schema"]))
     val_cols = [f.name for f in schema.fields if f.name not in keys]
     if not val_cols:
         raise ValueError(
@@ -419,31 +370,9 @@ def table_version_diff(
         (b for b in set(bf) | set(bt) if bf.get(b) != bt.get(b)),
         key=int,
     )
-    def read_side(m, buckets):
-        present = [b for b in buckets if b in m["buckets"]]
-        if not present:
-            return None
-        full = (
-            StructType.fromJson(json.loads(m["schema"]))
-            .add(BUCKET_COL, IntegerType())
-            .add(_VERSION_COL, IntegerType())
-        )
-        paths = [
-            os.path.join(
-                table, f"{BUCKET_COL}={b}", f"{_VERSION_COL}={m['buckets'][b]}"
-            )
-            for b in present
-        ]
-        return (
-            spark.read.schema(full)
-            .option("basePath", table)
-            .parquet(*paths)
-            .drop(BUCKET_COL, _VERSION_COL)
-        )
-
     empty = spark.createDataFrame([], schema)
-    old = read_side(m_from, changed)
-    new = read_side(m_to, changed)
+    old = _read_buckets(spark, table, m_from, changed)
+    new = _read_buckets(spark, table, m_to, changed)
     # a side with no changed-bucket directories (e.g. v_to only ADDED
     # brand-new buckets) diffs against the empty frame of the same
     # schema — every row then classifies as insert/delete naturally

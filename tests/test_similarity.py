@@ -717,6 +717,43 @@ def test_pq_adc_ranking_agrees_with_exact_cosine(spark):
         assert r.adc_dist >= 0.0
 
 
+def test_pq_adc_skips_null_vectors(spark):
+    """A NULL embedding is not indexed: training, encoding, candidates
+    and queries all leave it out, in the engine and in its DuckDB
+    oracle alike.  60 vectors, the 1st and 8th set to NULL."""
+    import duckdb
+    from pyspark.sql import functions as F
+
+    import label_maker_dask_spark.queries as Q
+    from label_maker_dask_spark.operators.similarity import (
+        pq_adc_oracle_sql,
+        pq_adc_topk,
+    )
+
+    emb = Q._t(spark, "/root/testdata/sf0.001", "embeddings").where(
+        "vec_id < 60"
+    )
+    emb = emb.withColumn(
+        "embedding",
+        F.when(~F.col("vec_id").isin(0, 7), F.col("embedding")),
+    )
+    got = sorted(
+        tuple(r)
+        for r in pq_adc_topk(emb, F.col("vec_id") % 5 == 0).collect()
+    )
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW embeddings AS SELECT vec_id, CASE WHEN vec_id IN "
+        "(0, 7) THEN NULL ELSE embedding END AS embedding FROM "
+        "'/root/testdata/sf0.001/embeddings.parquet' WHERE vec_id < 60"
+    )
+    want = sorted(
+        con.execute(pq_adc_oracle_sql("vec_id % 5 = 0")).fetchall()
+    )
+    assert got and got == want
+    assert not {0, 7} & {i for r in got for i in (r[0], r[2])}
+
+
 def test_pq_stored_index_matches_onthefly_and_prunes(spark, tmp_path):
     """The stored PQ index returns exactly the on-the-fly results, and the
     code scan carries a bucket partition filter (non-probed buckets never

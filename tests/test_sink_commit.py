@@ -1,9 +1,13 @@
 """The shared exactly-once commit protocol (``streaming/commit.py``),
 checked once for every ``foreachBatch`` sink that runs on it: a fresh
 checkpoint pointed at an existing table is refused, and an empty
-micro-batch never reaches the sink."""
+micro-batch never reaches the sink.  An AST check keeps every sink of the
+package in that list.  Then a crash matrix over the swap and publish
+entry points and the index maintenance ops."""
 
+import ast
 import os
+import pathlib
 import shutil
 
 import pytest
@@ -43,11 +47,15 @@ from label_maker_dask_spark.streaming.upsert import (
     stream_upsert_to_parquet,
 )
 from label_maker_dask_spark.streaming.versioned import (
+    _apply_versioned,
+    read_table_version,
     stream_accumulate_to_versioned_table,
     stream_upsert_to_versioned_table,
 )
 
 EMB = "/root/testdata/sf0.001/embeddings.parquet"
+ROOT = pathlib.Path(__file__).resolve().parents[1]
+PACKAGE = ROOT / "label_maker_dask_spark"
 
 DELTAS = ("k long, w long", [(1, 5), (2, 3)])
 CHANGES = ("k long, v string, seq long", [(1, "a", 1), (2, "b", 2)])
@@ -68,6 +76,8 @@ def _sink(name, data, start, prebuild=None):
 
 
 SINKS = [
+    _sink("upsert", CHANGES, lambda s, t, c: stream_upsert_to_parquet(
+        s, t, c, keys=["k"], seq_col="seq")),
     _sink("accumulate", DELTAS, lambda s, t, c: stream_accumulate_to_parquet(
         s, t, c, keys=["k"], sum_cols=["w"])),
     _sink("accumulate_bucketed", DELTAS,
@@ -98,10 +108,32 @@ SINKS = [
           prebuild=lambda df, t: write_pq_index(df, t)),
 ]
 
-#: the plain upsert sink is idempotent and keeps no marker, so it has no
-#: foreign-run check; it still runs through the shared driver
-UPSERT = _sink("upsert", CHANGES, lambda s, t, c: stream_upsert_to_parquet(
-    s, t, c, keys=["k"], seq_col="seq"))
+
+
+def _start_sink_callers():
+    """``(module path, function name)`` of every top-level package
+    function whose body calls ``start_sink``: the package's sinks."""
+    for path in sorted(PACKAGE.rglob("*.py")):
+        for node in ast.parse(path.read_text(), str(path)).body:
+            if isinstance(node, ast.FunctionDef) and any(
+                isinstance(call, ast.Call)
+                and "start_sink" in (
+                    getattr(call.func, "id", None),
+                    getattr(call.func, "attr", None),
+                )
+                for call in ast.walk(node)
+            ):
+                yield path.relative_to(ROOT), node.name
+
+
+def test_every_sink_is_in_sinks():
+    """Each sink the package starts through ``start_sink`` is exercised
+    by the parametrized tests here: a new sink cannot skip them."""
+    named = {n for p in SINKS for n in p.values[0][1].__code__.co_names}
+    callers = list(_start_sink_callers())
+    assert callers
+    missing = [f"{path}:{name}" for path, name in callers if name not in named]
+    assert not missing, "sinks missing from SINKS:\n" + "\n".join(missing)
 
 
 def _setup(spark, sink, tmp_path, rows=True):
@@ -147,7 +179,7 @@ def test_fresh_checkpoint_against_existing_table_raises(spark, tmp_path, sink):
         _drain(spark, sink, schema, src, table, str(tmp_path / "ck2"))
 
 
-@pytest.mark.parametrize("sink", SINKS + [UPSERT])
+@pytest.mark.parametrize("sink", SINKS)
 def test_empty_batch_creates_nothing(spark, tmp_path, sink):
     """A micro-batch with no rows commits in the checkpoint but writes
     nothing where the sink keeps its table: no directory, no marker."""
@@ -235,10 +267,10 @@ def _accumulate(spark, table, batch_id):
     )
 
 
-def _bucketed_upsert(spark, table, batch_id):
-    """Upsert over 4 buckets: the seed fills buckets 1-3; batch 1 inserts
-    into the empty bucket 0, deletes all of bucket 1 and updates one key
-    of bucket 2, leaving bucket 3 untouched."""
+def _upsert_rows(spark, batch_id):
+    """Upsert deltas over 4 buckets: the seed fills buckets 1-3; batch 1
+    inserts into the empty bucket 0, deletes all of bucket 1 and updates
+    one key of bucket 2, leaving bucket 3 untouched."""
     probe = spark.range(64).select(
         "id", _bucket_expr(["id"], 4).alias("b")
     ).collect()
@@ -252,10 +284,24 @@ def _bucketed_upsert(spark, table, batch_id):
             (by_bucket[0][0], "new", False), (by_bucket[2][0], "upd", False)
         ]
         rows += [(k, None, True) for k in by_bucket[1][:2]]
+    return spark.createDataFrame(rows, "k long, v string, is_del boolean")
+
+
+def _upsert_merge(base, d):
+    return merge_upsert_delta(base, d, ["k"], None, "is_del")
+
+
+def _bucketed_upsert(spark, table, batch_id):
     _apply_bucketed(
-        spark.createDataFrame(rows, "k long, v string, is_del boolean"),
-        table, ["k"], 4, batch_id, "run-a",
-        lambda base, d: merge_upsert_delta(base, d, ["k"], None, "is_del"),
+        _upsert_rows(spark, batch_id), table, ["k"], 4, batch_id, "run-a",
+        _upsert_merge,
+    )
+
+
+def _versioned_upsert(spark, table, batch_id):
+    _apply_versioned(
+        _upsert_rows(spark, batch_id), table, ["k"], 4, batch_id, "run-a",
+        _upsert_merge,
     )
 
 
@@ -309,6 +355,8 @@ SWAP_OPS = [
                  id="accumulate_batch"),
     pytest.param((_bucketed_upsert, read_maintained_table),
                  id="apply_bucketed_upsert"),
+    pytest.param((_versioned_upsert, read_table_version),
+                 id="apply_versioned_upsert"),
     pytest.param((_compact, lambda spark, t: spark.read.parquet(t)),
                  id="compact_small_files"),
     pytest.param((_index_compact(
@@ -320,7 +368,10 @@ SWAP_OPS = [
 ]
 
 #: names that no finished or recovered op leaves inside its table
-_DEBRIS = ("._old", "._new", "._rebal", "_lmds_compacting", "_lmds_compacted")
+_DEBRIS = (
+    "._old", "._new", "._rebal", "_lmds_compacting", "_lmds_compacted",
+    "_publishing",
+)
 
 
 @pytest.mark.parametrize("op", SWAP_OPS)

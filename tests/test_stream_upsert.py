@@ -3,8 +3,13 @@
 
 from pyspark.sql import functions as F
 
-from label_maker_dask_spark.streaming.commit import recover_swap
+from label_maker_dask_spark.streaming.commit import (
+    applied_state,
+    recover_swap,
+    write_applied,
+)
 from label_maker_dask_spark.streaming.upsert import (
+    accumulate_batch,
     compact_last_per_key,
     stream_upsert_to_parquet,
 )
@@ -66,6 +71,34 @@ def test_stream_upsert_creates_then_maintains_base(spark, tmp_path):
     _drain(spark, changes, base, ckpt)
     got = {r.k: r.v for r in spark.read.parquet(base).collect()}
     assert got == {1: "a2", 2: "b2", 4: "d", 5: "e"}
+
+
+def test_rewrite_reads_base_with_marker_schema(spark, tmp_path):
+    """A plain rewrite's marker keeps the table's schema, which the next
+    batch reads the base with; a marker without one (as older writers
+    left) falls back to footer inference."""
+    import json
+
+    from pyspark.sql.types import StructType
+
+    base = str(tmp_path / "t")
+
+    def add(rows, batch_id):
+        accumulate_batch(
+            spark.createDataFrame(rows, "k long, w long"), base, ["k"],
+            ["w"], batch_id, run_id="r",
+        )
+
+    add([(1, 10)], 0)
+    stored = StructType.fromJson(json.loads(applied_state(base)["schema"]))
+    assert stored.fieldNames() == ["k", "w"]
+    write_applied(base, "r", 0)  # an older marker: no schema
+    add([(1, 1), (2, 5)], 1)
+    add([(2, 2)], 2)
+    assert sorted(tuple(r) for r in spark.read.parquet(base).collect()) == [
+        (1, 11), (2, 7)
+    ]
+    assert applied_state(base)["schema"] == stored.json()
 
 
 def test_stream_upsert_delete_before_base_exists(spark, tmp_path):
